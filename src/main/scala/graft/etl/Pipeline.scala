@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   and intentionally not replicated).
   *
   * The checkpoint directory gives exactly-once batch-id tracking across
-  * restarts (ST8 pairs with the sink's per-batch partition overwrite).
+  * restarts (ST8 pairs with the sink's per-batch fact partition, published
+  * by one rename that replaces any earlier attempt's).
   */
 object Pipeline {
 

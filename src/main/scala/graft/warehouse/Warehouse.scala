@@ -105,21 +105,6 @@ object Warehouse {
     * want a salted pre-aggregate) — the query shape is unchanged. */
   private val slimCache = new graft.SessionMemo[DataFrame]
 
-  /** Fixed 4-thread pool for the overlapped table loads (one per table;
-    * bounded so a rebuild can never fan out further). Daemon threads —
-    * the pool must not keep the JVM alive. */
-  private lazy val loadPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-          override def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-warehouse-load-${n.getAndIncrement()}")
-            t.setDaemon(true)
-            t
-          }
-        }))
-
   def factStoreSlim(spark: SparkSession, dir: String): DataFrame = synchronized {
     slimCache.getOrElseUpdate(spark, dir) {
       val t = tables(spark, dir)
@@ -155,9 +140,9 @@ object Warehouse {
     // writes back-fill the executors the fact write's tail leaves idle
     // (guide §2.6 "overlap independent jobs"; r21 — measured, Prof
     // wh_rebuild warm min-of-4 at sf0.1/32c: sequential 3.30 s vs 2.51 s
-    // overlapped on the same host window). Job descriptions
-    // are thread-local, so each load stays labeled in the UI; failures
-    // propagate through Await.
+    // overlapped on the same host window). Overlap.all carries the caller's
+    // local properties into each load and returns only once all four are
+    // done, so a failed load never leaves a sibling writing behind it.
     def loadFact(): Unit =
       // Fact: the one big-big join (lineitem⋈orders) runs exactly once,
       // then lands bucketed+sorted by order_id — one file per bucket (the
@@ -190,13 +175,7 @@ object Warehouse {
           .write.mode("overwrite").option("path", path("time_dim"))
           .format("parquet").saveAsTable(timeName)
       })
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = Warehouse.loadPool
-      val work = ((loadFact _) +: dimLoads).map(f => Future(f()))
-      work.foreach(w => Await.result(w, Duration.Inf))
-    }
+    graft.Overlap.all(spark)((loadFact _) +: dimLoads: _*)
 
     // Dimensions are pinned in the columnar cache: they are re-broadcast by
     // every query, and dims stay cacheable at ANY warehouse scale (they grow

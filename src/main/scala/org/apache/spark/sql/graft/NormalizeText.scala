@@ -44,11 +44,11 @@ case class NormalizeText(child: Expression)
 
   override def prettyName: String = "norm_text"
 
-  // resolved once at planning time, exactly as Lower's own lazy val does
-  // (SQLConf.get.getConf(ICU_CASE_MAPPINGS_ENABLED)) — the kernel must
-  // case-fold with the IDENTICAL mapping or the twin drifts on exotic
-  // code points
-  private lazy val useICU: Boolean =
+  // the conf Lower reads (SQLConf.get.getConf(ICU_CASE_MAPPINGS_ENABLED)),
+  // captured when the expression is constructed on the driver: codegen and
+  // the interpreted path then fold with one mapping, and the kernel must
+  // case-fold exactly as Lower does or the twin drifts on exotic code points
+  private val useICU: Boolean =
     org.apache.spark.sql.internal.SQLConf.get.getConf(
       org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 

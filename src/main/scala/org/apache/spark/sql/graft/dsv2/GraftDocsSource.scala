@@ -981,11 +981,11 @@ private[dsv2] class GdfScanBuilder(path: String, manifest: GdfManifest.Manifest,
     * exact per-file stats — a metadata-only scan that opens zero data
     * files (the Iceberg/parquet `count(*)` optimization). Complete
     * pushdown only: Spark removes the Aggregate node and the scan emits
-    * final values. Residual-filter safety is structural — Spark only
-    * attempts aggregate pushdown when no post-scan filters remain, and
-    * this connector returns EVERY filter as a residual, so a filtered
-    * query can never consume stale stats (GraftDocsSourceSpec pins
-    * that fallback). */
+    * final values. Filter safety: a residual filter blocks the pushdown
+    * (Spark only attempts it when no post-scan filter remains, and this
+    * method refuses while any pushed filter is unconsumed); a consumed,
+    * file-aligned filter is enforced exactly by file pruning, so the fold
+    * over the surviving files is the exact filtered answer. */
   private def translateAgg(agg: Aggregation): Option[(Boolean, Seq[AggregateFunc])] = {
     def isCol(e: org.apache.spark.sql.connector.expressions.Expression,
         name: String): Boolean = e match {

@@ -9,7 +9,8 @@ import graft.SparkSpec
 
 /** Join-semantics and sink-semantics unit tests (SURVEY §5.2, §5.4):
   * J1 inner / J2 left-outer / P2 null filter; S7 first-write-wins;
-  * S9/ST8 replay idempotence. */
+  * S9/ST8 replay idempotence; a failed write publishes no fact rows and
+  * its replay converges to a clean load. */
 class EnrichSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -105,5 +106,46 @@ class EnrichSinkSpec extends SparkSpec {
     val t = spark.read.parquet(s"$dir/time_dim")
     assert(t.count() == 3)
     assert(t.select("date_id").distinct().count() == 3)
+  }
+
+  test("a failed dim write publishes no fact rows; its replay equals a clean load") {
+    val c = customers(1 -> "F", 2 -> "M"); val p = products("P1" -> 5.0, "P2" -> 7.0)
+    val batch0 = Enrich.enrich(txn(1, 1, "P1"), c, p)
+    val batch1 = Enrich.enrich(
+      Seq((2, "3/4/2021", 2, "P2", 3), (3, "3/5/2021", 1, "P1", 1))
+        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p)
+    val clean = Files.createTempDirectory("graft_sink_clean").toString
+    WarehouseSink.load(batch0, 0L, clean)
+    WarehouseSink.load(batch1, 1L, clean)
+
+    val dir = Files.createTempDirectory("graft_sink_fail").toString
+    WarehouseSink.load(batch0, 0L, dir)
+    // a plain file where the time dim's directory belongs fails its write
+    val timeDim = new java.io.File(s"$dir/time_dim")
+    val aside = new java.io.File(s"$dir/time_dim.aside")
+    assert(timeDim.renameTo(aside))
+    Files.write(timeDim.toPath, "not a table".getBytes)
+    val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    intercept[Exception](WarehouseSink.load(batch1, 1L, dir))
+    // every sibling write had committed before the failure reached us
+    assert(new java.io.File(s"$dir/_staging/1/salefact/_SUCCESS").exists())
+    Seq("customer_dim", "product_dim").foreach { t =>
+      assert(!new java.io.File(s"$dir/$t/_temporary").exists(), s"$t still writing")
+    }
+    assert(spark.read.parquet(s"$dir/salefact").where(col("batch_id") === 1).count() == 0)
+    assert(spark.read.parquet(s"$dir/salefact").count() == 1)
+
+    // remove the obstacle and replay the batch
+    assert(timeDim.delete() && aside.renameTo(timeDim))
+    WarehouseSink.load(batch1, 1L, dir)
+    assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == mode)
+    Seq("customer_dim", "product_dim", "time_dim", "salefact").foreach { t =>
+      def rows(root: String) = {
+        val df = spark.read.parquet(s"$root/$t")
+        df.orderBy(df.columns.map(col): _*).collect().toSeq
+      }
+      assert(rows(dir) == rows(clean), s"$t differs from a clean load")
+    }
+    assert(!new java.io.File(s"$dir/_staging/1").exists())
   }
 }
