@@ -32,19 +32,10 @@ object Bench {
       }
     }
 
-  def main(args: Array[String]): Unit = {
-    // AMBIENT host load at launch (r20): the existing host_load samples
-    // bracket the retry stage, where the bench's OWN 32 threads dominate
-    // the 1-min average — so "was the host quiet" was unanswerable from
-    // the artifact. This sample predates any Spark work: it IS the
-    // ambient number a quiet-window claim rests on.
-    val ambientLoad =
-      try scala.io.Source.fromFile("/proc/loadavg").getLines().next()
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def makeSession(): SparkSession = SparkSession.builder()
+  /** The benchmark session at `cpus` local threads; [[Prof]] measures on
+    * the same one. */
+  def session(cpus: String): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -99,6 +90,22 @@ object Bench {
       // signature — so doubled again; same headroom argument at ~100 MB.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  def main(args: Array[String]): Unit = {
+    // AMBIENT host load at launch (r20): the existing host_load samples
+    // bracket the retry stage, where the bench's OWN 32 threads dominate
+    // the 1-min average — so "was the host quiet" was unanswerable from
+    // the artifact. This sample predates any Spark work: it IS the
+    // ambient number a quiet-window claim rests on.
+    val ambientLoad =
+      try scala.io.Source.fromFile("/proc/loadavg").getLines().next()
+        .split(" ")(0).toDouble
+      catch { case _: Throwable => -1.0 }
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // Build sample 1 runs on a THROWAWAY session that is stopped before
     // the real one starts: the builders memoize per (session, dir), so a
@@ -117,15 +124,13 @@ object Bench {
     // "What's missing" #3 second-session number).
     graft.IndexStore.bypassRead = true
     val buildsRun1: Seq[(String, Double)] = {
-      val s0 = makeSession()
-      s0.sparkContext.setLogLevel("WARN")
+      val s0 = session(cpus)
       val t = timeBuilds(s0, sfDir)
       s0.stop()
       t
     }
 
-    val spark = makeSession()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     def runOnce(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -363,8 +368,7 @@ object Bench {
     try spark.stop()
     catch { case e: Throwable => System.err.println(s"[bench] stop: $e") }
     val buildsStoreRead: Seq[(String, Double)] = {
-      val s2 = makeSession()
-      s2.sparkContext.setLogLevel("WARN")
+      val s2 = session(cpus)
       val t = timeBuilds(s2, sfDir)
       s2.stop()
       t

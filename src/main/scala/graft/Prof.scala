@@ -1,1230 +1,96 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ListenerBusUtil
 
-import graft.warehouse.Warehouse
-
-/** Ad-hoc profiling main (not part of the driver contract): splits per-query
-  * wall time into plan-construction vs execution to direct bench tuning. */
+/** Profiling main: splits each named entry's warm run into construction
+  * (building the DataFrame, with the Spark jobs that launches) and
+  * execution (a `noop` write), on the benchmark's own session.
+  *
+  * {{{
+  * sbt "runMain graft.Prof <entry>..."
+  * }}}
+  *
+  * `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` choose the data and the
+  * session width, as for [[Bench]]. Each entry gets one warm run, then 3
+  * measured runs of one line each. */
 object Prof {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("PROF_BROADCAST", "64m"))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("PROF_AQE", "true"))
-      // static conf: generated-class cache (default 100 entries — the
-      // 77-entry suite compiles ~1450 units, so every pass recompiles)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("PROF_CODEGEN_CACHE", "100"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("PROF_COALESCE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("PROF_MIN_PART", "1m"))
-      .config("spark.shuffle.compress", sys.env.getOrElse("PROF_SHUFFLE_COMPRESS", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
 
-    def bench(name: String)(mk: => org.apache.spark.sql.DataFrame): Unit =
-      (1 to 5).foreach { i =>
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        println(f"[prof] $name run$i exec=${(System.nanoTime() - t0) / 1e9}%.3f")
+  /** One part of a run: wall time, the jobs it started, and the stages,
+    * tasks and executor CPU time of the stages that ran. */
+  final case class Part(ms: Double, jobs: Int, stages: Int, tasks: Int,
+      cpuMs: Double) {
+    override def toString: String =
+      f"$ms%.1fms jobs=$jobs stages=$stages tasks=$tasks cpu=$cpuMs%.1fms"
+  }
+
+  final case class Run(construct: Part, execute: Part)
+
+  /** Counts jobs and completed stages; [[take]] reads and resets. The bus
+    * thread writes, the caller reads after draining the bus. */
+  private final class Counter extends SparkListener {
+    private var jobs, stages, tasks = 0
+    private var cpuNs = 0L
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { jobs += 1 }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stages += 1
+        tasks += e.stageInfo.numTasks
+        Option(e.stageInfo.taskMetrics).foreach(m => cpuNs += m.executorCpuTime)
       }
 
-    // named-entry mode: profile specific registered entries
-    if (args.nonEmpty) {
-      if (args.head == "suite_warm") {
-        // Diagnose the r7 in-suite inflation (VERDICT r7 "What's wrong" #1/#2):
-        // measure target entries in a FRESH session, then run the whole
-        // 77-entry suite once (the Bench cold bring-up shape, which populates
-        // every SessionMemo cache), then re-measure the same targets — while
-        // tracking whole-stage-codegen compilations and GC time per run. If
-        // the post-suite runs show nonzero compile deltas where the fresh
-        // runs showed none, the janino codegen cache (default maxEntries 100,
-        // far below the suite's unit count) is thrashing; if GC deltas blow
-        // up instead, it's heap/storage pressure from the persisted indexes.
-        import org.apache.spark.metrics.source.CodegenMetrics
-        import scala.jdk.CollectionConverters._
-        def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        def compileMsMean: Double =
-          CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean
-        def gcMs: Long = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-        // JIT code cache + metaspace occupancy: 1453 generated classes can
-        // exhaust the default 240 MB ReservedCodeCacheSize, which silently
-        // disables the JIT ("CodeCache is full. Compiler has been
-        // disabled.") and inflates EVERY subsequent run
-        def pools(): Unit = java.lang.management.ManagementFactory
-          .getMemoryPoolMXBeans.asScala
-          .filter(p => p.getName.contains("CodeHeap") ||
-            p.getName.contains("CodeCache") || p.getName.contains("Metaspace"))
-          .foreach { p =>
-            val u = p.getUsage
-            println(s"[prof] pool '${p.getName}' used=${u.getUsed / 1024 / 1024}MB " +
-              s"max=${if (u.getMax < 0) -1 else u.getMax / 1024 / 1024}MB")
-          }
-        val targets = if (args.length > 1) args.tail.toSeq
-          else Seq("q17_rollup", "q09_mom_growth", "setops_buyers",
-            "dedup_exact", "q05_top5_occupations", "sketch_approx_agg")
-        def measure(tag: String): Unit = targets.foreach { name =>
-          (1 to 5).foreach { i =>
-            val (c0, g0, t0) = (compiles, gcMs, System.nanoTime())
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            println(f"[prof] $tag $name run$i exec=$sec%.3f " +
-              f"compiles=+${compiles - c0} gc=+${gcMs - g0}ms")
-          }
-        }
-        Warehouse.tables(spark, sfDir)
-        println(s"[prof] === FRESH (warehouse only; codegen units so far: " +
-          s"$compiles, mean compile ${compileMsMean.round}ms) ===")
-        pools()
-        measure("fresh")
-        val s0 = System.nanoTime()
-        SparkEntry.queries.keys.toSeq.sorted.foreach { n =>
-          try SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            println(s"[prof] suite pass: $n failed: ${e.getMessage}") }
-        }
-        println(f"[prof] === SUITE PASS done in ${(System.nanoTime() - s0) / 1e9}%.1fs; " +
-          s"total codegen units now $compiles, mean compile ${compileMsMean.round}ms ===")
-        pools()
-        measure("warm")
-        pools()
-        val mem = spark.sparkContext.getExecutorMemoryStatus
-        mem.foreach { case (id, (max, rem)) =>
-          println(s"[prof] blockmgr $id storage max=${max / 1024 / 1024}MB " +
-            s"free=${rem / 1024 / 1024}MB used=${(max - rem) / 1024 / 1024}MB") }
-        spark.stop()
-        return
-      }
-      if (args.head == "minhash_parts") {
-        import graft.llm.{Dedup, Text}
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        bench("shingle_sets")(
-          docs.select(col("doc_id"), Text.shingles(col("text"), 3).as("sset")))
-        bench("base_hashes")(
-          docs.select(col("doc_id"), Text.shingles(col("text"), 3).as("sset"))
-            .withColumn("hrs", transform(col("sset"),
-              x => pmod(Text.hash64(x), lit(Dedup.BaseHashMod)))))
-        bench("signatures")(
-          docs.select(col("doc_id"), Text.shingles(col("text"), 3).as("sset"))
-            .withColumn("hrs", transform(col("sset"),
-              x => pmod(Text.hash64(x), lit(Dedup.BaseHashMod))))
-            .select(col("doc_id") +: (0 until 64).map { i =>
-              val (a, b) = Dedup.minhashSeeds(i)
-              array_min(transform(col("hrs"),
-                hr => pmod(lit(a) * hr + lit(b), lit(Dedup.MinhashP)))).as(s"m$i")
-            }: _*))
-        val sig = docs.select(col("doc_id"), Text.shingles(col("text"), 3).as("sset"))
-          .withColumn("hrs", transform(col("sset"),
-            x => pmod(Text.hash64(x), lit(Dedup.BaseHashMod))))
-          .select(col("doc_id") +: (0 until 64).map { i =>
-            val (a, b) = Dedup.minhashSeeds(i)
-            array_min(transform(col("hrs"),
-              hr => pmod(lit(a) * hr + lit(b), lit(Dedup.MinhashP)))).as(s"m$i")
-          }: _*)
-        val bandKeys = (0 until 16).map { bnd =>
-          concat_ws(",", (0 until 4).map(r => col(s"m${bnd * 4 + r}").cast("string")): _*)
-        }
-        val bands = sig.select(col("doc_id"),
-          posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-        bench("bands")(bands)
-        val cand = bands.as("a")
-          .join(bands.as("b").hint("shuffle_hash"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        bench("cand")(cand)
-      } else if (args.head == "explain") {
-        // plan audit: print the executed plan of named entries without
-        // running them (formatted mode shows codegen spans + pushdowns)
-        args.tail.foreach { name =>
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          println(s"[prof] === $name ===")
-          println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).take(6000))
-        }
-      } else if (args.head == "jobs") {
-        // r20 (guide §1.1/§7.1): per-entry JOB attribution. The local
-        // bench floor is dominated by scheduling — count the Spark jobs
-        // one warm execution of each named entry submits, with per-job
-        // wall time and stage/task counts, so "N-job floor" claims in
-        // OPTIMIZATION_r20.md rest on a measured number, not a guess.
-        import org.apache.spark.scheduler.{SparkListener,
-          SparkListenerJobEnd, SparkListenerJobStart,
-          SparkListenerStageCompleted}
-        import scala.collection.mutable
-        val jobStart = mutable.Map[Int, Long]()
-        val jobs = mutable.ListBuffer[(Int, Double, String)]()
-        var stages = 0
-        var tasks = 0
-        val listener = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit = {
-            jobStart(e.jobId) = e.time
-          }
-          override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-            val dur = (e.time - jobStart.getOrElse(e.jobId, e.time)) / 1e3
-            jobs += ((e.jobId, dur, ""))
-          }
-          override def onStageCompleted(
-              e: SparkListenerStageCompleted): Unit = {
-            stages += 1
-            tasks += e.stageInfo.numTasks
-          }
-        }
-        Warehouse.tables(spark, sfDir)
-        args.tail.foreach { name =>
-          def run(): Unit = SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          run() // warm: builds/memos populated, codegen compiled
-          spark.sparkContext.addSparkListener(listener)
-          jobs.clear(); jobStart.clear(); stages = 0; tasks = 0
-          val t0 = System.nanoTime()
-          run()
-          val sec = (System.nanoTime() - t0) / 1e9
-          // drain the async listener bus BEFORE detaching (r20 ADVICE #4:
-          // a fixed sleep silently undercounts under load — exactly what
-          // this mode exists to measure)
-          org.apache.spark.sql.graft.ListenerBusUtil.drain(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(listener)
-          println(f"[prof] jobs $name exec=$sec%.3f n_jobs=${jobs.size} " +
-            f"n_stages=$stages n_tasks=$tasks " +
-            s"job_secs=[${jobs.map(j => f"${j._2}%.3f").mkString(",")}]")
-        }
-      } else if (args.head == "wh_codec_ab") {
-        // r20: attribute the warehouse_setup entry (the biggest single
-        // bench entry, ~1.8 s of it the salefact bucketed write) — is the
-        // parquet encode codec-bound? A/B the same bucketed write under
-        // snappy (default) / lz4 / zstd / uncompressed.
-        import graft.star.Star
-        Seq("snappy", "lz4", "zstd", "uncompressed").foreach { codec =>
-          (1 to 3).foreach { i =>
-            val t0 = System.nanoTime()
-            Star.saleFact(spark, sfDir)
-              .repartition(32, col("order_id"))
-              .write.mode("overwrite")
-              .option("compression", codec)
-              .option("path", s"/tmp/prof_wh_codec/$codec")
-              .bucketBy(32, "order_id")
-              .sortBy("order_id", "product_id")
-              .format("parquet")
-              .saveAsTable(s"prof_codec_$codec")
-            println(f"[prof] salefact_write codec=$codec run$i " +
-              f"exec=${(System.nanoTime() - t0) / 1e9}%.3f")
-          }
-          val du = new java.io.File(s"/tmp/prof_wh_codec/$codec")
-            .listFiles().map(_.length()).sum / 1024 / 1024
-          println(s"[prof] salefact_write codec=$codec size=${du}MB")
-        }
-      } else if (args.head == "wh_rebuild") {
-        // r21: wall time of the full warehouse rebuild (what the bench's
-        // warehouse_setup entry measures), warm JVM.
-        Warehouse.tables(spark, sfDir)
-        (1 to 4).foreach { i =>
-          val t0 = System.nanoTime()
-          Warehouse.rebuild(spark, sfDir)
-          println(f"[prof] wh_rebuild run$i " +
-            f"exec=${(System.nanoTime() - t0) / 1e9}%.3f")
-        }
-      } else if (args.head == "wh_split") {
-        // r21 (r20 VERDICT "Next round" #4, codec adjudicated dead):
-        // attribute the salefact write's remaining split — join compute
-        // vs bucket exchange vs in-bucket sort vs parquet encode vs
-        // catalog/commit machinery. Ladder of noop/real writes over the
-        // identical source.
-        import graft.star.Star
-        (1 to 3).foreach { i =>
-          def t(label: String)(body: => Unit): Unit = {
-            val t0 = System.nanoTime()
-            body
-            println(f"[prof] wh_split $label run$i " +
-              f"exec=${(System.nanoTime() - t0) / 1e9}%.3f")
-          }
-          t("a_join_noop") {
-            Star.saleFact(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-          }
-          t("b_repart_noop") {
-            Star.saleFact(spark, sfDir).repartition(32, col("order_id"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          t("c_repart_sort_noop") {
-            Star.saleFact(spark, sfDir).repartition(32, col("order_id"))
-              .sortWithinPartitions(col("order_id"), col("product_id"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          t("d_plain_parquet_path") {
-            Star.saleFact(spark, sfDir).repartition(32, col("order_id"))
-              .write.mode("overwrite").parquet("/tmp/prof_wh_split/plain")
-          }
-          t("e_sorted_parquet_path") {
-            Star.saleFact(spark, sfDir).repartition(32, col("order_id"))
-              .sortWithinPartitions(col("order_id"), col("product_id"))
-              .write.mode("overwrite").parquet("/tmp/prof_wh_split/sorted")
-          }
-          t("f_bucketed_saveAsTable") {
-            Star.saleFact(spark, sfDir).repartition(32, col("order_id"))
-              .write.mode("overwrite")
-              .option("path", "/tmp/prof_wh_split/bucketed")
-              .bucketBy(32, "order_id")
-              .sortBy("order_id", "product_id")
-              .format("parquet")
-              .saveAsTable("prof_wh_split_bucketed")
-          }
-        }
-      } else if (args.head == "wh_fact_parts") {
-        // r21: attribute saleFact's ~1.0 s noop (the wh_split ladder's
-        // dominant term). Ladder: lineitem scan alone, + broadcast join,
-        // + the cheap projections, + each expensive expression
-        // (format_string product_id, dateId, decimal amount) separately.
-        import graft.star.Star
-        val dir = sfDir
-        def li = Star.table(spark, dir, "lineitem")
-        def o = Star.table(spark, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        def joined = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        (1 to 2).foreach { r =>
-          bench(s"scan_r$r")(li.select(col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_shipdate"), col("l_quantity"),
-            col("l_extendedprice"), col("l_discount")))
-          bench(s"join_r$r")(joined.select(col("l_orderkey"), col("o_custkey")))
-          bench(s"join_cheap_r$r")(joined.select(
-            (col("l_orderkey") * 10 + col("l_linenumber")).cast("long"),
-            col("l_orderkey"), col("o_custkey"), col("l_quantity").cast("long")))
-          bench(s"fmt_r$r")(joined.select(
-            format_string("P%08d", col("l_partkey"))))
-          bench(s"lpad_r$r")(joined.select(
-            concat(lit("P"), lpad(col("l_partkey").cast("string"), 8, "0"))))
-          bench(s"dateid_r$r")(joined.select(
-            Star.dateId(col("l_shipdate").cast("date"))))
-          bench(s"decimal_r$r")(joined.select(
-            (col("l_extendedprice").cast("decimal(12,2)") *
-              (lit(1) - col("l_discount").cast("decimal(4,2)")))
-              .cast("decimal(14,4)")))
-          bench(s"full_r$r")(Star.saleFact(spark, dir))
-        }
-      } else if (args.head == "sortpin_ab") {
-        // r20: a final orderBy's range-boundary sampling job re-executes
-        // the plan UP TO the sort's child — when the child stage is the
-        // expensive one (a window pass, an as-of union-window), the whole
-        // stage runs twice per execution. A/B: the registered form vs the
-        // same plan with an explicit exchange pinned between the
-        // expensive stage and the sort (sampling then triggers the map
-        // stage once and the real job REUSES its shuffle output).
-        import graft.streaming.Events
-        import graft.operators.AsOfJoin
-        val w = spark.sparkContext.defaultParallelism
-        def asofBody = {
-          val ev = Events.events(spark, sfDir)
-          val purchases = ev.where(col("event_type") === "purchase")
-            .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-          val clicks = ev.where(col("event_type") === "click")
-            .groupBy(col("user_id"), col("ts"))
-            .agg(max(col("event_id")).as("click_event_id"))
-          AsOfJoin.backward(purchases, clicks, "user_id", "ts")
-            .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-              col("prev_click_event_id").as("click_event_id"),
-              col("prev_ts").as("click_ts"))
-        }
-        (1 to 2).foreach { r =>
-          bench(s"asof_plain_r$r")(asofBody.orderBy(col("event_id")))
-          bench(s"asof_pinned_r$r")(asofBody
-            .repartition(w, col("event_id")).orderBy(col("event_id")))
-        }
-      } else if (args.head == "r15_ab") {
-        // r15 (r14 VERDICT #2/#4): native winnow kernel vs the HOF form;
-        // in-row top-gram kernel battery vs ladder components. Also the
-        // bare doc scan + scan-and-sort skeleton to restate the floor.
-        import graft.llm.TextAnalysis
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        bench("doc_scan")(d.select(col("doc_id"), col("text")))
-        bench("doc_scan_sorted")(d.select(col("doc_id"),
-          length(col("text")).as("n")).orderBy(col("doc_id")))
-        bench("winnow_kernel")(TextAnalysis.winnowOf(d))
-        bench("winnow_hof")(TextAnalysis.winnowHofOf(d))
-        bench("battery_full")(TextAnalysis.repetitionBatteryOf(d))
-        bench("battery_topleg_only")(TextAnalysis.topGramCoveredRelational(d))
-      } else if (args.head == "doremi_parts") {
-        // r15: attribute corpus_domain_reweight's tail
-        import graft.llm.{Corpus, TextAnalysis}
-        val src = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("source"))
-        def tf0 = TextAnalysis.termFreqs(spark, sfDir)
-          .join(src, "doc_id")
-          .groupBy(col("source"), col("token"))
-          .agg(sum(col("tf")).as("tf"))
-        bench("doremi_tfindex_read")(
-          TextAnalysis.termFreqs(spark, sfDir).groupBy().count())
-        bench("doremi_tf0")(tf0)
-        bench("doremi_full")(Corpus.domainReweight(spark, sfDir))
-      } else if (args.head == "dsir_parts") {
-        // r15 (r14 VERDICT #3): attribute corpus_dsir_select. Ladder:
-        // the gram explode alone, the bucket-count model leg, the
-        // scoring leg, then the full entry.
-        import graft.llm.{Corpus, Text, TextAnalysis}
-        import org.apache.spark.sql.types.{ArrayType, StringType}
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val t = Text.tokens(col("text"))
-        val n = size(t)
-        val bigr = when(n >= 2, transform(sequence(lit(1), n - 1), i =>
-            concat_ws(" ", element_at(t, i.cast("int")),
-              element_at(t, (i + 1).cast("int")))))
-          .otherwise(array().cast(ArrayType(StringType)))
-        val feats = d.select(col("doc_id"),
-            col("source").isin(TextAnalysis.NbTargetSources: _*).as("is_target"),
-            explode(concat(t, bigr)).as("gram"))
-          .select(col("doc_id"), col("is_target"),
-            pmod(Text.hash64(col("gram")), lit(Corpus.DsirBuckets)).as("b"))
-        bench("dsir_explode_only")(feats
-          .groupBy(col("is_target")).agg(count(lit(1)).as("c")))
-        bench("dsir_model_leg")(feats.groupBy(col("b"))
-          .agg(sum(when(col("is_target"), 1L).otherwise(0L)).as("ct_t"),
-            sum(when(!col("is_target"), 1L).otherwise(0L)).as("ct_r")))
-        bench("dsir_explode_nohash")(d.select(col("doc_id"),
-            explode(concat(t, bigr)).as("gram"))
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("c")))
-        // the r14 shape verbatim (tot/w as separate broadcast jobs, no
-        // materialization anywhere) for the in-harness A/B
-        bench("dsir_r14_form") {
-          import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType => StrT}
-          val ct = feats.groupBy(col("b"))
-            .agg(sum(when(col("is_target"), 1L).otherwise(0L)).as("ct_t"),
-              sum(when(!col("is_target"), 1L).otherwise(0L)).as("ct_r"))
-          val tot = ct.agg(sum(col("ct_t")).as("tot_t"),
-            sum(col("ct_r")).as("tot_r"))
-          val w = ct.crossJoin(broadcast(tot))
-            .select(col("b"), round(
-              log((col("ct_t") + 1).cast(DoubleType) /
-                (col("tot_t") + Corpus.DsirBuckets).cast(DoubleType)) -
-              log((col("ct_r") + 1).cast(DoubleType) /
-                (col("tot_r") + Corpus.DsirBuckets).cast(DoubleType)), 9).as("w"))
-          val scored = feats.where(!col("is_target"))
-            .join(broadcast(w), "b")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_grams"),
-              sum(col("w").cast(DecimalType(28, 9))).as("sdec"))
-          val u = (pmod(Text.hash64(concat(lit("dsir|"),
-            col("doc_id").cast(StrT))),
-            lit(1000000L)).cast(DoubleType) + 0.5) / 1000000.0
-          val gumbel = round(-log(-log(u)), 9)
-          val keyed = scored
-            .select(col("doc_id"), col("n_grams"),
-              round(col("sdec").cast(DoubleType), 6).as("logw"))
-            .withColumn("gkey", round(col("logw") + gumbel, 6))
-          val cut = keyed.agg(round(
-            expr(s"percentile(gkey, ${1 - Corpus.DsirKeepFrac})"), 4).as("cut"))
-          keyed.crossJoin(broadcast(cut))
-            .select(col("doc_id"), col("n_grams"), col("logw"), col("gkey"),
-              (col("gkey") >= col("cut")).as("selected"))
-            .orderBy(col("doc_id"))
-        }
-        bench("dsir_full")(Corpus.dsirSelect(spark, sfDir))
-      } else if (args.head == "session_ab") {
-        // r13 (r12 VERDICT #6): attribute events_session_window's 0.44 s
-        // (native MergingSessions batch op) vs 0.35 s (window-fn twin) vs
-        // a 98 ms oracle. Ladder: bare scan → both forms with and without
-        // the final total-order sort.
-        import graft.streaming.Events
-        val ev = Events.events(spark, sfDir)
-        bench("events_scan")(ev.select(col("user_id"), col("ts"), col("value")))
-        bench("native_session")(Events.sessionWindowed(spark, sfDir))
-        bench("native_no_sort")(ev
-          .groupBy(col("user_id"),
-            session_window(col("ts"), s"${Events.SessionGapMinutes} minutes").as("sw"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value")))
-        bench("windowfn_session")(Events.sessions(spark, sfDir))
-      } else if (args.head == "text_floor") {
-        // r13 (r12 VERDICT #3): pin the text-op job floor. Same-session
-        // ladder over the SAME re-spread input: noop scan → scan+sort
-        // (normalize's range-exchange skeleton) → the two entries. The
-        // deltas over the matching skeleton are the ops' real compute.
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        bench("noop_scan")(docs.select(col("doc_id"), col("text")))
-        bench("scan_sort")(docs.select(col("doc_id"), col("text"))
-          .orderBy(col("doc_id")))
-        bench("text_normalize")(graft.llm.TextAnalysis.normalizeOf(docs))
-        bench("text_repetition")(graft.llm.TextAnalysis.repetitionOf(docs))
-      } else if (args.head == "etl_ab") {
-        // r14 (r13 VERDICT "What's wrong" #1): etl_rows_per_sec dropped
-        // 74.3k → 55.5k rows/s with byte-identical ETL code; r13 only grew
-        // the index-build pass sharing the bench JVM. A/B: the load phase
-        // min-of-3 on an ISOLATED fresh session vs min-of-3 after the full
-        // Builds pass on the same session (the r13 bench-session shape).
-        // Bench-shaped sessions (AQE off, 64m broadcast) to match the
-        // graded metric.
-        //
-        // MEASURED (r14, sf0.1): isolated best 54.6k rows/s (runs 41.6k /
-        // 54.6k / 54.1k), cotenant best 66.0k (59.5k / 64.1k / 66.0k) —
-        // co-tenancy is EXONERATED: the post-builds arm is ~20% FASTER
-        // because the 38s builds pass warms JIT/page cache, so moving the
-        // load to a fresh session (the r13 VERDICT's conditional fix)
-        // would hurt. An isolated fresh session on byte-identical code
-        // plateaus at ~55k today — the r13 graded 55.5k — so the r12
-        // 74.3k reflects that measurement window's host conditions, not
-        // an r13 regression. Carried as host drift; the min-of-two
-        // protocol already reports the best observed run.
-        spark.stop()
-        def arm(tag: String, withBuilds: Boolean): Double = {
-          val s = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-            .config("spark.locality.wait", "0")
-            .config("spark.sql.adaptive.enabled", "false")
-            .config("spark.sql.codegen.cache.maxEntries", "4096")
-            .getOrCreate()
-          s.sparkContext.setLogLevel("WARN")
-          if (withBuilds) {
-            val t0 = System.nanoTime()
-            graft.llm.Builds.all.foreach { case (_, f) => f(s, sfDir) }
-            println(f"[prof] $tag builds pass ${(System.nanoTime() - t0) / 1e9}%.1fs")
-          }
-          val rates = (1 to 3).map { i =>
-            graft.etl.EtlQueries.lastLoadSeconds = -1.0
-            graft.etl.EtlQueries.rerunLoad(s, sfDir)
-            val sec = graft.etl.EtlQueries.lastLoadSeconds
-            val rows = graft.etl.EtlQueries.lastLoadRows
-            val rate = rows / sec
-            println(f"[prof] $tag load run$i sec=$sec%.2f rows=$rows rate=${rate.round}")
-            rate
-          }
-          s.stop()
-          rates.max
-        }
-        val iso = arm("isolated", withBuilds = false)
-        val cot = arm("cotenant", withBuilds = true)
-        println(f"[prof] etl_ab best isolated=${iso.round} cotenant=${cot.round} rows/s")
-        return
-      } else if (args.head == "tail14") {
-        // r14 (r13 VERDICT #5/#6): attribute the four remaining tail
-        // entries. Each gets the normalize-style ladder: a scan/skeleton
-        // floor, the entry's distinctive stage added, then the full
-        // entry — the deltas separate real operator work from the fixed
-        // job/sort floor a 32-core local bench charges every entry.
-        import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.Similarity
-        import graft.streaming.Events
-
-        // --- events_sliding (10.8x, 0.55s): tumbling vs 4x-overlap
-        // sliding, with and without the trailing global sort.
-        val ev = Events.events(spark, sfDir)
-        bench("ev_scan")(ev.select(col("ts"), col("event_type"), col("value")))
-        val hourlyNoSort = ev
-          .groupBy(date_trunc("hour", col("ts")).as("window_start"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-              .as("total_value"))
-        bench("ev_hourly_nosort")(hourlyNoSort)
-        val slidingNoSort = ev
-          .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-              .as("total_value"))
-          .select(col("window.start").as("window_start"), col("event_type"),
-            col("n_events"), col("total_value"))
-        bench("ev_sliding_nosort")(slidingNoSort)
-        bench("ev_sliding_full")(Events.sliding(spark, sfDir))
-
-        // --- embedding_centroid_classify (4.2x, 0.51s): score vs argmax
-        // vs full confusion matrix, over the memoized prototypes.
-        Similarity.labelComp(spark, sfDir).count() // warm (build_label_prototypes)
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val cent = Similarity.labelComp(spark, sfDir).groupBy(col("label"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as("cv"))
-          .select(col("label").as("pred"), col("cv"))
-        bench("cls_score")(e.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("label"), col("pred"),
-            Similarity.cosineFold(col("embedding"), col("cv")).as("sim")))
-        bench("cls_argmax")(e.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("label"), col("pred"),
-            Similarity.cosineFold(col("embedding"), col("cv")).as("sim"))
-          .groupBy(col("vec_id"), col("label"))
-          .agg(max_by(col("pred"),
-            struct(col("sim"), negate(col("pred")).as("np"))).as("predicted")))
-        bench("cls_full")(SparkEntry.queries("embedding_centroid_classify")(spark, sfDir))
-
-        // --- corpus_data_card (0.80s vs 36ms oracle): the one base pass
-        // (md5 + tokenize) vs + dup-count window vs the full card.
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val cardBase = d.select(col("source"), col("lang"), col("n_chars"),
-          size(split(trim(col("text")), "\\s+")).cast(LongType).as("n_tokens"),
-          md5(col("text")).as("h"))
-        bench("card_base")(cardBase)
-        bench("card_dupwin")(cardBase
-          .withColumn("nc", count(lit(1)).over(Window.partitionBy(col("h")))))
-        bench("card_full")(SparkEntry.queries("corpus_data_card")(spark, sfDir))
-
-        // --- percentiles_by_store (0.57 -> 0.80s, no code change): an
-        // isolated min-of-5 re-measure; if it lands back near the r12
-        // 0.57s the bench drift was suite co-tenancy, not a plan change.
-        bench("pct_full")(SparkEntry.queries("percentiles_by_store")(spark, sfDir))
-      } else if (args.head == "norm_ab") {
-        // r21: the single-pass norm_text kernel vs the relational
-        // two-regex+trim chain, interleaved min-of-5 on the same relation
-        // (the full normalizeOf shape: sort + length/md5 consumers).
-        import graft.llm.TextAnalysis
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        def shape(norm: org.apache.spark.sql.Column) = d
-          .orderBy(col("doc_id"))
-          .select(col("doc_id"),
-            length(col("text")).cast("long").as("n_chars_raw"),
-            length(norm).cast("long").as("n_chars_norm"),
-            md5(norm).as("norm_md5"))
-        (1 to 2).foreach { r =>
-          bench(s"norm_kernel_r$r")(
-            shape(org.apache.spark.sql.graft.functions.norm_text(col("text"))))
-          bench(s"norm_regex_r$r")(
-            shape(trim(regexp_replace(
-              regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))))
-        }
-      } else if (args.head == "curation_ab") {
-        // r13: does the scan re-spread pay for curationPipeline (regex
-        // passes are scan-side) the way it does for substr_dedup, or is it
-        // a wash like lineDedup? Same-session A/B of the Of-form over
-        // direct vs re-spread input.
-        import graft.llm.Corpus
-        val direct = spark.read.parquet(s"$sfDir/documents.parquet")
-        val spread = direct.repartition(spark.sparkContext.defaultParallelism)
-        (1 to 2).foreach { r =>
-          bench(s"cur_direct_r$r")(Corpus.curationPipelineOf(direct))
-          bench(s"cur_spread_r$r")(Corpus.curationPipelineOf(spread))
-        }
-      } else if (args.head == "qsk_parts") {
-        // r20: attribute text_quantile_sketch's absolute cost. Ladder:
-        // the hash+shard projection alone, the certification leg alone
-        // (corpus × 5-row broadcast), then the full entry — the gap to
-        // the DuckDB oracle is the multi-job scheduling floor
-        // (tournament windows + tiny sample agg + cert pass + final
-        // sort), not a re-scanned stage: each rung re-reads the corpus
-        // exactly once.
-        import graft.llm.{Text, TextAnalysis}
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val hashed = d.select(col("n_chars"),
-            Text.hash64(concat(lit("qsk|"), col("doc_id").cast("string")))
-              .as("h"))
-          .withColumn("shard", pmod(col("h"), lit(64L)))
-        bench("qsk_hash_only")(hashed.groupBy(col("shard"))
-          .agg(count(lit(1)).as("c")))
-        bench("qsk_cert_leg") {
-          val est = spark.createDataFrame(
-              TextAnalysis.QskPMille.map(p => (p, p * 10)))
-            .toDF("p_mille", "qsk_estimate")
-          d.select(col("n_chars")).crossJoin(broadcast(est))
-            .groupBy(col("p_mille"))
-            .agg(sum(when(col("n_chars") <= col("qsk_estimate"), 1L)
-              .otherwise(0L)).as("full_le"))
-        }
-        bench("qsk_full_entry")(TextAnalysis.quantileSketch(spark, sfDir))
-      } else if (args.head == "substr_parts") {
-        // r13: attribute corpus_substr_dedup's 5.15s bench cost. Ladder:
-        // suffix-key explode alone → range-sort+count-window (dupPos) →
-        // span merge → full entry without the trailing orderBy → full
-        // entry. If full ≈ 2× no_sort, the orderBy's range-sampling pass
-        // is re-executing the suffix pipeline (the session-window
-        // disease) and the span relation needs a materialization barrier.
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.Corpus
-        val w = Corpus.SubstrWidth
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val base = docs.select(col("doc_id"), col("text"),
-          length(col("text")).as("len"))
-        def keysWith(key: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-          base.where(col("len") >= w)
-            .select(col("doc_id"),
-              explode(transform(sequence(lit(1), col("len") - (w - 1)),
-                p => struct(p.as("pos"), key(col("text").substr(p, lit(w))).as("key"))))
-                .as("pk"))
-            .select(col("doc_id"), col("pk.pos").as("pos"), col("pk.key").as("key"))
-        def dupPosHash(keys: org.apache.spark.sql.DataFrame) = keys
-          .withColumn("c", count(lit(1)).over(Window.partitionBy(col("key"))))
-          .where(col("c") > 1)
-          .select(col("doc_id"), col("pos"))
-        bench("keys_raw")(keysWith(identity))
-        bench("keys_md5")(keysWith(md5))
-        bench("keys_xx")(keysWith(xxhash64(_)))
-        bench("dup_raw_range")(keysWith(identity)
-          .repartitionByRange(spark.sparkContext.defaultParallelism, col("key"))
-          .withColumn("c", count(lit(1)).over(Window.partitionBy(col("key"))))
-          .where(col("c") > 1).select(col("doc_id"), col("pos")))
-        bench("dup_md5_hash")(dupPosHash(keysWith(md5)))
-        bench("dup_xx_hash")(dupPosHash(keysWith(xxhash64(_))))
-        bench("full")(SparkEntry.queries("corpus_substr_dedup")(spark, sfDir))
-      } else if (args.head == "bpe_apply_ab") {
-        // r13 (r12 VERDICT #5): fused per-row merge kernel vs the old
-        // 20-stage regexp_replace chain, same inputs, min-of-5 noop-write.
-        import graft.llm.TextAnalysis
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val merges = TextAnalysis.bpePairsOf(docs).persist()
-        merges.count()
-        bench("fused_kernel")(TextAnalysis.bpeApplyOf(docs, merges))
-        def chain(): org.apache.spark.sql.DataFrame = {
-          var cur = docs.select(col("doc_id"), ltrim(col("text")).as("stream"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens_before"))
-          for (k <- 1 to TextAnalysis.BpeTopPairs) {
-            val rule = merges.where(col("rnk") === k)
-              .select(col("left").as("m_left"), col("right").as("m_right"))
-            cur = TextAnalysis.mergeStage(cur, rule)
-          }
-          cur.select(col("doc_id"), col("n_tokens_before"),
-              size(split(col("stream"), " ")).cast("long").as("n_tokens_after"),
-              md5(col("stream")).as("retok_md5"))
-            .withColumn("n_merges", col("n_tokens_before") - col("n_tokens_after"))
-            .orderBy(col("doc_id"))
-        }
-        bench("regex_chain")(chain())
-      } else if (args.head == "ann_sweep") {
-        // r13 (ADVICE: ANN tables re-salted away from the banding stream):
-        // re-measure LSH recall@5 across (tables, planes) budgets against
-        // the exact brute baseline to re-pick the production constants.
-        import graft.llm.Similarity
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val brute = Similarity.bruteTopK(spark, sfDir)
-          .select(col("query_id"), col("neighbor_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val denom = brute.size.toDouble
-        val nVecs = e.count()
-        val nQueries = Similarity.QueryCount
-        for (l <- Seq(4, 5, 6); b <- Seq(4, 5, 6)) {
-          val signs = Similarity.annPlaneSignsFor(l, b)
-          val got = Similarity.annLshTopKOf(e, signs)
-            .select(col("query_id"), col("neighbor_id")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          val recall = got.count(brute.contains) / denom
-          // candidate fraction: distinct (query, neighbor) pairs the exact
-          // rerank touches, over the Q×(N-1) brute pair space
-          val eb = e.select(col("vec_id"), posexplode(array((0 until l)
-            .map(t => Similarity.annBucketOf(col("embedding"), signs, t)): _*))
-            .as(Seq("tbl", "bkt")))
-          val qp = eb.where(col("vec_id") < nQueries)
-            .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"),
-              explode(array(col("bkt") +: (0 until b)
-                .map(p => col("bkt").bitwiseXOR(lit(1 << p))): _*)).as("probe"))
-          val nCand = eb.join(qp,
-              col("tbl") === col("qtbl") && col("bkt") === col("probe") &&
-                col("vec_id") =!= col("query_id"))
-            .select(col("query_id"), col("vec_id")).distinct().count()
-          val frac = nCand.toDouble / (nQueries * (nVecs - 1))
-          println(f"[prof] ann_sweep L=$l b=$b recall@5=$recall%.3f candfrac=$frac%.3f")
-        }
-      } else if (args.head == "bpe_train_ab") {
-        // r12: narrow-shuffle gate for the BPE train loop — time the full
-        // 6-round loop at session width vs the 8-wide gated width (the
-        // loop itself runs eager actions, so wall-clock brackets it).
-        import graft.llm.TextAnalysis
-        val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-        // the production loop runs at the plain session width (the gate
-        // was reverted at bpeTrainedMergesOf after this A/B measured a
-        // wash); here the width arms are reproduced via the session conf
-        // (withNarrowShuffle(w)) so the experiment stays re-runnable
-        def timeLoop(tag: String, w: Int): Unit = (1 to 3).foreach { i =>
-          val t0 = System.nanoTime()
-          graft.Tuning.withNarrowShuffle(spark, width = w) {
-            TextAnalysis.bpeTrainedMergesOf(raw).count()
-          }
-          println(f"[prof] $tag run$i exec=${(System.nanoTime() - t0) / 1e9}%.3f")
-        }
-        (1 to 2).foreach { _ =>
-          timeLoop("wide32", 32)
-          timeLoop("narrow8", 8)
-        }
-      } else if (args.head == "domain_mix_ab") {
-        // r11 VERDICT #3: same-session A/B of the fused two-job domain-mix
-        // plan vs the r11 four-relation shape, interleaved to average out
-        // host noise; both share the persisted per-doc token index.
-        import graft.llm.Corpus
-        (1 to 2).foreach { round =>
-          bench(s"legacy_r$round")(Corpus.domainMixLegacy(spark, sfDir))
-          bench(s"fused_r$round")(Corpus.domainMix(spark, sfDir))
-        }
-      } else if (args.head == "text_tail_ab") {
-        // r11 VERDICT #7: is the text-op tail per-row CPU, job floor, or
-        // the range-sort's boundary-sampling pass re-running the expensive
-        // projection? A/B the same per-row map under (a) global orderBy
-        // (range sort: samples + re-executes the child), (b)
-        // repartition(1) + local sort (parallel map once, one exchange),
-        // (c) no sort at all (the floor).
-        import graft.llm.TextAnalysis
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val norm = TextAnalysis.normExpr(col("text"))
-        def mapped = docs.select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars_raw"),
-          length(norm).cast("long").as("n_chars_norm"),
-          md5(norm).as("norm_md5"))
-        // (d) sort the SLIM input first, expensive projection above the
-        // sort — sampling pass only scans raw columns; map runs once,
-        // parallel, order preserved through the project
-        def sortFirst = docs.orderBy(col("doc_id")).select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars_raw"),
-          length(norm).cast("long").as("n_chars_norm"),
-          md5(norm).as("norm_md5"))
-        (1 to 2).foreach { r =>
-          bench(s"norm_orderby_r$r")(mapped.orderBy(col("doc_id")))
-          bench(s"norm_rep1sort_r$r")(
-            mapped.repartition(1).sortWithinPartitions(col("doc_id")))
-          bench(s"norm_nosort_r$r")(mapped)
-          bench(s"norm_sortfirst_r$r")(sortFirst)
-        }
-        println("[prof] sortFirst plan:\n" +
-          sortFirst.queryExecution.executedPlan.toString.take(2000))
-        // repetition variants: fold above vs below the sort
-        import org.apache.spark.sql.types.{DoubleType, LongType}
-        val t = split(col("text"), " ")
-        val n = size(t)
-        val grams = transform(sequence(lit(0), n - 3),
-          i => concat_ws(" ", element_at(t, (i + 1).cast("int")),
-            element_at(t, (i + 2).cast("int")),
-            element_at(t, (i + 3).cast("int"))))
-        val maxRun = aggregate(
-          array_sort(grams),
-          struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-          (acc, x) => {
-            val run = when(x === acc.getField("prev"), acc.getField("run") + 1L)
-              .otherwise(lit(1L))
-            struct(x.as("prev"), run.as("run"),
-              greatest(acc.getField("best"), run).as("best"))
-          },
-          acc => acc.getField("best"))
-        def repProj(dd: org.apache.spark.sql.DataFrame) = dd
-          .select(col("doc_id"),
-            (n - 2).cast(LongType).as("n_grams"),
-            maxRun.as("max_gram_freq"))
-          .withColumn("rep_ratio",
-            round(col("max_gram_freq").cast(DoubleType) / col("n_grams"), 6))
-        val repBelow = repProj(docs.where(n >= 3)).orderBy(col("doc_id"))
-        val repAbove = repProj(
-          docs.where(n >= 3).select(col("doc_id"), col("text"))
-            .orderBy(col("doc_id")))
-        (1 to 2).foreach { r =>
-          bench(s"rep_foldbelow_r$r")(repBelow)
-          bench(s"rep_foldabove_r$r")(repAbove)
-        }
-        println("[prof] repAbove plan:\n" +
-          repAbove.queryExecution.executedPlan.toString.take(3000))
-      } else if (args.head == "ngram_parts") {
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.Dedup
-        val sets = Dedup.shingleSets(spark, sfDir)
-        bench("sets")(sets)
-        val ex = sets.select(col("doc_id"), col("n"), explode(col("sset")).as("sh"))
-        bench("explode")(ex)
-        val dfreq = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        bench("dfreq")(dfreq)
-        val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-        val prefix = ex.join(dfreq, "sh")
-          .withColumn("rn", row_number().over(byRarity))
-          .where(col("rn") <= col("n") - ceil(col("n") * lit(0.5)) + 1)
-          .select(col("doc_id"), col("n"), col("rn"), col("sh"))
-        bench("prefix")(prefix)
-        val alpha = ceil((col("a.n") + col("b.n")) * lit(0.5 / 1.5))
-        val cand = prefix.as("a")
-          .join(prefix.as("b").hint("shuffle_hash"),
-            col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-              col("b.n") >= ceil(col("a.n") * lit(0.5)) &&
-              col("b.n") <= floor(col("a.n") / lit(0.5)) &&
-              lit(1) + least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) >= alpha)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        bench("cand")(cand)
-        val verifyPlain = cand
-          .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
-          .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
-          .withColumn("inter", size(array_intersect(col("sa.sset"), col("sb.sset"))))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= 0.5)
-        bench("verify_plain")(verifyPlain)
-        val verifyBcast = cand
-          .join(broadcast(sets.as("sa")), col("doc_a") === col("sa.doc_id"))
-          .join(broadcast(sets.as("sb")), col("doc_b") === col("sb.doc_id"))
-          .withColumn("inter", size(array_intersect(col("sa.sset"), col("sb.sset"))))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= 0.5)
-        bench("verify_bcast")(verifyBcast)
-        val candP = cand.persist()
-        println(s"[prof] cand_count=${candP.count()}  prefix_count=${prefix.count()}  ex_count=${ex.count()}")
-        val verifyOnly = candP
-          .join(broadcast(sets.as("sa")), col("doc_a") === col("sa.doc_id"))
-          .join(broadcast(sets.as("sb")), col("doc_b") === col("sb.doc_id"))
-          .withColumn("inter", size(array_intersect(col("sa.sset"), col("sb.sset"))))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= 0.5)
-        bench("verify_only")(verifyOnly)
-        val verifyOnlyShj = candP
-          .join(sets.as("sa").hint("shuffle_hash"), col("doc_a") === col("sa.doc_id"))
-          .join(sets.as("sb").hint("shuffle_hash"), col("doc_b") === col("sb.doc_id"))
-          .withColumn("inter", size(array_intersect(col("sa.sset"), col("sb.sset"))))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= 0.5)
-        bench("verify_only_shj")(verifyOnlyShj)
-        bench("entry_full")(Dedup.ngramJaccard(spark, sfDir))
-      } else if (args.head == "ic_ab") {
-        // r21 (r20 VERDICT "Next round" #9): the intersect_count kernel
-        // vs size(array_intersect) on the IDENTICAL persisted candidate
-        // set, interleaved min-of-5 — at the largest local SF (sf1 does
-        // not exist in this sandbox; pass SPARK_GRAFT_SF_DIR to pick).
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.Dedup
-        val sets = Dedup.shingleSets(spark, sfDir)
-        val ex = sets.select(col("doc_id"), col("n"), explode(col("sset")).as("sh"))
-        val dfreq = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-        val prefix = ex.join(dfreq, "sh")
-          .withColumn("rn", row_number().over(byRarity))
-          .where(col("rn") <= col("n") - ceil(col("n") * lit(0.5)) + 1)
-          .select(col("doc_id"), col("n"), col("rn"), col("sh"))
-        val alpha = ceil((col("a.n") + col("b.n")) * lit(0.5 / 1.5))
-        val candP = prefix.as("a")
-          .join(prefix.as("b").hint("shuffle_hash"),
-            col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-              col("b.n") >= ceil(col("a.n") * lit(0.5)) &&
-              col("b.n") <= floor(col("a.n") / lit(0.5)) &&
-              lit(1) + least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) >= alpha)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-          .persist()
-        println(s"[prof] ic_ab candidates=${candP.count()}")
-        def verifyWith(inter: org.apache.spark.sql.Column) = candP
-          .join(broadcast(sets.as("sa")), col("doc_a") === col("sa.doc_id"))
-          .join(broadcast(sets.as("sb")), col("doc_b") === col("sb.doc_id"))
-          .withColumn("inter", inter)
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
-          .where(col("jaccard") >= 0.5)
-        (1 to 3).foreach { r =>
-          bench(s"ic_kernel_r$r")(verifyWith(
-            org.apache.spark.sql.graft.functions
-              .intersect_count(col("sa.sset"), col("sb.sset")).cast("int")))
-          bench(s"ic_arrayintersect_r$r")(verifyWith(
-            size(array_intersect(col("sa.sset"), col("sb.sset")))))
-        }
-      } else if (args.head == "q15_parts") {
-        import org.apache.spark.sql.types._
-        val t = Warehouse.tables(spark, sfDir)
-        val td = t.time.select(col("date_id"), col("year"),
-          month(col("full_date")).as("mon"))
-        bench("join_only")(t.fact.join(td, "date_id")
-          .select(col("product_id"), col("purchase_amount")))
-        val ppm = t.fact.join(td, "date_id")
-          .groupBy(col("product_id"), col("year"), col("mon"))
-          .agg(sum(col("purchase_amount")).as("ppm"))
-        bench("ppm")(ppm)
-        val monthly = ppm.join(t.product, "product_id")
-          .groupBy(col("store_id"), col("store_name"), col("supplier_id"), col("supplier_name"),
-            col("year"), col("mon"))
-          .agg(sum(col("ppm")).cast(DecimalType(18, 4)).as("rev"))
-        bench("monthly")(monthly)
-        bench("entry_full")(SparkEntry.queries("q15_revenue_volatility")(spark, sfDir))
-        val vol = monthly
-          .groupBy(col("store_id"), col("store_name"), col("supplier_id"), col("supplier_name"))
-          .agg(count(lit(1)).as("n_months"), sum(col("rev")).as("s1"),
-            sum(col("rev") * col("rev")).as("s2"))
-          .where(col("n_months") >= 2)
-          .select(col("store_id"), col("supplier_id"),
-            sqrt(greatest(lit(0.0),
-              (col("n_months").cast("double") * col("s2").cast("double")
-                - col("s1").cast("double") * col("s1").cast("double"))
-                / (col("n_months").cast("double") * (col("n_months").cast("double") - 1))))
-              .as("revenue_stddev"))
-        bench("vol_orderBy")(vol.orderBy(col("store_id"), col("supplier_id")))
-        bench("vol_coalesce_sort")(vol.coalesce(1)
-          .sortWithinPartitions(col("store_id"), col("supplier_id")))
-        // fused L2+L3: one explicit exchange on the (store, supplier) keys
-        // satisfies BOTH the 6-key monthly agg and the 4-key volatility agg
-        val monthlyF = ppm.join(t.product, "product_id")
-          .repartition(col("store_id"), col("store_name"),
-            col("supplier_id"), col("supplier_name"))
-          .groupBy(col("store_id"), col("store_name"), col("supplier_id"), col("supplier_name"),
-            col("year"), col("mon"))
-          .agg(sum(col("ppm")).cast(DecimalType(18, 4)).as("rev"))
-        val volF = monthlyF
-          .groupBy(col("store_id"), col("store_name"), col("supplier_id"), col("supplier_name"))
-          .agg(count(lit(1)).as("n_months"), sum(col("rev")).as("s1"),
-            sum(col("rev") * col("rev")).as("s2"))
-          .where(col("n_months") >= 2)
-          .select(col("store_id"), col("supplier_id"),
-            sqrt(greatest(lit(0.0),
-              (col("n_months").cast("double") * col("s2").cast("double")
-                - col("s1").cast("double") * col("s1").cast("double"))
-                / (col("n_months").cast("double") * (col("n_months").cast("double") - 1))))
-              .as("revenue_stddev"))
-        bench("vol_fused_l2l3")(volF.orderBy(col("store_id"), col("supplier_id")))
-      } else if (args.head == "tfidf_parts") {
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.TextAnalysis
-        val tf = TextAnalysis.termFreqs(spark, sfDir)
-        bench("tf_cached")(tf)
-        val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        bench("df_leg")(dfreq)
-        val nDocs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .agg(count(lit(1)).as("n_docs"))
-        val joined = tf.join(broadcast(dfreq), "token")
-          .crossJoin(broadcast(nDocs))
-          .withColumn("tfidf",
-            round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
-        bench("joined")(joined)
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("tfidf").desc, col("token"))
-        val ranked = joined.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 3)
-        bench("ranked")(ranked)
-        bench("entry_full")(SparkEntry.queries("text_tfidf_topk")(spark, sfDir))
-      } else if (args.head == "sketch_parts") {
-        import org.apache.spark.sql.types._
-        val t = Warehouse.tables(spark, sfDir)
-        val byStore = t.fact.join(broadcast(t.product), "product_id")
-          .select(col("store_id"), col("customer_id"), col("purchase_amount"))
-        bench("scan_join")(byStore)
-        val exact = byStore.select(col("store_id"), col("customer_id"))
-          .distinct()
-          .groupBy(col("store_id")).agg(count(lit(1)).as("n_exact"))
-        bench("exact_leg")(exact)
-        val sketches = byStore
-          .groupBy(col("store_id"))
-          .agg(
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(10000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-        bench("sketch_leg")(sketches)
-        val onePass = byStore
-          .groupBy(col("store_id"))
-          .agg(
-            countDistinct(col("customer_id")).as("n_exact"),
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(10000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-        bench("one_pass_expand")(onePass)
-        val cheapApprox = byStore
-          .groupBy(col("store_id"))
-          .agg(
-            countDistinct(col("customer_id")).as("n_exact"),
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(1000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-        bench("one_pass_acc1000")(cheapApprox)
-        bench("entry_full")(SparkEntry.queries("sketch_approx_agg")(spark, sfDir))
-        // store-partitioned slim cache: HashPartitioning(store_id) satisfies
-        // the ClusteredDistribution of BOTH the (store,customer) distinct
-        // and every groupBy(store_id) — zero downstream exchanges, at the
-        // cost of collapsing map-side parallelism to #stores (8 here).
-        val byStoreP = t.fact.join(broadcast(t.product), "product_id")
-          .select(col("store_id"), col("customer_id"), col("purchase_amount"))
-          .repartition(col("store_id"))
-          .persist()
-        byStoreP.count()
-        val exactP = byStoreP.select(col("store_id"), col("customer_id"))
-          .distinct()
-          .groupBy(col("store_id")).agg(count(lit(1)).as("n_exact"))
-        bench("exact_leg_storepart")(exactP)
-        val sketchesP = byStoreP
-          .groupBy(col("store_id"))
-          .agg(
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(10000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-        bench("sketch_leg_storepart")(sketchesP)
-        // one-pass over the store-partitioned cache: Expand doubles rows
-        // but everything stays clustered — no join, no second branch
-        bench("one_pass_storepart")(byStoreP
-          .groupBy(col("store_id"))
-          .agg(
-            countDistinct(col("customer_id")).as("n_exact"),
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(2000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-          .select(col("store_id"), col("n_exact"),
-            (abs(col("n_approx") - col("n_exact")) <=
-              round(col("n_exact") * 0.15)).as("acd_within_3sigma"),
-            (col("p50_approx") >= col("iqr").getItem(0) &&
-              col("p50_approx") <= col("iqr").getItem(1)).as("p50_in_iqr"))
-          .orderBy(col("store_id")))
-        bench("both_legs_storepart")(sketchesP.join(broadcast(exactP), "store_id")
-          .select(col("store_id"), col("n_exact"),
-            (abs(col("n_approx") - col("n_exact")) <=
-              round(col("n_exact") * 0.15)).as("acd_within_3sigma"),
-            (col("p50_approx") >= col("iqr").getItem(0) &&
-              col("p50_approx") <= col("iqr").getItem(1)).as("p50_in_iqr"))
-          .orderBy(col("store_id")))
-      } else if (args.head == "sketch_ab") {
-        // what's left in sketch_approx_agg after the codegen-cache fix:
-        // (a) registered form — broadcast join of the legs + orderBy
-        //     (rangepartitioning = an extra SAMPLING job per run);
-        // (b) same legs, presentation sort as coalesce(1)+sortWithinPartitions
-        //     over the 8 final rows (no sampling job, no exchange);
-        // (c) merge-hint join of the two legs (both already clustered on
-        //     store_id → zero-exchange SMJ, and no broadcast-build job)
-        //     + the coalesce sort.
-        import org.apache.spark.sql.types._
-        val byStore = Warehouse.factStoreSlim(spark, sfDir)
-        def exact = byStore.select(col("store_id"), col("customer_id"))
-          .distinct()
-          .groupBy(col("store_id")).agg(count(lit(1)).as("n_exact"))
-        def sketches = byStore
-          .groupBy(col("store_id"))
-          .agg(
-            approx_count_distinct(col("customer_id"), 0.05).as("n_approx"),
-            percentile_approx(col("purchase_amount").cast(DoubleType),
-              lit(0.5), lit(2000)).as("p50_approx"),
-            expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
-              .as("iqr"))
-        def flags(j: org.apache.spark.sql.DataFrame) = j
-          .select(col("store_id"), col("n_exact"),
-            (abs(col("n_approx") - col("n_exact")) <=
-              round(col("n_exact") * 0.15)).as("acd_within_3sigma"),
-            (col("p50_approx") >= col("iqr").getItem(0) &&
-              col("p50_approx") <= col("iqr").getItem(1)).as("p50_in_iqr"))
-        bench("a_registered")(SparkEntry.queries("sketch_approx_agg")(spark, sfDir))
-        // coalesce(1) was a trap: with zero exchanges in the legs it
-        // propagates to the scan and serializes the WHOLE pipeline onto
-        // one task (measured 1.6s vs 1.0s) — repartition(1) keeps the
-        // stage boundary (one round-robin exchange of 8 final rows, no
-        // rangepartitioning sampling job)
-        bench("b_repart1_sort")(flags(sketches.join(broadcast(exact), "store_id"))
-          .repartition(1).sortWithinPartitions(col("store_id")))
-        bench("c_merge_repart1")(flags(sketches.join(exact.hint("merge"), "store_id"))
-          .repartition(1).sortWithinPartitions(col("store_id")))
-        bench("d_merge_orderby")(flags(sketches.join(exact.hint("merge"), "store_id"))
-          .orderBy(col("store_id")))
-      } else if (args.head == "linededup_parts") {
-        // A/B: broadcast-flag form (registered; two segmentation scans,
-        // lines move once by doc_id + distinct-lines by lmd5) vs
-        // window-count form (one scan, but the FULL line relation moves
-        // twice: by lmd5 for the count window, then by doc_id).
-        import org.apache.spark.sql.expressions.Window
-        import graft.llm.{Corpus, Text}
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(spark.sparkContext.defaultParallelism)
-        val t = Text.tokens(col("text"))
-        val n = size(t)
-        val lineArr = transform(
-          sequence(lit(1), n, lit(Corpus.LineTokens)),
-          st => md5(concat_ws(" ", slice(t, st, lit(Corpus.LineTokens)))))
-        def rebuild(flagged: org.apache.spark.sql.DataFrame) = flagged
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_lines"),
-            count(when(col("kept"), lit(1))).as("n_kept"),
-            md5(concat_ws("|", transform(
-              filter(array_sort(collect_list(struct(col("line_idx"), col("lmd5"), col("kept")))),
-                x => x.getField("kept")),
-              x => x.getField("lmd5")))).as("clean_md5"))
-          .orderBy(col("doc_id"))
-        bench("broadcast_flag")(Corpus.lineDedupOf(docs))
-        val lines = docs.where(n >= 1)
-          .select(col("doc_id"), posexplode(lineArr).as(Seq("line_idx", "lmd5")))
-        bench("window_count")(rebuild(
-          lines.withColumn("c", count(lit(1)).over(Window.partitionBy(col("lmd5"))))
-            .withColumn("kept", col("c") < Corpus.LineDupThreshold)))
-        bench("no_respread")(Corpus.lineDedupOf(
-          spark.read.parquet(s"$sfDir/documents.parquet")))
-        val linesDirect = spark.read.parquet(s"$sfDir/documents.parquet")
-          .where(n >= 1)
-          .select(col("doc_id"), posexplode(lineArr).as(Seq("line_idx", "lmd5")))
-        bench("window_no_respread")(rebuild(
-          linesDirect.withColumn("c", count(lit(1)).over(Window.partitionBy(col("lmd5"))))
-            .withColumn("kept", col("c") < Corpus.LineDupThreshold)))
-        // r12: how much of the registered form is the final orderBy's
-        // range-sampling pass re-executing the whole chain? Rebuild the
-        // broadcast-flag pipeline inline, minus/plus the global sort.
-        def flagChain = {
-          val boiler = linesDirect
-            .groupBy(col("lmd5")).agg(count(lit(1)).as("c"))
-            .where(col("c") >= Corpus.LineDupThreshold)
-            .select(col("lmd5"), lit(true).as("boiler"))
-          linesDirect.join(broadcast(boiler), Seq("lmd5"), "left")
-            .withColumn("kept", col("boiler").isNull)
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_lines"),
-              count(when(col("kept"), lit(1))).as("n_kept"),
-              md5(concat_ws("|", transform(
-                filter(array_sort(collect_list(struct(col("line_idx"), col("lmd5"), col("kept")))),
-                  x => x.getField("kept")),
-                x => x.getField("lmd5")))).as("clean_md5"))
-        }
-        def flagRange = {
-          val boiler = linesDirect
-            .groupBy(col("lmd5")).agg(count(lit(1)).as("c"))
-            .where(col("c") >= Corpus.LineDupThreshold)
-            .select(col("lmd5"), lit(true).as("boiler"))
-          linesDirect.join(broadcast(boiler), Seq("lmd5"), "left")
-            .withColumn("kept", col("boiler").isNull)
-            .repartitionByRange(col("doc_id"))
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_lines"),
-              count(when(col("kept"), lit(1))).as("n_kept"),
-              md5(concat_ws("|", transform(
-                filter(array_sort(collect_list(struct(col("line_idx"), col("lmd5"), col("kept")))),
-                  x => x.getField("kept")),
-                x => x.getField("lmd5")))).as("clean_md5"))
-            .sortWithinPartitions(col("doc_id"))
-        }
-        (1 to 2).foreach { r =>
-          bench(s"flag_ordered_r$r")(flagChain.orderBy(col("doc_id")))
-          bench(s"flag_unordered_r$r")(flagChain)
-          bench(s"flag_rangeagg_r$r")(flagRange)
-        }
-      } else args.foreach(n => bench(n)(SparkEntry.queries(n)(spark, sfDir)))
-      spark.stop()
-      return
+    def take(ms: Double): Part = synchronized {
+      val p = Part(ms, jobs, stages, tasks, cpuNs / 1e6)
+      jobs = 0; stages = 0; tasks = 0; cpuNs = 0L
+      p
     }
+  }
 
-    val t = Warehouse.tables(spark, sfDir)
-    bench("scan_only")(t.fact.select(col("quantity")))
-    bench("scan_agg")(t.fact.groupBy(col("customer_id")).agg(sum(col("quantity"))))
-    bench("scan_join_agg")(
-      t.fact.join(broadcast(t.customer), "customer_id")
-        .groupBy(col("gender"), col("age"), col("city_category"))
-        .agg(sum(col("purchase_amount"))))
-    bench("full_q02")(
-      t.fact.join(broadcast(t.customer), "customer_id")
-        .groupBy(col("gender"), col("age"), col("city_category"))
-        .agg(sum(col("purchase_amount")).as("s"))
-        .orderBy(col("gender"), col("age"), col("city_category")))
-    spark.stop()
+  /** Times `build` and then a `noop` write of what it returns, with the
+    * Spark work of each part. Events of earlier work are drained before
+    * counting starts, so they never reach this run. */
+  def measure(spark: SparkSession)(build: => DataFrame): Run = {
+    val sc = spark.sparkContext
+    ListenerBusUtil.drain(sc)
+    val counter = new Counter
+    sc.addSparkListener(counter)
+    try {
+      val t0 = System.nanoTime()
+      val df = build
+      val constructMs = (System.nanoTime() - t0) / 1e6
+      ListenerBusUtil.drain(sc)
+      val construct = counter.take(constructMs)
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val executeMs = (System.nanoTime() - t1) / 1e6
+      ListenerBusUtil.drain(sc)
+      Run(construct, counter.take(executeMs))
+    } finally sc.removeSparkListener(counter)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val entries = SparkEntry.queries
+    val unknown = args.filterNot(entries.contains)
+    if (args.isEmpty || unknown.nonEmpty) {
+      System.err.println("usage: graft.Prof <entry>..." +
+        (if (unknown.isEmpty) "" else s"; unknown: ${unknown.mkString(", ")}"))
+      sys.exit(2)
+    }
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    try args.foreach { name =>
+      def build = entries(name)(spark, sfDir)
+      measure(spark)(build)
+      (1 to 3).foreach { i =>
+        val r = measure(spark)(build)
+        println(s"[prof] $name run$i construct=${r.construct} " +
+          s"execute=${r.execute}")
+      }
+    } finally spark.stop()
   }
 }

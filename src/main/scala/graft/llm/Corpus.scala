@@ -972,48 +972,17 @@ object Corpus {
   private[llm] def domainMixOf(d: DataFrame): DataFrame =
     mixOfPerDoc(perDocTokens(d))
 
-  /** A/B reference for [[graft.Prof]]'s domain_mix_ab mode: the r11
-    * four-relation shape (totals broadcast + rates broadcast + kept
-    * subquery + left join) this round's fused [[mixOfPerDoc]] replaced.
-    * Same results, four job floors. */
-  private[graft] def domainMixLegacy(s: SparkSession, dir: String): DataFrame = {
-    val perDoc = domainPerDoc(s, dir)
-    val bySource = perDoc.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("src_tokens"))
-    val totals = bySource.agg(
-      sum(col("src_tokens")).cast(DoubleType).as("total_tokens"))
-    val rates = bySource.crossJoin(broadcast(totals))
-      .select(col("source"), col("n_docs"), col("src_tokens"),
-        round(col("src_tokens") / col("total_tokens"), 6).as("share"),
-        round(least(lit(1.0),
-          lit(DomainCapShare) * col("total_tokens") / col("src_tokens")), 6)
-          .as("sample_rate"))
-    val kept = perDoc
-      .join(broadcast(rates.select(col("source"), col("sample_rate"))), "source")
-      .where(pmod(hash64(concat(lit("dmix|"), col("doc_id").cast(StringType))),
-        lit(DomainKeepMod)).cast(DoubleType)
-        < col("sample_rate") * lit(DomainKeepMod.toDouble))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("kept_tokens"))
-    rates.join(broadcast(kept), Seq("source"), "left")
-      .select(col("source"), col("n_docs"), col("src_tokens"), col("share"),
-        col("sample_rate"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
-      .orderBy(col("source"))
-  }
-
   private def mixOfPerDoc(perDoc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Two jobs total (r11 VERDICT #3 — the old four-relation shape spent
     // its time on four job floors: totals broadcast, rates broadcast,
-    // kept broadcast, final join. Measured same-session interleaved A/B,
-    // [[graft.Prof]] domain_mix_ab at sf0.1: legacy ~1.05 s warm → fused
-    // ~0.58 s. The residue is these two jobs' scheduling floor over a
-    // 20-row result — the only single-job form would collect_list every
-    // doc's (hash, n_tokens) into one row per source and filter with
-    // higher-order functions, which serializes a source's corpus slice
-    // into a single task: scale-hostile, rejected):
+    // kept broadcast, final join. Measured same-session interleaved A/B
+    // at sf0.1: four-relation ~1.05 s warm → fused ~0.58 s. The residue
+    // is these two jobs' scheduling floor over a 20-row result — the only
+    // single-job form would collect_list every doc's (hash, n_tokens)
+    // into one row per source and filter with higher-order functions,
+    // which serializes a source's corpus slice into a single task:
+    // scale-hostile, rejected):
     //  1. the grand total rides the per-source aggregate as an
     //     unpartitioned window — legal because the window input is the
     //     #sources-row aggregate (a bounded source registry), never the

@@ -143,8 +143,8 @@ object Similarity {
   lazy val annPlaneSigns: Array[Array[Array[Int]]] =
     annPlaneSignsFor(AnnTables, AnnPlanes)
 
-  /** Plane generator for any (tables, planes) budget — shared by the
-    * production constants and the Prof ann_sweep retuning mode. */
+  /** Plane generator for any (tables, planes) budget; [[annPlaneSigns]]
+    * is the production one. */
   private[graft] def annPlaneSignsFor(tables: Int,
       planes: Int): Array[Array[Array[Int]]] = {
     val md = MessageDigest.getInstance("MD5")
@@ -177,7 +177,7 @@ object Similarity {
     annLshTopKOf(emb(s, dir), annPlaneSigns)
 
   /** [[annLshTopK]] over any (vec_id, embedding) relation with an explicit
-    * plane-sign budget — the Prof ann_sweep hook. */
+    * plane-sign budget. */
   private[graft] def annLshTopKOf(e0: DataFrame,
       signs: Array[Array[Array[Int]]]): DataFrame = {
     val tables = signs.length

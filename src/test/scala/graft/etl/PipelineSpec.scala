@@ -73,6 +73,37 @@ class PipelineSpec extends SparkSpec {
     assert(one("salefact").nonEmpty)
   }
 
+  test("a stream whose batch 0 fails resumes from its checkpoint and equals a clean run") {
+    val base = Files.createTempDirectory("graft_restart").toString
+    val fx = s"$base/fixtures"
+    EtlFixtures.write(spark, sf001, fx, nFiles = 4)
+    def run(wh: String): Unit = Pipeline.run(spark, s"$fx/transactions",
+      s"$fx/customer_master", s"$fx/product_master", wh, maxFilesPerTrigger = 1)
+    def tables(wh: String): Map[String, Seq[Row]] =
+      Seq("customer_dim", "product_dim", "time_dim", "salefact").map { t =>
+        val df = spark.read.parquet(s"$wh/$t") // salefact keeps batch_id
+        t -> df.orderBy(df.columns.map(col): _*).collect().toSeq
+      }.toMap
+
+    val clean = s"$base/clean"
+    run(clean)
+
+    val wh = s"$base/wh"
+    // a plain file where the time dim's directory belongs fails batch 0
+    val obstacle = new java.io.File(s"$wh/time_dim")
+    Files.createDirectories(obstacle.toPath.getParent)
+    Files.write(obstacle.toPath, "not a table".getBytes)
+    intercept[Exception](run(wh))
+    assert(!new java.io.File(s"$wh/salefact/batch_id=0").exists())
+
+    assert(obstacle.delete())
+    run(wh) // same whDir, so the query resumes from $wh/_checkpoint
+    val (got, want) = (tables(wh), tables(clean))
+    assert(want("salefact").map(_.getAs[Int]("batch_id")).distinct.sorted == Seq(0, 1, 2, 3))
+    want.keys.foreach(t => assert(got(t) == want(t), s"$t differs from a clean run"))
+    assert(Option(new java.io.File(s"$wh/_staging").list()).forall(_.isEmpty))
+  }
+
   test("MemoryStream enrichment == batch enrichment on the same tuples") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Int, String, Int, String, Int)]

@@ -3,13 +3,13 @@
 # a mid-refactor snapshot zeroed a round in which everything worked).
 #
 # Usage:
-#   tools/gate.sh                 # compile only (the minimum before ANY commit)
+#   tools/gate.sh                 # compile main and tests (the minimum before ANY commit)
 #   tools/gate.sh q1 q2 ...       # compile + restricted Verify/check on the
 #                                 # named entries at sf0.01
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-sbt -batch compile
+sbt -batch Test/compile
 
 if [ "$#" -gt 0 ]; then
   out=/tmp/gate_verify
