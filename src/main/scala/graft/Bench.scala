@@ -79,9 +79,8 @@ object Bench {
       // codegen units, so by the time a pass returns to a query its
       // classes are evicted and every timed run re-janinos ~20 units
       // (~0.2-0.5s/query) — the r7 "in-suite inflation" (shared entries
-      // +35%, q17_rollup 2× with an unchanged plan). Measured r8 (Prof
-      // suite_warm): after a full suite pass, per-run compile delta goes
-      // +22→0 and q17 returns to its isolated 0.9s the moment the cache
+      // +35%, q17_rollup 2× with an unchanged plan). Measured r8: after a
+      // full suite pass, per-run compile delta goes +22→0 and q17 returns to its isolated 0.9s the moment the cache
       // holds all units. 2048 covers the suite with headroom; the cost is
       // ~50 MB of metaspace/code-heap (measured: both far from their
       // limits, storage 27 MB, GC unchanged).
@@ -166,7 +165,7 @@ object Bench {
     // RefQueries/star/warehouse; only SqlQueries' view registration
     // changed). (2) r12 in-suite pass spread is tight (q11 0.368/0.385/
     // 0.506s) — no intra-run contamination. (3) ISOLATED fresh-session
-    // runs (Prof named-entry, warehouse + one query) measure 0.56–0.8s
+    // runs (warehouse + one query) measure 0.56–0.8s
     // for the same four queries — ABOVE the in-suite mins, so the suite
     // itself is not slowing them; r10's 0.23s for q11 is reproducible
     // under NO session shape today. Attribution: suite growth (86→98→100

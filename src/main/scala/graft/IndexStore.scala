@@ -35,8 +35,6 @@ object IndexStore {
     * cache hit. Never set outside the bench harness. */
   @volatile var bypassRead: Boolean = false
 
-  private val Root = "/root/repo/target/graft-indexes"
-
   private def fpHex(fingerprint: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(fingerprint.getBytes(StandardCharsets.UTF_8))
@@ -50,9 +48,7 @@ object IndexStore {
     * re-apply their ordering. */
   def readOrBuild(s: SparkSession, dir: String, name: String,
       fingerprint: String)(build: => DataFrame): DataFrame = synchronized {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val path = s"$Root/$tag/$name-${fpHex(fingerprint)}"
+    val path = s"${StateRoot.path("indexes", dir)}/$name-${fpHex(fingerprint)}"
     val committed = new File(path, "_SUCCESS")
     if (bypassRead || !committed.exists()) {
       build.write.mode("overwrite").parquet(path)

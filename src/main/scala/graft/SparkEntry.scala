@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{AnalyticsQueries, ExtraQueries, QueryDef, RefQueries, SqlQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7 at the repository root.
   *
   * Every implemented operator from SURVEY §2 surfaces here as a named query
   * with (when SQL-expressible) a DuckDB oracle over the same parquet tables.

@@ -18,24 +18,17 @@ import graft.star.StarSql
   */
 object EtlQueries {
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** Rows ingested and wall-clock of the last pipeline run (read by the
     * bench to report ingest throughput as a separate load-phase metric). */
   @volatile var lastLoadSeconds: Double = -1.0
   @volatile var lastLoadRows: Long = -1L
 
   /** Run the pipeline once per (session, sf); the warehouse lands under
-    * target/ and is overwritten on re-runs (fresh checkpoint ⇒ batch ids
-    * restart at 0, and the fixtures are rewritten first). */
-  def warehouseDir(spark: SparkSession, sfDir: String): String = synchronized {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(sfDir.hashCode)
-    val root = s"/root/repo/target/graft-etl/$tag"
-    if (!ran.contains(spark, sfDir)) {
+    * target/ and is rebuilt from scratch on re-runs (fresh checkpoint ⇒
+    * batch ids restart at 0, and the fixtures are rewritten first). */
+  def warehouseDir(spark: SparkSession, sfDir: String): String =
+    graft.StateRoot.once(spark, "etl", sfDir) { root =>
       val fx = s"$root/fixtures"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/wh"))
       EtlFixtures.write(spark, sfDir, fx, nFiles = 8)
       val t0 = System.nanoTime()
       Pipeline.run(spark,
@@ -46,10 +39,7 @@ object EtlQueries {
         maxFilesPerTrigger = 3)
       lastLoadSeconds = (System.nanoTime() - t0) / 1e9
       lastLoadRows = spark.read.parquet(s"$root/wh/salefact").count()
-      ran.put(spark, sfDir, ())
-    }
-    s"$root/wh"
-  }
+    } + "/wh"
 
   /** Bench hook: run the ingest again and keep the BEST (min) load time.
     * The one-shot load is timed during bench bring-up with no min-of-N
@@ -61,7 +51,7 @@ object EtlQueries {
   def rerunLoad(spark: SparkSession, sfDir: String): Unit = synchronized {
     val prevSec = lastLoadSeconds
     val prevRows = lastLoadRows
-    ran.remove(spark, sfDir)
+    graft.StateRoot.forget(spark, "etl", sfDir)
     warehouseDir(spark, sfDir)
     if (prevSec > 0 && prevSec < lastLoadSeconds) {
       lastLoadSeconds = prevSec

@@ -131,11 +131,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** (doc_id, shingle) inverted-index relation, shingles distinct per doc. */
-  private def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"),
-      explode(shingles(col("text"), ShingleK)).as("sh"))
-
   /** Exact n-gram Jaccard near-dup pairs with PREFIX FILTERING (the
     * AllPairs/PPJoin family — Bayardo et al. WWW'07, Xiao et al. WWW'08).
     *
@@ -157,7 +152,7 @@ object Dedup {
     * the doc (prefix ranking) — never the pair space. Output is identical
     * to the exhaustive formulation (the oracle still runs that one).
     *
-    * r7 profile (Prof ngram_parts, sf0.1 min-of-5 warm): cached index
+    * r7 profile (sf0.1 min-of-5 warm): cached index
     * read 0.08s, df rollup 0.45s, prefix rank 0.55s, candidate self-join
     * + distinct 1.27s, verify 0.65s → entry 1.92s. The dominant term is
     * the candidate join itself — CPU-dense inequality evaluation over
@@ -371,21 +366,6 @@ object Dedup {
           (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
       .withColumn("resemblance_missed", col("jaccard") < lit(JaccardThreshold))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** MinHash signatures: per doc, 64 universal-hash permutations over the
-    * shingle base hash; signature i = min over the doc's shingles. */
-  private def minhashSignature(s: SparkSession, dir: String): DataFrame = {
-    val hashed = shingleIndex(s, dir).select(
-      col("doc_id"),
-      pmod(hash64(col("sh")), lit(BaseHashMod)).as("hr"))
-    def h(i: Int) = {
-      val (a, b) = minhashSeeds(i)
-      pmod(lit(a) * col("hr") + lit(b), lit(MinhashP))
-    }
-    hashed.groupBy(col("doc_id")).agg(
-      min(h(0)).as("m0"),
-      (1 until MinhashPerms).map(i => min(h(i)).as(s"m$i")): _*)
   }
 
   /** MinHash+LSH near-dup pairs: band the signature (16 bands × 4 rows),

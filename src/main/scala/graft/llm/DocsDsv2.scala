@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.IntegerType
 
 /** The corpus materialized through the custom `graftdocs` DataSourceV2
   * connector ([[org.apache.spark.sql.graft.dsv2.GraftDocsSource]]): a
-  * per-(session, sf) index-artifact build (the [[graft.SessionMemo]]
-  * discipline) that writes the documents table hash-bucketed by
+  * per-(session, sf) index-artifact build ([[graft.StateRoot.once]])
+  * that writes the documents table hash-bucketed by
   * `pmod(doc_id, Buckets)` — the connector's write path plans the
   * cluster-by-bucket exchange and doc_id sort itself via
   * RequiresDistributionAndOrdering — and serves reads through the
@@ -21,15 +21,9 @@ object DocsDsv2 {
     * dozens of rows per file, large enough to exercise real pruning. */
   val Buckets = 8
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val built = new graft.SessionMemo[String]
-
   /** Write-once per (session, sf); returns the table path. */
   def path(s: SparkSession, dir: String): String =
-    built.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2/$tag"
+    graft.StateRoot.once(s, "dsv2", dir) { p =>
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -37,7 +31,6 @@ object DocsDsv2 {
         .option("buckets", Buckets.toString)
         .mode("overwrite")
         .save(p)
-      p
     }
 
   /** The corpus read THROUGH the connector (schema = documents + the
@@ -68,13 +61,8 @@ object DocsDsv2 {
     * write time and pays forever at read time (the published Z-order
     * economics). Deterministic: scaling uses the corpus max, integer
     * arithmetic only. */
-  private val builtZ = new graft.SessionMemo[String]
-
   def zpath(s: SparkSession, dir: String): String =
-    builtZ.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-z/$tag"
+    graft.StateRoot.once(s, "dsv2-z", dir) { p =>
       zcelled(s.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("n_chars"), col("lang")))
         .write.format("graftdocs")
@@ -82,7 +70,6 @@ object DocsDsv2 {
         .option("layout", "zorder")
         .mode("overwrite")
         .save(p)
-      p
     }
 
   /** Any (doc_id, n_chars, …) relation with its Z-prefix `bucket` cell
@@ -123,9 +110,6 @@ object DocsDsv2 {
   val TtDropMod = 10L
   val TtDropRes = 3L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtT = new graft.SessionMemo[String]
-
   /** A two-snapshot table history: v1 = the full slim corpus, v2 = v1
     * with every ≡3 (mod 10) doc dropped (a curation release). Each
     * overwrite commits a SNAPSHOT (version-suffixed data files +
@@ -134,13 +118,7 @@ object DocsDsv2 {
     * connector's own format. The history dir is wiped and rebuilt per
     * (session, sf) so versions are always exactly {1, 2}. */
   def ttPath(s: SparkSession, dir: String): String =
-    builtT.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-tt/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-tt", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -152,7 +130,6 @@ object DocsDsv2 {
       commit(base) // snapshot v1
       commit(base.where(
         pmod(col("doc_id"), lit(TtDropMod)) =!= TtDropRes)) // snapshot v2
-      p
     }
 
   /** TIME-TRAVEL DIFF — both snapshots read through the connector with
@@ -176,9 +153,6 @@ object DocsDsv2 {
 
   // ---- vector-store face (r16) ------------------------------------------
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtV = new graft.SessionMemo[String]
-
   /** The embeddings corpus materialized through the connector's FLOAT
     * VECTOR column (gdf TagFloatArray — length-prefixed IEEE-754 BE
     * floats, bit-exact round-trip): the single-table columnar format
@@ -188,10 +162,7 @@ object DocsDsv2 {
     * so id-keyed joins co-partition and a metadata predicate prunes
     * before a single float is decoded. */
   def vecPath(s: SparkSession, dir: String): String =
-    builtV.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-vec/$tag"
+    graft.StateRoot.once(s, "dsv2-vec", dir) { p =>
       s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id").as("doc_id"), col("embedding"), col("label"))
         .withColumn("bucket",
@@ -200,7 +171,6 @@ object DocsDsv2 {
         .option("buckets", Buckets.toString)
         .mode("overwrite")
         .save(p)
-      p
     }
 
   /** The (vec_id, embedding) relation read THROUGH the connector. */
@@ -237,9 +207,6 @@ object DocsDsv2 {
   val DelMod = 16L
   val DelRes = 3L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtDel = new graft.SessionMemo[String]
-
   /** A two-snapshot history: v1 = the slim corpus; v2 = the connector's
     * `SupportsDelete.deleteWhere` copy-on-write delete of the request
     * list. The id list is assembled driver-side because that IS the
@@ -247,13 +214,7 @@ object DocsDsv2 {
     * explicit id list, not a scan; the rewrite itself runs as one Spark
     * task per touched file ([[org.apache.spark.sql.graft.dsv2.GdfMaintenance]]). */
   def delPath(s: SparkSession, dir: String): String =
-    builtDel.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-del/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-del", dir) { p =>
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -266,7 +227,6 @@ object DocsDsv2 {
         .select(col("doc_id")).collect().map(_.getLong(0): Any)
       deleteTable(p).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.In("doc_id", ids))) // snapshot v2
-      p
     }
 
   /** The table handle through the PUBLIC connector interface — the
@@ -313,22 +273,13 @@ object DocsDsv2 {
   val MorMod = 16L
   val MorRes = 7L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMor = new graft.SessionMemo[String]
-
   /** A two-snapshot history: v1 = the slim corpus; v2 = the MERGE-ON-READ
     * delete of the request list via
     * [[org.apache.spark.sql.graft.dsv2.GdfMaintenance.deleteWhereMor]] —
     * data files untouched, one `.dvf` position file committed, readers
     * apply it as a scan-time skip. */
   def morPath(s: SparkSession, dir: String): String =
-    builtMor.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-mor/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-mor", dir) { p =>
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -342,7 +293,6 @@ object DocsDsv2 {
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.deleteWhereMor(
         s, p, Array[org.apache.spark.sql.sources.Filter](
           org.apache.spark.sql.sources.In("doc_id", ids))) // snapshot v2
-      p
     }
 
   /** MERGE-ON-READ delete certification — the same full-outer-join shape
@@ -372,20 +322,11 @@ object DocsDsv2 {
   val EqMod = 16L
   val EqRes = 12L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtEq = new graft.SessionMemo[String]
-
   /** A two-snapshot history: v1 = the slim corpus; v2 = the EQUALITY
     * delete of the request keys via
     * [[org.apache.spark.sql.graft.dsv2.GdfMaintenance.deleteByKeys]]. */
   def eqPath(s: SparkSession, dir: String): String =
-    builtEq.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-eq/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-eq", dir) { p =>
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -397,7 +338,6 @@ object DocsDsv2 {
         .where(pmod(col("doc_id"), lit(EqMod)) === EqRes)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.deleteByKeys(p, keys)
-      p
     }
 
   /** EQUALITY-delete certification — the same full-outer-join shape and
@@ -429,17 +369,8 @@ object DocsDsv2 {
   val MergeLang = "xx"
   val MergeInserts = 40L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMerge = new graft.SessionMemo[String]
-
   def mergePath(s: SparkSession, dir: String): String =
-    builtMerge.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-merge/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-merge", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       base.withColumn("bucket",
@@ -457,7 +388,6 @@ object DocsDsv2 {
           lit("new").as("lang"))
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.mergeInto(
         s, p, updates.unionByName(inserts)) // snapshot v2
-      p
     }
 
   /** Keyed MERGE, copy-on-write: matched docs rewrite in place (only
@@ -485,17 +415,8 @@ object DocsDsv2 {
   val MergeLInserts = 30L
   val MergeLGate = 16L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMergeL = new graft.SessionMemo[String]
-
   def mergeLargePath(s: SparkSession, dir: String): String =
-    builtMergeL.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-mergel/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-mergel", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       base.withColumn("bucket",
@@ -514,7 +435,6 @@ object DocsDsv2 {
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.mergeInto(
         s, p, updates.unionByName(inserts), "doc_id",
         maxBroadcastRows = MergeLGate) // exceeds the gate -> shuffled
-      p
     }
 
   /** Large-source MERGE certification read — the oracle re-derives the
@@ -542,20 +462,11 @@ object DocsDsv2 {
   val ChgLang = "cd"
   val ChgInserts = 25L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtChg = new graft.SessionMemo[String]
-
   /** A three-snapshot history exercising BOTH write regimes the feed
     * must see through: a merge-on-read delete (dv-changed files) and a
     * copy-on-write merge (removed + added files). */
   def changesPath(s: SparkSession, dir: String): String =
-    builtChg.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-chg/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-chg", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       base.withColumn("bucket",
@@ -580,7 +491,6 @@ object DocsDsv2 {
           lit("cf").as("lang"))
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.mergeInto(
         s, p, updates.unionByName(inserts)) // snapshot v3
-      p
     }
 
   /** CHANGE-DATA-FEED certification: the net row-level changes v1 → v3
@@ -606,8 +516,9 @@ object DocsDsv2 {
       .orderBy(col("_commit_version"), col("doc_id"), col("_change_type"))
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val streamedCdc = new graft.SessionMemo[Unit]
+  /** The table's change feed as a stream, replayed from version 1. */
+  private def cdcFeed(s: SparkSession, p: String): DataFrame =
+    s.readStream.format("graftdocs-cdc").option("startingversion", "1").load(p)
 
   /** The CDC feed consumed as a STREAM (r18): `readStream
     * .format("graftdocs-cdc")` over the same three-snapshot history,
@@ -618,26 +529,9 @@ object DocsDsv2 {
     * hash match). */
   def changesStreamed(s: SparkSession, dir: String): DataFrame = {
     val p = changesPath(s, dir)
-    val out = s"$p-cdc-stream"
-    synchronized {
-      if (!streamedCdc.contains(s, dir)) {
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = s.readStream.format("graftdocs-cdc")
-          .option("startingversion", "1")
-          .load(p)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        streamedCdc.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "dsv2-cdc-stream", dir) { out =>
+      graft.StateRoot.drain(cdcFeed(s, p), "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result")
       .orderBy(col("_commit_version"), col("doc_id"), col("_change_type"))
@@ -647,9 +541,6 @@ object DocsDsv2 {
     * through the staged commit; the rest are the base table. */
   val WapMod = 4L
   val WapRes = 1L
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtWap = new graft.SessionMemo[String]
 
   /** WRITE-AUDIT-PUBLISH cycle (r18): base table at v1; the held-out
     * quarter of the corpus lands as a STAGE-ONLY append (invisible to
@@ -662,13 +553,7 @@ object DocsDsv2 {
     * GdfWapSpec pins invisibility, moved-head cherry-pick, feed
     * skipping, stage expiry, and the loud failure modes. */
   def wapPath(s: SparkSession, dir: String): String =
-    builtWap.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-wap/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-wap", dir) { p =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -688,7 +573,6 @@ object DocsDsv2 {
         .option("version", stagedV.toString).load(p).count() > baseCount,
         "the audit read must see the staged rows")
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.publish(p, stagedV)
-      p
     }
 
   /** The published table, reassembled — oracle: the raw documents. */
@@ -704,9 +588,6 @@ object DocsDsv2 {
   val DefRes = 2L
   val DefVal = 7L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtDef = new graft.SessionMemo[String]
-
   /** DEFAULT COLUMN VALUES (r18): base table at v1; `ADD COLUMN quality
     * DEFAULT 7` as a METADATA-ONLY commit (Iceberg-v3 initial-default);
     * then the held-out rows append WITH real quality values. Old files
@@ -717,13 +598,7 @@ object DocsDsv2 {
     * commit, rewrite materialization, feed defaults, time travel to the
     * narrow schema, and the loud failure modes. */
   def defPath(s: SparkSession, dir: String): String =
-    builtDef.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-def/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-def", dir) { p =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -738,7 +613,6 @@ object DocsDsv2 {
         .withColumn("quality", pmod(col("n_chars"), lit(5L)))
         .write.format("graftdocs")
         .option("buckets", Buckets.toString).mode("append").save(p) // v3
-      p
     }
 
   /** The evolved table: pre-column rows serve the default. */
@@ -746,9 +620,6 @@ object DocsDsv2 {
     s.read.format("graftdocs").load(defPath(s, dir))
       .select(col("doc_id"), col("n_chars"), col("lang"), col("quality"))
       .orderBy(col("doc_id"))
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMe = new graft.SessionMemo[String]
 
   /** MERGE AUTO-EVOLUTION (r18, the Delta withSchemaEvolution shape):
     * the merge source carries a NEW `score` column — with
@@ -760,13 +631,7 @@ object DocsDsv2 {
     * without the opt-in, the type-conflict failure, and the shuffled
     * regime's identical behavior. */
   def mergeEvolvePath(s: SparkSession, dir: String): String =
-    builtMe.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-me/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-me", dir) { p =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
       docs.withColumn("bucket",
@@ -786,7 +651,6 @@ object DocsDsv2 {
           pmod(lit(4000L) + col("i"), lit(7L)).as("score"))
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.mergeInto(
         s, p, updates.unionByName(inserts), autoEvolve = true) // v2 widens
-      p
     }
 
   /** The widened table: touched rows carry scores, the rest null. */
@@ -794,9 +658,6 @@ object DocsDsv2 {
     s.read.format("graftdocs").load(mergeEvolvePath(s, dir))
       .select(col("doc_id"), col("n_chars"), col("lang"), col("score"))
       .orderBy(col("doc_id"))
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtLin = new graft.SessionMemo[String]
 
   /** ROW LINEAGE (r18, the Iceberg-v3 stable row identity): ids are
     * assigned ONCE at first commit (virtual ranges in deterministic
@@ -809,13 +670,7 @@ object DocsDsv2 {
     * not just the final values. GdfLineageSpec pins append extension,
     * update identity, and the no-lineage loud path. */
   def linPath(s: SparkSession, dir: String): String =
-    builtLin.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-lin/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-lin", dir) { p =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -835,7 +690,6 @@ object DocsDsv2 {
         .select(col("doc_id"), col("n_chars"), lit(ChgLang).as("lang")))
       // v4: compaction (ids travel through the bucket rewrite)
       gmx.compact(s, p)
-      p
     }
 
   /** The lineage read after the full rewrite history. */
@@ -863,9 +717,6 @@ object DocsDsv2 {
       .orderBy(col("column_name"))
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtCon = new graft.SessionMemo[String]
-
   /** CHECK CONSTRAINTS end to end (r18): the corpus table carries
     * `n_chars >= 0` and `lang IS NOT NULL`; half the corpus loads, the
     * constraints land (validating the existing rows), the other half
@@ -875,13 +726,7 @@ object DocsDsv2 {
     * enforcement admitted every legal row and the refused batch leaked
     * nothing. GdfConstraintSpec pins the verb-level semantics. */
   def conPath(s: SparkSession, dir: String): String =
-    builtCon.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-con/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-con", dir) { p =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -904,7 +749,6 @@ object DocsDsv2 {
       require(thrown, "the violating batch must be refused")
       require(gmx.currentVersion(p) == before,
         "a refused write must not move the snapshot version")
-      p
     }
 
   /** The constrained table, reassembled — oracle: the raw documents. */
@@ -912,9 +756,6 @@ object DocsDsv2 {
     s.read.format("graftdocs").load(conPath(s, dir))
       .select(col("doc_id"), col("n_chars"), col("lang"))
       .orderBy(col("doc_id"))
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMv = new graft.SessionMemo[String]
 
   /** INCREMENTAL MATERIALIZED VIEW over the change history (r18): the
     * `lang → (count, sum(n_chars))` aggregate built at snapshot v1, then
@@ -930,11 +771,7 @@ object DocsDsv2 {
     * rollback refusal. */
   def mvIncremental(s: SparkSession, dir: String): DataFrame = {
     val p = changesPath(s, dir)
-    val mv = builtMv.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv", dir) { out =>
       val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
       val m1 = mvm.refresh(s, p, out, "lang", "n_chars", Some(1))
       require(m1 == "initial", s"expected initial refresh, got $m1")
@@ -942,14 +779,10 @@ object DocsDsv2 {
       require(m2 == "incremental", s"expected incremental refresh, got $m2")
       val m3 = mvm.refresh(s, p, out, "lang", "n_chars")
       require(m3 == "noop", s"expected noop refresh, got $m3")
-      out
     }
     org.apache.spark.sql.graft.dsv2.GdfMaterializedView.read(s, mv)
       .orderBy(col("lang"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMvStream = new graft.SessionMemo[String]
 
   /** The MV maintained by the CDC STREAM (r18): the near-real-time loop
     * closed end to end — `readStream graftdocs-cdc` from v1, each
@@ -961,32 +794,15 @@ object DocsDsv2 {
     * (stream-batch equivalence, the repo's streaming discipline). */
   def mvStreamed(s: SparkSession, dir: String): DataFrame = {
     val p = changesPath(s, dir)
-    val mv = builtMvStream.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv-stream"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv-stream", dir) { out =>
       val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
       require(mvm.refresh(s, p, out, "lang", "n_chars", Some(1)) == "initial")
-      val q = s.readStream.format("graftdocs-cdc")
-        .option("startingversion", "1")
-        .load(p)
-        .writeStream
-        .option("checkpointLocation", s"$out/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          mvm.applyDelta(s, out, b, "lang", "n_chars")
-        }
-        .start()
-      q.awaitTermination()
-      out
+      graft.StateRoot.drain(cdcFeed(s, p), "append", out)(
+        (b, _) => mvm.applyDelta(s, out, b, "lang", "n_chars"))
     }
     org.apache.spark.sql.graft.dsv2.GdfMaterializedView.read(s, mv)
       .orderBy(col("lang"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMvStats = new graft.SessionMemo[String]
 
   /** MIN/MAX/AVG-bearing MV over the SAME change history (r19, judge
     * ask #5): COUNT/SUM fold as ±deltas; a group touched by a DELETE or
@@ -998,11 +814,7 @@ object DocsDsv2 {
   def mvStats(s: SparkSession, dir: String): DataFrame = {
     val p = changesPath(s, dir)
     val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
-    val mv = builtMvStats.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv-stats"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv-stats", dir) { out =>
       require(mvm.refreshStats(s, p, out, "lang", "n_chars", Some(1))
         == "initial")
       require(mvm.refreshStats(s, p, out, "lang", "n_chars")
@@ -1010,15 +822,11 @@ object DocsDsv2 {
       require(mvm.lastRecomputedGroups.nonEmpty,
         "the deletes in the history must force touched-group recomputes")
       require(mvm.refreshStats(s, p, out, "lang", "n_chars") == "noop")
-      out
     }
     mvm.readStats(s, mv)
       .withColumn("avg_val", round(col("avg_val"), 6))
       .orderBy(col("lang"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMvJoin = new graft.SessionMemo[String]
 
   /** FACT⋈DIM MV over the same history (r19, judge ask #5): the view
     * groups by a DIMENSION attribute (a broadcast lang→family dim) and
@@ -1040,24 +848,16 @@ object DocsDsv2 {
     val p = changesPath(s, dir)
     val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
     def dim = mvJoinDim(s, dir)
-    val mv = builtMvJoin.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv-join"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv-join", dir) { out =>
       require(mvm.refreshJoin(s, p, out, dim, "lang", "lang_family",
         "n_chars", Some(1)) == "initial")
       require(mvm.refreshJoin(s, p, out, dim, "lang", "lang_family",
         "n_chars") == "incremental")
       require(mvm.refreshJoin(s, p, out, dim, "lang", "lang_family",
         "n_chars") == "noop")
-      out
     }
     mvm.read(s, mv).orderBy(col("lang_family"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMvStatsStream = new graft.SessionMemo[String]
 
   /** The MIN/MAX/AVG view maintained by the CDC STREAM (r20, judge ask
     * #6): each micro-batch folds through
@@ -1070,36 +870,19 @@ object DocsDsv2 {
   def mvStatsStreamed(s: SparkSession, dir: String): DataFrame = {
     val p = changesPath(s, dir)
     val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
-    val mv = builtMvStatsStream.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv-stats-stream"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv-stats-stream", dir) { out =>
       require(mvm.refreshStats(s, p, out, "lang", "n_chars", Some(1))
         == "initial")
-      val q = s.readStream.format("graftdocs-cdc")
-        .option("startingversion", "1")
-        .load(p)
-        .writeStream
-        .option("checkpointLocation", s"$out/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          mvm.applyStatsDelta(s, p, out, b, "lang", "n_chars")
-        }
-        .start()
-      q.awaitTermination()
+      graft.StateRoot.drain(cdcFeed(s, p), "append", out)(
+        (b, _) => mvm.applyStatsDelta(s, p, out, b, "lang", "n_chars"))
       require(mvm.lastRecomputedGroups.nonEmpty,
         "the history's deletes must force touched-group recomputes " +
           "through the streamed path too")
-      out
     }
     mvm.readStats(s, mv)
       .withColumn("avg_val", round(col("avg_val"), 6))
       .orderBy(col("lang"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMvJoinStream = new graft.SessionMemo[String]
 
   /** The FACT⋈DIM view maintained by the CDC STREAM (r20, judge ask
     * #6): each micro-batch of fact changes joins the broadcast dim to
@@ -1111,32 +894,15 @@ object DocsDsv2 {
     val p = changesPath(s, dir)
     val mvm = org.apache.spark.sql.graft.dsv2.GdfMaterializedView
     val dim = mvJoinDim(s, dir)
-    val mv = builtMvJoinStream.getOrElseUpdate(s, dir) {
-      val out = s"$p-mv-join-stream"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(outPath, true)
+    val mv = graft.StateRoot.once(s, "dsv2-mv-join-stream", dir) { out =>
       require(mvm.refreshJoin(s, p, out, dim, "lang", "lang_family",
         "n_chars", Some(1)) == "initial")
-      val q = s.readStream.format("graftdocs-cdc")
-        .option("startingversion", "1")
-        .load(p)
-        .writeStream
-        .option("checkpointLocation", s"$out/_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          mvm.applyJoinDelta(s, out, b, dim, "lang", "lang_family",
-            "n_chars")
-        }
-        .start()
-      q.awaitTermination()
-      out
+      graft.StateRoot.drain(cdcFeed(s, p), "append", out)(
+        (b, _) => mvm.applyJoinDelta(s, out, b, dim, "lang", "lang_family",
+          "n_chars"))
     }
     mvm.read(s, mv).orderBy(col("lang_family"))
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtRepl = new graft.SessionMemo[String]
 
   /** CDC REPLICATION (r18): a REPLICA table seeded at the source's v1
     * state, then brought current by APPLYING THE SOURCE'S OWN CHANGE
@@ -1149,11 +915,7 @@ object DocsDsv2 {
     * GdfApplyChangesSpec pins op semantics and replay idempotence. */
   def replicaPath(s: SparkSession, dir: String): String = {
     val src = changesPath(s, dir)
-    builtRepl.getOrElseUpdate(s, dir) {
-      val p = s"$src-replica"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-replica", dir) { p =>
       // seed with the SOURCE's v1 snapshot (time travel)
       s.read.format("graftdocs").option("version", "1").load(src)
         .withColumn("bucket",
@@ -1162,7 +924,6 @@ object DocsDsv2 {
         .option("buckets", Buckets.toString).mode("overwrite").save(p)
       val gmx = org.apache.spark.sql.graft.dsv2.GdfMaintenance
       gmx.applyChanges(s, p, gmx.changes(s, src, 1, 3))
-      p
     }
   }
 
@@ -1172,9 +933,6 @@ object DocsDsv2 {
       .select(col("doc_id"), col("n_chars"), col("lang"))
       .orderBy(col("doc_id"))
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtReplStream = new graft.SessionMemo[String]
-
   /** STREAMING replication (r18): the replica fed CONTINUOUSLY from the
     * `graftdocs-cdc` stream — each micro-batch routed through
     * applyChanges in foreachBatch (idempotent, so checkpoint replay is
@@ -1182,36 +940,19 @@ object DocsDsv2 {
     * one bit-for-bit — SHARES dsv2_replicate's oracle VERBATIM. */
   def replicaStreamed(s: SparkSession, dir: String): DataFrame = {
     val src = changesPath(s, dir)
-    val p = builtReplStream.getOrElseUpdate(s, dir) {
-      val out = s"$src-replica-stream"
-      // the checkpoint lives OUTSIDE the table dir — drop BOTH, or a
-      // stale checkpoint from a prior JVM serves zero batches and the
-      // replica silently stays at its seed
-      Seq(out, s"$out-ckpt").foreach { d =>
-        val dp = new org.apache.hadoop.fs.Path(d)
-        dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(dp, true)
-      }
+    // the replica table and the drain's checkpoint sit side by side, both
+    // under the wiped directory
+    val out = graft.StateRoot.once(s, "dsv2-replica-stream", dir) { out =>
       s.read.format("graftdocs").option("version", "1").load(src)
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
         .write.format("graftdocs")
-        .option("buckets", Buckets.toString).mode("overwrite").save(out)
-      val q = s.readStream.format("graftdocs-cdc")
-        .option("startingversion", "1")
-        .load(src)
-        .writeStream
-        .option("checkpointLocation", s"$out-ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          org.apache.spark.sql.graft.dsv2.GdfMaintenance
-            .applyChanges(s, out, b.drop("_commit_version"))
-        }
-        .start()
-      q.awaitTermination()
-      out
+        .option("buckets", Buckets.toString).mode("overwrite").save(s"$out/table")
+      graft.StateRoot.drain(cdcFeed(s, src), "append", out)(
+        (b, _) => org.apache.spark.sql.graft.dsv2.GdfMaintenance
+          .applyChanges(s, s"$out/table", b.drop("_commit_version")))
     }
-    s.read.format("graftdocs").load(p)
+    s.read.format("graftdocs").load(s"$out/table")
       .select(col("doc_id"), col("n_chars"), col("lang"))
       .orderBy(col("doc_id"))
   }
@@ -1242,9 +983,6 @@ object DocsDsv2 {
 
   // ---- compaction (r17) ----------------------------------------------------
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtCompact = new graft.SessionMemo[String]
-
   /** A fragmented-then-compacted table: the corpus lands in three
     * append slices (doc_id mod 3 → up to 3 files per bucket, the
     * fragmentation per-epoch sink commits produce), then
@@ -1256,13 +994,7 @@ object DocsDsv2 {
     * file-count collapse, single-file-bucket byte identity, and the
     * time-travelable pre-compaction layout. */
   def compactPath(s: SparkSession, dir: String): String =
-    builtCompact.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-compact/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-compact", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1273,13 +1005,25 @@ object DocsDsv2 {
           .mode(if (slice == 0L) "overwrite" else "append").save(p)
       }
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.compact(s, p)
-      p
     }
 
-  // ---- rollback (r19) --------------------------------------------------------
+  /** A [[org.apache.spark.sql.graft.dsv2.GraftCatalog]] fixture built once
+    * per (session, sf): the catalog `<prefix>_<tag>` is registered over a
+    * fresh `StateRoot.once(name)` directory, then `build(cat, rootDir)`
+    * fills it. Returns the catalog name and its root. */
+  private def catalogOnce(s: SparkSession, dir: String, name: String,
+      prefix: String)(build: (String, String) => Unit): (String, String) = {
+    val cat = s"${prefix}_${graft.StateRoot.tag(dir)}"
+    val root = graft.StateRoot.once(s, name, dir) { rootDir =>
+      s.conf.set(s"spark.sql.catalog.$cat",
+        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+      build(cat, rootDir)
+    }
+    (cat, root)
+  }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtRollback = new graft.SessionMemo[String]
+  // ---- rollback (r19) --------------------------------------------------------
 
   /** Rollback fixture cut: docs at or above max*Num/Den get CoW-deleted
     * at v2, then `CALL cat.rollback('docs', 1)` restores them as v3. */
@@ -1295,17 +1039,8 @@ object DocsDsv2 {
     * raw-corpus oracle certifies the restore bit-for-bit; the builder
     * asserts the delete really removed rows first (a no-op history
     * would vacuously pass). */
-  def rollbackPath(s: SparkSession, dir: String): String =
-    builtRollback.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftrb_$tag"
-      val rootDir = s"/root/repo/target/graft-rb-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+  def rollbackPath(s: SparkSession, dir: String): String = {
+    val (_, root) = catalogOnce(s, dir, "rollback-catalog", "graftrollback") { (cat, rootDir) =>
       val p = s"$rootDir/docs"
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
@@ -1321,8 +1056,9 @@ object DocsDsv2 {
       require(s.read.format("graftdocs").load(p).count() < full,
         "rollback fixture: the bad delete must actually remove rows")
       s.sql(s"CALL $cat.rollback('docs', 1)").collect()
-      p
     }
+    s"$root/docs"
+  }
 
   /** Post-rollback certification read: the raw-corpus oracle matches
     * only if the restore was exact. */
@@ -1332,9 +1068,6 @@ object DocsDsv2 {
       .orderBy(col("doc_id"))
 
   // ---- branches + WAP-on-branch (r19) ----------------------------------------
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtBranch = new graft.SessionMemo[String]
 
   /** Rows each branch audit commit appends (doc_ids above the corpus
     * max, lang sentinel — the oracle re-derives them). */
@@ -1350,17 +1083,8 @@ object DocsDsv2 {
     * `CALL cat.fast_forward('docs', 'audit')` lands the audited window
     * on main as one commit. The entry reads post-fast-forward main;
     * the oracle re-derives base ∪ branch rows. */
-  def branchPath(s: SparkSession, dir: String): String =
-    builtBranch.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftbr_$tag"
-      val rootDir = s"/root/repo/target/graft-br-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+  def branchPath(s: SparkSession, dir: String): String = {
+    val (_, root) = catalogOnce(s, dir, "br-catalog", "graftbr") { (cat, rootDir) =>
       val p = s"$rootDir/docs"
       val base = s.read.parquet(s"$dir/documents.parquet")
       base.withColumn("bucket",
@@ -1389,8 +1113,9 @@ object DocsDsv2 {
           .option("version", "audit").load(p).count() == n + BranchRows,
         "the branch must serve its audited commits by name")
       s.sql(s"CALL $cat.fast_forward('docs', 'audit')").collect()
-      p
     }
+    s"$root/docs"
+  }
 
   /** Post-fast-forward certification read of MAIN: base ∪ audit rows. */
   def branchRead(s: SparkSession, dir: String): DataFrame =
@@ -1399,9 +1124,6 @@ object DocsDsv2 {
       .orderBy(col("doc_id"))
 
   // ---- binpack compaction (r19) --------------------------------------------
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtBinpack = new graft.SessionMemo[String]
 
   /** A heavily fragmented table SIZE-TARGETED-compacted: five append
     * slices (5 files per bucket — coprime with the bucket modulus), a MoR point delete (so binpack
@@ -1414,13 +1136,7 @@ object DocsDsv2 {
     * delete-adjusted oracle, so the hash match certifies the bin
     * merge/split lost and duplicated nothing. */
   def binpackPath(s: SparkSession, dir: String): String =
-    builtBinpack.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-binpack/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-binpack", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1439,7 +1155,6 @@ object DocsDsv2 {
         .filter(_.getName.endsWith(".gdf")).map(_.length()).sum
       org.apache.spark.sql.graft.dsv2.GdfMaintenance.compactBinpack(s, p,
         math.max(1L, (bytes * 3L) / (5L * Buckets)))
-      p
     }
 
   /** The binpack fixture's deleted doc (mirrored in the oracle). */
@@ -1459,24 +1174,13 @@ object DocsDsv2 {
 
   // ---- SQL stored procedures (r18) -------------------------------------------
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtProc = new graft.SessionMemo[String]
-
   /** A fragmented catalog table compacted by PURE SQL:
     * `CALL <cat>.compact('docs')` through Spark 4's ProcedureCatalog
     * resolution — the Iceberg `CALL catalog.system.rewrite_data_files`
-    * shape on the engine's own verbs. Returns the table path. */
-  def procTablePath(s: SparkSession, dir: String): String =
-    builtProc.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftproc_$tag"
-      val rootDir = s"/root/repo/target/graft-proc-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+    * shape on the engine's own verbs. Returns the catalog name and its
+    * root. */
+  private def procCatalog(s: SparkSession, dir: String): (String, String) =
+    catalogOnce(s, dir, "proc-catalog", "graftproc") { (cat, rootDir) =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1488,14 +1192,11 @@ object DocsDsv2 {
           .save(s"$rootDir/docs")
       }
       s.sql(s"CALL $cat.compact('docs')").collect() // the SQL OPTIMIZE
-      s"$rootDir/docs"
     }
 
-  /** The proc catalog's name for this (session, sf) — registered by
-    * [[procTablePath]]. */
-  private def procCat(dir: String): String =
-    "graftproc_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
+  /** The compacted table's path. */
+  def procTablePath(s: SparkSession, dir: String): String =
+    s"${procCatalog(s, dir)._2}/docs"
 
   /** NDV through the SQL face (r18): `CALL cat.ndv('docs', '<col>')`
     * per column over the proc catalog's table — the Iceberg-Puffin
@@ -1503,8 +1204,7 @@ object DocsDsv2 {
     * dsv2_ndv_stats' oracle VERBATIM (the proc table holds the same
     * corpus; compaction carried/rewrote every sketch). */
   def sqlNdvStats(s: SparkSession, dir: String): DataFrame = {
-    procTablePath(s, dir)
-    val cat = procCat(dir)
+    val (cat, _) = procCatalog(s, dir)
     Seq("doc_id", "lang", "n_chars", "text")
       .map(c => s.sql(s"CALL $cat.ndv('docs', '$c')"))
       .reduce(_.unionByName(_))
@@ -1517,24 +1217,12 @@ object DocsDsv2 {
     TextAnalysis.statsOf(
       s.read.format("graftdocs").load(procTablePath(s, dir)))
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtRebucket = new graft.SessionMemo[String]
-
   /** Partition evolution by PURE SQL: the 8-bucket corpus rebucketed to
     * 16 via `CALL <cat>.rebucket('docs', 16)` — the old layout stays
     * time-travelable (GdfRebucketSpec pins that plus the new layout's
     * pruning). Returns the table path. */
-  def rebucketPath(s: SparkSession, dir: String): String =
-    builtRebucket.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftrb_$tag"
-      val rootDir = s"/root/repo/target/graft-rb-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+  def rebucketPath(s: SparkSession, dir: String): String = {
+    val (_, root) = catalogOnce(s, dir, "rb-catalog", "graftrb") { (cat, rootDir) =>
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1542,17 +1230,15 @@ object DocsDsv2 {
         .option("buckets", Buckets.toString)
         .mode("overwrite").save(s"$rootDir/docs") // v1: 8 buckets
       s.sql(s"CALL $cat.rebucket('docs', 16)").collect() // v2: 16
-      s"$rootDir/docs"
     }
+    s"$root/docs"
+  }
 
   /** Post-rebucket certification read — text_stats' oracle VERBATIM
     * (partition evolution changes layout, not one output bit). */
   def rebucketStats(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.statsOf(
       s.read.format("graftdocs").load(rebucketPath(s, dir)))
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtSqlEvo = new graft.SessionMemo[String]
 
   /** SCHEMA EVOLUTION BY PURE SQL DDL (r20, judge ask #4) — the
     * catalog's `alterTable` serving the verbs every Iceberg/Delta user
@@ -1567,16 +1253,7 @@ object DocsDsv2 {
     *
     * Returns the catalog-qualified table name. */
   def sqlEvolutionTable(s: SparkSession, dir: String): String =
-    builtSqlEvo.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftevo_$tag"
-      val rootDir = s"/root/repo/target/graft-evo-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+    catalogOnce(s, dir, "evo-catalog", "graftevo") { (cat, rootDir) =>
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -1588,8 +1265,7 @@ object DocsDsv2 {
       s.sql(s"ALTER TABLE $cat.docs ADD COLUMN note STRING")
       s.sql(s"ALTER TABLE $cat.docs DROP COLUMN lang")
       s.sql(s"ALTER TABLE $cat.docs SET TBLPROPERTIES ('retain' = '5')")
-      s"$cat.docs"
-    }
+    }._1 + ".docs"
 
   /** Post-DDL certification read: pre-DDL files serve the ADD COLUMN
     * default and the null fill; the dropped column is gone from the
@@ -1598,9 +1274,6 @@ object DocsDsv2 {
     s.sql(s"SELECT doc_id, n_chars, score, note FROM " +
       s"${sqlEvolutionTable(s, dir)} ORDER BY doc_id")
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtExpire = new graft.SessionMemo[String]
-
   /** TIME-BASED SNAPSHOT EXPIRY through the SQL CALL face (r20, judge
     * ask #5): the corpus lands as v1 (half) + v2 (append rest), then
     * `CALL cat.expire_snapshots('docs', <future_ms>)` expires
@@ -1608,17 +1281,8 @@ object DocsDsv2 {
     * newest-snapshot floor), and every data file the head references
     * stays servable. Returns the table path; builder-asserts the
     * retained set. */
-  def expirePath(s: SparkSession, dir: String): String =
-    builtExpire.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftexp_$tag"
-      val rootDir = s"/root/repo/target/graft-expire-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+  def expirePath(s: SparkSession, dir: String): String = {
+    val (_, root) = catalogOnce(s, dir, "expire-catalog", "graftexp") { (cat, rootDir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1636,8 +1300,9 @@ object DocsDsv2 {
         .map(_.getName).filter(_.matches("manifest-v\\d+\\.json")).sorted
       require(retained == Seq("manifest-v2.json"),
         s"only the head may survive, got $retained")
-      p
     }
+    s"$root/docs"
+  }
 
   /** Post-expiry certification read — text_stats' oracle VERBATIM (the
     * sweep retires history, never one live row). */
@@ -1652,9 +1317,6 @@ object DocsDsv2 {
   val SqlDelNum = 3L
   val SqlDelDen = 5L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtCat = new graft.SessionMemo[String]
-
   /** The graftdocs CATALOG face exercised end to end: a
     * [[org.apache.spark.sql.graft.dsv2.GraftCatalog]] registered under a
     * per-corpus name, a table under its root, and a RANGE DELETE issued
@@ -1664,16 +1326,7 @@ object DocsDsv2 {
     * stays addressable as `VERSION AS OF 1`, also pure SQL. Returns the
     * catalog-qualified table name. */
   def sqlCatalogTable(s: SparkSession, dir: String): String =
-    builtCat.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graft_$tag"
-      val rootDir = s"/root/repo/target/graft-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+    catalogOnce(s, dir, "catalog", "graft") { (cat, rootDir) =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -1684,8 +1337,7 @@ object DocsDsv2 {
       val mx = base.agg(max(col("doc_id"))).head().getLong(0)
       val cutoff = mx * SqlDelNum / SqlDelDen
       s.sql(s"DELETE FROM $cat.docs WHERE doc_id >= $cutoff") // v2, CoW
-      s"$cat.docs"
-    }
+    }._1 + ".docs"
 
   /** GDPR delete + audit, PURE SQL: the post-delete table full-outer
     * against its own `VERSION AS OF 1` snapshot — catalog resolution,
@@ -1711,23 +1363,11 @@ object DocsDsv2 {
   val MetaDelMod = 16L
   val MetaDelRes = 6L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtMeta = new graft.SessionMemo[String]
-
   /** A catalog with one two-snapshot table (v1 = the slim corpus,
     * v2 = a merge-on-read delete), whose bookkeeping the metadata
     * tables expose. Returns the catalog name. */
   def metaCatalog(s: SparkSession, dir: String): String =
-    builtMeta.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftmeta_$tag"
-      val rootDir = s"/root/repo/target/graft-meta-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+    catalogOnce(s, dir, "meta-catalog", "graftmeta") { (cat, rootDir) =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -1744,8 +1384,7 @@ object DocsDsv2 {
       // pin the pre-delete snapshot under a NAMED TAG, pure SQL (r18) —
       // v3: tag creation is itself a metadata commit
       s.sql(s"CALL $cat.create_tag('docs', 'raw', 1)").collect()
-      cat
-    }
+    }._1
 
   /** `$files` certification read: per-file physical vs live rows, zone
     * map, and dv flag (file_name projected away — write suffixes carry a
@@ -1811,22 +1450,10 @@ object DocsDsv2 {
   val SqlMrgLang = "mg"
   val SqlMrgInserts = 20L
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtRl = new graft.SessionMemo[String]
-
   /** One catalog + two tables (docs_u, docs_m), mutated by pure SQL:
     * UPDATE on docs_u, MERGE INTO on docs_m. Returns the catalog name. */
   def rlCatalog(s: SparkSession, dir: String): String =
-    builtRl.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val cat = s"graftrl_$tag"
-      val rootDir = s"/root/repo/target/graft-rl-catalog/$tag"
-      val rp = new org.apache.hadoop.fs.Path(rootDir)
-      rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[org.apache.spark.sql.graft.dsv2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
+    catalogOnce(s, dir, "rl-catalog", "graftrl") { (cat, rootDir) =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .withColumn("bucket",
@@ -1856,8 +1483,7 @@ object DocsDsv2 {
         WHEN NOT MATCHED THEN INSERT (doc_id, n_chars, lang, bucket)
           VALUES (s.doc_id, s.n_chars, s.lang,
                   CAST(pmod(s.doc_id, $Buckets) AS INT))""")
-      cat
-    }
+    }._1
 
   /** Post-UPDATE certification read (rule-derived oracle). */
   def sqlUpdate(s: SparkSession, dir: String): DataFrame = {
@@ -1876,9 +1502,6 @@ object DocsDsv2 {
 
   // ---- schema evolution (r17) ---------------------------------------------
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtEvo = new graft.SessionMemo[String]
-
   /** A widened-schema history: v1 = the EVEN docs under the narrow
     * (doc_id, n_chars) schema; v2 APPENDS the odd docs carrying the new
     * `lang` column. The append merges the schema in the manifest
@@ -1887,13 +1510,7 @@ object DocsDsv2 {
     * their missing `lang` block, the add-a-column-without-rewriting
     * contract every table format ships. */
   def evoPath(s: SparkSession, dir: String): String =
-    builtEvo.getOrElseUpdate(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + Integer.toHexString(dir.hashCode)
-      val p = s"/root/repo/target/graft-dsv2-evo/$tag"
-      val pPath = new org.apache.hadoop.fs.Path(p)
-      pPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(pPath, true)
+    graft.StateRoot.once(s, "dsv2-evo", dir) { p =>
       val base = s.read.parquet(s"$dir/documents.parquet")
         .withColumn("bucket",
           pmod(col("doc_id"), lit(Buckets.toLong)).cast(IntegerType))
@@ -1907,7 +1524,6 @@ object DocsDsv2 {
         .write.format("graftdocs")
         .option("buckets", Buckets.toString)
         .mode("append").save(p) // v2: widened schema, old files untouched
-      p
     }
 
   /** SCHEMA-EVOLUTION read: every doc, with `lang` only where a file
@@ -1922,9 +1538,6 @@ object DocsDsv2 {
 
   // ---- streaming sink (r17) -----------------------------------------------
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val builtSink = new graft.SessionMemo[String]
-
   /** The corpus pushed through the connector's STREAMING SINK: the base
     * graftdocs table is drained by the micro-batch READ face (3 files
     * per trigger) and each epoch commits an append snapshot into a new
@@ -1932,30 +1545,18 @@ object DocsDsv2 {
     * files plus the manifest's epoch ledger (replays are no-ops,
     * GdfSinkSpec pins it). One connector, both streaming directions. */
   def sinkPath(s: SparkSession, dir: String): String =
-    builtSink.getOrElseUpdate(s, dir) {
-      val src = path(s, dir)
-      val p = s"$src-sink"
-      // wipe table AND checkpoint together: this builder's contract is a
-      // fresh full drain per (session, sf) — a stale checkpoint would
-      // report every source file consumed and the stream would commit
-      // nothing into the freshly wiped table
-      Seq(p, s"$p-checkpoint").foreach { d =>
-        val dp = new org.apache.hadoop.fs.Path(d)
-        dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(dp, true)
-      }
-      val q = s.readStream.format("graftdocs")
+    graft.StateRoot.once(s, "dsv2-sink", dir) { out =>
+      s.readStream.format("graftdocs")
         .option("maxfilespertrigger", StreamMaxFilesPerTrigger.toString)
-        .load(src)
+        .load(path(s, dir))
         .writeStream.format("graftdocs")
         .option("buckets", Buckets.toString)
-        .option("checkpointLocation", s"$p-checkpoint")
+        .option("checkpointLocation", s"$out/_checkpoint")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(p)
-      q.awaitTermination()
-      p
-    }
+        .start(s"$out/table")
+        .awaitTermination()
+    } + "/table"
 
   /** Streamed-write certification: the sink table's stats equal
     * text_stats' oracle VERBATIM — the epochs landed every row exactly
@@ -1969,9 +1570,6 @@ object DocsDsv2 {
     * per trigger exercise a genuine multi-batch drain. */
   val StreamMaxFilesPerTrigger = 3
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val streamed = new graft.SessionMemo[Unit]
-
   /** The corpus STREAMED through the connector's MicroBatchStream
     * ([[org.apache.spark.sql.graft.dsv2]] `GdfMicroBatchStream`): bucket
     * files are the append log, `maxfilespertrigger` paces admission, and
@@ -1983,26 +1581,12 @@ object DocsDsv2 {
     * oracle VERBATIM. */
   def statsStreamed(s: SparkSession, dir: String): DataFrame = {
     val p = path(s, dir)
-    val out = s"$p-stream-stats"
-    synchronized {
-      if (!streamed.contains(s, dir)) {
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val docStream = s.readStream.format("graftdocs")
-          .option("maxfilespertrigger", StreamMaxFilesPerTrigger.toString)
-          .load(p)
-        val q = TextAnalysis.statsSelect(docStream).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        streamed.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "dsv2-stream-stats", dir) { out =>
+      val docStream = s.readStream.format("graftdocs")
+        .option("maxfilespertrigger", StreamMaxFilesPerTrigger.toString)
+        .load(p)
+      graft.StateRoot.drain(TextAnalysis.statsSelect(docStream), "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result").orderBy(col("doc_id"))
   }

@@ -830,9 +830,7 @@ object LlmQueries {
     init + rounds
   }
 
-  private val pqTrainCtes: String = pqTrainCtesOver("embeddings")
-
-  /** Name of the final trained-codebook CTE inside [[pqTrainCtes]]. */
+  /** Name of the final trained-codebook CTE inside [[pqTrainCtesOver]]. */
   private val pqCbFinal = s"cb${Similarity.PqTrainRounds}"
 
   /** Shared verbatim by text_stats and its dsv2_text_stats connector twin

@@ -122,8 +122,8 @@ object Similarity {
     * 8-plane table + hamming-1 probes gave recall@5 = 0.06). Standard
     * multi-TABLE SRP-LSH: L independent tables of b planes each; a
     * candidate is anyone sharing a (table, probe-bucket) cell with the
-    * query in ANY table. Re-swept after the r13 plane re-salt (Prof
-    * ann_sweep, recall@5 at sf0.01/sf0.1 + candidate fraction at sf0.1):
+    * query in ANY table. Re-swept after the r13 plane re-salt
+    * (recall@5 at sf0.01/sf0.1 + candidate fraction at sf0.1):
     * (L=4,b=4) 0.92/0.92 @ 77 %; (L=4,b=5) 0.90/0.78 (the old r12 point —
     * fails post-salt); (L=6,b=5) 0.96/0.90 @ 72 % — the chosen point:
     * ≥ 0.85 at both graded scales with the LOWEST candidate fraction

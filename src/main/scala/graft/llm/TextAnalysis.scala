@@ -293,9 +293,8 @@ object TextAnalysis {
     * CodegenFallback — plus an O(n log n) sort per row. Same value by
     * construction (longest equal run of a sorted multiset = max
     * multiplicity; GramMaxFreqSpec asserts equality against the fold on
-    * corpus data). Measured floor ladder at sf0.1 (Prof text_floor,
-    * min-of-5 warm): noop scan 0.20 s; scan+total-order sort skeleton
-    * 0.58 s; old fold entry 0.87 s; THIS form 0.56 s — at the skeleton
+    * corpus data). Measured floor ladder at sf0.1 (min-of-5 warm): noop
+    * scan 0.20 s; scan+total-order sort skeleton 0.58 s; old fold entry 0.87 s; THIS form 0.56 s — at the skeleton
     * floor, i.e. the gram counting is now free next to the one
     * total-order range exchange the output contract requires. Off the
     * weak list: the remaining gap to the single-process oracle is the
@@ -512,14 +511,14 @@ object TextAnalysis {
     * The sort runs BELOW the projection, on the slim (doc_id, text) input:
     * a global orderBy above it would range-sample its child — re-executing
     * the regex+md5 chain a SECOND time just to pick partition boundaries.
-    * Measured (Prof text_tail_ab, sf0.1 warm): map+sort-above 0.65 s vs
+    * Measured (sf0.1 warm): map+sort-above 0.65 s vs
     * map-above-sort 0.60 s vs the no-sort floor 0.25 s — the projection
     * now runs once at any scale, and the residual over the floor is the
     * range-exchange machinery itself, which IS the scale-correct total-
     * order idiom (a single-partition sort would serialize the corpus).
     *
-    * Floor question CLOSED (r12 VERDICT #3, same-session ladder — Prof
-    * text_floor at sf0.1, min-of-5 warm): noop scan 0.20 s → scan +
+    * Floor question CLOSED (r12 VERDICT #3, same-session ladder at
+    * sf0.1, min-of-5 warm): noop scan 0.20 s → scan +
     * total-order sort skeleton 0.58 s → this entry 0.64 s. The actual
     * normalization work (the fused normalize pass + md5; regex-chain form pre-r21) is the 0.06 s
     * delta over the skeleton; the 6.7× vs DuckDB is the distributed
@@ -1285,7 +1284,7 @@ object TextAnalysis {
     * O(tokens × rules) slot comparisons in-row. The r12 form ran one
     * corpus-wide `regexp_replace` stage per rule (20 sequential passes:
     * R× the string traffic plus per-pass regex compilation); measured
-    * A/B at sf0.1 (Prof bpe_apply_ab, min-of-5 warm): fused kernel
+    * A/B at sf0.1 (min-of-5 warm): fused kernel
     * 0.61 s vs regex chain 1.57 s — 2.6×, and the gap grows with the
     * rule count. No shuffle beyond [[bpePairs]]'s own pair-keyed
     * aggregation (built once, broadcast once). The real-training delta
@@ -1412,7 +1411,7 @@ object TextAnalysis {
   /** [[bpeTrainedMerges]] over any (doc_id, text) relation — unit-testable
     * form (BpeTrainSpec pins the recount/composite-merge semantics). */
   /** Loop width note (r12, measured): the k-means-style narrow-shuffle
-    * gate was tried here and benched a WASH (Prof bpe_train_ab, 8-wide
+    * gate was tried here and benched a WASH (8-wide
     * 15.8 s vs 32-wide 16.6 s for the 6-round loop at sf0.1 under AQE) —
     * unlike the kmeans/label-propagation loops, each round's cost is the
     * corpus-wide regex rewrite + checkpoint materialization, not
@@ -1446,8 +1445,8 @@ object TextAnalysis {
       val table = rules.reduce(_ union _).orderBy(col("rnk")).persist()
       table.count() // materialize so downstream reads never re-loop
       // the materialized table now holds the rows; drop the per-round top1
-      // caches so repeated UNCACHED invocations (Prof's A/B loops run the
-      // Of-form many times per session) don't stack ~7 persisted relations
+      // caches so repeated UNCACHED invocations (A/B loops run the Of-form
+      // many times per session) don't stack ~7 persisted relations
       // each (r12 ADVICE)
       rules.foreach(_.unpersist())
       table

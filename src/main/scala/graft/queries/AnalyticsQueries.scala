@@ -110,12 +110,12 @@ object AnalyticsQueries {
     // DECIMAL cast to double, results rounded to 6 dp.
     //
     // r14 drift adjudication (r13 VERDICT #6 — 0.57 -> 0.80 s with no
-    // code change): an ISOLATED min-of-5 re-measure (Prof tail14) lands
+    // code change): an ISOLATED min-of-5 re-measure lands
     // at 0.81 s, i.e. the r13 in-suite number was not suite co-tenancy,
     // and the plan is unchanged (byte-identical entry + session config
     // since r12). The same window's host drift shows up independently in
     // the ETL A/B (isolated ingest 74.3k -> ~55k rows/s on identical
-    // code, Prof etl_ab) — both ~25-30%, one cause. The 75k-value
+    // code) — both ~25-30%, one cause. The 75k-value
     // per-group sort-agg is the entry's real work and is already the
     // one-pass two-quantile form; carried as host drift, re-check when
     // the host quiets.

@@ -110,7 +110,7 @@ object ExtraQueries {
         // plans an Expand that doubles every fact row through the
         // aggregation; deduped (store, customer) pairs shuffle map-side-
         // combined and the 8-row results broadcast-join back. Re-measured
-        // r7 (Prof sketch_parts one_pass_storepart): the fused Expand form
+        // r7: the fused Expand form
         // over the store-partitioned cache runs 7.6s vs ~1.1s for this
         // split form — doubled rows land on #stores clustered tasks with
         // no partial aggregation, so the split stays.
@@ -132,8 +132,8 @@ object ExtraQueries {
             // one sort-agg for both exact quartiles, not one per quantile
             expr("percentile(CAST(purchase_amount AS DOUBLE), array(0.25, 0.75))")
               .as("iqr"))
-        // Leg fusion + presentation (r8, measured via Prof sketch_ab at
-        // sf0.1 min-of-5 warm): both legs end clustered+aggregated on
+        // Leg fusion + presentation (r8, measured at sf0.1 min-of-5
+        // warm): both legs end clustered+aggregated on
         // store_id, so the MERGE hint joins them with a zero-exchange SMJ
         // (a broadcast join costs a separate broadcast-build job; the old
         // form measured 1.0-1.3s). The presentation sort is

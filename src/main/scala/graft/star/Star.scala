@@ -92,7 +92,7 @@ object Star {
   /** Reference-style product id: 'P' + the key left-padded to AT LEAST 8
     * digits — value-identical to `format_string("P%08d", key)` for the
     * non-negative keys the TPC-H data carries, but ~3× cheaper per row
-    * (r21, measured in Prof wh_fact_parts: the format_string projection
+    * (r21, OPTIMIZATION_r21.md §4: the format_string projection
     * alone added 0.22 s to the 600 k-row fact pass at sf0.1 vs 0.08 s
     * for this form — java.util.Formatter allocates and re-parses the
     * format per call). The length guard preserves %08d's never-truncate

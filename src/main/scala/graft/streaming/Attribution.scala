@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Stream-stream interval join — click→purchase attribution: every purchase
   * pairs with every click by the same user in the preceding
@@ -58,48 +57,23 @@ object Attribution {
       .orderBy(col("purchase_event_id"), col("click_event_id"))
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[String]
-
   /** Run the streaming attribution once per (session, sf dir) and return
     * the accumulated result (ordered for the compare harness). */
   def streamed(s: SparkSession, dir: String): DataFrame = {
-    val outDir = synchronized {
-      ran.getOrElseUpdate(s, dir) {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + Integer.toHexString(dir.hashCode)
-        val out = s"/root/repo/target/graft-events/$tag/attribution"
-        // shared schema-adaptive source (r10: a hand-pinned nanos schema
-        // silently corrupted a micros fixture)
-        def source() = EventsSource.stream(s, dir)
-        val (p0, c0) = shape(source())
-        val p = p0.withWatermark("purchase_ts", "1 hour")
-        val c = c0.withWatermark("click_ts", "1 hour")
-        val joined = join(p, c)
-          .select(col("purchase_event_id"), col("user_id"),
-            col("purchase_ts"), col("value"), col("click_event_id"),
-            col("click_ts"))
-        // clear the WHOLE tag dir — result AND checkpoints. The old code
-        // deleted only result/ and minted a UUID checkpoint per run, so
-        // stale checkpoint dirs accumulated across sessions (r7 ADVICE #1);
-        // with the dir wiped up front a FIXED checkpoint path can't be
-        // stale, and a fresh AvailableNow run always reprocesses from zero.
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = joined.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        s"$out/result"
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "attribution") { out =>
+      // shared schema-adaptive source (r10: a hand-pinned nanos schema
+      // silently corrupted a micros fixture)
+      val (p0, c0) = shape(EventsSource.stream(s, dir))
+      val p = p0.withWatermark("purchase_ts", "1 hour")
+      val c = c0.withWatermark("click_ts", "1 hour")
+      val joined = join(p, c)
+        .select(col("purchase_event_id"), col("user_id"),
+          col("purchase_ts"), col("value"), col("click_event_id"),
+          col("click_ts"))
+      graft.StateRoot.drain(joined, "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
-    s.read.parquet(outDir)
+    s.read.parquet(s"$out/result")
       .orderBy(col("purchase_event_id"), col("click_event_id"))
   }
 }

@@ -22,42 +22,21 @@ import graft.llm.Multimodal.{AudioFeatures, MediaBlob}
   * deployment appends features to a keyed sink as containers land. */
 object AudioDecodeStream {
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   def audioFeaturesStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/audio_decode"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        import s.implicits._
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val isWav = col("doc_id") % 4 === 1
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-          .select(col("doc_id").as("media_id"),
-            encode(col("text"), "UTF-8").as("blob"),
-            when(isWav, lit("audio/wav")).otherwise(col("source"))
-              .as("kind"))
-          .as[MediaBlob]
-          .map(b => if (b.kind == "audio/wav")
-            b.copy(blob = Multimodal.wavContainer(b.blob)) else b)
-        val decoded = decodedOf(docStream)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = decoded.toDF().writeStream
-          .outputMode("append") // stateless decode: pure per-row append
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .option("path", s"$out/result")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet")
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "audio_decode") { out =>
+      import s.implicits._
+      val isWav = col("doc_id") % 4 === 1
+      val docStream = EventsSource.fileStream(s, dir, "documents")
+        .select(col("doc_id").as("media_id"),
+          encode(col("text"), "UTF-8").as("blob"),
+          when(isWav, lit("audio/wav")).otherwise(col("source"))
+            .as("kind"))
+        .as[MediaBlob]
+        .map(b => if (b.kind == "audio/wav")
+          b.copy(blob = Multimodal.wavContainer(b.blob)) else b)
+      // stateless decode: pure per-row append
+      graft.StateRoot.drain(decodedOf(docStream).toDF(), "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result").orderBy(col("media_id"))
   }

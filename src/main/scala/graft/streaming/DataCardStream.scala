@@ -52,35 +52,12 @@ object DataCardStream {
           .as("mean_tokens"),
         size(col("langs")).cast(LongType).as("n_langs"))
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The drained streamed card, ordered for the compare harness. */
   def dataCardStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/data_card"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val card = cardOf(docStream)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = card.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "data_card") { out =>
+      graft.StateRoot.drain(
+        cardOf(EventsSource.fileStream(s, dir, "documents")), "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result").orderBy(col("source"))
   }

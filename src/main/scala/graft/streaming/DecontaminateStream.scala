@@ -30,39 +30,16 @@ import graft.llm.{Corpus, Dedup, Text}
   * watermark and routes `contaminated = true` rows to quarantine. */
 object DecontaminateStream {
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   def decontaminateStreamed(s: SparkSession, dir: String): DataFrame = {
     // OFFLINE: benchmark gram set + bloom filter from the committed
     // corpus (the shared batch definitions)
     val benchGrams = Corpus.benchmarkGrams(s, dir)
     val bloomBytes = Corpus.benchmarkBloom(s, dir)
-
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/decontam"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val agged = aggedOf(docStream, benchGrams, bloomBytes)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = agged.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "decontam") { out =>
+      val agged = aggedOf(EventsSource.fileStream(s, dir, "documents"),
+        benchGrams, bloomBytes)
+      graft.StateRoot.drain(agged, "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result")
       .select(col("doc_id"), col("n_grams"),

@@ -50,7 +50,7 @@ object Events {
     * by (window, type). Same exact-decimal sum discipline as [[hourly]].
     *
     * Bench-floor adjudication (r14, r13 VERDICT #5 — the 10.8×-vs-oracle
-    * flag; Prof tail14 ladder at sf0.1, min-of-5 warm): events scan
+    * flag; ladder at sf0.1, min-of-5 warm): events scan
     * 0.14 s; tumbling agg no sort 0.26 s; THIS aggregation no sort
     * 0.47 s; full entry 0.62 s. The deltas are exactly the semantics:
     * +0.21 s is the width/slide = 4 row multiplier through the hash agg
@@ -81,8 +81,7 @@ object Events {
     * oracle — a hash match certifies the streaming path itself.
     * Memoized per (session, sf). */
   def hourlyStreamed(s: SparkSession, dir: String): DataFrame =
-    windowedStreamed(s, dir, "hourly", streamedRan,
-      ts => window(ts, "1 hour"))
+    windowedStreamed(s, dir, "hourly", ts => window(ts, "1 hour"))
 
   /** The SLIDING windows ([[sliding]]) computed by the streaming path —
     * overlapping windows are where streaming window state actually earns
@@ -90,8 +89,7 @@ object Events {
     * the batch entry's oracle via stream-batch equivalence, like
     * [[hourlyStreamed]]. */
   def slidingStreamed(s: SparkSession, dir: String): DataFrame =
-    windowedStreamed(s, dir, "sliding", slidingRan,
-      ts => window(ts, "1 hour", "15 minutes"))
+    windowedStreamed(s, dir, "sliding", ts => window(ts, "1 hour", "15 minutes"))
 
   /** Shared streaming runner for the windowed aggregations — ONE
     * definition of the stream source, watermark, sink, and checkpoint
@@ -99,12 +97,11 @@ object Events {
     * normExpr lesson, r7 ADVICE #3): file-source `readStream` over the
     * events parquet, event-time watermark, windowed aggregation,
     * complete-mode `foreachBatch` overwriting the result table, drained
-    * with `Trigger.AvailableNow`. Memoized per (session, sf, memo). */
+    * with `Trigger.AvailableNow`. Memoized per (session, sf, sub). */
   private def windowedStreamed(
       s: SparkSession, dir: String, sub: String,
-      ran: graft.SessionMemo[Unit],
       windowOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    runCompleteStreamed(s, dir, sub, ran,
+    runCompleteStreamed(s, dir, sub,
       stream => stream
         .withWatermark("ts", "1 hour")
         .groupBy(windowOf(col("ts")), col("event_type"))
@@ -116,55 +113,20 @@ object Events {
           col("n_events"), col("total_value")))
       .orderBy(col("window_start"), col("event_type"))
 
-  /** The streaming events source: file-source `readStream` over the sf
-    * dir filtered to the events file (a production deployment streams an
-    * events/ dir) — delegated to the shared schema-adaptive
-    * [[EventsSource]], same `ts` normalization as the batch [[events]]. */
-  private def eventStream(s: SparkSession, dir: String): DataFrame =
-    EventsSource.stream(s, dir)
-
-  /** Shared complete-mode streaming runner: builds `aggOf(eventStream)`,
-    * drains it with `Trigger.AvailableNow` into a foreachBatch sink that
-    * overwrites `result/` each trigger, and reads the final table back.
-    * Complete mode emits EVERY aggregate state at every trigger, so after
-    * the drain the table equals the batch aggregation outright — no
-    * watermark holdback to compensate for in the oracle. Memoized per
-    * (session, sf, memo). */
-  private def runCompleteStreamed(
-      s: SparkSession, dir: String, sub: String,
-      ran: graft.SessionMemo[Unit],
+  /** Shared complete-mode streaming runner: builds `aggOf` over the events
+    * stream, drains it into a foreachBatch sink that overwrites `result/`
+    * each trigger, and reads the final table back. Complete mode emits EVERY
+    * aggregate state at every trigger, so after the drain the table equals
+    * the batch aggregation outright — no watermark holdback to compensate
+    * for in the oracle. Memoized per (session, sf, sub). */
+  private def runCompleteStreamed(s: SparkSession, dir: String, sub: String,
       aggOf: DataFrame => DataFrame): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/$sub"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val agg = aggOf(eventStream(s, dir))
-        // wipe the tag dir before starting: the complete-mode sink
-        // overwrites result/ itself, but the old UUID-per-run checkpoint
-        // dirs accumulated across sessions (r7 ADVICE #1) — a fixed
-        // checkpoint path under a wiped dir cannot be stale
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = agg.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, sub) { out =>
+      graft.StateRoot.drain(aggOf(EventsSource.stream(s, dir)), "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result")
   }
-
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val streamedRan = new graft.SessionMemo[Unit]
-  private val slidingRan = new graft.SessionMemo[Unit]
 
   val SessionGapMinutes = 30
 
@@ -172,9 +134,9 @@ object Events {
     * Implemented as lag → gap flag → running sum (the standard two-window
     * formulation); deterministic ordering tiebreaks on event_id.
     *
-    * RANGE-partitioned by user_id up front (r13, measured in Prof
-    * session_ab): RangePartitioning(user_id) satisfies the lag/sum
-    * windows' and the session rollup's ClusteredDistribution, so the
+    * RANGE-partitioned by user_id up front (r13, measured):
+    * RangePartitioning(user_id) satisfies the lag/sum windows' and the
+    * session rollup's ClusteredDistribution, so the
     * whole chain runs on one exchange and the ordered finish is a LOCAL
     * sort — a trailing global orderBy would range-sample its child,
     * re-executing the window+agg chain a second time just to pick
@@ -218,7 +180,7 @@ object Events {
     * output delta is `session_end` = last_ts + gap (the window bound),
     * not last_ts.
     *
-    * r12 VERDICT #6 audit CLOSED (Prof session_ab ladder at sf0.1,
+    * r12 VERDICT #6 audit CLOSED (ladder at sf0.1,
     * min-of-5 warm): events scan 0.14 s; the native session merge itself
     * 0.36 s; the old trailing global orderBy 0.76 s — the flagged 4.5×
     * was the total-order sort RE-EXECUTING the session merge for its
@@ -252,7 +214,7 @@ object Events {
     * a continuous deployment; under complete mode it does not hold back
     * output, so no oracle compensation is needed. */
   def sessionWindowStreamed(s: SparkSession, dir: String): DataFrame =
-    runCompleteStreamed(s, dir, "session_window", sessionWindowRan,
+    runCompleteStreamed(s, dir, "session_window",
       stream => stream
         .withWatermark("ts", "1 hour")
         .groupBy(
@@ -266,8 +228,6 @@ object Events {
           col("sw.end").as("session_end"), col("n_events"),
           col("total_value")))
       .orderBy(col("user_id"), col("session_start"))
-
-  private val sessionWindowRan = new graft.SessionMemo[Unit]
 
   /** Strict ordered conversion FUNNEL (view → click → purchase) with
     * first-touch semantics — the product-analytics staple: per user,

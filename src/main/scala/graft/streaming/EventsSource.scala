@@ -57,10 +57,14 @@ object EventsSource {
     * on top, so batch and stream cannot disagree about what `ts` means. */
   def stream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = s.read.parquet(s"$dir/events.parquet").schema
-    normalizeTs(
-      s.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    normalizeTs(fileStream(s, dir, "events"))
   }
+
+  /** File-source stream over `<dir>/<table>.parquet` (a production
+    * deployment streams a directory of such files), its schema read from
+    * the file's footer. */
+  def fileStream(s: SparkSession, dir: String, table: String): DataFrame =
+    s.readStream.schema(s.read.parquet(s"$dir/$table.parquet").schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
 }

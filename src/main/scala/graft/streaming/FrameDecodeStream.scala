@@ -22,34 +22,13 @@ import graft.llm.Multimodal
   * no shuffle, no state; maxFilesPerTrigger is the backpressure knob. */
 object FrameDecodeStream {
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   def frameSamplesStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/frame_decode"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val decoded = Multimodal.frameRowsOf(
-          Multimodal.videoBlobsOf(docStream))
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = decoded.toDF().writeStream
-          .outputMode("append") // stateless decode: pure per-row append
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .option("path", s"$out/result")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet")
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "frame_decode") { out =>
+      val decoded = Multimodal.frameRowsOf(
+        Multimodal.videoBlobsOf(EventsSource.fileStream(s, dir, "documents")))
+      // stateless decode: pure per-row append
+      graft.StateRoot.drain(decoded.toDF(), "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result")
       .orderBy(col("media_id"), col("frame_idx"))

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** STREAMING funnel — the [[Events.funnel]] state machine maintained per
   * user with `mapGroupsWithState`: state = the first-touch timestamps
@@ -95,43 +95,25 @@ object FunnelStream {
       .mapGroupsWithState[FState, FOut](GroupStateTimeout.NoTimeout())(update)
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[String]
-
   /** The drained streamed funnel: per user, the LATEST update-mode
     * emission (= final state; latest-per-key is what an update-mode
     * keyed sink retains). Shares events_funnel's oracle verbatim. */
   def funnelStreamed(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val outDir = synchronized {
-      ran.getOrElseUpdate(s, dir) {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + Integer.toHexString(dir.hashCode)
-        val out = s"/root/repo/target/graft-events/$tag/funnel"
-        implicit val evtEnc = Encoders.product[FEvt]
-        val stream = EventsSource.stream(s, dir)
-          .select(col("user_id"), col("event_type"), col("ts"))
-          .as[FEvt]
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = funnelStream(stream).toDF().writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        s"$out/result"
+    val out = graft.StateRoot.once(s, "events", dir, "funnel") { out =>
+      implicit val evtEnc = Encoders.product[FEvt]
+      val stream = EventsSource.stream(s, dir)
+        .select(col("user_id"), col("event_type"), col("ts"))
+        .as[FEvt]
+      graft.StateRoot.drain(funnelStream(stream).toDF(), "update", out) { (b, id) =>
+        b.withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(s"$out/result")
       }
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("batch_id").desc)
-    s.read.parquet(outDir)
+    s.read.parquet(s"$out/result")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("user_id"), col("t_view"), col("t_click"),

@@ -71,39 +71,16 @@ object IvfIngestStream {
     censusOf(Similarity.ivfIndex(s, dir).where(col("rn") === 1))
       .orderBy(col("cent_id"))
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The drained streaming census — every occupied inverted list. */
   def censusStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/ivf_census"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val embStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
-        val cents = s.read.parquet(s"$dir/embeddings.parquet")
-          .where(col("vec_id") >= Similarity.CentroidBase &&
-            col("vec_id") < Similarity.CentroidBase + Similarity.Centroids)
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
-        val census = censusOf(assignStream(embStream, cents))
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = census.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "ivf_census") { out =>
+      val cents = s.read.parquet(s"$dir/embeddings.parquet")
+        .where(col("vec_id") >= Similarity.CentroidBase &&
+          col("vec_id") < Similarity.CentroidBase + Similarity.Centroids)
+        .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
+      val embStream = EventsSource.fileStream(s, dir, "embeddings")
+      graft.StateRoot.drain(censusOf(assignStream(embStream, cents)), "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result").orderBy(col("cent_id"))
   }

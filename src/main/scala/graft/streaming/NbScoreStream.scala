@@ -25,9 +25,6 @@ import graft.llm.{Text, TextAnalysis}
   * update mode with a watermark on the ingest timestamp. */
 object NbScoreStream {
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   def nbScoreStreamed(s: SparkSession, dir: String): DataFrame = {
     // OFFLINE: train on the committed corpus via the shared definition
     val labels = s.read.parquet(s"$dir/documents.parquet")
@@ -35,31 +32,10 @@ object NbScoreStream {
         TextAnalysis.nbLabel(col("source")).as("is_target"))
     val tfl = TextAnalysis.termFreqs(s, dir).join(labels, "doc_id")
     val (w, pri) = TextAnalysis.nbModelFrom(tfl, labels)
-
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/nb_score"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val agged = aggedOf(docStream, w)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = agged.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "nb_score") { out =>
+      graft.StateRoot.drain(
+        aggedOf(EventsSource.fileStream(s, dir, "documents"), w), "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     TextAnalysis.nbFinish(s.read.parquet(s"$out/result"), pri)
   }

@@ -57,39 +57,14 @@ object NearDupStream {
       Text.shingles(col("text"), Dedup.ShingleK).as("sset"))
       .where(size(col("sset")) >= 1)
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The drained streaming census, filtered to COLLISION buckets (≥ 2
     * docs — the near-dup candidate frontier) for the compare harness. */
   def minhashCensusStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/minhash_census"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        // file-source stream over the documents file (schema from the
-        // footer — the EventsSource discipline; documents carries no
-        // timestamp encodings, so no normalization branch is needed)
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val census = censusOf(Dedup.bandsFromSets(streamSets(docStream)))
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = census.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "minhash_census") { out =>
+      val docStream = EventsSource.fileStream(s, dir, "documents")
+      graft.StateRoot.drain(
+        censusOf(Dedup.bandsFromSets(streamSets(docStream))), "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     s.read.parquet(s"$out/result")
       .where(col("n_docs") >= 2)

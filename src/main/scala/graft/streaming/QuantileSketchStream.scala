@@ -98,38 +98,17 @@ object QuantileSketchStream {
     TextAnalysis.qskResult(corpus, sampleAndN)
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The drained streamed sketch over the corpus file. */
   def quantileSketchStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/qsketch"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = shardStates(docStream).toDF().writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // update mode emits only touched shards; dynamic-partition
-            // overwrite replaces exactly those, untouched shards keep
-            // their last written state
-            b.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("shard").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
+    val out = graft.StateRoot.once(s, "events", dir, "qsketch") { out =>
+      val states = shardStates(EventsSource.fileStream(s, dir, "documents")).toDF()
+      graft.StateRoot.drain(states, "update", out) { (b, _) =>
+        // update mode emits only touched shards; dynamic-partition
+        // overwrite replaces exactly those, untouched shards keep
+        // their last written state
+        b.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("shard").parquet(s"$out/result")
       }
     }
     finishFrom(s.read.parquet(s"$out/result"),

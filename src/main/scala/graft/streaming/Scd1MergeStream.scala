@@ -82,55 +82,37 @@ object Scd1MergeStream {
           .as("last_event_id"))
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The merged per-user latest-profile dim after draining the whole
     * events log through the 3-batch MERGE chain. */
   def userDimMerged(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val root = s"/root/repo/target/graft-scd1/$tag"
-    val dimPath = s"$root/user_dim"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(rootPath, true)
-        // fixtures: the events log hash-split into NFiles parquet files
-        val events = EventsSource.batch(s, dir)
-        events.repartition(NFiles)
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/log")
-        val stream = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", FilesPerTrigger.toString)
-          .parquet(s"$root/log")
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val spark = b.sparkSession
-            val existing =
-              if (new java.io.File(dimPath).exists())
-                spark.read.parquet(dimPath)
-              else
-                b.sparkSession.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  org.apache.spark.sql.types.StructType(
-                    org.apache.spark.sql.types.StructField("user_id",
-                      org.apache.spark.sql.types.LongType) +:
-                      mergeSchemaTail(b)))
-            // CoW rewrite: materialize the merge BEFORE overwriting the
-            // table it read (localCheckpoint breaks the lineage)
-            mergeBatch(existing, b).localCheckpoint()
-              .write.mode(SaveMode.Overwrite).parquet(dimPath)
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
+    val root = graft.StateRoot.once(s, "scd1", dir) { root =>
+      val dimPath = s"$root/user_dim"
+      // fixtures: the events log hash-split into NFiles parquet files
+      val events = EventsSource.batch(s, dir)
+      events.repartition(NFiles)
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/log")
+      val stream = s.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", FilesPerTrigger.toString)
+        .parquet(s"$root/log")
+      graft.StateRoot.drain(stream, "append", root) { (b, _) =>
+        val spark = b.sparkSession
+        val existing =
+          if (new java.io.File(dimPath).exists())
+            spark.read.parquet(dimPath)
+          else
+            b.sparkSession.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              org.apache.spark.sql.types.StructType(
+                org.apache.spark.sql.types.StructField("user_id",
+                  org.apache.spark.sql.types.LongType) +:
+                  mergeSchemaTail(b)))
+        // CoW rewrite: materialize the merge BEFORE overwriting the
+        // table it read (localCheckpoint breaks the lineage)
+        mergeBatch(existing, b).localCheckpoint()
+          .write.mode(SaveMode.Overwrite).parquet(dimPath)
       }
     }
-    s.read.parquet(dimPath).orderBy(col("user_id"))
+    s.read.parquet(s"$root/user_dim").orderBy(col("user_id"))
   }
 
   private def mergeSchemaTail(b: DataFrame) = {

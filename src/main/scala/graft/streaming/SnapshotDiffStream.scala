@@ -50,36 +50,13 @@ object SnapshotDiffStream {
         max(when(col("which") === "prev", col("h"))).as("h_prev"),
         max(when(col("which") === "cur", col("h"))).as("h_cur"))
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[Unit]
-
   /** The drained streamed diff, classified batch-side over the final
     * digest state — equals [[Corpus.snapshotDiff]] outright. */
   def snapshotDiffStreamed(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val out = s"/root/repo/target/graft-events/$tag/snapshot_diff"
-    synchronized {
-      if (!ran.contains(s, dir)) {
-        val fileSchema = s.read.parquet(s"$dir/documents.parquet").schema
-        val docStream = s.readStream.schema(fileSchema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val digests = digestsOf(versionsOf(docStream))
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = digests.writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        ran.put(s, dir, ())
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "snapshot_diff") { out =>
+      val digests = digestsOf(versionsOf(EventsSource.fileStream(s, dir, "documents")))
+      graft.StateRoot.drain(digests, "complete", out)(
+        (b, _) => b.write.mode("overwrite").parquet(s"$out/result"))
     }
     Corpus.classifyDiff(s.read.parquet(s"$out/result"))
   }

@@ -109,9 +109,6 @@ object StatefulSessions {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
   }
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[String]
-
   /** The custom-state sessionization run against the REAL events stream
     * and certified against the batch gap-sessionization oracle — X16
     * upgraded from test-pinned to oracle-checked (r8). Watermark delay 0:
@@ -124,38 +121,18 @@ object StatefulSessions {
   def sessionsStreamed(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val outDir = synchronized {
-      ran.getOrElseUpdate(s, dir) {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + Integer.toHexString(dir.hashCode)
-        val out = s"/root/repo/target/graft-events/$tag/sessions"
-        // shared schema-adaptive source (r10: a hand-pinned nanos schema
-        // silently corrupted a micros fixture)
-        implicit val evtEnc = Encoders.product[Evt]
-        val stream = EventsSource.stream(s, dir)
-          .select(col("user_id"), col("ts"), col("value"))
-          .withWatermark("ts", "0 seconds")
-          .as[Evt]
-        val sessions = sessionize(stream)
-        // same checkpoint hygiene as the sibling streamed entries (r7
-        // ADVICE #1): wipe the whole tag dir, fixed checkpoint path
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = sessions.toDF().writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch {
-            (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        s"$out/result"
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "sessions") { out =>
+      // shared schema-adaptive source (r10: a hand-pinned nanos schema
+      // silently corrupted a micros fixture)
+      implicit val evtEnc = Encoders.product[Evt]
+      val stream = EventsSource.stream(s, dir)
+        .select(col("user_id"), col("ts"), col("value"))
+        .withWatermark("ts", "0 seconds")
+        .as[Evt]
+      graft.StateRoot.drain(sessionize(stream).toDF(), "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
-    s.read.parquet(outDir)
+    s.read.parquet(s"$out/result")
       .orderBy(col("user_id"), col("session_start"))
   }
 }

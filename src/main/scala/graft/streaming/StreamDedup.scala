@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming ingest deduplication — the exactly-once admission step of a
   * training-data ingest pipeline (at-least-once transports re-deliver;
@@ -38,46 +37,22 @@ object StreamDedup {
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(idCol)
 
-  /** Weakly session-keyed — see [[graft.SessionMemo]]. */
-  private val ran = new graft.SessionMemo[String]
-
   /** Run the duplicated-stream certification once per (session, sf dir)
     * and return the deduped relation (ordered by event_id for the
     * compare harness). */
   def dedupedStreamed(s: SparkSession, dir: String): DataFrame = {
-    val outDir = synchronized {
-      ran.getOrElseUpdate(s, dir) {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + Integer.toHexString(dir.hashCode)
-        val out = s"/root/repo/target/graft-events/$tag/dedup"
-        // shared schema-adaptive source (r10: a hand-pinned nanos schema
-        // silently corrupted a micros fixture)
-        def source() = EventsSource.stream(s, dir)
-        // every record delivered twice: the at-least-once transport,
-        // simulated exactly
-        val duplicated = source().union(source())
-        val deduped = dedupe(duplicated, "1 hour", "event_id")
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-        // append sink accumulates across micro-batches: clear the WHOLE
-        // tag dir (prior results AND checkpoints — r7 ADVICE #1: the old
-        // UUID-per-run checkpoints accumulated across sessions; a fixed
-        // path under a wiped dir cannot be stale)
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(outPath, true)
-        val q = deduped.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$out/result")
-          }
-          .start()
-        q.awaitTermination()
-        s"$out/result"
-      }
+    val out = graft.StateRoot.once(s, "events", dir, "dedup") { out =>
+      // shared schema-adaptive source (r10: a hand-pinned nanos schema
+      // silently corrupted a micros fixture)
+      def source() = EventsSource.stream(s, dir)
+      // every record delivered twice: the at-least-once transport,
+      // simulated exactly
+      val deduped = dedupe(source().union(source()), "1 hour", "event_id")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+      graft.StateRoot.drain(deduped, "append", out)(
+        (b, _) => b.write.mode("append").parquet(s"$out/result"))
     }
-    s.read.parquet(outDir).orderBy(col("event_id"))
+    s.read.parquet(s"$out/result").orderBy(col("event_id"))
   }
 }

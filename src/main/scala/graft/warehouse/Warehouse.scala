@@ -51,12 +51,6 @@ object Warehouse {
     * Weakly keyed by the session — see [[graft.SessionMemo]]. */
   private val cache = new graft.SessionMemo[StarTables]
 
-  private def tag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Integer.toHexString(dir.hashCode)
-
-  private def warehouseRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/root/repo/target/graft-warehouse")
-
   // tables() and rebuild() share Warehouse.this as their lock: a reader
   // must not fetch a cache entry while rebuild() is between unpersisting
   // the old tables and publishing the new ones (it would see DataFrames
@@ -125,7 +119,7 @@ object Warehouse {
   }
 
   private def setup(spark: SparkSession, dir: String): StarTables = {
-    val t = tag(dir)
+    val t = graft.StateRoot.tag(dir)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
 
     val factName = s"$database.salefact_$t"
@@ -133,13 +127,15 @@ object Warehouse {
     val custName = s"$database.customer_dim_$t"
     val timeName = s"$database.time_dim_$t"
 
-    def path(table: String) = s"$warehouseRoot/$t/$table"
+    val root = sys.env.get("SPARK_GRAFT_WAREHOUSE")
+      .fold(graft.StateRoot.path("warehouse", dir))(w => s"$w/$t")
+    def path(table: String) = s"$root/$table"
 
     // The four table loads are INDEPENDENT jobs (each reads raw parquet,
     // none reads another's output) — overlap them so the three small dim
     // writes back-fill the executors the fact write's tail leaves idle
-    // (guide §2.6 "overlap independent jobs"; r21 — measured, Prof
-    // wh_rebuild warm min-of-4 at sf0.1/32c: sequential 3.30 s vs 2.51 s
+    // (guide §2.6 "overlap independent jobs"; r21, OPTIMIZATION_r21.md §4:
+    // warm min-of-4 at sf0.1/32c, sequential 3.30 s vs 2.51 s
     // overlapped on the same host window). Overlap.all carries the caller's
     // local properties into each load and returns only once all four are
     // done, so a failed load never leaves a sibling writing behind it.

@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the graft native

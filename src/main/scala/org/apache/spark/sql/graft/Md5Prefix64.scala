@@ -2,10 +2,8 @@ package org.apache.spark.sql.graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: `simhash_of_set(shingles, bits)` — the
   * Charikar SimHash signature of a distinct-shingle array, computed

@@ -120,7 +120,7 @@ object GdfMaintenance {
     * prior merge-on-read deletes: the rewritten file has no vector. */
   private def alignedRows(path: String, schema: StructType,
       f: GdfManifest.FileStat,
-      eqDeletes: Seq[GdfManifest.EqDelete] = Seq.empty): Seq[Array[Any]] = {
+      eqDeletes: Seq[GdfManifest.EqDelete]): Seq[Array[Any]] = {
     val (names, raw) = GdfFormat.readFileRaw(
       new File(path, f.name).getAbsolutePath)
     val dead = new java.util.BitSet()
@@ -160,7 +160,7 @@ object GdfMaintenance {
     * rows while each surviving/updated row's identity follows it. */
   private def rewriteFile(path: String, schema: StructType,
       f: GdfManifest.FileStat, newName: String,
-      eqDeletes: Seq[GdfManifest.EqDelete] = Seq.empty)(
+      eqDeletes: Seq[GdfManifest.EqDelete])(
       transform: Array[Any] => Option[Array[Any]])
       : (Option[GdfManifest.FileStat], Seq[Array[Any]]) = {
     val schemaL = StructType(schema.fields :+
@@ -323,7 +323,7 @@ object GdfMaintenance {
       added: Seq[GdfManifest.FileStat],
       dropEqBuckets: Set[Int] = Set.empty,
       widenTo: Option[StructType] = None,
-      op: String = "replace"): Unit =
+      op: String): Unit =
     GdfManifest.commitRetry(path, op) { curOpt =>
       val cur = curOpt.getOrElse(
         throw new IllegalStateException(s"no graftdocs table at $path"))
@@ -579,7 +579,7 @@ object GdfMaintenance {
   }
 
   private def checkMergeSource(m: GdfManifest.Manifest,
-      source: DataFrame, autoEvolve: Boolean = false): Array[String] = {
+      source: DataFrame, autoEvolve: Boolean): Array[String] = {
     require(m.layout == "hash", "merge requires the hash layout")
     val tableCols = m.schema.fields.filter(_.name != "bucket").map(_.name)
     if (autoEvolve)
@@ -820,7 +820,6 @@ object GdfMaintenance {
       oldByName.get(f.name).exists(o =>
         o.dv != f.dv || eqChanged.contains(f.bucket)))
     val cols = newM.schema.fieldNames.filterNot(_ == "bucket").toSeq
-    val oldCols = oldM.schema.fieldNames.toSet
     def side(v: Int, names: Seq[String]): DataFrame = {
       val base = spark.read.format("graftdocs")
         .option("version", v.toString)

@@ -1,7 +1,5 @@
 package org.apache.spark.sql.graft.dsv2
 
-import java.util
-
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}

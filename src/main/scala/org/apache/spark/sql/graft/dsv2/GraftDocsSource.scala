@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.util
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.functions._
@@ -30,9 +31,8 @@ class EventsSourceSpec extends SparkSpec {
   /** Write an events.parquet under a fresh dir with the given ts writer. */
   private def fixture(sub: String)(build: => org.apache.spark.sql.DataFrame)
       : String = {
-    val dir = s"/root/repo/target/test-events-src/$sub"
+    val dir = Files.createTempDirectory(s"graft-events-src-$sub").toString
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     // a single file named events.parquet, like the fixture layout
     build.coalesce(1).write.mode("overwrite").parquet(s"$dir/tmp")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

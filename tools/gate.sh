@@ -3,11 +3,28 @@
 # a mid-refactor snapshot zeroed a round in which everything worked).
 #
 # Usage:
-#   tools/gate.sh                 # compile main and tests (the minimum before ANY commit)
+#   tools/gate.sh                 # state-root checks, then compile main and
+#                                 # tests (the minimum before ANY commit)
 #   tools/gate.sh q1 q2 ...       # compile + restricted Verify/check on the
 #                                 # named entries at sf0.01
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# perfbench/run.py finds the program's state root by scanning src/main for
+# a "<root>/target/graft-" literal and runs each JVM with that root mounted
+# over a per-run directory. Only StateRoot.scala may name the root, and the
+# scan must keep finding it: if it found nothing, benchmark runs would
+# silently share state with each other.
+stray=$(grep -rln '/root/repo' src/main | grep -vx 'src/main/scala/graft/StateRoot.scala' || true)
+if [ -n "$stray" ]; then
+  echo "gate: the state root is named outside StateRoot.scala: $stray" >&2
+  exit 1
+fi
+found=$(python3 -B -c "import sys; sys.path.insert(0,'perfbench'); import run; print(run.program_literals(run.program_sources('.')))")
+if [ "$found" != "(['/root/repo/target'], '/root/testdata')" ]; then
+  echo "gate: perfbench's root scan finds $found" >&2
+  exit 1
+fi
 
 sbt -batch Test/compile
 
