@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * codebooks, BPE merge tables, BM25 stats and eval tiers were
   * session-memoized only — every session re-paid ~20 s of builds). Each
   * artifact is stored as a parquet table under
-  * `target/graft-indexes/<sf-tag>/<name>-<fp>/`, keyed by a FINGERPRINT
+  * `StateRoot.path("indexes", sfDir)/<name>-<fp>/` (the repository's
+  * `target/graft-indexes/<sf-tag>/`), keyed by a FINGERPRINT
   * of the constants that define it (plus a per-artifact version the
   * builder bumps on semantic changes): a changed constant changes the
   * directory, so a stale artifact can never be read back as current
@@ -21,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * entry whose DuckDB twin re-derives from scratch — if an artifact ever
   * went stale against the code (e.g. a pipeline edit without a version
   * bump during development), the correctness gate fails LOUDLY rather
-  * than silently serving old results. `rm -rf target/graft-indexes` is
-  * the manual reset.
+  * than silently serving old results. Removing the repository's
+  * `target/graft-indexes` is the manual reset.
   *
   * 100 TB: this is the warehouse-table form of index management every
   * deployment runs — train once, commit the artifact keyed by corpus +

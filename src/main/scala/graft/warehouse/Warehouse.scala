@@ -28,7 +28,8 @@ import graft.star.Star
   *  - Dimensions are small catalog tables; every fact⋈dim join broadcasts
   *    the dim side (queries add an explicit `broadcast()` hint so plans are
   *    stable regardless of autoBroadcastJoinThreshold).
-  *  - Tables are EXTERNAL (explicit `path`) under `target/graft-warehouse`,
+  *  - Tables are EXTERNAL (explicit `path`) under
+  *    `StateRoot.path("warehouse", sfDir)` (or `$SPARK_GRAFT_WAREHOUSE/<tag>`),
   *    so the data location does not depend on the caller session's
   *    `spark.sql.warehouse.dir`.
   */

@@ -34,13 +34,11 @@ class StateRootSpec extends SparkSpec with BeforeAndAfterAll {
     new File(dir, name).createNewFile()
   }
 
-  test("path is <root>/graft-<name>/<tag>, with the tag the sf dirs always had") {
-    val a = StateRoot.path("indexes", "/root/testdata/sf0.01")
-    val b = StateRoot.path("warehouse", "/root/testdata/sf0.1")
-    assert(a.endsWith("/target/graft-indexes/_root_testdata_sf0_01_f03e707"))
-    assert(b.endsWith("/target/graft-warehouse/_root_testdata_sf0_1_7418e66b"))
-    assert(a.stripSuffix("/graft-indexes/_root_testdata_sf0_01_f03e707") ==
-      b.stripSuffix("/graft-warehouse/_root_testdata_sf0_1_7418e66b"))
+  test("path is <root>/graft-<name>/<tag>, byte-identical to the paths kept artifacts use") {
+    assert(StateRoot.path("indexes", "/root/testdata/sf0.01") ==
+      "/root/repo/target/graft-indexes/_root_testdata_sf0_01_f03e707")
+    assert(StateRoot.path("warehouse", "/root/testdata/sf0.1") ==
+      "/root/repo/target/graft-warehouse/_root_testdata_sf0_1_7418e66b")
   }
 
   test("two names on the same sf dir build disjoint directories") {
