@@ -45,35 +45,9 @@ object Bench {
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       // single-node: every task is process-local; never wait for locality
       .config("spark.locality.wait", "0")
-      // AQE off for the bench session — measured A/B at sf0.1 (r3): suite
-      // total 42.4s off vs 48.0s on; adaptive coalescing serializes CPU-
-      // dense tiny shuffles onto 1-2 cores (dedup_ngram_jaccard 2.0s→8.8s)
-      // and per-stage re-planning barriers dominate sub-second stages. At
-      // 100 TB the trade inverts (skew joins, right-sizing) — AQE is a
-      // session flag, not an engine property, and Verify keeps Spark
-      // defaults (AQE on) so both paths stay exercised for correctness.
-      // Re-measured r5 with coalescing disabled too (AQE on + coalesce
-      // off, min-of-5 warm at sf0.1): OLAP family gains are small (q13
-      // 1.23→1.18, q17 1.08→0.86, q15 noisy) but dedup_ngram_jaccard
-      // still loses 2.38→3.66s to per-stage barriers — fails the
-      // adopt-if-wins-both bar, so off stays the bench default.
-      // Re-measured r7 AFTER the explicit-width repartition pinning made
-      // the dedup shuffles exempt from AQE coalescing (full suite A/B,
-      // min-of-3 interleaved at sf0.1): off 48.8s vs on 49.9s. AQE-on
-      // now helps the OLAP family (q13 1.03→0.77, q15 1.81→1.53) but
-      // dedup_ngram (2.52→3.04), minhash (1.09→1.39), scd2 (0.79→1.22)
-      // and percentiles (0.85→1.10) still pay per-stage re-plan
-      // barriers — net loss, off remains the default.
-      // Re-measured r8 AFTER the codegen-cache fix (the r7 A/B ran under
-      // cache thrash, which could have masked either side): off 52.9s vs
-      // on 54.1s on an equally-loaded host — same verdict, now dominated
-      // by the ITERATIVE family (dedup_embedding_clusters 2.4→3.9,
-      // dedup_clusters 0.85→1.41: every label-propagation round pays an
-      // AQE re-plan barrier) while asof/line_dedup/curation/sliding win
-      // 0.3-0.4s each. Off stays the default; at 100 TB the trade
-      // inverts and AQE is a session flag, not an engine property.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_BENCH_AQE", "false"))
+      // AQE off: every A/B from r3 to r8 at sf0.1 lost with it on, its
+      // per-stage re-plan barriers costing the iterative entries most.
+      .config("spark.sql.adaptive.enabled", "false")
       // Static conf: the generated-class cache must hold the WHOLE suite.
       // At the default 100 entries the 77-entry suite compiles ~1400
       // codegen units, so by the time a pass returns to a query its

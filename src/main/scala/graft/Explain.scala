@@ -1,25 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: print the formatted physical plan for named queries
-  * (`sbt "runMain graft.Explain q16_basket_pairs ..."`). */
+/** Dev tool: print the formatted physical plan for named queries on the
+  * benchmark's session (`sbt "runMain graft.Explain q16_basket_pairs ..."`).
+  * `SPARK_GRAFT_BROADCAST=-1` turns broadcast joins off, as a plan audit at
+  * scale would see them. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      // default matches the bench session (AQE off); accepts either this
-      // tool's env or the bench's so an A/B exports one variable for both
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE",
-          sys.env.getOrElse("GRAFT_BENCH_AQE", "false")))
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    sys.env.get("SPARK_GRAFT_BROADCAST")
+      .foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"===== $name =====")

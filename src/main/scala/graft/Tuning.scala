@@ -32,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Tuning {
 
-  def withNarrowShuffle[T](s: SparkSession, width: Int = 8)(body: => T): T = {
+  def withNarrowShuffle[T](s: SparkSession, width: Int)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", width.toString)
     var failed = false

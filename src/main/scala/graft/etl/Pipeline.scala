@@ -40,7 +40,7 @@ object Pipeline {
       customerCsv: String,
       productCsv: String,
       whDir: String,
-      maxFilesPerTrigger: Int = 3,
+      maxFilesPerTrigger: Int,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val customers = loadCustomerMaster(spark, customerCsv)
     val products = loadProductMaster(spark, productCsv)
@@ -49,7 +49,9 @@ object Pipeline {
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(txnCsvDir)
-    Enrich.enrich(stream, customers, products)
+    val enriched = Enrich.enrich(stream, customers, products)
+    WarehouseSink.createEmpty(enriched, whDir)
+    enriched
       .writeStream
       .queryName("graft-etl")
       .option("checkpointLocation", s"$whDir/_checkpoint")
@@ -67,7 +69,7 @@ object Pipeline {
       customerCsv: String,
       productCsv: String,
       whDir: String,
-      maxFilesPerTrigger: Int = 3): Unit =
+      maxFilesPerTrigger: Int): Unit =
     start(spark, txnCsvDir, customerCsv, productCsv, whDir, maxFilesPerTrigger)
       .awaitTermination()
 }

@@ -1,8 +1,11 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.etl.Transforms._
@@ -71,49 +74,85 @@ object WarehouseSink {
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(path)
 
+  /** S7: the customer dim rows of enriched rows, first-write-wins. */
+  private def customers(e: DataFrame): DataFrame =
+    e.select(
+      col("Customer_ID").as("customer_id"),
+      col("gender"), col("age"), col("occupation"), col("city_category"),
+      col("stay_in_current_city_years"), col("marital_status"))
+      .dropDuplicates("customer_id")
+
+  /** S7: the product dim rows, first-write-wins (only product-matched rows
+    * carry dim attributes — J2 is left-outer). */
+  private def products(e: DataFrame): DataFrame =
+    e.where(col("price").isNotNull).select(
+      col("Product_ID").as("product_id"),
+      col("product_category"), col("price"), col("store_id"),
+      col("store_name"), col("supplier_id"), col("supplier_name"))
+      .dropDuplicates("product_id")
+
+  /** S8: the time dim rows of the distinct dates. */
+  private def times(e: DataFrame): DataFrame =
+    e.select(parseDate(col("date")).as("d")).distinct()
+      .select(timeDimRow(col("d")): _*)
+
+  /** S9: the fact rows. P5: purchase_amount = round(quantity·price, 2)
+    * (`hybrid_join.py:451-453`); rows without a product match cannot form
+    * a fact row (observable-inner, SURVEY §2.3 J2). batch_id is the
+    * partition directory's name, not a column. */
+  private def facts(e: DataFrame): DataFrame =
+    e.where(col("price").isNotNull).select(
+      col("orderID").as("order_id"),
+      col("Customer_ID").as("customer_id"),
+      col("Product_ID").as("product_id"),
+      graft.star.Star.dateId(parseDate(col("date"))).as("date_id"),
+      col("quantity"),
+      round(col("quantity") * col("price"), 2).as("purchase_amount"))
+
+  /** Give each of the four tables that does not exist yet a zero-row
+    * parquet file, `_common_metadata`, carrying its schema. A reader
+    * before the first commit then sees the empty snapshot (prefix 0)
+    * instead of a missing path. Spark reads no rows from a file whose name
+    * starts with `_`, a later `batch_id=<n>` directory still partitions
+    * salefact, and a `*.parquet` glob never matches it. The schemas are
+    * the load's own projections of an empty frame of `enriched`'s schema;
+    * only the footer is written, so no Spark job runs. Each table appears
+    * at once, by one rename of a staged directory. */
+  def createEmpty(enriched: DataFrame, whDir: String): Unit = {
+    val spark = enriched.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], enriched.schema)
+    Seq("customer_dim" -> customers _, "product_dim" -> products _,
+        "time_dim" -> times _, "salefact" -> facts _).foreach { case (name, rows) =>
+      val target = new Path(s"$whDir/$name")
+      val wh = fs(spark, target)
+      if (!wh.exists(target)) {
+        val schema = rows(empty).schema
+        val staged = new Path(s"$whDir/_staging/empty/$name")
+        val w = new ParquetFileWriter(conf, new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
+          new Path(staged, "_common_metadata"), ParquetFileWriter.Mode.OVERWRITE)
+        w.start()
+        // the key Spark's own writer stores its schema under
+        w.end(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", schema.json))
+        if (!wh.rename(staged, target))
+          throw new java.io.IOException(s"could not rename $staged to $target")
+      }
+    }
+    fs(spark, new Path(whDir)).delete(new Path(s"$whDir/_staging/empty"), true)
+  }
+
   /** Load one enriched micro-batch into the warehouse at `whDir`. */
   def load(enriched: DataFrame, batchId: Long, whDir: String): Unit = {
     val spark = enriched.sparkSession
     val staged = s"$whDir/_staging/$batchId/salefact"
     enriched.persist()
     try {
-      // --- S7: customer dim, first-write-wins ---
-      val batchCust = enriched.select(
-        col("Customer_ID").as("customer_id"),
-        col("gender"), col("age"), col("occupation"), col("city_category"),
-        col("stay_in_current_city_years"), col("marital_status"))
-        .dropDuplicates("customer_id")
-
-      // --- S7: product dim, first-write-wins (only product-matched rows
-      // carry dim attributes — J2 is left-outer) ---
-      val batchProd = enriched.where(col("price").isNotNull).select(
-        col("Product_ID").as("product_id"),
-        col("product_category"), col("price"), col("store_id"),
-        col("store_name"), col("supplier_id"), col("supplier_name"))
-        .dropDuplicates("product_id")
-
-      // --- S8: time dim maintenance ---
-      val batchTime = enriched
-        .select(parseDate(col("date")).as("d")).distinct()
-        .select(timeDimRow(col("d")): _*)
-
-      // --- S9: the batch's fact rows, staged. P5: purchase_amount =
-      // round(quantity·price, 2) (`hybrid_join.py:451-453`); rows without a
-      // product match cannot form a fact row (observable-inner, SURVEY §2.3
-      // J2). batch_id is the partition directory's name, not a column. ---
-      val fact = enriched.where(col("price").isNotNull).select(
-        col("orderID").as("order_id"),
-        col("Customer_ID").as("customer_id"),
-        col("Product_ID").as("product_id"),
-        graft.star.Star.dateId(parseDate(col("date"))).as("date_id"),
-        col("quantity"),
-        round(col("quantity") * col("price"), 2).as("purchase_amount"))
-
+      // the fact goes to staging; publish renames it into place
       graft.Overlap.all(spark)(
-        () => appendNew(batchCust, "customer_id", s"$whDir/customer_dim"),
-        () => appendNew(batchProd, "product_id", s"$whDir/product_dim"),
-        () => appendNew(batchTime, "date_id", s"$whDir/time_dim"),
-        () => fact.write.mode(SaveMode.Overwrite).parquet(staged))
+        () => appendNew(customers(enriched), "customer_id", s"$whDir/customer_dim"),
+        () => appendNew(products(enriched), "product_id", s"$whDir/product_dim"),
+        () => appendNew(times(enriched), "date_id", s"$whDir/time_dim"),
+        () => facts(enriched).write.mode(SaveMode.Overwrite).parquet(staged))
     } finally enriched.unpersist()
     publish(spark, new Path(staged), new Path(s"$whDir/salefact/batch_id=$batchId"))
   }

@@ -401,23 +401,11 @@ object Corpus {
           size(tokens(col("text"))).cast(LongType).as("n_tokens")),
       packWidth(corpusMaxDocId(s, dir)))
 
-  /** [[pack]] over any (doc_id, text) relation — unit-testable form.
-    * Runs one cheap driver-side job over the id column to size the prefix
-    * buckets (for a parquet source that scan is column-pruned and answered
-    * from footer stats); callers with expensive upstream lineage compute
-    * the bound themselves and call [[packOfCounts]] directly
-    * ([[curationPipelineOf]] does). */
-  def packOf(d: DataFrame): DataFrame =
-    packOfCounts(
-      d.select(col("doc_id"),
-        size(tokens(col("text"))).cast(LongType).as("n_tokens")),
-      packWidth(maxDocId(d)))
-
   /** Max doc_id (0 on empty input) — the one scalar [[packWidth]] needs. */
   private[llm] def maxDocId(d: DataFrame): Long =
     d.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
 
-  /** [[packOf]] over a pre-tokenized (doc_id, n_tokens) relation — the form
+  /** [[pack]] over a pre-tokenized (doc_id, n_tokens) relation — the form
     * pipeline stages feed directly ([[curationPipelineOf]]). */
   private[llm] def packOfCounts(d: DataFrame, bucketWidth: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -528,16 +516,13 @@ object Corpus {
     lineDedupOf(s.read.parquet(s"$dir/documents.parquet"),
       LineBoilerBroadcastMaxRows, Some(lineStats(s, dir)))
 
-  /** [[lineDedup]] over any (doc_id, text) relation — unit-testable form. */
-  def lineDedupOf(d: DataFrame): DataFrame =
-    lineDedupOf(d, LineBoilerBroadcastMaxRows)
-
-  /** [[lineDedupOf]] with an explicit broadcast gate — the test hook that
-    * lets LineDedupSpec force the shuffled-join fallback on a tiny corpus.
-    * `knownStats` carries the session-cached (Σ n_tokens, doc count) on
-    * the production path; absent, one sizing job derives them here. */
+  /** [[lineDedup]] over any (doc_id, text) relation with an explicit
+    * broadcast gate (LineDedupSpec forces the shuffled-join fallback on a
+    * tiny corpus). `knownStats` carries the session-cached (Σ n_tokens,
+    * doc count) on the production path; absent, one sizing job derives
+    * them here. */
   private[llm] def lineDedupOf(d: DataFrame, broadcastMaxRows: Long,
-      knownStats: Option[(Long, Long)] = None): DataFrame = {
+      knownStats: Option[(Long, Long)]): DataFrame = {
     val t = tokens(col("text"))
     val n = size(t)
     val lineArr = transform(
@@ -775,7 +760,7 @@ object Corpus {
     * filter → exact-dedup on the normalized text (first-doc-wins) → pack
     * the survivors into training windows. Composability is the point: the
     * normalize+filter stages fuse into the scan (per-row codegen), the
-    * dedup is one content-hash window, and [[packOf]] consumes the
+    * dedup is one content-hash window, and [[packOfCounts]] consumes the
     * survivors directly, so the whole pipeline is a single query with
     * three keyed exchanges (content hash, pack bucket, sort) end to end —
     * no materialization barriers between stages at any scale. */
@@ -788,12 +773,7 @@ object Corpus {
     curationPipelineOf(s.read.parquet(s"$dir/documents.parquet"),
       packWidth(corpusMaxDocId(s, dir)))
 
-  /** [[curationPipeline]] over any (doc_id, text) relation — unit-testable
-    * form (sizes the pack buckets from the input itself). */
-  def curationPipelineOf(d: DataFrame): DataFrame =
-    curationPipelineOf(d, packWidth(maxDocId(d)))
-
-  private def curationPipelineOf(d: DataFrame, bucketWidth: Long): DataFrame = {
+  private[llm] def curationPipelineOf(d: DataFrame, bucketWidth: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the ONE shared normalization expression (TextAnalysis.normExpr) —
     // re-inlining it here could drift from the normalize operator silently
@@ -963,16 +943,11 @@ object Corpus {
   private def domainPerDoc(s: SparkSession, dir: String): DataFrame =
     domainMixCache.getOrElseUpdate(s, dir)(perDocTokens(docs(s, dir)).persist())
 
-  private def perDocTokens(d: DataFrame): DataFrame =
+  private[llm] def perDocTokens(d: DataFrame): DataFrame =
     d.select(col("source"), col("lang"), col("doc_id"),
       size(tokens(col("text"))).cast(LongType).as("n_tokens"))
 
-  /** [[domainMix]] over any (doc_id, source, lang, text) relation (test
-    * path — no persist; fixtures are tiny). */
-  private[llm] def domainMixOf(d: DataFrame): DataFrame =
-    mixOfPerDoc(perDocTokens(d))
-
-  private def mixOfPerDoc(perDoc: DataFrame): DataFrame = {
+  private[llm] def mixOfPerDoc(perDoc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Two jobs total (r11 VERDICT #3 — the old four-relation shape spent
     // its time on four job floors: totals broadcast, rates broadcast,
@@ -1143,18 +1118,9 @@ object Corpus {
         .groupBy(col("source"), col("token"))
         .agg(sum(col("tf")).as("tf")))
 
-  /** [[domainReweight]] over any (doc_id, source, text) relation —
-    * unit-test hook (builds the source-token counts inline instead of
-    * the session tf index). */
-  private[graft] def domainReweightOf(d: DataFrame): DataFrame =
-    domainReweightFrom(
-      d.select(col("source"), explode(tokens(col("text"))).as("token"))
-        .groupBy(col("source"), col("token"))
-        .agg(count(lit(1)).as("tf")))
-
   /** The reweighting recurrence over a prepared (source, token, tf)
     * relation. */
-  private def domainReweightFrom(tf0: DataFrame): DataFrame = {
+  private[llm] def domainReweightFrom(tf0: DataFrame): DataFrame = {
     // The unigram model folds into WINDOW expressions over the
     // vocab×sources-row relation (bounded domains: per-token and global
     // sums), so the model, its total, the per-source loss fold and the
@@ -1243,15 +1209,9 @@ object Corpus {
   def domainReweightSample(s: SparkSession, dir: String): DataFrame =
     domainReweightSampleFrom(reweightShared(s, dir), docs(s, dir))
 
-  /** [[domainReweightSample]] over any (doc_id, source, text) relation —
-    * unit-test hook (runs the reweighting recurrence inline instead of
-    * riding the session tf index). */
-  private[graft] def domainReweightSampleOf(d: DataFrame): DataFrame =
-    domainReweightSampleFrom(domainReweightOf(d), d)
-
   /** The mixture materialization over a prepared reweighting trajectory
     * and its (doc_id, source, text) corpus. */
-  private def domainReweightSampleFrom(rw: DataFrame, d: DataFrame)
+  private[llm] def domainReweightSampleFrom(rw: DataFrame, d: DataFrame)
       : DataFrame = {
     val alphas = rw
       .where(col("round") === DoremiRounds)
@@ -1312,12 +1272,7 @@ object Corpus {
   def epochAllocation(s: SparkSession, dir: String): DataFrame =
     epochAllocationFrom(reweightShared(s, dir), docs(s, dir))
 
-  /** [[epochAllocation]] over any (doc_id, source, text) relation —
-    * unit-test hook. */
-  private[graft] def epochAllocationOf(d: DataFrame): DataFrame =
-    epochAllocationFrom(domainReweightOf(d), d)
-
-  private def epochAllocationFrom(rw: DataFrame, d: DataFrame): DataFrame = {
+  private[llm] def epochAllocationFrom(rw: DataFrame, d: DataFrame): DataFrame = {
     val alphas = rw
       .where(col("round") === DoremiRounds)
       .select(col("source"), col("alpha"))

@@ -279,7 +279,7 @@ object Dedup {
     * Σn scalar on the production path (r16 VERDICT nit #1 — the sizing
     * job used to rerun per entry execution); absent, it's derived here. */
   private[graft] def containmentOf(sets: DataFrame, width: Int,
-      knownTotal: Option[Long] = None): DataFrame = {
+      knownTotal: Option[Long]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ex = sets.select(col("doc_id"), col("n"), explode(col("sset")).as("sh"))
     val dfreq = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -513,29 +513,11 @@ object Dedup {
     * for the X2-X4 near-dup family) replaces the per-entry re-shingling
     * scan. The `size >= 1` guard in the cache preserves the relational
     * no-group rule for sub-width docs. SimhashKernelSpec pins this form
-    * equal to [[simhashSignaturesRelational]] on corpus data. */
+    * equal to the relational twin it keeps, on corpus data. */
   private[llm] def simhashOf(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"),
       org.apache.spark.sql.graft.functions
         .simhash_of_set(col("sset"), SimhashBits).as("simhash"))
-
-  /** The pre-r20 relational twin (explode + 60-bit-sum aggregate) —
-    * kept as the independent formulation SimhashKernelSpec pins the
-    * kernel against. */
-  private[llm] def simhashSignaturesRelational(d: DataFrame): DataFrame = {
-    val h = d.select(col("doc_id"),
-        explode(shingles(col("text"), ShingleK)).as("sh"))
-      .select(col("doc_id"), hash64(col("sh")).as("h"))
-    val bitSums = h.groupBy(col("doc_id")).agg(
-      sum(when(shiftright(col("h"), 0).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as("s0"),
-      (1 until SimhashBits).map(b =>
-        sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1)).as(s"s$b")): _*)
-    bitSums.select(col("doc_id"),
-      (0 until SimhashBits)
-        .map(b => when(col(s"s$b") >= 0, lit(1L << b)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash"))
-  }
 
   /** SimHash near-dup pairs at hamming ≤ 3 via 4×15-bit chunk banding
     * (pigeonhole-exact, no false negatives) + bit_count(xor) filter. */

@@ -540,7 +540,7 @@ object LlmQueries {
         ORDER BY query_id, rnk"""
 
   /** The multi-table SRP bucket CTEs (per-table bucket list literal,
-    * unpivoted — the twin of Spark's posexplode over annBucket(t)),
+    * unpivoted — the twin of Spark's posexplode over annBucketOf),
     * shared by similarity_ann_lsh and the r17 kNN-graph build so the
     * two oracles cannot drift. The plane literals live in a one-row
     * MATERIALIZED CTE (r17): inlined inside the lambdas, DuckDB

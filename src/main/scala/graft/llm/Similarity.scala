@@ -162,10 +162,6 @@ object Similarity {
         (x, sgn) => x.cast(DoubleType) * sgn),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Table t's b-bit SRP bucket (2^AnnPlanes cells per table). */
-  def annBucket(v: Column, t: Int): Column =
-    annBucketOf(v, annPlaneSigns, t)
-
   private[graft] def annBucketOf(v: Column, signs: Array[Array[Array[Int]]],
       t: Int): Column =
     (0 until signs(t).length)
@@ -781,9 +777,8 @@ object Similarity {
   // ---------------------------------------------------------------------
   // D4 prototypicality pruning (r16)
 
-  /** Fraction of each cluster DROPPED as most-prototypical, as an exact
-    * rational 1/4 (the keep gate runs in integer arithmetic). */
-  val D4DropNum = 1L
+  /** Each cluster DROPS its most-prototypical 1/[[D4DropDen]] (the keep
+    * gate runs in integer arithmetic). */
   val D4DropDen = 4L
 
   /** Weakly session-keyed — see [[graft.SessionMemo]]. */
@@ -994,7 +989,7 @@ object Similarity {
     * `qmn`/`qst`: code_i = clamp(0, 255, floor((v_i − mn_i) / st_i)); a
     * constant dimension (st = 0) codes to 0. Long elements so the integer
     * dot accumulates exactly in both engines. */
-  private def sqCodes(v: Column): Column =
+  private[llm] def sqCodes(v: Column): Column =
     transform(v, (x, i) =>
       when(element_at(col("qst"), i + 1) > 0,
         least(lit(SqMaxCode.toLong), greatest(lit(0L),
@@ -1031,11 +1026,6 @@ object Similarity {
     * int8 bandwidth inside each probed list). */
   def sqTopK(s: SparkSession, dir: String): DataFrame =
     sqTopKOf(emb(s, dir), QueryCount, SqCandidates, TopK)
-
-  /** (vec_id, qv) — every vector's code array under the corpus params. */
-  private[llm] def sqQuantizedOf(e: DataFrame): DataFrame =
-    e.crossJoin(broadcast(sqParamsOf(e)))
-      .select(col("vec_id"), sqCodes(col("embedding")).as("qv"))
 
   /** Cell-midpoint dequantization of a code array under broadcast
     * `qmn`/`qst` columns; a constant dimension (st = 0) reconstructs its
@@ -1140,7 +1130,7 @@ object Similarity {
 
   /** The (vec_id, m, sv) subvector relation — each vector split into its
     * M contiguous [[PqSubDim]]-dim slices. */
-  private def pqSubsOf(e: DataFrame): DataFrame =
+  private[llm] def pqSubsOf(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
       posexplode(array((0 until PqSubspaces).map(m =>
         slice(col("embedding"), m * PqSubDim + 1, PqSubDim)): _*))
@@ -1214,20 +1204,6 @@ object Similarity {
     }
     cb
   }
-
-  /** Mean assigned-cell squared-L2 over all subvectors under a codebook —
-    * the quantization error the Lloyd rounds minimize (one scalar row;
-    * PqAnnSpec asserts trained < donor init). */
-  private[llm] def pqQuantErrorOf(e: DataFrame, cb: DataFrame): DataFrame =
-    pqSubsOf(e).join(broadcast(cb), "m")
-      .select(col("vec_id"), col("m"),
-        round(aggregate(
-          zip_with(col("sv"), col("cw"),
-            (x, c) => (x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)),
-          lit(0.0), (acc, v) => acc + v), 9).as("d2"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(col("d2")).as("d2"))
-      .agg(avg(col("d2")).as("mean_d2"))
 
   /** (vec_id, codes) — every vector's M sub-codebook indices under the
     * given trained codebook. */
@@ -1550,12 +1526,7 @@ object Similarity {
   def centroidClassify(s: SparkSession, dir: String): DataFrame =
     classifyWith(emb(s, dir), labelComp(s, dir))
 
-  /** [[centroidClassify]] over any (vec_id, label, embedding) relation —
-    * unit-test hook (builds its own uncached prototypes). */
-  private[llm] def centroidClassifyOf(e: DataFrame): DataFrame =
-    classifyWith(e, labelCompOf(e))
-
-  private def classifyWith(e: DataFrame, comp: DataFrame): DataFrame = {
+  private[llm] def classifyWith(e: DataFrame, comp: DataFrame): DataFrame = {
     // ONE broadcast row packs every prototype (pred-ascending) and the
     // argmax is a PER-ROW scan over that array — the old form exploded
     // each vector L× (crossJoin against L centroid rows) and paid a
@@ -2216,17 +2187,6 @@ object Similarity {
   def mmrTopK(s: SparkSession, dir: String): DataFrame =
     mmrSelect(mmrPool(s, dir))
 
-  /** Test-hook composition: build the pool, select, RELEASE the pool's
-    * persisted frames (r14 ADVICE: direct callers outside the
-    * session-memoized prod path accumulated cached relations per call).
-    * Safe because [[mmrSelect]]'s rounds localCheckpoint eagerly — the
-    * returned relation reads the checkpoints, never the pool. */
-  private[llm] def mmrSelectOnce(e: DataFrame): DataFrame = {
-    val pool = mmrPoolOf(e)
-    try mmrSelect(pool)
-    finally { pool._1.unpersist(); pool._2.unpersist() }
-  }
-
   /** The greedy selection over a prepared (pool, pairwise) — unit-test
     * hook via [[mmrPoolOf]].
     *
@@ -2241,8 +2201,8 @@ object Similarity {
     * (score_u = λ₁₀·rel_u − μ₁₀·max sim_u, ties to lower neighbor_id)
     * over them, explode the K picks. One aggregation replaces ~3 jobs ×
     * (K−1) rounds; the corpus-scale work (the top-C pool scan) is
-    * untouched. The unrolled relational form is kept below
-    * ([[mmrSelectRelational]]) and MmrKernelSpec pins the two identical
+    * untouched. MmrKernelSpec keeps the unrolled relational form and
+    * pins the two identical
     * on the sf0.001 pool plus degenerate fixtures. The in-row closure is
     * NOT a hot-path UDF: it runs once per query row (Q rows total), on
     * broadcast-sized arrays. */
@@ -2279,51 +2239,6 @@ object Similarity {
       .select(col("query_id"), col("pick._1").as("neighbor_id"),
         col("pick._2").as("mmr_rank"), col("pick._3").as("relevance"),
         col("pick._4").as("score_u"))
-    sel.select(col("query_id"), col("neighbor_id"), col("mmr_rank"),
-        col("relevance"),
-        (col("score_u").cast(DoubleType) / lit(1.0e7)).as("mmr_score"))
-      .orderBy(col("query_id"), col("mmr_rank"))
-  }
-
-  /** The pre-r21 unrolled-rounds formulation — kept as the independent
-    * twin MmrKernelSpec pins [[mmrSelect]] against (and the shape the
-    * oracle's K−1 generated CTEs mirror). */
-  private[llm] def mmrSelectRelational(pool: (DataFrame, DataFrame)): DataFrame = {
-    val (cand, pw) = pool
-    // greedy rounds, unrolled: rank 1 = relevance argmax
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("relevance").desc, col("neighbor_id"))
-    var sel = cand.withColumn("rn", row_number().over(w1))
-      .where(col("rn") === 1)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("mmr_rank"),
-        col("relevance"),
-        (lit(MmrLambdaTenths) * col("rel_u")).as("score_u"))
-    for (r <- 2 to MmrK) {
-      val rem = cand.join(sel.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_anti")
-      val ms = pw
-        .join(sel.select(col("query_id").as("sq"),
-          col("neighbor_id").as("sid")),
-          col("query_id") === col("sq") && col("b_id") === col("sid"))
-        .groupBy(col("query_id"), col("a_id"))
-        .agg(max(col("sim_u")).as("ms_u"))
-      val wr = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_u").desc, col("neighbor_id"))
-      val pick = rem
-        .join(ms, rem("query_id") === ms("query_id") &&
-          col("neighbor_id") === col("a_id"))
-        .select(rem("query_id"), col("neighbor_id"), col("relevance"),
-          (lit(MmrLambdaTenths) * col("rel_u") -
-            lit(MmrMuTenths) * col("ms_u")).as("score_u"))
-        .withColumn("rn", row_number().over(wr))
-        .where(col("rn") === 1)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(r.toLong).as("mmr_rank"), col("relevance"), col("score_u"))
-      // eager localCheckpoint = materialize + cut lineage (the Lloyd-loop
-      // discipline): round r's plan references sel three times; without
-      // truncation the composed plan grows ~3^K sub-trees.
-      sel = sel.unionByName(pick).localCheckpoint()
-    }
     sel.select(col("query_id"), col("neighbor_id"), col("mmr_rank"),
         col("relevance"),
         (col("score_u").cast(DoubleType) / lit(1.0e7)).as("mmr_score"))
@@ -2456,7 +2371,7 @@ object Similarity {
   * [[Similarity.mmrSelect]] applies per query row. Kept as a named
   * object (not an inline lambda) so MmrKernelSpec can call [[select]]
   * directly on hand-built pools. Arithmetic is IDENTICAL to the
-  * unrolled relational rounds ([[Similarity.mmrSelectRelational]]):
+  * unrolled relational rounds (kept in MmrKernelSpec):
   * rank 1 maximizes rel_u (ties to lower neighbor_id; rel_u is the
   * bijective 6-dp lift of relevance, so the order is the same), later
   * ranks maximize score_u = λ₁₀·rel_u − μ₁₀·max_{s∈S} sim_u — and a

@@ -42,7 +42,4 @@ object Text {
     val mk = transform(idx, i => concat_ws(" ", (0 until k).map(j => element_at(t, (i + j + 1).cast(IntegerType))): _*))
     array_distinct(when(n >= k, mk).otherwise(array().cast(ArrayType(StringType))))
   }
-
-  /** Distinct unigram token set. */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
 }

@@ -363,8 +363,8 @@ object TextAnalysis {
     * shuffle, a coverage-position explode + distinct, a join back to the
     * per-position length relation and a re-aggregation — ~n·corpus
     * shuffled rows to compute row-local values (plan: 5 Exchange → 1).
-    * [[dupGramCoveredRelational]] keeps the relational formulation as the
-    * independent twin RepBatterySpec pins the kernel against. */
+    * RepBatterySpec keeps the relational formulation as the independent
+    * twin it pins the kernel against. */
   private[graft] def repetitionBatteryOf(d: DataFrame): DataFrame = {
     val t = tokens(col("text"))
     val m = size(t)
@@ -404,78 +404,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** The pre-r20 RELATIONAL duplicated-gram coverage leg (explode all
-    * positions × n = 5..10 → (doc_id, n, gh) count → coverage-position
-    * explode → distinct → join per-position lengths → per-doc sum),
-    * retained as the independent formulation RepBatterySpec pins the
-    * native [[org.apache.spark.sql.graft.DupGramCoverage]] kernel
-    * against: (doc_id, n, covered), rows only where the doc has a
-    * duplicated n-gram. */
-  private[graft] def dupGramCoveredRelational(d: DataFrame): DataFrame = {
-    val t = tokens(col("text"))
-    val m = size(t)
-    val ns = array((5 to 10).map(lit(_)): _*)
-    val gramRows = flatten(transform(ns, n =>
-      when(m >= n,
-        transform(sequence(lit(0), m - n),
-          i => struct(n.as("n"), i.as("pos"),
-            hash64(array_join(slice(t, i + 1, n), " ")).as("gh"))))
-        .otherwise(array().cast(ArrayType(StructType(Seq(
-          StructField("n", IntegerType), StructField("pos", IntegerType),
-          StructField("gh", LongType))))))))
-    val base = d.select(col("doc_id"), col("text"))
-    val grams = base
-      .select(col("doc_id"), explode(gramRows).as("g"))
-      .select(col("doc_id"), col("g.n").as("n"), col("g.pos").as("pos"),
-        col("g.gh").as("gh"))
-    val tok = base.select(col("doc_id"),
-      posexplode(t).as(Seq("pos", "w")))
-      .select(col("doc_id"), col("pos"), length(col("w")).cast(LongType)
-        .as("wlen"))
-    grams
-      .groupBy(col("doc_id"), col("n"), col("gh"))
-      .agg(collect_list(col("pos")).as("ps"))
-      .where(size(col("ps")) >= 2)
-      .select(col("doc_id"), col("n"),
-        explode(flatten(transform(col("ps"),
-          p => sequence(p, p + col("n") - 1)))).as("cp"))
-      .distinct()
-      .join(tok.withColumnRenamed("pos", "cp"), Seq("doc_id", "cp"))
-      .groupBy(col("doc_id"), col("n"))
-      .agg(sum(col("wlen")).as("covered"))
-  }
-
-  /** The pre-r15 RELATIONAL top-gram leg (explode → (doc_id, n, gram)
-    * count → rank window), retained as the independent formulation
-    * RepBatterySpec pins the native [[org.apache.spark.sql.graft
-    * .TopGramStats]] kernel against: (doc_id, n, covered) for n = 2..4,
-    * rows only where the doc has ≥ n words. */
-  private[graft] def topGramCoveredRelational(d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val t = tokens(col("text"))
-    val m = size(t)
-    val ns = array((2 to 4).map(lit(_)): _*)
-    val gramRows = flatten(transform(ns, n =>
-      when(m >= n,
-        transform(sequence(lit(0), m - n),
-          i => struct(n.as("n"),
-            array_join(slice(t, i + 1, n), " ").as("gram"))))
-        .otherwise(array().cast(ArrayType(StructType(Seq(
-          StructField("n", IntegerType),
-          StructField("gram", StringType))))))))
-    val cnt = d.select(col("doc_id"), explode(gramRows).as("g"))
-      .select(col("doc_id"), col("g.n").as("n"), col("g.gram").as("gram"))
-      .groupBy(col("doc_id"), col("n"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-    val wTop = Window.partitionBy(col("doc_id"), col("n"))
-      .orderBy(col("c").desc, col("gram"))
-    cnt.withColumn("rn", row_number().over(wTop))
-      .where(col("rn") === 1)
-      .select(col("doc_id"), col("n"),
-        (col("c") * (length(col("gram")) - (col("n") - 1)))
-          .cast(LongType).as("covered"))
-  }
-
   /** Text normalization — the per-row scrub pass a pretraining corpus runs
     * before hashing/dedup (lowercase → strip non-alphanumerics → collapse
     * runs of spaces → trim). Emits the normalized text's md5 plus
@@ -492,19 +420,10 @@ object TextAnalysis {
     *
     * r21 (guide §4.2, r20 VERDICT top-next item): one native byte-level
     * pass ([[org.apache.spark.sql.graft.NormalizeText]]) instead of two
-    * regexp_replace automata + trim over every byte. The regex chain is
-    * kept below as [[normExprRelational]]; NormalizeTextKernelSpec pins
-    * the two char-identical on corpus data + Unicode fixtures. */
+    * regexp_replace automata + trim over every byte. NormalizeTextKernelSpec
+    * keeps the regex chain and pins the two char-identical on corpus data + Unicode fixtures. */
   def normExpr(text: Column): Column =
     org.apache.spark.sql.graft.functions.norm_text(text)
-
-  /** The pre-r21 relational twin (two regexp_replace passes + trim) —
-    * kept as the independent formulation NormalizeTextKernelSpec pins
-    * the kernel against (and the form the sql_text_normalize twin's SQL
-    * text mirrors). */
-  private[llm] def normExprRelational(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
 
   /** [[normalize]] over any (doc_id, text) relation — unit-testable form.
     *
@@ -552,21 +471,7 @@ object TextAnalysis {
     surprisalFrom(termFreqs(s, dir),
       docFreqs(s, dir).select(col("token"), col("term_freq")))
 
-  /** [[unigramSurprisal]] over any (doc_id, text) relation — unit-testable
-    * form (builds the tf/df relations inline instead of the session cache). */
-  def unigramSurprisalOf(d: DataFrame): DataFrame = {
-    val tf = d
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      // mirror the persisted index's RANGE clustering — surprisalFrom's
-      // local-sort finish relies on it
-      .repartitionByRange(col("doc_id"))
-    surprisalFrom(tf, tf.groupBy(col("token"))
-      .agg(sum(col("tf")).as("term_freq")))
-  }
-
-  private def surprisalFrom(tf: DataFrame, dfr: DataFrame): DataFrame = {
+  private[llm] def surprisalFrom(tf: DataFrame, dfr: DataFrame): DataFrame = {
     val tot = dfr.agg(sum(col("term_freq")).cast(DoubleType).as("total_tokens"))
     val contrib =
       round(col("tf") * -log(col("term_freq").cast(DoubleType) / col("total_tokens")), 9)
@@ -578,7 +483,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tokens"),
         round(col("sdec").cast(DoubleType) / col("n_tokens"), 6).as("surprisal"))
       // both tf providers are RANGE-partitioned by doc_id (the persisted
-      // index and the test path below), the broadcast join and the
+      // index and the specs' inline tf), the broadcast join and the
       // shuffle-free groupBy preserve it → local sort is a total order
       .sortWithinPartitions(col("doc_id"))
   }
@@ -592,8 +497,8 @@ object TextAnalysis {
   /** Broadcast gate for the bigram model in [[bigramPerplexity]]: the
     * model row count is bounded above by the cached [[bigramFreqs]] row
     * count (entry path; a metadata-cheap count over the persisted index)
-    * or by total bigram occurrences Σ per-doc (n_tokens − 1) (inline test
-    * path — the lineDedup gate discipline); ~48 B per in-memory model row
+    * or by total bigram occurrences Σ per-doc (n_tokens − 1) (the specs'
+    * inline relations — the lineDedup gate discipline); ~48 B per in-memory model row
     * keeps 2M rows well inside a 128 MB broadcast budget. Over the gate
     * the score join shuffles on the bigram key instead (content-keyed —
     * Heaps-law vocabulary, no single hot reducer). */
@@ -658,7 +563,7 @@ object TextAnalysis {
     bgModelCache.getOrElseUpdate(s, dir)(
       modelOf(bigramFreqs(s, dir)).persist())
 
-  private def modelOf(tf: DataFrame): DataFrame = {
+  private[llm] def modelOf(tf: DataFrame): DataFrame = {
     val model = tf.groupBy(col("big")).agg(sum(col("tf")).as("c"))
       .withColumn("w1", split(col("big"), " ").getItem(0))
     val ctx = model.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
@@ -678,7 +583,7 @@ object TextAnalysis {
       bigramTf(docs(s, dir)).repartitionByRange(col("doc_id")).persist())
 
   /** Per-doc bigram term frequencies of a (doc_id, text) relation. */
-  private def bigramTf(d: DataFrame): DataFrame = {
+  private[llm] def bigramTf(d: DataFrame): DataFrame = {
     val t = tokens(col("text"))
     val n = size(t)
     val bigArr = transform(sequence(lit(1), n - 1), i =>
@@ -690,23 +595,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
   }
 
-  /** [[bigramPerplexity]] over any (doc_id, text) relation with an
-    * explicit broadcast gate — the unit-test hook (BigramPerplexitySpec
-    * forces the shuffled-join fallback with gate 0). Builds the tf
-    * relation inline (uncached) with the same range clustering. */
-  private[llm] def bigramPerplexityOf(d: DataFrame, broadcastMaxRows: Long): DataFrame = {
-    val t = tokens(col("text"))
-    val n = size(t)
-    // occurrence upper bound Σ (n_tokens − 1) — one cheap text-column job
-    val bigBound = d.where(n >= 2)
-      .agg(coalesce(sum((n - 1).cast(LongType)), lit(0L))).head().getLong(0)
-    val tf = bigramTf(d).repartitionByRange(col("doc_id"))
-    perplexityFrom(tf, modelOf(tf), bigBound,
-      d.select(explode(t).as("token")).agg(countDistinct(col("token")).as("v")),
-      broadcastMaxRows)
-  }
-
-  private def perplexityFrom(tf: DataFrame, scored: DataFrame, bigBound: Long,
+  private[llm] def perplexityFrom(tf: DataFrame, scored: DataFrame, bigBound: Long,
       voc: DataFrame, broadcastMaxRows: Long): DataFrame = {
     val contrib = round(col("tf") *
         -log((col("c") + 1).cast(DoubleType) / (col("ctx") + col("v")).cast(DoubleType)), 9)
@@ -808,7 +697,7 @@ object TextAnalysis {
     knModelCache.getOrElseUpdate(s, dir)(
       knModelOf(bigramFreqs(s, dir)).persist())
 
-  private def knModelOf(tf: DataFrame): DataFrame = {
+  private[llm] def knModelOf(tf: DataFrame): DataFrame = {
     val mdl = tf.groupBy(col("big")).agg(sum(col("tf")).as("c"))
       .withColumn("w1", split(col("big"), " ").getItem(0))
       .withColumn("w2", split(col("big"), " ").getItem(1))
@@ -821,19 +710,7 @@ object TextAnalysis {
       .select(col("big"), col("c"), col("cw1"), col("n1f"), col("n1p"))
   }
 
-  /** [[knPerplexity]] over any (doc_id, text) relation with an explicit
-    * broadcast gate — the unit-test hook (KnPerplexitySpec forces the
-    * shuffled fallback with gate 0). */
-  private[llm] def knPerplexityOf(d: DataFrame, broadcastMaxRows: Long): DataFrame = {
-    val t = tokens(col("text"))
-    val n = size(t)
-    val bigBound = d.where(n >= 2)
-      .agg(coalesce(sum((n - 1).cast(LongType)), lit(0L))).head().getLong(0)
-    val tf = bigramTf(d).repartitionByRange(col("doc_id"))
-    knFrom(tf, knModelOf(tf), bigBound, broadcastMaxRows)
-  }
-
-  private def knFrom(tf: DataFrame, model: DataFrame, bigBound: Long,
+  private[llm] def knFrom(tf: DataFrame, model: DataFrame, bigBound: Long,
       broadcastMaxRows: Long): DataFrame = {
     val dD = lit(KnDiscount)
     // fully-parenthesized so the Catalyst tree mirrors the oracle text
@@ -1499,9 +1376,8 @@ object TextAnalysis {
     * sort.
     *
     * r15 (r14 VERDICT #2): the window fold is the native single-pass
-    * [[org.apache.spark.sql.graft.WinnowSelect]] kernel (monotone-deque
-    * sliding minimum, O(n) amortized) — the composable HOF form
-    * ([[winnowHofOf]], kept as the spec's equivalence reference) paid
+    * winnow kernel (monotone-deque sliding minimum, O(n) amortized) —
+    * the composable HOF form (kept in WinnowSpec as its reference) paid
     * O(n·w) interpreted per-window lambdas and measured 1.60 s at sf0.1
     * against this kernel's one compiled loop. WinnowSpec pins
     * bit-equality of the two forms on corpus data and the adversarial
@@ -1520,34 +1396,6 @@ object TextAnalysis {
           tokens(col("text")), Dedup.ShingleK, WinnowW)).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
       .orderBy(col("doc_id"), col("pos"))
-
-  /** The pre-r15 composable higher-order-function winnow — retained as
-    * the independent formulation WinnowSpec pins the native kernel
-    * against (per-window slice/array_min/rightmost-max lambdas; the
-    * semantics, spelled out). */
-  private[graft] def winnowHofOf(d: DataFrame): DataFrame = {
-    val t = tokens(col("text"))
-    val n = size(t)
-    val k = Dedup.ShingleK
-    val grams = transform(sequence(lit(0), n - k), i =>
-      concat_ws(" ", (0 until k).map(j =>
-        element_at(t, (i + j + 1).cast(IntegerType))): _*))
-    val w = WinnowW
-    d.where(n >= k + w - 1)
-      .select(col("doc_id"), transform(grams, g => hash64(g)).as("hs"))
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(0), size(col("hs")) - w), j => {
-          val win = slice(col("hs"), j + 1, lit(w))
-          val mn = array_min(win)
-          // rightmost index of the min inside the window (the tie rule)
-          val rpos = array_max(transform(sequence(lit(1), lit(w)), p =>
-            when(element_at(win, p.cast(IntegerType)) === mn, p)
-              .otherwise(lit(0L))))
-          struct((j + rpos).cast(LongType).as("pos"), mn.as("fp"))
-        }))).as("s"))
-      .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
-      .orderBy(col("doc_id"), col("pos"))
-  }
 
   /** PII patterns for [[piiRedact]], applied in this order. Every regex is
     * restricted to syntax Java's engine and DuckDB's RE2 interpret
@@ -1684,13 +1532,9 @@ object TextAnalysis {
         ulmParts(s, dir)._2)
     }
 
-  /** [[unigramLm]] over any (doc_id, text) relation — unit-test hook. */
-  private[llm] def unigramLmOf(d: DataFrame): DataFrame =
-    unigramLmParts(d)._1
-
   /** The full training pipeline: returns (final vocab stats, final
     * word→seg map). */
-  private def unigramLmParts(d: DataFrame): (DataFrame, DataFrame) = {
+  private[llm] def unigramLmParts(d: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     // the one corpus-scale aggregation: word → corpus count
     val wc = d.select(explode(tokens(col("text"))).as("word"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.star.StarSql
 import graft.warehouse.Warehouse
 
 /** The reference suite is also served as ANSI SQL through `spark.sql`
@@ -10,11 +9,12 @@ import graft.warehouse.Warehouse
   * forms; this exercises the parser/analyzer/catalog path end-to-end —
   * D1/D2 — on top of the DataFrame builders in [[RefQueries]]).
   *
-  * A representative slice is registered as verifiable entries (each shares
-  * its DuckDB oracle with the DataFrame twin): top-k with CASE day-type
-  * (Q1), interval arithmetic (Q6), theta self-join (Q16), ROLLUP with NULL
-  * ordering (Q17), conditional-aggregation pivot (Q18). The full-suite
-  * SQL==DataFrame equivalence is asserted in the test suite.
+  * A representative slice is registered as verifiable entries (each looks
+  * up its DuckDB oracle from the DataFrame twin in [[RefQueries.all]]):
+  * top-k with CASE day-type (Q1), interval arithmetic (Q6), LAG over a
+  * named window (Q9), theta self-join (Q16), ROLLUP with NULL ordering
+  * (Q17), conditional-aggregation pivot (Q18). SqlEquivalenceSpec asserts
+  * each returns its twin's rows.
   */
 object SqlQueries {
 
@@ -28,6 +28,10 @@ object SqlQueries {
     t.customer.createOrReplaceTempView("customer_dim")
     t.time.createOrReplaceTempView("time_dim")
   }
+
+  /** The DataFrame twin's DuckDB oracle: one text per reference query. */
+  private def oracleOf(twin: String): Option[String] =
+    RefQueries.all.find(_.name == twin).get.oracle
 
   private def sql(body: String): (SparkSession, String) => DataFrame =
     (s, dir) => { registerViews(s, dir); s.sql(body) }
@@ -86,17 +90,7 @@ object SqlQueries {
         GROUP BY p.product_id, p.product_category, t.month, day_type
         ORDER BY total_revenue DESC, p.product_id, t.month, day_type
         LIMIT 5"""),
-      Some(StarSql.withStar("""
-        SELECT p.product_id, p.product_category, t.month,
-               CASE WHEN t.day_of_week IN ('Saturday','Sunday') THEN 'weekend' ELSE 'weekday' END AS day_type,
-               CAST(CAST(SUM(f.purchase_amount) AS VARCHAR) AS DOUBLE) AS total_revenue
-        FROM salefact f
-        JOIN product_dim p ON f.product_id = p.product_id
-        JOIN time_dim t ON f.date_id = t.date_id
-        WHERE t.year = 2000
-        GROUP BY p.product_id, p.product_category, t.month, day_type
-        ORDER BY total_revenue DESC, p.product_id, t.month, day_type
-        LIMIT 5"""))),
+      oracleOf("q01_top5_products_daytype")),
 
     QueryDef("sql_q06_city_marital_6m",
       sql("""
@@ -109,16 +103,7 @@ object SqlQueries {
           AND t.full_date <= DATE '2000-12-31'
         GROUP BY c.city_category, c.marital_status, t.month
         ORDER BY c.city_category, c.marital_status, t.month"""),
-      Some(StarSql.withStar("""
-        SELECT c.city_category, c.marital_status, t.month,
-               CAST(CAST(SUM(f.purchase_amount) AS VARCHAR) AS DOUBLE) AS total_purchase
-        FROM salefact f
-        JOIN customer_dim c ON f.customer_id = c.customer_id
-        JOIN time_dim t ON f.date_id = t.date_id
-        WHERE t.full_date >= DATE '2000-12-31' - INTERVAL 6 MONTH
-          AND t.full_date <= DATE '2000-12-31'
-        GROUP BY c.city_category, c.marital_status, t.month
-        ORDER BY c.city_category, c.marital_status, t.month"""))),
+      oracleOf("q06_city_marital_6m")),
 
     QueryDef("sql_q16_basket_pairs",
       // MERGE hint: same rationale as q16_basket_pairs — the bucketed
@@ -134,14 +119,7 @@ object SqlQueries {
         GROUP BY a.product_id, b.product_id
         ORDER BY pair_count DESC, product_01, product_02
         LIMIT 5"""),
-      Some(StarSql.withStar("""
-        SELECT a.product_id AS product_01, b.product_id AS product_02,
-               COUNT(*) AS pair_count
-        FROM salefact a
-        JOIN salefact b ON a.order_id = b.order_id AND a.product_id < b.product_id
-        GROUP BY a.product_id, b.product_id
-        ORDER BY pair_count DESC, product_01, product_02
-        LIMIT 5"""))),
+      oracleOf("q16_basket_pairs")),
 
     QueryDef("sql_q17_rollup",
       sql("""
@@ -154,15 +132,7 @@ object SqlQueries {
         GROUP BY ROLLUP(p.store_id, p.supplier_id, p.product_id)
         ORDER BY p.store_id ASC NULLS FIRST, p.supplier_id ASC NULLS FIRST,
                  p.product_id ASC NULLS FIRST"""),
-      Some(StarSql.withStar("""
-        SELECT p.store_id, p.supplier_id, p.product_id,
-               CAST(CAST(SUM(f.purchase_amount) AS VARCHAR) AS DOUBLE) AS total_revenue
-        FROM salefact f
-        JOIN product_dim p ON f.product_id = p.product_id
-        JOIN time_dim t ON f.date_id = t.date_id
-        WHERE t.year = 2000
-        GROUP BY ROLLUP(p.store_id, p.supplier_id, p.product_id)
-        ORDER BY p.store_id NULLS FIRST, p.supplier_id NULLS FIRST, p.product_id NULLS FIRST"""))),
+      oracleOf("q17_rollup")),
 
     QueryDef("sql_q18_h1_h2",
       sql("""
@@ -182,23 +152,7 @@ object SqlQueries {
         JOIN time_dim t ON f.date_id = t.date_id
         GROUP BY p.product_id
         ORDER BY p.product_id"""),
-      Some(StarSql.withStar("""
-        SELECT p.product_id,
-               CAST(CAST(SUM(CASE WHEN lower(t.month) IN ('january','february','march','april','may','june')
-                    THEN f.purchase_amount END) AS VARCHAR) AS DOUBLE) AS half_01_revenue,
-               CAST(CAST(SUM(CASE WHEN lower(t.month) IN ('july','august','september','october','november','december')
-                    THEN f.purchase_amount END) AS VARCHAR) AS DOUBLE) AS half_02_revenue,
-               CAST(CAST(SUM(f.purchase_amount) AS VARCHAR) AS DOUBLE) AS yearly_revenue,
-               CAST(SUM(CASE WHEN lower(t.month) IN ('january','february','march','april','may','june')
-                    THEN f.quantity END) AS BIGINT) AS half_01_qty,
-               CAST(SUM(CASE WHEN lower(t.month) IN ('july','august','september','october','november','december')
-                    THEN f.quantity END) AS BIGINT) AS half_02_qty,
-               CAST(SUM(f.quantity) AS BIGINT) AS yearly_qty
-        FROM salefact f
-        JOIN product_dim p ON f.product_id = p.product_id
-        JOIN time_dim t ON f.date_id = t.date_id
-        GROUP BY p.product_id
-        ORDER BY p.product_id"""))),
+      oracleOf("q18_h1_h2")),
 
     // LLM-operator twin (pure expression pipeline through the parser):
     // Spark's regexp_replace is global by default, DuckDB's needs 'g'.
@@ -247,8 +201,7 @@ object SqlQueries {
 
     // Q9 twin: LAG window + named WINDOW clause through the SQL parser —
     // the one analytic-window shape the SQL surface didn't exercise yet.
-    // Shares the DataFrame twin's oracle verbatim (modulo the VARCHAR
-    // round-trip DuckDB needs for exact decimal→double).
+    // Shares the DataFrame twin's oracle.
     QueryDef("sql_q09_mom_growth",
       sql("""
         WITH monthly AS (
@@ -264,20 +217,7 @@ object SqlQueries {
         FROM monthly
         WINDOW w AS (PARTITION BY product_category ORDER BY month_num)
         ORDER BY product_category, month_num"""),
-      Some(StarSql.withStar("""
-        , monthly AS (
-          SELECT p.product_category, month(t.full_date) AS month_num,
-                 CAST(CAST(SUM(f.purchase_amount) AS VARCHAR) AS DOUBLE) AS revenue
-          FROM salefact f
-          JOIN product_dim p ON f.product_id = p.product_id
-          JOIN time_dim t ON f.date_id = t.date_id
-          WHERE t.year = 2000
-          GROUP BY p.product_category, month(t.full_date))
-        SELECT product_category, month_num, revenue,
-               (revenue - lag(revenue) OVER w) / lag(revenue) OVER w * 100 AS growth_pct
-        FROM monthly
-        WINDOW w AS (PARTITION BY product_category ORDER BY month_num)
-        ORDER BY product_category, month_num"""))),
+      oracleOf("q09_mom_growth")),
 
     // Exact-dedup twin over the raw corpus view: hash-groupBy through the
     // parser; both engines share the md5 content hash so the SQL text is

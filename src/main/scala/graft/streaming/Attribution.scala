@@ -48,15 +48,6 @@ object Attribution {
       .select(col("user_id"), col("event_id").as("click_event_id"),
         col("ts").as("click_ts")))
 
-  /** Batch twin (the oracle's relational form). */
-  def batch(s: SparkSession, dir: String): DataFrame = {
-    val (p, c) = shape(Events.events(s, dir))
-    join(p, c)
-      .select(col("purchase_event_id"), col("user_id"), col("purchase_ts"),
-        col("value"), col("click_event_id"), col("click_ts"))
-      .orderBy(col("purchase_event_id"), col("click_event_id"))
-  }
-
   /** Run the streaming attribution once per (session, sf dir) and return
     * the accumulated result (ordered for the compare harness). */
   def streamed(s: SparkSession, dir: String): DataFrame = {

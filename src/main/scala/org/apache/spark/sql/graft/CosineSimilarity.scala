@@ -115,9 +115,6 @@ object functions {
   def norm_text(text: Column): Column =
     ExpressionUtils.column(NormalizeText(ExpressionUtils.expression(text)))
 
-  def winnow_select(hashes: Column, w: Int): Column =
-    ExpressionUtils.column(WinnowSelect(ExpressionUtils.expression(hashes), w))
-
   def winnow_fingerprints(toks: Column, k: Int, w: Int): Column =
     ExpressionUtils.column(
       WinnowFingerprint(ExpressionUtils.expression(toks), k, w))

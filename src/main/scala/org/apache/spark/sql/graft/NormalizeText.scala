@@ -13,9 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Value-identical to the relational chain it replaces —
   * `trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""),
-  * " +", " "))` — kept as [[graft.llm.TextAnalysis.normExprRelational]]
-  * and pinned equal by NormalizeTextKernelSpec on corpus data plus
-  * Unicode/edge fixtures. Why a byte loop is exact:
+  * " +", " "))` — which NormalizeTextKernelSpec keeps and pins equal on
+  * corpus data plus Unicode/edge fixtures. Why a byte loop is exact:
   *
   *  - Case folding delegates to the SAME code path the `Lower`
   *    expression uses for the default UTF8_BINARY collation —

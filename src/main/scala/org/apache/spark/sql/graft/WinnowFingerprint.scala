@@ -7,65 +7,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: single-pass WINNOWING fingerprint
-  * selection (Schleimer, Wilkerson & Aiken 2003) over a positional gram-
-  * hash sequence — `winnow_select(hashes, w)` returns the distinct
-  * selected `(pos, fp)` pairs, where every window of `w` consecutive
-  * hashes contributes its minimum with ties resolved to the RIGHTMOST
-  * position (the paper's rule) and `pos` is the 1-based gram position.
-  *
-  * Bit-identical by spec (WinnowSpec pins equality on corpus data and
-  * adversarial fixtures) to the composable higher-order-function
-  * formulation it replaces: `transform(sequence)` over per-window
-  * `slice`/`array_min`/rightmost-`array_max` lambdas re-scans each
-  * window, costs O(n·w) interpreted lambda evaluations per doc, and was
-  * the largest r14 tail entry (doc_winnow_fingerprint 1.60 s vs a 0.32 s
-  * oracle — r14 VERDICT #2). This kernel is the textbook monotone-deque
-  * sliding minimum: O(n) amortized, one compiled loop, no intermediate
-  * arrays. The `>=`-pop keeps the LATEST equal index at the deque back,
-  * which IS the rightmost-tie rule; selected positions are
-  * non-decreasing window to window (a later window selecting an earlier
-  * in-range position would contradict the earlier window's minimality),
-  * so the paper's "distinct selections" set equals consecutive dedup —
-  * emitted inline, no post-pass.
-  *
-  * Whole-stage codegen via [[doGenCode]] (static call); interpreted
-  * [[nullSafeEval]] shares the same kernel. Fewer than `w` hashes
-  * returns an empty array — callers filter first (same contract as the
-  * HOF form's `n >= k + w - 1` guard).
-  */
-case class WinnowSelect(child: Expression, w: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(w >= 1, "winnow_select window must be >= 1")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("pos", LongType, nullable = false),
-      StructField("fp", LongType, nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "winnow_select"
-
-  override protected def nullSafeEval(hs: Any): Any =
-    WinnowKernel.select(hs.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.WinnowKernel.select($c, $w)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WinnowSelect = copy(child = newChild)
-}
-
 /** The FULLY FUSED winnowing pipeline — `winnow_fingerprints(tokens, k,
   * w)`: word-k-gram construction, the engine-portable md5-prefix64 gram
   * hash ([[Md5Hash.prefix64]] — the same primitive `Text.hash64` and the
-  * DuckDB oracle use), and the [[WinnowSelect]] sliding-minimum
-  * selection, all in one compiled loop per document. The three-stage
+  * DuckDB oracle use), and the winnowing sliding-minimum selection
+  * ([[WinnowKernel.selectCore]]), all in one compiled loop per document. The three-stage
   * composable form (`transform(sequence)` gram strings →
   * `transform(hash64)` → winnow) leaves the gram/hash stages as
   * interpreted per-element lambdas even after the selection kernel — at
@@ -126,16 +72,19 @@ object WinnowKernel {
     selectCore(hs, w)
   }
 
-  def select(hs: ArrayData, w: Int): ArrayData = {
-    val n = hs.numElements()
-    if (n < w) return new GenericArrayData(Array.empty[Any])
-    val copy = new Array[Long](n)
-    var i = 0
-    while (i < n) { copy(i) = hs.getLong(i); i += 1 }
-    selectCore(copy, w)
-  }
-
-  private def selectCore(hs: Array[Long], w: Int): ArrayData = {
+  /** WINNOWING selection (Schleimer, Wilkerson & Aiken 2003) over a
+    * positional gram-hash sequence: the distinct selected `(pos, fp)`
+    * pairs, where every window of `w` consecutive hashes contributes its
+    * minimum with ties resolved to the RIGHTMOST position (the paper's
+    * rule) and `pos` is the 1-based gram position. The textbook
+    * monotone-deque sliding minimum: O(n) amortized, one loop, no
+    * intermediate arrays (the r14 HOF form re-scanned every window at
+    * O(n·w)). The `>=`-pop keeps the LATEST equal index at the deque
+    * back, which IS the rightmost-tie rule; selected positions are
+    * non-decreasing window to window, so the paper's "distinct
+    * selections" set equals consecutive dedup — emitted inline. Fewer
+    * than `w` hashes returns an empty array. */
+  private[graft] def selectCore(hs: Array[Long], w: Int): ArrayData = {
     val n = hs.length
     // monotone deque of candidate indices: values strictly increasing
     // front -> back; `>=` pop keeps the later equal index = rightmost tie

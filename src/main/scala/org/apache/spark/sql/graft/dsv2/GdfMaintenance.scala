@@ -711,7 +711,7 @@ object GdfMaintenance {
     * same commit — `dsv2_merge_cow_large` certifies it against a
     * rule-derived oracle. */
   def mergeIntoShuffled(spark: SparkSession, path: String, source: DataFrame,
-      key: String = "doc_id", autoEvolve: Boolean = false): Unit = {
+      key: String, autoEvolve: Boolean): Unit = {
     val m = GdfManifest.read(path)
     val srcCols = checkMergeSource(m, source, autoEvolve)
     val schema = mergeSchema(m, source, autoEvolve)
@@ -946,7 +946,7 @@ object GdfMaintenance {
     * behavior the append path already has. */
   def addColumn(path: String, name: String,
       dataType: org.apache.spark.sql.types.DataType,
-      default: Option[String] = None): Unit =
+      default: Option[String]): Unit =
     GdfManifest.commitRetry(path, "add-column") { curOpt =>
       val cur = curOpt.getOrElse(
         throw new IllegalStateException(s"no graftdocs table at $path"))
@@ -1373,7 +1373,7 @@ object GdfMaintenance {
     * ahead of its commit) safe, the published Iceberg
     * remove_orphan_files discipline. Returns the removed names. */
   def removeOrphans(path: String,
-      olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
+      olderThanMs: Long): Seq[String] = {
     val live: Set[String] = GdfManifest.versions(path).flatMap { v =>
       val m = GdfManifest.readVersion(path, v)
       m.files.map(_.name) ++ m.files.flatMap(_.dv)

@@ -55,7 +55,7 @@ object GdfMaterializedView {
     * the base-table snapshot the state reflects (the watermark);
     * `dimHash` (r20, join views only) fingerprints the dimension the
     * state was built against — 0 for non-join views. */
-  case class MvMeta(stateVersion: Int, baseVersion: Int, dimHash: Long = 0L)
+  case class MvMeta(stateVersion: Int, baseVersion: Int, dimHash: Long)
 
   private def metaFile(mvPath: String) = new File(mvPath, "mv-meta.json")
 

@@ -620,7 +620,7 @@ private[dsv2] object GdfManifest {
     * streaming sink's replayed-epoch no-op re-checks its ledger HERE, so
     * a replay racing a genuine commit still no-ops). Returns the
     * committed version, or -1 when update returned None. */
-  def commitRetry(path: String, op: String = "write")(
+  def commitRetry(path: String, op: String)(
       update: Option[Manifest] => Option[Manifest]): Int = {
     var attempts = 0
     while (true) {
@@ -918,8 +918,8 @@ private[dsv2] class GraftDocsTable(path: String, tableSchema: StructType,
   * is a valid empty scan; aggregate pushdown refuses under a subset (the
   * manifest stats describe the whole snapshot). */
 private[dsv2] class GdfScanBuilder(path: String, manifest: GdfManifest.Manifest,
-    maxFilesPerTrigger: Int = 0, fileSubset: Option[Set[String]] = None,
-    rowLineage: Boolean = false)
+    maxFilesPerTrigger: Int, fileSubset: Option[Set[String]],
+    rowLineage: Boolean)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
@@ -1079,7 +1079,7 @@ private[dsv2] class GdfScanBuilder(path: String, manifest: GdfManifest.Manifest,
 private[dsv2] class GdfAggScan(path: String, manifest: GdfManifest.Manifest,
     byBucket: Boolean, funcs: Seq[AggregateFunc],
     files: Seq[GdfManifest.FileStat],
-    pushedFilters: Array[Filter] = Array.empty) extends Scan with Batch {
+    pushedFilters: Array[Filter]) extends Scan with Batch {
 
   private def colNameOf(f: AggregateFunc): String = f match {
     case m: Min => m.column.asInstanceOf[NamedReference].fieldNames.head
@@ -1193,19 +1193,17 @@ private[dsv2] class GdfAggReaderFactory extends PartitionReaderFactory {
   * files scoped to its bucket (r18) — the unit a reader consumes:
   * physical rows minus the vector's positions minus the equality keys. */
 private[dsv2] case class GdfFileSlice(path: String, dv: Option[String],
-    eq: Seq[String] = Seq.empty, firstRowId: Long = -1L)
+    eq: Seq[String], firstRowId: Long)
 
 private[dsv2] object GdfFileSlice {
   def of(dir: String, f: GdfManifest.FileStat,
-      m: GdfManifest.Manifest = null): GdfFileSlice =
+      m: GdfManifest.Manifest): GdfFileSlice =
     GdfFileSlice(new File(dir, f.name).getAbsolutePath,
       f.dv.map(d => new File(dir, d).getAbsolutePath),
       firstRowId = f.firstRowId,
-      eq =
-      if (m == null) Seq.empty
       // the SEQUENCE RULE (r18): an equality delete reaches only data
       // files of its bucket that are STRICTLY OLDER than the delete
-      else m.eqDeletes.collect {
+      eq = m.eqDeletes.collect {
         case e if e.bucket == f.bucket && f.seq < e.seq =>
           new File(dir, e.file).getAbsolutePath })
 }
@@ -1363,8 +1361,8 @@ private[dsv2] object GdfFilePrune {
 }
 
 private[dsv2] class GdfScan(path: String, manifest: GdfManifest.Manifest,
-    required: StructType, pushed: Array[Filter], maxFilesPerTrigger: Int = 0,
-    fileSubset: Option[Set[String]] = None)
+    required: StructType, pushed: Array[Filter], maxFilesPerTrigger: Int,
+    fileSubset: Option[Set[String]])
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1767,7 +1765,7 @@ private[dsv2] class GdfColumnarPartitionReader(files: Seq[GdfFileSlice],
   * ABSENT from the file's directory decodes as all-null (evolution). */
 private[dsv2] object GdfDecode {
   def decode(file: String, required: StructType,
-      firstRowId: Long = -1L): (Int, Array[Array[Any]]) = {
+      firstRowId: Long): (Int, Array[Array[Any]]) = {
     val in = new DataInputStream(new java.io.BufferedInputStream(
       new FileInputStream(file)))
     try {
@@ -1777,7 +1775,7 @@ private[dsv2] object GdfDecode {
       dir.foreach { m =>
         if (!wanted.contains(m.name)) {
           // the pruning payoff: seek past the COMPRESSED block — a
-          // pruned column is never read, let alone inflated
+          // pruned column is never read, let alone decompressed
           in.skipNBytes(m.compLen)
         } else {
           decoded(m.name) = GdfFormat.readBlock(in, m, rows, file)
@@ -1868,8 +1866,7 @@ private[dsv2] class GdfPartitionReader(files: Seq[GdfFileSlice], required: Struc
 
 private[dsv2] object GdfFormat {
   val Magic: Int = 0x47444633 // "GDF3" — r19: per-block compression
-  // (r20: codec per block — zstd default, deflate/lz4 — packed into
-  // the encoding byte's high nibble, so r19 files read unchanged)
+  // (r20: the codec id in the encoding byte's high nibble)
   // + optional dictionary encoding (below). r17: blocks
   // carry a validity section (1 hasNulls byte, then one validity byte
   // per row when set), the production nullability a table format needs
@@ -1895,97 +1892,44 @@ private[dsv2] object GdfFormat {
   }
 
   /** BLOCK COMPRESSION + ENCODINGS (r19, the judge-ranked #1 gap):
-    * every column block is DEFLATE-compressed on disk (zlib — the one
-    * codec the JDK ships; the block-codec seam is what matters, the
-    * parquet page-compression shape), and a low-cardinality string
-    * block is DICTIONARY-encoded first (distinct values once, then a
-    * 1-2 byte index per row — the parquet RLE_DICTIONARY idea without
-    * the RLE). At 100 TB every byte of a corpus pays scan bandwidth on
-    * every query; compression is a 2-5× multiplier on effective IO.
-    * The directory carries per block: encoding, RAW length, COMPRESSED
-    * length, and a CRC32 of the compressed bytes — column pruning seeks
-    * by compressed length (never inflates a pruned block), and a
-    * corrupted block fails LOUDLY at the CRC (GdfCompressSpec flips a
-    * byte and pins the failure), never decodes garbage.
+    * every column block is zstd-compressed on disk (level 1, the parquet
+    * page-compression shape), and a low-cardinality string block is
+    * DICTIONARY-encoded first (distinct values once, then a 1-2 byte
+    * index per row — the parquet RLE_DICTIONARY idea without the RLE).
+    * At 100 TB every byte of a corpus pays scan bandwidth on every
+    * query; compression is a 2-5× multiplier on effective IO. The
+    * directory carries per block: encoding, codec, RAW length,
+    * COMPRESSED length, and a CRC32 of the compressed bytes — column
+    * pruning seeks by compressed length (never decompresses a pruned
+    * block), and a corrupted block fails LOUDLY at the CRC
+    * (GdfCompressSpec flips a byte and pins the failure), never decodes
+    * garbage.
     *
-    * Measured on the sf0.1 documents corpus (8 buckets): 1.62 MB raw
-    * block payload → 0.42 MB on disk (3.9×; sf0.01: 3.6×); `lang` and
-    * `source` pick the dictionary (their raw form is already ~4× under
-    * plain before deflate even sees it); `doc_id` picks DELTA and goes
-    * 75× (vs 4.2× plain+deflate) while the random-valued `n_chars`
-    * correctly stays plain — the per-block size selection at work. Scan A/B (dsv2_text_stats
-    * arithmetic, 5 warm runs, sf0.1): warm-min 0.236 s through the
-    * compressed format vs 0.18-0.19 s in the r18 uncompressed bench
-    * window — ~50 ms of inflate at the local job floor buys 3.8× less
-    * scan IO, the trade every production format makes (and a real
-    * deployment's zstd/lz4 decodes ~5-10× faster than JDK zlib). */
-  val CompressionLevel = java.util.zip.Deflater.BEST_SPEED
-
-  /** Per-block CODEC (r20, judge ask #3 — X155's own Scaladoc named
-    * zlib inflate as the read-path tax): packed into the HIGH NIBBLE of
-    * the directory's encoding byte (low nibble = encoding), so a
-    * DEFLATE block is byte-identical to the r19 layout and every
-    * pre-codec file reads unchanged (nibble 0 = deflate). zstd level 1
-    * is the default; DEFLATE stays for compat; lz4 for the
-    * decode-speed-over-ratio corner. Selected per WRITE via the
-    * `graft.gdf.codec` system property (or GRAFT_GDF_CODEC env);
-    * mixed-codec tables are fine — the codec is a per-block fact, like
-    * the encoding. CRC verification is codec-independent (it hashes
-    * the compressed bytes), so corruption stays loud on every codec
-    * (GdfCompressSpec pins each).
-    *
-    * Measured A/B on the sf0.1 documents corpus (8 files, 1.62 MB raw
-    * payload): zstd 392 KB on disk vs deflate 420 KB vs lz4 723 KB —
-    * zstd beats zlib BEST_SPEED by ~7% on ratio; dsv2_text_stats
-    * warm-min scan 0.31-0.41 s under ALL three (the decode sits below
-    * the local[32] job floor at this SF, so the choice is free
-    * locally). At production block sizes zstd's ~5-10× decode
-    * bandwidth over zlib inflate (the published parquet/ORC numbers)
-    * is the term that matters — best ratio AND fastest big-block
-    * decode is why it is the default. */
-  val CodecDeflate: Byte = 0
+    * The codec id sits in the HIGH NIBBLE of the directory's encoding
+    * byte (low nibble = encoding). zstd is the one codec: every graftdocs
+    * table is rebuilt per session, so no block written by an earlier
+    * codec can be read, and any other id fails loudly. Measured A/B on
+    * the sf0.1 documents corpus (8 files, 1.62 MB raw payload): zstd
+    * 392 KB on disk vs 420 KB under zlib, with the same dsv2_text_stats
+    * warm-min scan (the decode sits below the local[32] job floor). At
+    * production block sizes zstd's ~5-10× decode bandwidth over zlib
+    * (the published parquet/ORC numbers) is the term that matters. */
   val CodecZstd: Byte = 1
-  val CodecLz4: Byte = 2
 
-  def writeCodec: Byte =
-    System.getProperty("graft.gdf.codec",
-      sys.env.getOrElse("GRAFT_GDF_CODEC", "zstd")) match {
-      case "deflate" => CodecDeflate
-      case "zstd" => CodecZstd
-      case "lz4" => CodecLz4
-      case other => throw new IllegalArgumentException(
-        s"unknown graft.gdf.codec '$other' (deflate|zstd|lz4)")
-    }
-
-  def compress(codec: Byte, raw: Array[Byte]): Array[Byte] = codec match {
-    case CodecDeflate => deflate(raw)
-    case CodecZstd => com.github.luben.zstd.Zstd.compress(raw, 1)
-    case CodecLz4 => net.jpountz.lz4.LZ4Factory.fastestInstance()
-      .fastCompressor().compress(raw)
-    case other => throw new IllegalArgumentException(
-      s"unknown block codec $other")
-  }
+  def compress(raw: Array[Byte]): Array[Byte] =
+    com.github.luben.zstd.Zstd.compress(raw, 1)
 
   def decompress(codec: Byte, comp: Array[Byte], rawLen: Int,
-      what: String): Array[Byte] = codec match {
-    case CodecDeflate => inflate(comp, rawLen, what)
-    case CodecZstd =>
-      val out =
-        try com.github.luben.zstd.Zstd.decompress(comp, rawLen)
-        catch { case e: com.github.luben.zstd.ZstdException =>
-          throw new IllegalArgumentException(
-            s"corrupt block $what: ${e.getMessage}") }
-      require(out.length == rawLen,
-        s"corrupt block $what: decompressed ${out.length} of $rawLen bytes")
-      out
-    case CodecLz4 =>
-      try net.jpountz.lz4.LZ4Factory.fastestInstance()
-        .fastDecompressor().decompress(comp, rawLen)
-      catch { case e: net.jpountz.lz4.LZ4Exception =>
+      what: String): Array[Byte] = {
+    require(codec == CodecZstd, s"unknown block codec $codec in $what")
+    val out =
+      try com.github.luben.zstd.Zstd.decompress(comp, rawLen)
+      catch { case e: com.github.luben.zstd.ZstdException =>
         throw new IllegalArgumentException(
           s"corrupt block $what: ${e.getMessage}") }
-    case other => throw new IllegalArgumentException(
-      s"unknown block codec $other in $what")
+    require(out.length == rawLen,
+      s"corrupt block $what: decompressed ${out.length} of $rawLen bytes")
+    out
   }
 
   val EncPlain: Byte = 0
@@ -1993,7 +1937,7 @@ private[dsv2] object GdfFormat {
   /** DELTA encoding for null-free long blocks (r19): first value, then
     * per-row differences — a SORTED column (doc_id, by the write
     * contract) becomes a stream of small positives whose high bytes are
-    * zeros, which deflate then crushes (the parquet DELTA_BINARY_PACKED
+    * zeros, which the codec then crushes (the parquet DELTA_BINARY_PACKED
     * idea with the codec doing the packing). Chosen PER BLOCK by actual
     * compressed size against plain (the parquet encoding-selection
     * discipline), so a random-valued long column — whose deltas carry
@@ -2004,10 +1948,9 @@ private[dsv2] object GdfFormat {
   val DictMax = 65536
 
   /** One column block's directory entry. `codec` is the high nibble of
-    * the on-disk encoding byte (r20); pre-codec files decode it as 0 =
-    * DEFLATE by construction. */
+    * the on-disk encoding byte (r20). */
   case class BlockMeta(name: String, tag: Byte, enc: Byte,
-      rawLen: Int, compLen: Int, crc: Int, codec: Byte = CodecDeflate)
+      rawLen: Int, compLen: Int, crc: Int, codec: Byte)
 
   /** Parse the fixed header + directory; leaves `in` positioned at the
     * first block. Returns (bucket, rows, directory). */
@@ -2029,36 +1972,13 @@ private[dsv2] object GdfFormat {
     (bucket, rows, dir)
   }
 
-  private def inflate(comp: Array[Byte], rawLen: Int, what: String)
-      : Array[Byte] = {
-    val raw = new Array[Byte](rawLen)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(comp)
-      var off = 0
-      while (off < rawLen && !inf.finished()) {
-        val k = inf.inflate(raw, off, rawLen - off)
-        require(k > 0 || inf.finished() || !inf.needsInput(),
-          s"corrupt block $what: truncated stream")
-        off += k
-      }
-      require(off == rawLen,
-        s"corrupt block $what: inflated $off of $rawLen bytes")
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        throw new IllegalArgumentException(
-          s"corrupt block $what: ${e.getMessage}")
-    } finally inf.end()
-    raw
-  }
-
   /** Decode one compressed column block into row-indexed values
     * (UTF8String for strings — the internal-row currency). Verifies the
-    * CRC before touching the codec (loud corruption failure), inflates,
+    * CRC before touching the codec (loud corruption failure), decompresses,
     * reads the validity section, then the encoding-specific payload;
     * null rows decode their placeholder and are overwritten with null. */
   def readBlock(in: DataInputStream, m: BlockMeta, rows: Int,
-      file: String = "?"): Array[Any] = {
+      file: String): Array[Any] = {
     val comp = new Array[Byte](m.compLen)
     in.readFully(comp)
     val crc = new java.util.zip.CRC32()
@@ -2271,7 +2191,7 @@ private[dsv2] object GdfFormat {
   }
 
   /** The DELTA candidate for a null-free long block (None otherwise) —
-    * same raw length as plain; [[writeFile]] keeps whichever deflates
+    * same raw length as plain; [[writeFile]] keeps whichever compresses
     * smaller. */
   private def deltaBlock(tag: Byte, rows: Seq[Array[Any]], i: Int)
       : Option[(Byte, Array[Byte])] = {
@@ -2292,18 +2212,6 @@ private[dsv2] object GdfFormat {
     }
   }
 
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(CompressionLevel)
-    try {
-      d.setInput(raw)
-      d.finish()
-      val bos = new java.io.ByteArrayOutputStream(math.max(64, raw.length / 3))
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-      bos.toByteArray
-    } finally d.end()
-  }
-
   /** Emit one columnar `.gdf` file (raw-value rows as produced by the
     * writer or [[readFileRaw]]) and return its manifest stats. The
     * generic zone map skips nulls and omits a column whose values are
@@ -2320,16 +2228,14 @@ private[dsv2] object GdfFormat {
       out.writeInt(rows.size)
       out.writeInt(schema.fields.length)
       // per column: build the RAW encoding candidates (plain/dict, plus
-      // a delta form for null-free longs), compress each through the
-      // configured codec (r20: zstd default — see writeCodec), keep the
+      // a delta form for null-free longs), compress each, keep the
       // SMALLEST compressed form (ties prefer plain — it's first), CRC —
       // then write the directory and the compressed blocks
-      val codec = writeCodec
       val blocks = schema.fields.zipWithIndex.map { case (f, i) =>
         val tag = tagOf(f.dataType)
         val candidates = Seq(rawBlock(tag, rows, i)) ++ deltaBlock(tag, rows, i)
         val (enc, raw, comp) = candidates
-          .map { case (e, r) => (e, r, compress(codec, r)) }
+          .map { case (e, r) => (e, r, compress(r)) }
           .minBy(_._3.length)
         val crc = new java.util.zip.CRC32()
         crc.update(comp)
@@ -2338,7 +2244,7 @@ private[dsv2] object GdfFormat {
       blocks.foreach { case (name2, tag, enc, rawLen, comp, crc) =>
         val nb = name2.getBytes(StandardCharsets.UTF_8)
         out.writeInt(nb.length); out.write(nb)
-        out.writeByte(tag); out.writeByte(((codec << 4) | enc).toByte)
+        out.writeByte(tag); out.writeByte(((CodecZstd << 4) | enc).toByte)
         out.writeInt(rawLen); out.writeInt(comp.length); out.writeInt(crc)
       }
       blocks.foreach { case (_, _, _, _, comp, _) => out.write(comp) }
@@ -2407,7 +2313,7 @@ private[dsv2] object GdfFormat {
 
 private[dsv2] class GdfWriteBuilder(path: String, schema: StructType,
     constraints: Seq[GdfBoundConstraint],
-    staged: Boolean, buckets: Int, layout: String, branch: String = "")
+    staged: Boolean, buckets: Int, layout: String, branch: String)
     extends WriteBuilder with SupportsTruncate {
   private var truncateRequested = false
   override def truncate(): WriteBuilder = { truncateRequested = true; this }
@@ -2424,8 +2330,8 @@ private[dsv2] class GdfWriteBuilder(path: String, schema: StructType,
 }
 
 private[dsv2] class GdfWrite(path: String, schema: StructType, buckets: Int,
-    layout: String, truncate: Boolean, staged: Boolean = false,
-    constraints: Seq[GdfBoundConstraint] = Seq.empty, branch: String = "")
+    layout: String, truncate: Boolean, staged: Boolean,
+    constraints: Seq[GdfBoundConstraint], branch: String)
     extends Write with RequiresDistributionAndOrdering {
 
   require(schema.fieldNames.contains("bucket"),
@@ -2576,8 +2482,8 @@ private[dsv2] object GdfAppend {
 
 private[dsv2] class GdfBatchWrite(path: String, schema: StructType,
     buckets: Int, layout: String, truncate: Boolean, version: Int,
-    staged: Boolean = false,
-    constraints: Seq[GdfBoundConstraint] = Seq.empty, branch: String = "")
+    staged: Boolean,
+    constraints: Seq[GdfBoundConstraint], branch: String)
     extends BatchWrite {
 
   /** The version tag plus a per-write random token keep data-file names
@@ -2659,7 +2565,7 @@ private[dsv2] class GdfBatchWrite(path: String, schema: StructType,
   * is at-least-once (GdfSinkSpec pins the replay). */
 private[dsv2] class GdfStreamingWrite(path: String, schema: StructType,
     buckets: Int, layout: String,
-    constraints: Seq[GdfBoundConstraint] = Seq.empty, branch: String = "")
+    constraints: Seq[GdfBoundConstraint], branch: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   override def createStreamingWriterFactory(
@@ -2731,8 +2637,8 @@ private[dsv2] class GdfStreamingWrite(path: String, schema: StructType,
 }
 
 private[dsv2] class GdfWriterFactory(path: String, schema: StructType,
-    suffix: String, hashBuckets: Int = 0,
-    constraints: Seq[GdfBoundConstraint] = Seq.empty,
+    suffix: String, hashBuckets: Int,
+    constraints: Seq[GdfBoundConstraint],
     lineageFixup: Boolean = false) extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -2762,8 +2668,8 @@ private[dsv2] class GdfWriterFactory(path: String, schema: StructType,
   *    pruning superset guarantee at read time (wrong results, the worst
   *    failure class). */
 private[dsv2] class GdfDataWriter(path: String, schema: StructType,
-    suffix: String, hashBuckets: Int = 0,
-    constraints: Seq[GdfBoundConstraint] = Seq.empty,
+    suffix: String, hashBuckets: Int,
+    constraints: Seq[GdfBoundConstraint],
     lineageFixup: Boolean = false)
     extends DataWriter[InternalRow] {
 

@@ -9,11 +9,16 @@ import org.apache.spark.sql.functions._
   * committing the artifact for later readers. */
 class IndexStoreSpec extends SparkSpec {
 
-  private def freshDir(): String =
-    "/tmp/idxstore-spec-" + java.util.UUID.randomUUID().toString.take(8)
+  /** Run `body` on a fresh sf dir, then delete the artifacts it keyed
+    * under [[StateRoot]]'s index root. */
+  private def withFreshDir(body: String => Unit): Unit = {
+    val dir = "/tmp/idxstore-spec-" + java.util.UUID.randomUUID().toString.take(8)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(StateRoot.path("indexes", dir)))
+  }
 
-  test("miss builds and commits; hit reads without rebuilding") {
-    val dir = freshDir()
+  test("miss builds and commits; hit reads without rebuilding") { withFreshDir { dir =>
     var builds = 0
     def call() = IndexStore.readOrBuild(spark, dir, "t", "v1;a=1") {
       builds += 1
@@ -24,10 +29,9 @@ class IndexStoreSpec extends SparkSpec {
     val second = call().orderBy(col("x")).collect().map(_.getLong(0))
     assert(builds == 1, "a committed artifact must be read, not rebuilt")
     assert(second.sameElements(first), "store read changed the data")
-  }
+  }}
 
-  test("a changed fingerprint invalidates the artifact") {
-    val dir = freshDir()
+  test("a changed fingerprint invalidates the artifact") { withFreshDir { dir =>
     var builds = 0
     def call(fp: String) = IndexStore.readOrBuild(spark, dir, "t", fp) {
       builds += 1
@@ -40,10 +44,9 @@ class IndexStoreSpec extends SparkSpec {
     assert(builds == 2, "fingerprint change must rebuild")
     call("v2;k=16").collect() // version bump -> rebuild too
     assert(builds == 3, "version bump must rebuild")
-  }
+  }}
 
-  test("bypassRead forces the build but still commits for later readers") {
-    val dir = freshDir()
+  test("bypassRead forces the build but still commits for later readers") { withFreshDir { dir =>
     var builds = 0
     def call() = IndexStore.readOrBuild(spark, dir, "t", "v1") {
       builds += 1
@@ -56,5 +59,5 @@ class IndexStoreSpec extends SparkSpec {
     } finally IndexStore.bypassRead = false
     call().collect()
     assert(builds == 2, "the bypassed builds must still have committed")
-  }
+  }}
 }

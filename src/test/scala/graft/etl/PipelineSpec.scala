@@ -104,6 +104,35 @@ class PipelineSpec extends SparkSpec {
     assert(Option(new java.io.File(s"$wh/_staging").list()).forall(_.isEmpty))
   }
 
+  test("before the first commit the four tables read as empty, with a full run's schemas") {
+    val base = Files.createTempDirectory("graft_empty").toString
+    val fx = s"$base/fixtures"
+    EtlFixtures.write(spark, sf001, fx, nFiles = 1)
+    def start(txns: String, wh: String) = Pipeline.start(spark, txns,
+      s"$fx/customer_master", s"$fx/product_master", wh, maxFilesPerTrigger = 1)
+    start(s"$fx/transactions", s"$base/full").awaitTermination()
+    val incoming = Files.createDirectories(java.nio.file.Paths.get(base, "incoming"))
+    val q = start(incoming.toString, s"$base/wh")
+    try {
+      def read(wh: String, t: String) = spark.read.parquet(s"$wh/$t")
+      Seq("customer_dim", "product_dim", "time_dim", "salefact").foreach { t =>
+        val (got, full) = (read(s"$base/wh", t), read(s"$base/full", t))
+        assert(got.count() == 0, s"$t is not empty")
+        assert(got.schema == full.drop("batch_id").schema, s"$t schema")
+      }
+      // the reader's star aggregate: sales by gender and quarter
+      val star = read(s"$base/wh", "salefact")
+        .join(read(s"$base/wh", "customer_dim"), "customer_id")
+        .join(read(s"$base/wh", "product_dim"), "product_id")
+        .join(read(s"$base/wh", "time_dim"), "date_id")
+        .groupBy("gender", "quarter")
+        .agg(count(lit(1)).as("n"), sum("quantity").as("qty"))
+      assert(star.collect().isEmpty)
+    } finally {
+      q.stop()
+    }
+  }
+
   test("MemoryStream enrichment == batch enrichment on the same tuples") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Int, String, Int, String, Int)]

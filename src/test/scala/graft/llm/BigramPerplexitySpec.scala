@@ -1,8 +1,12 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
 import graft.SparkSpec
 
-/** Pins [[TextAnalysis.bigramPerplexityOf]]: the add-one bigram model
+/** Pins [[TextAnalysis.bigramPerplexity]]'s core (`perplexityFrom`): the add-one bigram model
   * arithmetic against hand-computed values, head/middle/tail banding at
   * the type-7 quantile cuts, exclusion of sub-2-token docs, the
   * shuffled-join fallback's parity with the broadcast branch, and the
@@ -11,11 +15,27 @@ import graft.SparkSpec
 class BigramPerplexitySpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(gate: Long, docs: (Long, String)*): Seq[(Long, Long, Double, String)] =
-    TextAnalysis.bigramPerplexityOf(docs.toDF("doc_id", "text"), gate)
+  /** Total bigram occurrences Σ (n_tokens − 1): the gate's bound for an
+    * inline relation. */
+  private def bigramBound(d: DataFrame): Long = {
+    val n = size(Text.tokens(col("text")))
+    d.where(n >= 2)
+      .agg(coalesce(sum((n - 1).cast(LongType)), lit(0L))).head().getLong(0)
+  }
+
+  /** The entry's core over an inline relation with an explicit broadcast
+    * gate (0 forces the shuffled-join fallback). */
+  private def run(gate: Long, docs: (Long, String)*): Seq[(Long, Long, Double, String)] = {
+    val d = docs.toDF("doc_id", "text")
+    val tf = TextAnalysis.bigramTf(d).repartitionByRange(col("doc_id"))
+    TextAnalysis.perplexityFrom(tf, TextAnalysis.modelOf(tf), bigramBound(d),
+      d.select(explode(Text.tokens(col("text"))).as("token"))
+        .agg(countDistinct(col("token")).as("v")),
+      gate)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3)))
       .toSeq
+  }
 
   // corpus: c("a b")=3, c("b a")=2, c("b b")=1; ctx(a)=3, ctx(b)=3;
   // V = |{a,b,z}| = 3; doc 3 (single token) contributes to V but has no

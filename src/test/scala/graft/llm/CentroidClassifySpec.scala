@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.SparkSpec
 
-/** Pins the nearest-centroid classifier ([[Similarity.centroidClassifyOf]],
+/** Pins the nearest-centroid classifier ([[Similarity.classifyWith]] over
   * r13): separable labels land on the diagonal, and two labels with
   * IDENTICAL centroids tie every assignment down to the lower label (the
   * argmax tiebreak contract shared with the oracle's row_number). */
@@ -20,8 +20,8 @@ class CentroidClassifySpec extends SparkSpec {
     (6L, 3, v(0f, 0f, 1f)), (7L, 3, v(0f, 0f, 3f)))
 
   test("separable labels are diagonal; identical centroids tie to the lower label") {
-    val got = Similarity
-      .centroidClassifyOf(vectors.toDF("vec_id", "label", "embedding"))
+    val e = vectors.toDF("vec_id", "label", "embedding")
+    val got = Similarity.classifyWith(e, Similarity.labelCompOf(e))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap

@@ -32,7 +32,7 @@ class ContainmentSpec extends SparkSpec {
         Text.shingles(col("text"), Dedup.ShingleK).as("sset"))
       .where(size(col("sset")) >= 1)
       .withColumn("n", size(col("sset")))
-    Dedup.containmentOf(sets, 4).collect()
+    Dedup.containmentOf(sets, 4, None).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
   }
 

@@ -86,10 +86,12 @@ class CorpusSpec extends SparkSpec {
     out.foreach(r => assert(r.getLong(2) <= r.getLong(1)))
   }
 
+  /** [[Corpus.pack]]'s core over (doc_id, n_tokens), its buckets sized
+    * from the largest id as the entry sizes them. */
   private def packOf(docs: Seq[(Long, Int)]): Seq[(Long, Long, Long, Long, Long)] =
-    Corpus.packOf(
-      docs.map { case (id, n) => (id, (1 to n).map(i => s"t$i").mkString(" ")) }
-        .toDF("doc_id", "text"))
+    Corpus.packOfCounts(
+      docs.map { case (id, n) => (id, n.toLong) }.toDF("doc_id", "n_tokens"),
+      Corpus.packWidth(docs.map(_._1).max))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSeq
@@ -164,8 +166,8 @@ class CorpusSpec extends SparkSpec {
     // srcB tiny (rate clamps to 1.0 → every doc survives the keep-hash)
     val rows = (0 until 50).map(i => (i.toLong, "srcA", Seq.fill(100)("w").mkString(" "))) ++
       (50 until 60).map(i => (i.toLong, "srcB", Seq.fill(10)("w").mkString(" ")))
-    val out = Corpus.domainMixOf(
-      rows.toDF("doc_id", "source", "text").withColumn("lang", lit("xx")))
+    val out = Corpus.mixOfPerDoc(Corpus.perDocTokens(
+      rows.toDF("doc_id", "source", "text").withColumn("lang", lit("xx"))))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getLong(5), r.getLong(6)))
     assert(out.map(_._1).toSeq === Seq("srcA", "srcB"))

@@ -1,8 +1,11 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
-/** Pins [[Corpus.domainReweightOf]] (DoReMi-style Group-DRO
+/** Pins [[Corpus.domainReweightFrom]] (DoReMi-style Group-DRO
   * multiplicative weights, Xie et al. 2023) BIT-LOCKSTEP against a
   * plain-Scala brute twin of the same recurrence — surprisal loss proxy
   * (9-dp contributions, decimal sums, 6-dp means), excess over the
@@ -61,7 +64,15 @@ class DoremiSpec extends SparkSpec {
     (3L, "srcB", "q w e r t y"),
     (4L, "srcC", "a a q w"))
 
-  private lazy val got = Corpus.domainReweightOf(
+  /** The reweighting recurrence over (source, token, tf) counts built
+    * inline, where the entry folds the session tf index. */
+  private def reweightOf(d: DataFrame): DataFrame =
+    Corpus.domainReweightFrom(
+      d.select(col("source"), explode(Text.tokens(col("text"))).as("token"))
+        .groupBy(col("source"), col("token"))
+        .agg(count(lit(1)).as("tf")))
+
+  private lazy val got = reweightOf(
       fixture.toDF("doc_id", "source", "text"))
     .collect()
     .map(row => (row.getAs[Int]("round"), row.getAs[String]("source")) ->
@@ -101,12 +112,12 @@ class DoremiSpec extends SparkSpec {
       (31L to 42L).map(i => (i, "srcB", "q w e r t y")) ++
       (43L to 60L).map(i => (i, "srcC", "a a q w"))
     val df = corpus.toDF("doc_id", "source", "text")
-    val out = Corpus.domainReweightSampleOf(df).collect()
+    val out = Corpus.domainReweightSampleFrom(reweightOf(df), df).collect()
       .map(row => row.getAs[String]("source") -> row).toMap
     assert(out.keySet == Set("srcA", "srcB", "srcC"))
 
     // final-round alphas from the (already lockstep-certified) trajectory
-    val alpha = Corpus.domainReweightOf(df)
+    val alpha = reweightOf(df)
       .where($"round" === Corpus.DoremiRounds).collect()
       .map(row => row.getAs[String]("source") -> row.getAs[Double]("alpha"))
       .toMap
@@ -161,9 +172,9 @@ class DoremiSpec extends SparkSpec {
     val corpus = (1L to 40L).map(i => (i, "srcBig", "a a a a a a a a a a")) ++
       (41L to 42L).map(i => (i, "srcTiny", "q w e"))
     val df = corpus.toDF("doc_id", "source", "text")
-    val out = Corpus.epochAllocationOf(df).collect()
+    val out = Corpus.epochAllocationFrom(reweightOf(df), df).collect()
       .map(row => row.getAs[String]("source") -> row).toMap
-    val alpha = Corpus.domainReweightOf(df)
+    val alpha = reweightOf(df)
       .where($"round" === Corpus.DoremiRounds).collect()
       .map(row => row.getAs[String]("source") -> row.getAs[Double]("alpha"))
       .toMap
@@ -193,10 +204,10 @@ class DoremiSpec extends SparkSpec {
   }
 
   test("deterministic across executions") {
-    val again = Corpus.domainReweightOf(
+    val again = reweightOf(
         fixture.toDF("doc_id", "source", "text"))
       .collect().map(_.toSeq)
-    val first = Corpus.domainReweightOf(
+    val first = reweightOf(
         fixture.toDF("doc_id", "source", "text"))
       .collect().map(_.toSeq)
     assert(again.sameElements(first))

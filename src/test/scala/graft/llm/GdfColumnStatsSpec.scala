@@ -33,7 +33,7 @@ class GdfColumnStatsSpec extends SparkSpec {
   test("reported min/max/NDV/nullCount match the planted fixture") {
     val p = freshDir()
     plant(p, 500L)
-    val scan = new GdfScanBuilder(p, GdfManifest.read(p)).build()
+    val scan = new GdfScanBuilder(p, GdfManifest.read(p), 0, None, false).build()
       .asInstanceOf[GdfScan]
     val stats = scan.estimateStatistics()
     val byName = {

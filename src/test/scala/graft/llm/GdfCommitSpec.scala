@@ -35,7 +35,7 @@ class GdfCommitSpec extends SparkSpec {
   test("two racing commits serialize: both snapshots survive, in order") {
     val p = freshDir()
     val f0 = plantFile(p, "part-0-base.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0)))) // v1
     val fA = plantFile(p, "part-0-a.gdf", 2L, 0)
     val fB = plantFile(p, "part-1-b.gdf", 3L, 1)
@@ -46,7 +46,7 @@ class GdfCommitSpec extends SparkSpec {
     val attempts = new AtomicInteger(0)
     def committer(stat: GdfManifest.FileStat): Thread = new Thread(() => {
       val first = new java.util.concurrent.atomic.AtomicBoolean(true)
-      GdfManifest.commitRetry(p) { cur =>
+      GdfManifest.commitRetry(p, "write") { cur =>
         attempts.incrementAndGet()
         if (first.getAndSet(false)) barrier.await(20, TimeUnit.SECONDS)
         Some(cur.get.copy(files = cur.get.files :+ stat))
@@ -71,7 +71,7 @@ class GdfCommitSpec extends SparkSpec {
   test("copy-on-write replace racing an append folds the append in") {
     val p = freshDir()
     val f0 = plantFile(p, "part-0-orig.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0)))) // v1
     val fNew = plantFile(p, "part-0-rewrite.gdf", 0L, 0)
     val fApp = plantFile(p, "part-1-append.gdf", 5L, 1)
@@ -82,7 +82,7 @@ class GdfCommitSpec extends SparkSpec {
     // file through the replace
     val replacer = new Thread(() => {
       var first = true
-      GdfManifest.commitRetry(p) { cur =>
+      GdfManifest.commitRetry(p, "write") { cur =>
         if (first) {
           first = false
           replacerRead.countDown()
@@ -94,7 +94,7 @@ class GdfCommitSpec extends SparkSpec {
     })
     replacer.start()
     replacerRead.await(20, TimeUnit.SECONDS)
-    GdfManifest.commitRetry(p)(cur =>
+    GdfManifest.commitRetry(p, "write")(cur =>
       Some(cur.get.copy(files = cur.get.files :+ fApp))) // v2: the append
     appendDone.countDown()
     replacer.join(30000)
@@ -107,10 +107,10 @@ class GdfCommitSpec extends SparkSpec {
   test("update returning None commits nothing (the replayed-epoch no-op)") {
     val p = freshDir()
     val f0 = plantFile(p, "part-0-x.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0), "hash", Seq(7L))))
     val before = GdfManifest.versions(p)
-    val v = GdfManifest.commitRetry(p) { cur =>
+    val v = GdfManifest.commitRetry(p, "write") { cur =>
       if (cur.exists(_.epochs.contains(7L))) None
       else Some(cur.get)
     }
@@ -120,15 +120,15 @@ class GdfCommitSpec extends SparkSpec {
   test("retention policy: set_retention widens, 0 restores the default (r19)") {
     val p = freshDir()
     val f0 = plantFile(p, "part-0-ret.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0)))) // v1
     GdfMaintenance.setRetention(p, 6) // v2
     (1 to 4).foreach(_ =>
-      GdfManifest.commitRetry(p)(c => Some(c.get))) // v3..v6
+      GdfManifest.commitRetry(p, "write")(c => Some(c.get))) // v3..v6
     assert(GdfManifest.versions(p).contains(1),
       "retention 6 must keep v1 where the default would have swept it")
     GdfMaintenance.setRetention(p, 0) // v7: back to the default window
-    GdfManifest.commitRetry(p)(c => Some(c.get)) // v8: sweep applies
+    GdfManifest.commitRetry(p, "write")(c => Some(c.get)) // v8: sweep applies
     val vs = GdfManifest.versions(p)
     assert(!vs.contains(1) && !vs.contains(2),
       s"restoring the default must let expiry sweep old snapshots: $vs")
@@ -142,14 +142,14 @@ class GdfCommitSpec extends SparkSpec {
   test("expire_snapshots: age cutoff sweeps; tags and the head survive (r20)") {
     val p = freshDir()
     val fOld = plantFile(p, "part-0-old.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(fOld), retain = 10))) // v1
     val fNew = plantFile(p, "part-0-new.gdf", 1L, 0)
-    GdfManifest.commitRetry(p)(c =>
+    GdfManifest.commitRetry(p, "write")(c =>
       Some(c.get.copy(files = Seq(fNew)))) // v2: replaces fOld
     GdfMaintenance.createTag(p, "audit", 1) // v3 pins v1
     val fX = plantFile(p, "part-1-x.gdf", 5L, 1)
-    GdfManifest.commitRetry(p)(c =>
+    GdfManifest.commitRetry(p, "write")(c =>
       Some(c.get.copy(files = c.get.files :+ fX))) // v4: the head
     // a cutoff far in the future makes EVERYTHING "old": only the
     // pins and the newest snapshot may survive — the table can never
@@ -166,10 +166,10 @@ class GdfCommitSpec extends SparkSpec {
   test("expire_snapshots deletes files only expired snapshots referenced") {
     val p = freshDir()
     val a = plantFile(p, "part-0-a.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(a), retain = 10))) // v1
     val b = plantFile(p, "part-0-b.gdf", 1L, 0)
-    GdfManifest.commitRetry(p)(c => Some(c.get.copy(files = Seq(b)))) // v2
+    GdfManifest.commitRetry(p, "write")(c => Some(c.get.copy(files = Seq(b)))) // v2
     // cutoff = v2's own ts: strictly-older v1 expires, v2 stays
     val expired = GdfMaintenance.expireSnapshots(p,
       GdfManifest.readVersion(p, 2).ts)
@@ -188,7 +188,7 @@ class GdfCommitSpec extends SparkSpec {
   test("orphan GC removes aged unreferenced files, never live or recent ones") {
     val p = freshDir()
     val f0 = plantFile(p, "part-0-live.gdf", 0L, 0)
-    GdfManifest.commitRetry(p)(_ =>
+    GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0)))) // v1
     // a failed commit's leftovers: data + delete files no snapshot refs
     val aged = plantFile(p, "part-0-orphan.gdf", 9L, 0)

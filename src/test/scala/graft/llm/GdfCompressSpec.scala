@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** Pins BLOCK COMPRESSION + DICTIONARY ENCODING in the gdf format (r19,
   * the judge-ranked #1 deployment gap): every column block
-  * DEFLATE-compresses on disk, low-cardinality string blocks
+  * zstd-compresses on disk, low-cardinality string blocks
   * dictionary-encode first, pruned columns seek by COMPRESSED length,
   * and a corrupted block fails loudly at the CRC — never decodes
   * garbage. Bit-equality of every read path through the new encoding is
@@ -121,57 +121,63 @@ class GdfCompressSpec extends SparkSpec {
     assert(got.toSeq == rows, "delta-encoded longs must round-trip exactly")
   }
 
-  /** r20: the codec seam — every codec round-trips bit-exactly, is
-    * recorded per block (high nibble of the encoding byte), and fails
-    * loudly on corruption; a DEFLATE write is byte-compatible with the
-    * r19 layout (codec nibble 0), which IS the old-file compat proof. */
-  test("zstd/lz4/deflate codecs: recorded per block, round-trip, loud CRC") {
-    for (codecName <- Seq("deflate", "zstd", "lz4")) {
-      val prev = System.getProperty("graft.gdf.codec")
-      try {
-        System.setProperty("graft.gdf.codec", codecName)
-        val p = freshDir()
-        plant(p)
-        val m = GdfManifest.read(p)
-        val (_, dir) = headerOf(p, m.files.head.name)
-        val want = codecName match {
-          case "deflate" => GdfFormat.CodecDeflate
-          case "zstd" => GdfFormat.CodecZstd
-          case "lz4" => GdfFormat.CodecLz4
-        }
-        assert(dir.forall(_.codec == want),
-          s"every block must record codec $codecName, got $dir")
-        // values round-trip through the codec
-        val got = spark.read.format("graftdocs").load(p)
-          .agg(count(lit(1)), sum(col("n_chars"))).collect().head
-        assert(got.getLong(0) == 400L && got.getLong(1) ==
-          (0L until 400L).map(10L * _).sum,
-          s"$codecName read-back mismatch: $got")
-        // encodings still chosen per block under every codec
-        val byName = dir.map(b => b.name -> b).toMap
-        assert(byName("lang").enc == GdfFormat.EncDict &&
-          byName("doc_id").enc == GdfFormat.EncDelta)
-        // corruption stays loud: flip a byte mid-file
-        val f = new File(p, m.files.head.name)
-        val raf = new RandomAccessFile(f, "rw")
-        try {
-          raf.seek(f.length() / 2)
-          val b = raf.read(); raf.seek(f.length() / 2); raf.write(b ^ 0xff)
-        } finally raf.close()
-        val e = intercept[Exception] {
-          spark.read.format("graftdocs").load(p)
-            .agg(sum(length(col("text")))).collect()
-        }
-        def causes(x: Throwable): Seq[Throwable] =
-          if (x == null) Seq.empty else x +: causes(x.getCause)
-        assert(causes(e).exists(c => c.getMessage != null &&
-            c.getMessage.contains("corrupt block")),
-          s"$codecName corruption must fail loudly, got $e")
-      } finally {
-        if (prev == null) System.clearProperty("graft.gdf.codec")
-        else System.setProperty("graft.gdf.codec", prev)
+  /** The codec seam: every block records zstd in the high nibble of its
+    * encoding byte, round-trips bit-exactly and fails loudly on
+    * corruption; a block whose nibble names any other codec fails
+    * loudly too. */
+  test("zstd codec: recorded per block, round-trip, loud CRC and foreign codec") {
+    def causes(x: Throwable): Seq[Throwable] =
+      if (x == null) Seq.empty else x +: causes(x.getCause)
+    def failsWith(p: String, msg: String): Unit = {
+      val e = intercept[Exception] {
+        spark.read.format("graftdocs").load(p)
+          .agg(sum(length(col("text")))).collect()
       }
+      assert(causes(e).exists(c => c.getMessage != null &&
+          c.getMessage.contains(msg)), s"expected '$msg', got $e")
     }
+    val p = freshDir()
+    plant(p)
+    val m = GdfManifest.read(p)
+    val (_, dir) = headerOf(p, m.files.head.name)
+    assert(dir.forall(_.codec == GdfFormat.CodecZstd),
+      s"every block must record zstd, got $dir")
+    // values round-trip through the codec
+    val got = spark.read.format("graftdocs").load(p)
+      .agg(count(lit(1)), sum(col("n_chars"))).collect().head
+    assert(got.getLong(0) == 400L && got.getLong(1) ==
+      (0L until 400L).map(10L * _).sum, s"read-back mismatch: $got")
+    // encodings still chosen per block under the codec
+    val byName = dir.map(b => b.name -> b).toMap
+    assert(byName("lang").enc == GdfFormat.EncDict &&
+      byName("doc_id").enc == GdfFormat.EncDelta)
+    // a foreign codec nibble (0, the retired deflate id) on every block:
+    // the CRCs still match, the codec check fails
+    val foreign = freshDir()
+    plant(foreign)
+    GdfManifest.read(foreign).files.foreach { f =>
+      val raf = new RandomAccessFile(new File(foreign, f.name), "rw")
+      try {
+        raf.seek(12)
+        val nCols = raf.readInt()
+        (0 until nCols).foreach { _ =>
+          raf.skipBytes(raf.readInt() + 1) // the name, then the type tag
+          val at = raf.getFilePointer
+          val packed = raf.read()
+          raf.seek(at); raf.write(packed & 0x0f)
+          raf.skipBytes(12) // raw length, compressed length, CRC
+        }
+      } finally raf.close()
+    }
+    failsWith(foreign, "unknown block codec 0")
+    // corruption stays loud: flip a byte mid-file
+    val f = new File(p, m.files.head.name)
+    val raf = new RandomAccessFile(f, "rw")
+    try {
+      raf.seek(f.length() / 2)
+      val b = raf.read(); raf.seek(f.length() / 2); raf.write(b ^ 0xff)
+    } finally raf.close()
+    failsWith(p, "corrupt block")
   }
 
   test("round-trip with nulls, dictionary nulls, and float vectors") {

@@ -60,8 +60,8 @@ class GdfConstraintRaceSpec extends SparkSpec {
     // the write PLANS (binds constraints — none exist yet) ...
     val m = GdfManifest.read(p)
     val stale = new GdfBatchWrite(p, m.schema, m.buckets, m.layout,
-      truncate = false, version = GdfManifest.nextVersion(p),
-      constraints = Seq.empty) // what planning bound: nothing
+      truncate = false, version = GdfManifest.nextVersion(p), staged = false,
+      constraints = Seq.empty, branch = "") // what planning bound: nothing
     // ... then the constraint lands BEFORE the write's commit
     GdfMaintenance.addConstraint(spark, p, "val_nonneg", "val >= 0")
     val f = GdfFormat.writeFile(p, "part-0-stale.gdf", m.schema, 0,

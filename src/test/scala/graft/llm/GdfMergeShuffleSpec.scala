@@ -57,7 +57,7 @@ class GdfMergeShuffleSpec extends SparkSpec {
     val pa = freshDir(); plant(pa)
     val pb = freshDir(); plant(pb)
     val beforeA = liveDigests(pa)
-    GdfMaintenance.mergeIntoShuffled(spark, pa, source())
+    GdfMaintenance.mergeIntoShuffled(spark, pa, source(), "doc_id", false)
     GdfMaintenance.mergeInto(spark, pb, source()) // broadcast (tiny source)
     assert(GdfMaintenance.lastMergeRegime == "broadcast")
     assert(state(pa) == state(pb),
@@ -117,7 +117,7 @@ class GdfMergeShuffleSpec extends SparkSpec {
     }
     val pa = freshDir(); plant(pa, 1000L)
     val shuffledMax = measure(
-      GdfMaintenance.mergeIntoShuffled(spark, pa, fat))
+      GdfMaintenance.mergeIntoShuffled(spark, pa, fat, "doc_id", false))
     // metadata-sized: FileStats (name + stats + blooms) only — well
     // under the source's megabytes
     assert(shuffledMax < 256 * 1024,

@@ -27,19 +27,26 @@ class KmeansConvergedSpec extends SparkSpec {
       (12L, Array(0.0f, 1.0f, 0f, 0f)),
       (13L, Array(0.01f, 0.99f, 0f, 0f)))
     val dir = java.nio.file.Files.createTempDirectory("graft_km").toString
-    rows.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    try {
+      rows.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
 
-    val out = Similarity.ivfKmeansConverged(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getLong(3), r.getBoolean(4)))
-    assert(out.map(_._1).toSeq ===
-      Seq(Similarity.CentroidBase.toLong, Similarity.CentroidBase + 1L))
-    assert(out.map(_._2).toSeq === Seq(3L, 3L)) // centroid + 2 points each
-    assert(out.forall(_._4 == 1L), s"expected 1-round fixpoint, got $out")
-    assert(out.forall(_._5), "both rows must report converged")
-    // refined centroid = mean((1,.2),(1,0),(.99,.01)) = (.996667,.07,0,0)
-    val n = math.sqrt(0.996667 * 0.996667 + 0.07 * 0.07)
-    assert(math.abs(out.head._3 - math.rint(n * 1e6) / 1e6) < 1e-9)
+      val out = Similarity.ivfKmeansConverged(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getLong(3), r.getBoolean(4)))
+      assert(out.map(_._1).toSeq ===
+        Seq(Similarity.CentroidBase.toLong, Similarity.CentroidBase + 1L))
+      assert(out.map(_._2).toSeq === Seq(3L, 3L)) // centroid + 2 points each
+      assert(out.forall(_._4 == 1L), s"expected 1-round fixpoint, got $out")
+      assert(out.forall(_._5), "both rows must report converged")
+      // refined centroid = mean((1,.2),(1,0),(.99,.01)) = (.996667,.07,0,0)
+      val n = math.sqrt(0.996667 * 0.996667 + 0.07 * 0.07)
+      assert(math.abs(out.head._3 - math.rint(n * 1e6) / 1e6) < 1e-9)
+    } finally {
+      // the index store keys artifacts on the sf dir: drop both
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(graft.StateRoot.path("indexes", dir)))
+    }
   }
 
   test("sf0.001: outcome columns are internally consistent") {

@@ -1,8 +1,12 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
 import graft.SparkSpec
 
-/** Pins [[TextAnalysis.knPerplexityOf]]: the interpolated Kneser–Ney
+/** Pins [[TextAnalysis.knPerplexity]]'s core (`knFrom`): the interpolated Kneser–Ney
   * probability arithmetic against hand-computed values (discount,
   * continuation fan-out/fan-in, type count), banding at the shared
   * type-7 quantile cuts, the shuffled-join fallback's parity with the
@@ -12,11 +16,24 @@ import graft.SparkSpec
 class KnPerplexitySpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(gate: Long, docs: (Long, String)*): Seq[(Long, Long, Double, String)] =
-    TextAnalysis.knPerplexityOf(docs.toDF("doc_id", "text"), gate)
+  /** Total bigram occurrences Σ (n_tokens − 1): the gate's bound for an
+    * inline relation. */
+  private def bigramBound(d: DataFrame): Long = {
+    val n = size(Text.tokens(col("text")))
+    d.where(n >= 2)
+      .agg(coalesce(sum((n - 1).cast(LongType)), lit(0L))).head().getLong(0)
+  }
+
+  /** The entry's core over an inline relation with an explicit broadcast
+    * gate (0 forces the shuffled fallback). */
+  private def run(gate: Long, docs: (Long, String)*): Seq[(Long, Long, Double, String)] = {
+    val d = docs.toDF("doc_id", "text")
+    val tf = TextAnalysis.bigramTf(d).repartitionByRange(col("doc_id"))
+    TextAnalysis.knFrom(tf, TextAnalysis.knModelOf(tf), bigramBound(d), gate)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3)))
       .toSeq
+  }
 
   // corpus: c(ab)=3, c(ba)=2, c(bb)=1 → types {ab, ba, bb}, N1+(··)=3;
   // ctx a: cw1=3, N1+(a·)=1; ctx b: cw1=3, N1+(b·)=2;

@@ -49,7 +49,7 @@ class KnnGraphSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val cells = e.select(col("vec_id"), col("embedding"),
       posexplode(array((0 until Similarity.AnnTables)
-        .map(t => Similarity.annBucket(col("embedding"), t)): _*))
+        .map(t => Similarity.annBucketOf(col("embedding"), Similarity.annPlaneSigns, t)): _*))
         .as(Seq("tbl", "bkt")))
     val cand = cells.as("a").join(cells.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&

@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import graft.SparkSpec
 
-/** Pins [[Corpus.lineDedupOf]]: line segmentation geometry, the corpus-wide
+/** Pins [[Corpus.lineDedupOf]] at the entry's broadcast gate: line segmentation geometry, the corpus-wide
   * threshold (within-doc repeats count toward it), the all-lines-dropped
   * digest, and tail lines shorter than [[Corpus.LineTokens]]. */
 class LineDedupSpec extends SparkSpec {
@@ -17,7 +17,8 @@ class LineDedupSpec extends SparkSpec {
   private val boiler = (1 to Corpus.LineTokens).map(i => s"b$i").mkString(" ")
 
   private def run(docs: (Long, String)*): Map[Long, (Long, Long, String)] =
-    Corpus.lineDedupOf(docs.toDF("doc_id", "text"))
+    Corpus.lineDedupOf(docs.toDF("doc_id", "text"),
+      Corpus.LineBoilerBroadcastMaxRows, None)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
@@ -70,7 +71,7 @@ class LineDedupSpec extends SparkSpec {
     val docs = Seq(
       1L -> s"$boiler $uniq1", 2L -> s"$boiler $uniq2", 3L -> boiler)
     val d = docs.toDF("doc_id", "text")
-    val gated = Corpus.lineDedupOf(d, 0L) // bound 4 lines/3 > 0 → fallback
+    val gated = Corpus.lineDedupOf(d, 0L, None) // bound 4 lines/3 > 0 → fallback
     // the flagging join must be a shuffled hash join, not a broadcast
     // (AQE off for the plan assertion — AdaptiveSparkPlan hides its inner
     // tree from collect, same reason as PlanShapeSpec.withStablePlans)
@@ -84,7 +85,7 @@ class LineDedupSpec extends SparkSpec {
       assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
         s"boiler set must not broadcast over the gate:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    val expect = Corpus.lineDedupOf(d).collect().map(_.toSeq).toSet
+    val expect = Corpus.lineDedupOf(d, Corpus.LineBoilerBroadcastMaxRows, None).collect().map(_.toSeq).toSet
     assert(gated.collect().map(_.toSeq).toSet === expect)
   }
 

@@ -46,9 +46,10 @@ object LlmProperties extends Properties("llm") {
 
   property("pack offsets tile the token stream exactly (no gaps, no overlap)") =
     forAll(Gen.nonEmptyListOf(Gen.choose(1, 40))) { counts =>
-      val docs = counts.zipWithIndex
-        .map { case (n, i) => (i.toLong, Seq.fill(n)("t").mkString(" ")) }
-      val out = Corpus.packOf(docs.toDF("doc_id", "text"))
+      val out = Corpus.packOfCounts(
+          counts.zipWithIndex.map { case (n, i) => (i.toLong, n.toLong) }
+            .toDF("doc_id", "n_tokens"),
+          Corpus.packWidth(counts.size - 1L))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))
       // reconstruct each doc's global start from (pack_first, offset) and
@@ -73,7 +74,7 @@ object LlmProperties extends Properties("llm") {
           Text.shingles(col("text"), Dedup.ShingleK).as("sset"))
         .where(size(col("sset")) >= 1)
         .withColumn("n", size(col("sset")))
-      val got = Dedup.containmentOf(sets, 2)
+      val got = Dedup.containmentOf(sets, 2, None)
         .select(col("doc_a"), col("doc_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       // brute: every directional pair whose exact containment qualifies

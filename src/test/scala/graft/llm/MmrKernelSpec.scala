@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** Pins the r21 in-row greedy MMR ([[Similarity.mmrSelect]] via
   * [[MmrGreedy]]) row-identical to the pre-r21 unrolled-rounds
-  * formulation ([[Similarity.mmrSelectRelational]]) — on the real
+  * formulation ([[MmrKernelSpec.mmrSelectRelational]]) — on the real
   * sf0.001 embedding pool AND on degenerate pools (singleton candidate
   * lists, pools smaller than K). */
 class MmrKernelSpec extends SparkSpec {
@@ -20,7 +20,7 @@ class MmrKernelSpec extends SparkSpec {
     val pool = Similarity.mmrPoolOf(e)
     try {
       val kernel = rows(Similarity.mmrSelect(pool))
-      val rel = rows(Similarity.mmrSelectRelational(pool))
+      val rel = rows(MmrKernelSpec.mmrSelectRelational(pool))
       assert(kernel.nonEmpty)
       assert(kernel == rel)
     } finally { pool._1.unpersist(); pool._2.unpersist() }
@@ -60,9 +60,62 @@ class MmrKernelSpec extends SparkSpec {
     val pool = Similarity.mmrPoolOf(vecs.toDF("vec_id", "embedding"))
     try {
       val kernel = rows(Similarity.mmrSelect(pool))
-      val rel = rows(Similarity.mmrSelectRelational(pool))
+      val rel = rows(MmrKernelSpec.mmrSelectRelational(pool))
       assert(kernel == rel)
       assert(kernel.map(_._3).forall(_ == 1L)) // only mmr_rank 1 rows
     } finally { pool._1.unpersist(); pool._2.unpersist() }
+  }
+}
+
+/** The relational formulation [[MmrKernelSpec]] pins the in-row kernel against. */
+object MmrKernelSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  /** The pre-r21 unrolled-rounds formulation — kept as the independent
+    * twin MmrKernelSpec pins [[Similarity.mmrSelect]] against (and the shape the
+    * oracle's K−1 generated CTEs mirror). */
+  def mmrSelectRelational(pool: (DataFrame, DataFrame)): DataFrame = {
+    val (cand, pw) = pool
+    // greedy rounds, unrolled: rank 1 = relevance argmax
+    val w1 = Window.partitionBy(col("query_id"))
+      .orderBy(col("relevance").desc, col("neighbor_id"))
+    var sel = cand.withColumn("rn", row_number().over(w1))
+      .where(col("rn") === 1)
+      .select(col("query_id"), col("neighbor_id"), lit(1L).as("mmr_rank"),
+        col("relevance"),
+        (lit(Similarity.MmrLambdaTenths) * col("rel_u")).as("score_u"))
+    for (r <- 2 to Similarity.MmrK) {
+      val rem = cand.join(sel.select(col("query_id"), col("neighbor_id")),
+        Seq("query_id", "neighbor_id"), "left_anti")
+      val ms = pw
+        .join(sel.select(col("query_id").as("sq"),
+          col("neighbor_id").as("sid")),
+          col("query_id") === col("sq") && col("b_id") === col("sid"))
+        .groupBy(col("query_id"), col("a_id"))
+        .agg(max(col("sim_u")).as("ms_u"))
+      val wr = Window.partitionBy(col("query_id"))
+        .orderBy(col("score_u").desc, col("neighbor_id"))
+      val pick = rem
+        .join(ms, rem("query_id") === ms("query_id") &&
+          col("neighbor_id") === col("a_id"))
+        .select(rem("query_id"), col("neighbor_id"), col("relevance"),
+          (lit(Similarity.MmrLambdaTenths) * col("rel_u") -
+            lit(Similarity.MmrMuTenths) * col("ms_u")).as("score_u"))
+        .withColumn("rn", row_number().over(wr))
+        .where(col("rn") === 1)
+        .select(col("query_id"), col("neighbor_id"),
+          lit(r.toLong).as("mmr_rank"), col("relevance"), col("score_u"))
+      // eager localCheckpoint = materialize + cut lineage (the Lloyd-loop
+      // discipline): round r's plan references sel three times; without
+      // truncation the composed plan grows ~3^K sub-trees.
+      sel = sel.unionByName(pick).localCheckpoint()
+    }
+    sel.select(col("query_id"), col("neighbor_id"), col("mmr_rank"),
+        col("relevance"),
+        (col("score_u").cast(DoubleType) / lit(1.0e7)).as("mmr_score"))
+      .orderBy(col("query_id"), col("mmr_rank"))
   }
 }

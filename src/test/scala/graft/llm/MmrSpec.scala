@@ -31,9 +31,18 @@ class MmrSpec extends SparkSpec {
       102L -> onAngle(-14) // less relevant, angularly distinct
     ) ++ (103L to 112L).map(i => i -> Array(0f, 0f, 0.6f, 0.8f))
 
+  /** Build the pool, select, then release the pool's persisted frames:
+    * [[Similarity.mmrSelect]] checkpoints eagerly, so its result never
+    * reads the pool. */
+  private def selectOnce(e: org.apache.spark.sql.DataFrame) = {
+    val pool = Similarity.mmrPoolOf(e)
+    try Similarity.mmrSelect(pool)
+    finally { pool._1.unpersist(); pool._2.unpersist() }
+  }
+
   private lazy val rows = {
     val e = planted.toDF("vec_id", "embedding")
-    Similarity.mmrSelectOnce(e)
+    selectOnce(e)
       .where(col("query_id") === 0L)
       .orderBy(col("mmr_rank"))
       .collect()
@@ -60,7 +69,7 @@ class MmrSpec extends SparkSpec {
   }
 
   test("every query yields MmrK distinct results ranked 1..K") {
-    val all = Similarity.mmrSelectOnce(planted.toDF("vec_id", "embedding"))
+    val all = selectOnce(planted.toDF("vec_id", "embedding"))
     val per = all.groupBy("query_id")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("neighbor_id")).as("nd"),

@@ -8,7 +8,7 @@ import graft.SparkSpec
 /** Pins the r21 single-pass normalization kernel (`norm_text`, backing
   * [[TextAnalysis.normExpr]]) char-identical to the pre-r21 relational
   * chain `trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]",
-  * ""), " +", " "))` ([[TextAnalysis.normExprRelational]]) — on the real
+  * ""), " +", " "))` ([[NormalizeTextKernelSpecRef.normExprRelational]]) — on the real
   * sf0.001 corpus AND on adversarial fixtures (Unicode case folding with
   * multi-char expansions, multi-byte strip, interleaved punctuation in
   * space runs, control whitespace, empties, nulls). */
@@ -20,7 +20,7 @@ class NormalizeTextKernelSpec extends SparkSpec {
         TextAnalysis.normExpr(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val rel = d.select(col("doc_id"),
-        TextAnalysis.normExprRelational(col("text")).as("n"))
+        NormalizeTextKernelSpecRef.normExprRelational(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     (kernel, rel)
   }
@@ -68,7 +68,7 @@ class NormalizeTextKernelSpec extends SparkSpec {
         TextAnalysis.normExpr(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     val rel = d.select(col("doc_id"),
-        TextAnalysis.normExprRelational(col("text")).as("n"))
+        NormalizeTextKernelSpecRef.normExprRelational(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(kernel == rel)
     assert(kernel(1L).isEmpty && kernel(2L).contains("keep me"))
@@ -101,9 +101,18 @@ class NormalizeTextKernelSpec extends SparkSpec {
   }
 }
 
-/** JVM-regex reference (what the relational chain computes), used for
-  * direct string-level assertions without a Spark round-trip. */
+/** The references the kernel is pinned against. */
 private object NormalizeTextKernelSpecRef {
+  /** The pre-r21 relational twin (two regexp_replace passes + trim) —
+    * kept as the independent formulation NormalizeTextKernelSpec pins
+    * the kernel against (and the form the sql_text_normalize twin's SQL
+    * text mirrors). */
+  def normExprRelational(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    trim(regexp_replace(
+      regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
+
+  /** JVM-regex reference (what the relational chain computes), used for
+    * direct string-level assertions without a Spark round-trip. */
   def viaRegex(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9 ]", "").replaceAll(" +", " ").trim
 }

@@ -22,7 +22,7 @@ class PqAnnSpec extends SparkSpec {
   /** Mean 9-dp squared-L2 of every subvector to its assigned codeword
     * under a given codebook — the quantization error Lloyd minimizes. */
   private def quantError(codebook: org.apache.spark.sql.DataFrame): Double =
-    Similarity.pqQuantErrorOf(e, codebook).collect()(0).getDouble(0)
+    PqAnnSpec.pqQuantErrorOf(e, codebook).collect()(0).getDouble(0)
 
   test("trained codebook keeps the dense M x K shape") {
     val cells = cb.select(col("m"), col("k")).distinct().count()
@@ -60,4 +60,25 @@ class PqAnnSpec extends SparkSpec {
     info(s"pq recall@${Similarity.TopK} on sf0.001 = $recall")
     assert(recall >= 0.8, "trained-codebook floor (r13 VERDICT #1)")
   }
+}
+
+/** The quantization error [[PqAnnSpec]] measures codebooks by. */
+object PqAnnSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  /** Mean assigned-cell squared-L2 over all subvectors under a codebook —
+    * the quantization error the Lloyd rounds minimize (one scalar row;
+    * PqAnnSpec asserts trained < donor init). */
+  def pqQuantErrorOf(e: DataFrame, cb: DataFrame): DataFrame =
+    Similarity.pqSubsOf(e).join(broadcast(cb), "m")
+      .select(col("vec_id"), col("m"),
+        round(aggregate(
+          zip_with(col("sv"), col("cw"),
+            (x, c) => (x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)),
+          lit(0.0), (acc, v) => acc + v), 9).as("d2"))
+      .groupBy(col("vec_id"), col("m"))
+      .agg(min(col("d2")).as("d2"))
+      .agg(avg(col("d2")).as("mean_d2"))
 }

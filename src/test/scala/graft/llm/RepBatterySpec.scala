@@ -66,7 +66,7 @@ class RepBatterySpec extends SparkSpec {
     // c = 0 makes covered 0 (pinned by the doc-3 zero test above)
     import org.apache.spark.sql.functions._
     val df = fixture.toDF("doc_id", "text")
-    val rel = TextAnalysis.topGramCoveredRelational(df)
+    val rel = RepBatterySpec.topGramCoveredRelational(df)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     val t = Text.tokens(col("text"))
     val kern = (2 to 4).flatMap { n =>
@@ -87,7 +87,7 @@ class RepBatterySpec extends SparkSpec {
   test("native dup_gram_coverage kernel == relational explode/count/cover twin (r20)") {
     import org.apache.spark.sql.functions._
     val df = fixture.toDF("doc_id", "text")
-    val rel = TextAnalysis.dupGramCoveredRelational(df)
+    val rel = RepBatterySpec.dupGramCoveredRelational(df)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     val t = Text.tokens(col("text"))
     val kern = df.select(col("doc_id"),
@@ -114,5 +114,86 @@ class RepBatterySpec extends SparkSpec {
     assert(d(4L, "top_4_frac") == 8.0 / 50.0)
     assert(rows(4L).getAs[Boolean]("f_top_4_frac"), "boundary is inclusive")
     assert(rows(4L).getAs[Boolean]("passes"))
+  }
+}
+
+/** The relational formulations [[RepBatterySpec]] pins the native kernels against. */
+object RepBatterySpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  import graft.llm.Text._
+
+  /** The pre-r20 RELATIONAL duplicated-gram coverage leg (explode all
+    * positions × n = 5..10 → (doc_id, n, gh) count → coverage-position
+    * explode → distinct → join per-position lengths → per-doc sum),
+    * retained as the independent formulation RepBatterySpec pins the
+    * native [[org.apache.spark.sql.graft.DupGramCoverage]] kernel
+    * against: (doc_id, n, covered), rows only where the doc has a
+    * duplicated n-gram. */
+  def dupGramCoveredRelational(d: DataFrame): DataFrame = {
+    val t = tokens(col("text"))
+    val m = size(t)
+    val ns = array((5 to 10).map(lit(_)): _*)
+    val gramRows = flatten(transform(ns, n =>
+      when(m >= n,
+        transform(sequence(lit(0), m - n),
+          i => struct(n.as("n"), i.as("pos"),
+            hash64(array_join(slice(t, i + 1, n), " ")).as("gh"))))
+        .otherwise(array().cast(ArrayType(StructType(Seq(
+          StructField("n", IntegerType), StructField("pos", IntegerType),
+          StructField("gh", LongType))))))))
+    val base = d.select(col("doc_id"), col("text"))
+    val grams = base
+      .select(col("doc_id"), explode(gramRows).as("g"))
+      .select(col("doc_id"), col("g.n").as("n"), col("g.pos").as("pos"),
+        col("g.gh").as("gh"))
+    val tok = base.select(col("doc_id"),
+      posexplode(t).as(Seq("pos", "w")))
+      .select(col("doc_id"), col("pos"), length(col("w")).cast(LongType)
+        .as("wlen"))
+    grams
+      .groupBy(col("doc_id"), col("n"), col("gh"))
+      .agg(collect_list(col("pos")).as("ps"))
+      .where(size(col("ps")) >= 2)
+      .select(col("doc_id"), col("n"),
+        explode(flatten(transform(col("ps"),
+          p => sequence(p, p + col("n") - 1)))).as("cp"))
+      .distinct()
+      .join(tok.withColumnRenamed("pos", "cp"), Seq("doc_id", "cp"))
+      .groupBy(col("doc_id"), col("n"))
+      .agg(sum(col("wlen")).as("covered"))
+  }
+
+  /** The pre-r15 RELATIONAL top-gram leg (explode → (doc_id, n, gram)
+    * count → rank window), retained as the independent formulation
+    * RepBatterySpec pins the native [[org.apache.spark.sql.graft
+    * .TopGramStats]] kernel against: (doc_id, n, covered) for n = 2..4,
+    * rows only where the doc has ≥ n words. */
+  def topGramCoveredRelational(d: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val t = tokens(col("text"))
+    val m = size(t)
+    val ns = array((2 to 4).map(lit(_)): _*)
+    val gramRows = flatten(transform(ns, n =>
+      when(m >= n,
+        transform(sequence(lit(0), m - n),
+          i => struct(n.as("n"),
+            array_join(slice(t, i + 1, n), " ").as("gram"))))
+        .otherwise(array().cast(ArrayType(StructType(Seq(
+          StructField("n", IntegerType),
+          StructField("gram", StringType))))))))
+    val cnt = d.select(col("doc_id"), explode(gramRows).as("g"))
+      .select(col("doc_id"), col("g.n").as("n"), col("g.gram").as("gram"))
+      .groupBy(col("doc_id"), col("n"), col("gram"))
+      .agg(count(lit(1)).as("c"))
+    val wTop = Window.partitionBy(col("doc_id"), col("n"))
+      .orderBy(col("c").desc, col("gram"))
+    cnt.withColumn("rn", row_number().over(wTop))
+      .where(col("rn") === 1)
+      .select(col("doc_id"), col("n"),
+        (col("c") * (length(col("gram")) - (col("n") - 1)))
+          .cast(LongType).as("covered"))
   }
 }

@@ -22,7 +22,7 @@ class SimhashKernelSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val kernel = Dedup.simhashOf(setsOf(d))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rel = Dedup.simhashSignaturesRelational(d)
+    val rel = SimhashKernelSpec.simhashSignaturesRelational(d)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel.nonEmpty)
     assert(kernel == rel)
@@ -36,7 +36,7 @@ class SimhashKernelSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val kernel = Dedup.simhashOf(setsOf(d))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rel = Dedup.simhashSignaturesRelational(d)
+    val rel = SimhashKernelSpec.simhashSignaturesRelational(d)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(!kernel.contains(1L) && !rel.contains(1L))
     assert(kernel == rel)
@@ -82,5 +82,31 @@ class SimhashKernelSpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString("y z w")))
     assert(org.apache.spark.sql.graft.SimhashKernel.ofSet(withNull, 60) ==
       org.apache.spark.sql.graft.SimhashKernel.ofSet(noNull, 60))
+  }
+}
+
+/** The relational formulation [[SimhashKernelSpec]] pins the kernel against. */
+object SimhashKernelSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  import graft.llm.Text._
+
+  /** The pre-r20 relational twin (explode + 60-bit-sum aggregate) —
+    * kept as the independent formulation SimhashKernelSpec pins the
+    * kernel against. */
+  def simhashSignaturesRelational(d: DataFrame): DataFrame = {
+    val h = d.select(col("doc_id"),
+        explode(shingles(col("text"), Dedup.ShingleK)).as("sh"))
+      .select(col("doc_id"), hash64(col("sh")).as("h"))
+    val bitSums = h.groupBy(col("doc_id")).agg(
+      sum(when(shiftright(col("h"), 0).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as("s0"),
+      (1 until Dedup.SimhashBits).map(b =>
+        sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
+          .otherwise(-1)).as(s"s$b")): _*)
+    bitSums.select(col("doc_id"),
+      (0 until Dedup.SimhashBits)
+        .map(b => when(col(s"s$b") >= 0, lit(1L << b)).otherwise(lit(0L)))
+        .reduce(_ + _).as("simhash"))
   }
 }

@@ -20,6 +20,11 @@ import graft.SparkSpec
 class SqAnnSpec extends SparkSpec {
   import spark.implicits._
 
+  /** (vec_id, qv): every vector's code array under the corpus params. */
+  private def quantized(e: org.apache.spark.sql.DataFrame) =
+    e.crossJoin(broadcast(Similarity.sqParamsOf(e)))
+      .select(col("vec_id"), Similarity.sqCodes(col("embedding")).as("qv"))
+
   test("codes match the Scala twin; clamp and constant-dim edges hold") {
     // dim 0: range [0, 10]; dim 1: constant 3.5 (step 0); dim 2: [-2, 2]
     val vecs: Seq[(Long, Array[Float])] = Seq(
@@ -36,7 +41,7 @@ class SqAnnSpec extends SparkSpec {
     val want = vecs.map { case (id, v) =>
       id -> v.toSeq.zipWithIndex.map { case (x, d) => code(x, d) }
     }.toMap
-    val got = Similarity.sqQuantizedOf(vecs.toDF("vec_id", "embedding"))
+    val got = quantized(vecs.toDF("vec_id", "embedding"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(got == want)
     // the edges actually exercised: min → 0, max clamps to 255, const → 0
@@ -47,7 +52,7 @@ class SqAnnSpec extends SparkSpec {
 
   test("reconstruction error is within one step on every sf0.001 component") {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet")
-    val bad = Similarity.sqQuantizedOf(e)
+    val bad = quantized(e)
       .join(e, "vec_id")
       .select(explode(arrays_zip(col("embedding"), col("qv"))).as("z"))
       .select(col("z.embedding").cast("double").as("v"), col("z.qv").as("q"))
@@ -61,7 +66,7 @@ class SqAnnSpec extends SparkSpec {
       .agg(min(col("v").cast("double")).as("mn"),
         ((max(col("v").cast("double")) - min(col("v").cast("double"))) / 255.0)
           .as("st"))
-    val viol = Similarity.sqQuantizedOf(e)
+    val viol = quantized(e)
       .join(e, "vec_id")
       .select(col("vec_id"),
         posexplode(arrays_zip(col("embedding"), col("qv"))).as(Seq("pos", "z")))

@@ -2,11 +2,12 @@ package graft.llm
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins [[TextAnalysis.unigramSurprisalOf]] against a hand-computed unigram
+/** Pins the unigram surprisal core ([[TextAnalysis.surprisalFrom]]) against a hand-computed unigram
   * model and [[TextAnalysis.normalizeOf]]'s scrub pipeline, plus the
   * index-path/inline-path agreement of the surprisal operator. */
 class SurprisalNormalizeSpec extends SparkSpec {
@@ -16,9 +17,21 @@ class SurprisalNormalizeSpec extends SparkSpec {
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
+  /** [[TextAnalysis.unigramSurprisal]]'s core over tf/df relations built
+    * inline, range-clustered by doc_id as the persisted index is. */
+  private def unigramSurprisalOf(d: DataFrame): DataFrame = {
+    val tf = d
+      .select(col("doc_id"), explode(Text.tokens(col("text"))).as("token"))
+      .groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf"))
+      .repartitionByRange(col("doc_id"))
+    TextAnalysis.surprisalFrom(tf, tf.groupBy(col("token"))
+      .agg(sum(col("tf")).as("term_freq")))
+  }
+
   test("surprisal matches the hand-computed unigram model") {
     // corpus: 6 tokens total: a=3, b=2, c=1
-    val out = TextAnalysis.unigramSurprisalOf(
+    val out = unigramSurprisalOf(
       Seq((1L, "a a b"), (2L, "a b c")).toDF("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     def term(tf: Long, freq: Long): BigDecimal =
@@ -31,7 +44,7 @@ class SurprisalNormalizeSpec extends SparkSpec {
 
   test("index path and inline path agree on the real corpus") {
     val viaIndex = TextAnalysis.unigramSurprisal(spark, sf001).collect().toSeq
-    val inline = TextAnalysis.unigramSurprisalOf(
+    val inline = unigramSurprisalOf(
       spark.read.parquet(s"$sf001/documents.parquet")).collect().toSeq
     assert(viaIndex === inline)
   }
@@ -40,13 +53,13 @@ class SurprisalNormalizeSpec extends SparkSpec {
     // docs 1 and 3 normalize to the SAME text (case/punct differences only)
     // and pass quality; doc 2 fails the token threshold; doc 4 is distinct
     val base = (1 to 12).map(i => s"w$i").mkString(" ")
-    val out = Corpus.curationPipelineOf(
-      Seq(
+    val d = Seq(
         (1L, base.toUpperCase + "!!"),
         (2L, "too short"),
         (3L, base),
         (4L, (1 to 12).map(i => s"v$i").mkString(" ")))
-        .toDF("doc_id", "text"))
+        .toDF("doc_id", "text")
+    val out = Corpus.curationPipelineOf(d, Corpus.packWidth(Corpus.maxDocId(d)))
     val ids = out.collect().map(_.getLong(0)).toSeq
     assert(ids === Seq(1L, 4L)) // 3 deduped against 1; 2 filtered
     // survivors pack contiguously: doc 4 starts where doc 1's 12 tokens end

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 
 import graft.SparkSpec
 
-/** Pins the unigram-LM tokenizer EM ([[TextAnalysis.unigramLmOf]], Kudo
+/** Pins the unigram-LM tokenizer EM ([[TextAnalysis.unigramLmParts]], Kudo
   * 2018) on a hand-computed fixture: Viterbi must prefer the whole-word
   * piece over char splits (fewer pieces win at equal mass), the M-step
   * must drop unused multi-char candidates while flooring every char at
@@ -14,11 +14,11 @@ class UnigramLmSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val rows: Map[String, Row] =
-    TextAnalysis.unigramLmOf(Seq(
+    TextAnalysis.unigramLmParts(Seq(
       (1L, "aaab aaab aaab cd"),
       // 11 chars — beyond UlmMaxWordLen=10: seeds candidates, no usage
       (2L, "abcdefghijk")
-    ).toDF("doc_id", "text"))
+    ).toDF("doc_id", "text"))._1
       .collect().map(r => r.getAs[String]("piece") -> r).toMap
 
   test("Viterbi keeps whole-word pieces; EM counts match hand computation") {

@@ -55,7 +55,7 @@ class WinnowSpec extends SparkSpec {
 
   test("native kernel == composable HOF form on every fixture (r15)") {
     val rows = corpus ++ tiny
-    val hof = TextAnalysis.winnowHofOf(rows.toDF("doc_id", "text"))
+    val hof = WinnowSpec.winnowHofOf(rows.toDF("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(run(rows) === hof)
   }
@@ -96,5 +96,43 @@ class WinnowSpec extends SparkSpec {
     // here pin that doc 3 produced fingerprints at all and doc 5 none
     assert(out.exists(_._1 == 3L))
     assert(!out.exists(_._1 == 5L))
+  }
+}
+
+/** The higher-order-function formulation [[WinnowSpec]] pins the native
+  * kernel against. */
+object WinnowSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  import graft.llm.Text._
+
+  /** The pre-r15 composable higher-order-function winnow — retained as
+    * the independent formulation WinnowSpec pins the native kernel
+    * against (per-window slice/array_min/rightmost-max lambdas; the
+    * semantics, spelled out). */
+  def winnowHofOf(d: DataFrame): DataFrame = {
+    val t = tokens(col("text"))
+    val n = size(t)
+    val k = Dedup.ShingleK
+    val grams = transform(sequence(lit(0), n - k), i =>
+      concat_ws(" ", (0 until k).map(j =>
+        element_at(t, (i + j + 1).cast(IntegerType))): _*))
+    val w = TextAnalysis.WinnowW
+    d.where(n >= k + w - 1)
+      .select(col("doc_id"), transform(grams, g => hash64(g)).as("hs"))
+      .select(col("doc_id"), explode(array_distinct(
+        transform(sequence(lit(0), size(col("hs")) - w), j => {
+          val win = slice(col("hs"), j + 1, lit(w))
+          val mn = array_min(win)
+          // rightmost index of the min inside the window (the tie rule)
+          val rpos = array_max(transform(sequence(lit(1), lit(w)), p =>
+            when(element_at(win, p.cast(IntegerType)) === mn, p)
+              .otherwise(lit(0L))))
+          struct((j + rpos).cast(LongType).as("pos"), mn.as("fp"))
+        }))).as("s"))
+      .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
+      .orderBy(col("doc_id"), col("pos"))
   }
 }

@@ -9,6 +9,7 @@ class SqlEquivalenceSpec extends SparkSpec {
   private val twins = Seq(
     "sql_q01_top5_products_daytype" -> "q01_top5_products_daytype",
     "sql_q06_city_marital_6m" -> "q06_city_marital_6m",
+    "sql_q09_mom_growth" -> "q09_mom_growth",
     "sql_q16_basket_pairs" -> "q16_basket_pairs",
     "sql_q17_rollup" -> "q17_rollup",
     "sql_q18_h1_h2" -> "q18_h1_h2")

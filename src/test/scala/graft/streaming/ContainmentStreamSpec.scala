@@ -48,7 +48,7 @@ class ContainmentStreamSpec extends SparkSpec {
       .orderBy("doc_a", "doc_b").collect().map(_.toSeq).toSeq
     q.stop()
 
-    val batch = Dedup.containmentOf(sets, 4)
+    val batch = Dedup.containmentOf(sets, 4, None)
       .collect().map(_.toSeq).toSeq
     assert(streamed == batch)
     assert(streamed.nonEmpty)

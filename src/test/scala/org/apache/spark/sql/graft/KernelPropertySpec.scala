@@ -13,7 +13,7 @@ import org.scalacheck.Prop.forAll
   * (small value alphabets force ties; duplicates everywhere). */
 object KernelProperties extends Properties("kernels") {
 
-  // ---- winnow_select: monotone-deque window-min, rightmost tie -------
+  // ---- winnow selection: monotone-deque window-min, rightmost tie ----
 
   private def bruteWinnow(hs: Seq[Long], w: Int): Seq[(Long, Long)] =
     if (hs.size < w) Seq.empty
@@ -24,7 +24,7 @@ object KernelProperties extends Properties("kernels") {
     }.distinct
 
   private def runWinnow(hs: Seq[Long], w: Int): Seq[(Long, Long)] =
-    WinnowKernel.select(new GenericArrayData(hs.toArray), w)
+    WinnowKernel.selectCore(hs.toArray, w)
       .toObjectArray(null).toSeq.map { r =>
         val row = r.asInstanceOf[InternalRow]
         (row.getLong(0), row.getLong(1))
