@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.SQLExecution
 
 /** Independent Spark writes run at the same time, so that each write's job
   * and commit latency hides behind the others' (the star-table loads of
-  * [[graft.warehouse.Warehouse]] and the per-batch writes of
-  * [[graft.etl.WarehouseSink]]).
+  * [[graft.warehouse.Warehouse]], and a micro-batch's fact write and dim
+  * appends in [[graft.etl.WarehouseSink]]).
   *
   *  - Each body runs through `SQLExecution.withThreadLocalCaptured`: it sees
   *    the caller's active session and local properties (job group, job

@@ -15,9 +15,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   (ST7 — the reference's CTRL-C path is bugged, `hybrid_join.py:479-480`,
   *   and intentionally not replicated).
   *
-  * The checkpoint directory gives exactly-once batch-id tracking across
-  * restarts (ST8 pairs with the sink's per-batch fact partition, published
-  * by one rename that replaces any earlier attempt's).
+  * The checkpoint directory, `$whDir/_checkpoint`, gives exactly-once
+  * batch-id tracking across restarts (ST8 pairs with the sink's per-batch
+  * fact partition, published by one rename; a replay of a published batch
+  * writes nothing). Each started query opens its own sink, whose dim key
+  * sets live as long as the query.
   */
 object Pipeline {
 
@@ -50,14 +52,14 @@ object Pipeline {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(txnCsvDir)
     val enriched = Enrich.enrich(stream, customers, products)
-    WarehouseSink.createEmpty(enriched, whDir)
+    val sink = WarehouseSink.open(enriched, whDir)
     enriched
       .writeStream
       .queryName("graft-etl")
       .option("checkpointLocation", s"$whDir/_checkpoint")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        WarehouseSink.load(batch, batchId, whDir)
+        sink.load(batch, batchId)
       }
       .start()
   }

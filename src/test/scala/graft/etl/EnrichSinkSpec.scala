@@ -57,7 +57,7 @@ class EnrichSinkSpec extends SparkSpec {
     val enriched = Enrich.enrich(
       txn(1, 1, "PX").union(txn(2, 1, "P1")),
       customers(1 -> "F"), products("P1" -> 5.0))
-    WarehouseSink.load(enriched, 0L, dir)
+    WarehouseSink.open(enriched, dir).load(enriched, 0L)
     val fact = spark.read.parquet(s"$dir/salefact")
     assert(fact.count() == 1)
     assert(fact.select("order_id").collect().head.getInt(0) == 2)
@@ -67,12 +67,12 @@ class EnrichSinkSpec extends SparkSpec {
 
   test("S7 first-write-wins: a later batch never updates an existing dim row") {
     val dir = Files.createTempDirectory("graft_scd0").toString
-    WarehouseSink.load(
-      Enrich.enrich(txn(1, 1, "P1"), customers(1 -> "F"), products("P1" -> 5.0)),
-      0L, dir)
-    WarehouseSink.load(
+    val batch0 = Enrich.enrich(txn(1, 1, "P1"), customers(1 -> "F"), products("P1" -> 5.0))
+    val sink = WarehouseSink.open(batch0, dir)
+    sink.load(batch0, 0L)
+    sink.load(
       Enrich.enrich(txn(2, 1, "P1"), customers(1 -> "M"), products("P1" -> 9.0)),
-      1L, dir)
+      1L)
     val dim = spark.read.parquet(s"$dir/customer_dim")
     assert(dim.count() == 1)
     assert(dim.select("gender").collect().head.getString(0) == "F")
@@ -85,9 +85,10 @@ class EnrichSinkSpec extends SparkSpec {
     val enriched = Enrich.enrich(
       txn(1, 1, "P1").union(txn(2, 2, "P1")),
       customers(1 -> "F", 2 -> "M"), products("P1" -> 5.0))
-    WarehouseSink.load(enriched, 7L, dir)
+    val sink = WarehouseSink.open(enriched, dir)
+    sink.load(enriched, 7L)
     val before = spark.read.parquet(s"$dir/salefact").orderBy("order_id").collect()
-    WarehouseSink.load(enriched, 7L, dir) // at-least-once replay
+    sink.load(enriched, 7L) // at-least-once replay
     val after = spark.read.parquet(s"$dir/salefact").orderBy("order_id").collect()
     assert(before.sameElements(after))
     assert(spark.read.parquet(s"$dir/customer_dim").count() == 2)
@@ -97,12 +98,14 @@ class EnrichSinkSpec extends SparkSpec {
   test("S8: time_dim accumulates distinct dates across batches, no dupes") {
     val dir = Files.createTempDirectory("graft_time").toString
     val c = customers(1 -> "F"); val p = products("P1" -> 5.0)
-    WarehouseSink.load(Enrich.enrich(
+    val batch0 = Enrich.enrich(
       Seq((1, "1/2/2020", 1, "P1", 1), (2, "1/3/2020", 1, "P1", 1))
-        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p), 0L, dir)
-    WarehouseSink.load(Enrich.enrich(
+        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p)
+    val sink = WarehouseSink.open(batch0, dir)
+    sink.load(batch0, 0L)
+    sink.load(Enrich.enrich(
       Seq((3, "1/3/2020", 1, "P1", 1), (4, "2/1/2020", 1, "P1", 1))
-        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p), 1L, dir)
+        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p), 1L)
     val t = spark.read.parquet(s"$dir/time_dim")
     assert(t.count() == 3)
     assert(t.select("date_id").distinct().count() == 3)
@@ -115,18 +118,20 @@ class EnrichSinkSpec extends SparkSpec {
       Seq((2, "3/4/2021", 2, "P2", 3), (3, "3/5/2021", 1, "P1", 1))
         .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p)
     val clean = Files.createTempDirectory("graft_sink_clean").toString
-    WarehouseSink.load(batch0, 0L, clean)
-    WarehouseSink.load(batch1, 1L, clean)
+    val cleanSink = WarehouseSink.open(batch0, clean)
+    cleanSink.load(batch0, 0L)
+    cleanSink.load(batch1, 1L)
 
     val dir = Files.createTempDirectory("graft_sink_fail").toString
-    WarehouseSink.load(batch0, 0L, dir)
+    val sink = WarehouseSink.open(batch0, dir)
+    sink.load(batch0, 0L)
     // a plain file where the time dim's directory belongs fails its write
     val timeDim = new java.io.File(s"$dir/time_dim")
     val aside = new java.io.File(s"$dir/time_dim.aside")
     assert(timeDim.renameTo(aside))
     Files.write(timeDim.toPath, "not a table".getBytes)
     val mode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    intercept[Exception](WarehouseSink.load(batch1, 1L, dir))
+    intercept[Exception](sink.load(batch1, 1L))
     // every sibling write had committed before the failure reached us
     assert(new java.io.File(s"$dir/_staging/1/salefact/_SUCCESS").exists())
     Seq("customer_dim", "product_dim").foreach { t =>
@@ -135,9 +140,10 @@ class EnrichSinkSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/salefact").where(col("batch_id") === 1).count() == 0)
     assert(spark.read.parquet(s"$dir/salefact").count() == 1)
 
-    // remove the obstacle and replay the batch
+    // remove the obstacle and replay the batch through the same sink,
+    // which reads its key sets again after the failure
     assert(timeDim.delete() && aside.renameTo(timeDim))
-    WarehouseSink.load(batch1, 1L, dir)
+    sink.load(batch1, 1L)
     assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == mode)
     Seq("customer_dim", "product_dim", "time_dim", "salefact").foreach { t =>
       def rows(root: String) = {

@@ -53,13 +53,13 @@ class PipelineSpec extends SparkSpec {
         .select(col("product_id"), col("product_category"),
           col("price").cast("decimal(10,2)"), col("store_id").cast("int"),
           col("store_name"), col("supplier_id").cast("int"), col("supplier_name"))
-      val q = Enrich.enrich(stream, cDf, pDf)
+      val enriched = Enrich.enrich(stream, cDf, pDf)
+      val sink = WarehouseSink.open(enriched, s"$dir/wh")
+      val q = enriched
         .writeStream
         .option("checkpointLocation", s"$dir/ckpt")
         .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          WarehouseSink.load(b, id, s"$dir/wh")
-        }
+        .foreachBatch { (b: DataFrame, id: Long) => sink.load(b, id) }
         .start()
       q.awaitTermination()
       sortedTables(s"$dir/wh")
@@ -147,10 +147,12 @@ class PipelineSpec extends SparkSpec {
 
     val stream = mem.toDF()
       .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity")
-    val q = Enrich.enrich(stream, customers, products)
+    val enriched = Enrich.enrich(stream, customers, products)
+    val sink = WarehouseSink.open(enriched, s"$dir/wh")
+    val q = enriched
       .writeStream
       .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (b: DataFrame, id: Long) => WarehouseSink.load(b, id, s"$dir/wh") }
+      .foreachBatch { (b: DataFrame, id: Long) => sink.load(b, id) }
       .start()
     mem.addData((1, "1/2/2020", 1, "P1", 2), (2, "1/3/2020", 3, "P1", 1))
     q.processAllAvailable()
@@ -166,7 +168,8 @@ class PipelineSpec extends SparkSpec {
       (3, "2/4/2020", 2, "P1", 4))
       .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity")
     val dirB = Files.createTempDirectory("graft_mem_b").toString
-    WarehouseSink.load(Enrich.enrich(batchTxns, customers, products), 0L, dirB)
+    val batch = Enrich.enrich(batchTxns, customers, products)
+    WarehouseSink.open(batch, dirB).load(batch, 0L)
     val factBatch = spark.read.parquet(s"$dirB/salefact")
       .drop("batch_id").orderBy("order_id")
 

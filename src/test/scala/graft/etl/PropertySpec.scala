@@ -49,7 +49,8 @@ object EtlProperties extends Properties("etl") {
     forAll(txnGen) { txns =>
       val dir = Files.createTempDirectory("graft_prop").toString
       val df = txns.toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity")
-      WarehouseSink.load(Enrich.enrich(df, customers, products), 0L, dir)
+      val enriched = Enrich.enrich(df, customers, products)
+      WarehouseSink.open(enriched, dir).load(enriched, 0L)
       val factSum = spark.read.parquet(s"$dir/salefact")
         .agg(sum(col("purchase_amount"))).collect().head.getDecimal(0)
       val expected = txns.map { case (_, _, _, prod, qty) =>
@@ -65,9 +66,10 @@ object EtlProperties extends Properties("etl") {
       val enriched = Enrich.enrich(
         txns.toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"),
         customers, products)
-      WarehouseSink.load(enriched, 0L, dir)
+      WarehouseSink.open(enriched, dir).load(enriched, 0L)
       val n1 = spark.read.parquet(s"$dir/customer_dim").count()
-      WarehouseSink.load(enriched, 1L, dir) // same data, NEW batch id
+      // same data, NEW batch id, through a new sink that reads the keys back
+      WarehouseSink.open(enriched, dir).load(enriched, 1L)
       val n2 = spark.read.parquet(s"$dir/customer_dim").count()
       n1 == n2
     }
