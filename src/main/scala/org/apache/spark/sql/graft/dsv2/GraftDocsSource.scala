@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -121,684 +121,6 @@ class GraftDocsSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new GraftDocsTable(properties.get("path"), schema)
-}
-
-/** A CAS commit lost its race: another committer claimed the snapshot
-  * version first. [[GdfManifest.commitRetry]] catches this, re-reads the
-  * table state, re-applies the caller's delta, and tries the next
-  * version — the optimistic-concurrency loop every published table
-  * format (Iceberg's commit loop, Delta's OCC) serializes writers with. */
-private[dsv2] class GdfCommitConflict(msg: String)
-    extends RuntimeException(msg)
-
-/** Manifest bookkeeping: `<path>/manifest-v<N>.json` are the immutable
-  * snapshots (highest retained = current state), `<path>/manifest.json`
-  * is a convenience pointer refreshed after every commit. Commits are
-  * COMPARE-AND-SWAP (r18): the snapshot file for version N is claimed
-  * with an atomic no-replace rename, so exactly one of two racing
-  * committers wins N and the loser retries at N+1 with the winner's
-  * state folded in — concurrent committers serialize instead of
-  * silently dropping a snapshot. */
-private[dsv2] object GdfManifest {
-  /** Per-file stats. `colStats` (r16) is the GENERIC zone map — min/max
-    * for every other numeric column of the file, the per-column
-    * statistics a real table format (parquet row groups, Iceberg
-    * manifests) carries; doc_id keeps its dedicated fields (the
-    * bucket-pin fast path and the aggregate pushdown read them).
-    * `colBlooms` (r17) is the per-file BLOOM FILTER per numeric column
-    * ([[GdfBloom]]): point lookups prune files whose [min,max] spans the
-    * probe value but which cannot actually hold it — the
-    * parquet-bloom-filter / Iceberg-bloom feature, and the only pruning
-    * a hash-spread column's wide zone maps can offer an EqualTo. */
-  /** `dv`/`dvRows` (r18) is the MERGE-ON-READ delete vector: the name of
-    * a slim `.dvf` position file holding `dvRows` deleted row positions
-    * of this (immutable) data file — the Iceberg-v2 position-delete /
-    * Delta deletion-vector shape. A point delete commits the vector
-    * instead of rewriting the data file; every read applies it as a
-    * scan-time position skip; compaction reconciles and drops it.
-    * `rows`/min/max stay the PHYSICAL file stats (still sound for
-    * pruning — a superset — but no longer exact, so aggregate pushdown
-    * refuses any file carrying a dv). */
-  /** `seq` (r18): the DATA SEQUENCE NUMBER — the snapshot version that
-    * ADDED this file, stamped centrally at [[commitVersion]] (carried
-    * files keep theirs; a rewrite is an add). Equality deletes apply
-    * only to files with a STRICTLY OLDER seq — the Iceberg-v2 sequence
-    * rule: without it, an append after an equality delete either
-    * resurrects the deleted rows (entries dropped) or wrongly deletes
-    * the newly appended row with the same key (entries replayed). */
-  /** `colKmv` (r18): per-file, per-column KMV (bottom-k) DISTINCT
-    * sketches — the Iceberg-Puffin NDV-statistics shape, deterministic
-    * (md5-prefix hashes, engine-free arithmetic) so an oracle can
-    * recompute the estimate bit-exactly. Bottom-k sets merge by
-    * union+re-take, which is what makes per-file sketches fold into a
-    * table-level NDV from METADATA ONLY — no data read. */
-  /** `firstRowId` (r18): ROW LINEAGE — the Iceberg-v3 stable row
-    * identity. A file written without a physical `_row_id` block gets a
-    * VIRTUAL id range at commit ([[commitVersion]] assigns
-    * `firstRowId`; row id = firstRowId + physical position); every
-    * API rewrite (CoW delete, merge update, compaction) MATERIALIZES
-    * the ids into the new file as a hidden `_row_id` column
-    * (`firstRowId == PhysicalRowIds`), so identity survives the
-    * rewrite. `-1` = no lineage (legacy file). Readers surface the
-    * column under the `rowlineage` read option. */
-  /** `colSums` (r19): per-file, per-column EXACT (sum, non-null count)
-    * for every zone-mapped numeric column — what lets aggregate
-    * pushdown answer SUM (and with COUNT, AVG) from METADATA ONLY, the
-    * rest of the Iceberg answer-from-manifests family beyond MIN/MAX.
-    * The fold is exact because writes are append-shaped (a file's sum
-    * never changes); any dv/equality delete makes the stats physical
-    * and the pushdown refuses, same rule as every other stat. Long
-    * arithmetic — a production format widens to decimal128 for
-    * overflow headroom; at any per-file scale here the fold is exact. */
-  case class FileStat(name: String, bucket: Int, rows: Long,
-      minDocId: Long, maxDocId: Long,
-      colStats: Seq[(String, Long, Long)] = Seq.empty,
-      colBlooms: Seq[(String, Array[Long])] = Seq.empty,
-      dv: Option[String] = None, dvRows: Long = 0L,
-      seq: Int = 0,
-      colKmv: Seq[(String, Seq[Long])] = Seq.empty,
-      firstRowId: Long = -1L,
-      colSums: Seq[(String, Long, Long)] = Seq.empty) {
-    /** Rows a scan actually serves from this file. */
-    def liveRows: Long = rows - dvRows
-  }
-
-  /** The hidden lineage column and the firstRowId sentinel marking a
-    * file that carries it physically. */
-  val RowIdCol = "_row_id"
-  val PhysicalRowIds = -2L
-
-  /** KMV sketch size: 32 bottom hashes per column per file. */
-  val NdvK = 32
-
-  /** The NDV hash: md5("ndv|" + value-as-string), first 15 hex chars as
-    * a long — uniform in [0, 2^60), reproducible in any engine with an
-    * md5 (the repo's hash64 discipline). */
-  def ndvHash(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(("ndv|" + s).getBytes(StandardCharsets.UTF_8))
-    java.lang.Long.parseLong(
-      d.take(8).map("%02x".format(_)).mkString.take(15), 16)
-  }
-
-  /** DEFAULT COLUMN VALUES (r18) — the Iceberg-v3 `initial-default` /
-    * SQL `ADD COLUMN ... DEFAULT` shape: a column added by
-    * [[GdfMaintenance.addColumn]] records its default in the schema
-    * field's metadata (persisted free through `StructType.json` in the
-    * manifest). Files predating the column serve the DEFAULT instead of
-    * null — in both read paths, in every rewrite (which materializes
-    * it), and on the old side of the change feed. */
-  val DefaultKey = "graft.default"
-
-  /** The default in DECODE currency (what [[GdfDecode]] serves):
-    * Long / Int / UTF8String. */
-  def defaultInternal(f: StructField): Option[Any] =
-    if (!f.metadata.contains(DefaultKey)) None
-    else Some(f.dataType match {
-      case LongType => f.metadata.getString(DefaultKey).toLong: Any
-      case IntegerType => f.metadata.getString(DefaultKey).toInt: Any
-      case StringType => UTF8String.fromString(f.metadata.getString(DefaultKey))
-      case other => throw new IllegalArgumentException(
-        s"no default support for $other columns")
-    })
-
-  /** The default in RAW WRITE currency (what rewrites persist):
-    * Long / Int / Array[Byte]. */
-  def defaultRaw(f: StructField): Option[Any] =
-    defaultInternal(f).map {
-      case u: UTF8String => u.getBytes: Any
-      case v => v
-    }
-
-  /** The default as a Catalyst Column for DataFrame-level fills (the
-    * change feed's old side): `lit(default)` cast to the field type,
-    * or a typed null when no default is declared. */
-  def defaultColumn(f: StructField): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.lit
-    if (f.metadata.contains(DefaultKey))
-      lit(f.metadata.getString(DefaultKey)).cast(f.dataType)
-    else lit(null).cast(f.dataType)
-  }
-
-  /** One equality-delete file: a sorted key list scoped to `bucket`,
-    * applying to data files of that bucket with `fileSeq < seq` (legacy
-    * manifests parse to `Int.MaxValue` — apply to everything, the
-    * pre-seq behavior). */
-  case class EqDelete(bucket: Int, file: String, seq: Int = Int.MaxValue)
-  /** `layout` (r16): "hash" (bucket = pmod(doc_id, buckets) — the
-    * EqualTo bucket-pin fast path applies) or "zorder" (bucket = a
-    * Z-curve prefix cell over two columns — doc_id EqualTo must rely on
-    * zone maps alone). `epochs` (r17): streaming-sink epoch ids already
-    * committed into this table — the exactly-once replay ledger (a
-    * re-delivered epoch is detected here and its files dropped, the
-    * Delta/Iceberg idempotent-commit shape). */
-  /** `ts` (r18): commit wall-clock millis, stamped MONOTONICALLY at
-    * [[commitVersion]] (max(now, parent ts + 1)) so `TIMESTAMP AS OF`
-    * resolution is a total order even under clock skew between quick
-    * commits. `refs` (r18): named TAGS — (name, version) pins; a tagged
-    * snapshot SURVIVES retention expiry (the Iceberg tag/branch-ref
-    * shape), and refs carry forward through every commit path.
-    * `eqDeletes` (r18): EQUALITY-DELETE files — (bucket, `.eqd` name)
-    * pairs, each a slim sorted doc_id key list scoped to one bucket (the
-    * Iceberg-v2 equality-delete shape). Unlike a position vector, an
-    * equality delete commits WITHOUT reading any data file (the
-    * streaming-CDC delete); every reader of the bucket applies it as a
-    * key skip; compaction reconciles and drops it. */
-  /** `staged`/`stagedAdds` (r18): WRITE-AUDIT-PUBLISH — a staged
-    * snapshot is CAS-claimed into the version chain like any commit but
-    * is invisible to the main read path ([[read]] skips it); auditors
-    * address it explicitly (`option("version", v)`), and
-    * [[GdfMaintenance.publish]] cherry-picks `stagedAdds` (the data
-    * files the staged append introduced) onto the then-current head —
-    * the Iceberg stage-only-commit (`wap.id`) + cherrypick_snapshot
-    * shape. A staged snapshot expires by ordinary retention recency, so
-    * audit-and-publish must keep pace with the retention window (the
-    * documented Iceberg WAP/expire interaction); an expired stage fails
-    * publish loudly at the manifest. */
-  /** `constraints` (r18): named CHECK constraints — (name, SQL
-    * predicate) pairs enforced on every row the write path admits (the
-    * Delta `ALTER TABLE ADD CONSTRAINT` shape). SQL-standard CHECK
-    * semantics: only a FALSE evaluation violates; UNKNOWN (null)
-    * passes. They survive overwrite like refs (table property, not
-    * data). */
-  /** `nextRowId` (r18): the row-lineage id ALLOCATOR — the next unused
-    * stable row id; [[commitVersion]] advances it as it assigns virtual
-    * ranges to newly added files. */
-  case class Manifest(schema: StructType, buckets: Int, files: Seq[FileStat],
-      layout: String = "hash", epochs: Seq[Long] = Seq.empty,
-      ts: Long = 0L, refs: Seq[(String, Int)] = Seq.empty,
-      eqDeletes: Seq[EqDelete] = Seq.empty,
-      staged: Boolean = false, stagedAdds: Seq[String] = Seq.empty,
-      constraints: Seq[(String, String)] = Seq.empty,
-      nextRowId: Long = 0L,
-      op: String = "write", // the OPERATION SUMMARY (r18): what kind of
-      // commit produced this snapshot (append/overwrite/delete/merge/
-      // compact/…) — the Iceberg snapshot-summary `operation` field,
-      // surfaced in `table$snapshots`
-      /** Staged (WAP) versions ALREADY PUBLISHED (r19) — the durable
-        * double-publish guard (the Iceberg wap.id-in-summary shape): a
-        * name-based "are the staged files still live" check breaks the
-        * moment a compaction renames them, silently re-inserting the
-        * rows on a second publish. Carried through every commit;
-        * pruned to retained versions at publish. */
-      published: Seq[Int] = Seq.empty,
-      /** Named writable BRANCHES (r19): (name, base main version) —
-        * the Iceberg branch-ref shape. A branch commit is a snapshot
-        * in the chain marked `branch=<name>` (invisible to the main
-        * read path, like a staged one); the branch HEAD is its highest
-        * such snapshot; `fastForward` lands the head's state on main
-        * when main hasn't moved past the base (divergence fails
-        * loudly). Generalizes WAP to multi-commit audit windows. */
-      branches: Seq[(String, Int)] = Seq.empty,
-      /** Which branch this snapshot belongs to ("" = main). */
-      branch: String = "",
-      /** RETENTION POLICY (r19): how many snapshots expiry keeps
-        * (0 = the [[MaxRetainedVersions]] default). A table property —
-        * set by `CALL set_retention`, carried through every commit,
-        * applied by the NEXT commit's expiry sweep (never
-        * retroactively; expiry only ever runs inside a commit). */
-      retain: Int = 0)
-
-  /** DEFAULT snapshots retained per table — older manifests (and the
-    * data files only they reference) are expired at commit, the Iceberg
-    * expire-snapshots verb in miniature. Overridable per table via the
-    * `retain` manifest property (r19, `CALL set_retention`). */
-  val MaxRetainedVersions = 3
-
-  /** Per-file, per-column Bloom filter over long values (r17): [[Bits]]
-    * bits as `Bits/64` longs, [[K]] probes from one splitmix64-style
-    * avalanche — deterministic, engine-free arithmetic, superset
-    * guarantee by construction (absent ⇒ definitely not in the file).
-    * At the graded file sizes (~600 values/file) the false-positive rate
-    * is ≈ 8 %; a production format sizes Bits per file row count. */
-  object GdfBloom {
-    val Bits = 4096
-    val K = 2
-
-    private def mix(v: Long, salt: Long): Long = {
-      var z = v + salt
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-
-    def build(values: Iterable[Long]): Array[Long] = {
-      val bits = new Array[Long](Bits / 64)
-      values.foreach { v =>
-        var k = 0
-        while (k < K) {
-          val h = java.lang.Math.floorMod(mix(v, 0x9e3779b97f4a7c15L * (k + 1)),
-            Bits.toLong).toInt
-          bits(h >> 6) |= (1L << (h & 63))
-          k += 1
-        }
-      }
-      bits
-    }
-
-    def mightContain(bits: Array[Long], v: Long): Boolean = {
-      var k = 0
-      while (k < K) {
-        val h = java.lang.Math.floorMod(mix(v, 0x9e3779b97f4a7c15L * (k + 1)),
-          Bits.toLong).toInt
-        if ((bits(h >> 6) & (1L << (h & 63))) == 0L) return false
-        k += 1
-      }
-      true
-    }
-
-    def toHex(bits: Array[Long]): String =
-      bits.map(l => f"$l%016x").mkString
-
-    def fromHex(s: String): Array[Long] =
-      s.grouped(16).map(g => java.lang.Long.parseUnsignedLong(g, 16)).toArray
-  }
-
-  /** Manifest versions present on disk, ascending. */
-  def versions(path: String): Seq[Int] =
-    Option(new File(path).listFiles()).toSeq.flatten
-      .flatMap(f => "manifest-v(\\d+)\\.json".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .sorted
-
-  def nextVersion(path: String): Int =
-    versions(path).lastOption.getOrElse(0) + 1
-
-  private def render(m: Manifest): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val files = m.files.map { f =>
-      val stats =
-        if (f.colStats.isEmpty) ""
-        else f.colStats.map { case (c, mn, mx) =>
-          s"""{"col":${q(c)},"min":$mn,"max":$mx}"""
-        }.mkString(""","stats":[""", ",", "]")
-      val blooms =
-        if (f.colBlooms.isEmpty) ""
-        else f.colBlooms.map { case (c, bits) =>
-          s"""{"col":${q(c)},"bits":"${GdfBloom.toHex(bits)}"}"""
-        }.mkString(""","blooms":[""", ",", "]")
-      val kmv =
-        if (f.colKmv.isEmpty) ""
-        else f.colKmv.map { case (c, hs) =>
-          s"""{"col":${q(c)},"h":"${GdfBloom.toHex(hs.toArray)}"}"""
-        }.mkString(""","kmv":[""", ",", "]")
-      val sums =
-        if (f.colSums.isEmpty) ""
-        else f.colSums.map { case (c, sm, nn) =>
-          s"""{"col":${q(c)},"s":$sm,"n":$nn}"""
-        }.mkString(""","sums":[""", ",", "]")
-      val dv = f.dv.map(d =>
-        s""","dv":${q(d)},"dvRows":${f.dvRows}""").getOrElse("")
-      s"""{"name":${q(f.name)},"bucket":${f.bucket},"rows":${f.rows},""" +
-        s""""minDocId":${f.minDocId},"maxDocId":${f.maxDocId},""" +
-        s""""seq":${f.seq},"fr":${f.firstRowId}$stats$blooms$kmv$sums$dv}"""
-    }
-      .mkString("[", ",", "]")
-    val epochs = m.epochs.mkString("[", ",", "]")
-    val refs = m.refs.map { case (n, v) => s"""{"tag":${q(n)},"v":$v}""" }
-      .mkString("[", ",", "]")
-    val eqd = m.eqDeletes.map(e =>
-        s"""{"b":${e.bucket},"f":${q(e.file)},"s":${e.seq}}""")
-      .mkString("[", ",", "]")
-    val wap =
-      if (!m.staged) ""
-      else s""""staged":true,"stagedAdds":${
-        m.stagedAdds.map(q).mkString("[", ",", "]")},"""
-    val cons =
-      if (m.constraints.isEmpty) ""
-      else m.constraints.map { case (n, p) => s"""{"n":${q(n)},"p":${q(p)}}""" }
-        .mkString(""""constraints":[""", ",", "],")
-    val pub =
-      if (m.published.isEmpty) ""
-      else s""""published":${m.published.mkString("[", ",", "]")},"""
-    val brs =
-      if (m.branches.isEmpty) ""
-      else m.branches.map { case (n, v) => s"""{"br":${q(n)},"base":$v}""" }
-        .mkString(""""branches":[""", ",", "],")
-    val br = if (m.branch.isEmpty) "" else s""""branch":${q(m.branch)},"""
-    val ret = if (m.retain <= 0) "" else s""""retain":${m.retain},"""
-    s"""{"schema":${m.schema.json},"buckets":${m.buckets},""" +
-      s""""layout":${q(m.layout)},"ts":${m.ts},"nextRowId":${m.nextRowId},""" +
-      s""""op":${q(m.op)},""" +
-      s"""$wap$cons$pub$brs$br$ret"refs":$refs,"eqd":$eqd,""" +
-      s""""epochs":$epochs,"files":$files}"""
-  }
-
-  private def writeTmp(dir: File, json: String): File = {
-    dir.mkdirs()
-    val tmp = File.createTempFile(".manifest", ".tmp", dir)
-    val out = new FileOutputStream(tmp)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    tmp
-  }
-
-  /** Refresh the `manifest.json` convenience pointer to the HIGHEST
-    * retained snapshot (monotonic — a racing loser can never roll the
-    * pointer back, because the pointer is always re-derived from the
-    * version files, which only the CAS claim creates). */
-  private def refreshPointer(path: String): Unit = synchronized {
-    mainVersions(path).lastOption.foreach { v =>
-      val tmp = writeTmp(new File(path), new String(
-        java.nio.file.Files.readAllBytes(
-          new File(path, s"manifest-v$v.json").toPath),
-        StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp.toPath,
-        new File(path, "manifest.json").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Commit one SNAPSHOT at `version` — COMPARE-AND-SWAP (r18): the
-    * immutable `manifest-v<N>.json` is claimed by an atomic NO-REPLACE
-    * rename; if another committer already claimed N (it read the same
-    * parent N-1), the rename fails and this commit throws
-    * [[GdfCommitConflict]] WITHOUT mutating any table state — the caller
-    * ([[commitRetry]]) re-reads and retries at N+1. After a successful
-    * claim the convenience pointer refreshes and snapshots beyond
-    * [[MaxRetainedVersions]] are EXPIRED — their manifest files removed
-    * and any data/delete file no retained snapshot references deleted
-    * (time travel works exactly as far back as the retention window, and
-    * a read of an expired version fails loudly at the manifest, never
-    * silently serves half a snapshot). */
-  def commitVersion(path: String, m: Manifest, version: Int): Unit = {
-    val dir = new File(path)
-    // monotonic commit timestamp (r18): TIMESTAMP AS OF resolution needs
-    // a total order even when two commits land within one clock tick
-    val parentTs = versions(path).lastOption
-      .flatMap(v => readVersionOpt(path, v)).map(_.ts).getOrElse(0L)
-    // DATA SEQUENCE NUMBERS stamped centrally (r18): a file name seen in
-    // any retained snapshot keeps its original seq; a genuinely new name
-    // (append, rewrite, compaction output) is sequenced at THIS version.
-    // Equality-delete files sequence the same way — the scan's
-    // `fileSeq < eqSeq` rule then scopes each delete to strictly older
-    // data, so appends neither resurrect deleted rows nor lose new ones.
-    // STAGED manifests are excluded from the known map: their files'
-    // sequence becomes final only at PUBLISH (the Iceberg cherry-pick
-    // re-sequences — the change "happens" when it reaches main).
-    val retained = versions(path).flatMap(v => readVersionOpt(path, v))
-      .filterNot(_.staged)
-    val knownFileSeq: Map[String, Int] =
-      retained.flatMap(_.files.map(f => f.name -> f.seq)).toMap
-    val knownEqSeq: Map[String, Int] =
-      retained.flatMap(_.eqDeletes.map(e => e.file -> e.seq)).toMap
-    // ROW-LINEAGE id allocation (r18): carried files keep their range;
-    // files materializing physical _row_id keep the sentinel; genuinely
-    // new virtual files draw fresh ranges from the allocator in
-    // NUMERIC-BUCKET-then-name order (r19 fix: names EMBED the bucket
-    // number, so lexicographic name order puts "part-10-…" before
-    // "part-2-…" at ≥10 buckets — the documented bucket-then-doc_id
-    // rule the oracle re-derives needs the numeric sort)
-    val knownFr: Map[String, Long] =
-      retained.flatMap(_.files.map(f => f.name -> f.firstRowId)).toMap
-    var rowIdCursor = retained.lastOption.map(_.nextRowId).getOrElse(0L)
-    val assigned: Map[String, Long] = m.files
-      .filter(f => !knownFr.contains(f.name) && f.firstRowId != PhysicalRowIds)
-      .sortBy(f => (f.bucket, f.name))
-      .map { f => val fr = rowIdCursor; rowIdCursor += f.rows; f.name -> fr }
-      .toMap
-    val stamped = m.copy(
-      ts = math.max(System.currentTimeMillis(), parentTs + 1),
-      nextRowId = rowIdCursor,
-      files = m.files.map(f =>
-        f.copy(seq = knownFileSeq.getOrElse(f.name, version),
-          firstRowId =
-            if (f.firstRowId == PhysicalRowIds) PhysicalRowIds
-            else knownFr.getOrElse(f.name, assigned(f.name)))),
-      eqDeletes = m.eqDeletes.map(e =>
-        e.copy(seq = knownEqSeq.getOrElse(e.file, version))))
-    val tmp = writeTmp(dir, render(stamped))
-    val vf = new File(dir, s"manifest-v$version.json")
-    // the CAS primitive: hard-link creation is ATOMIC no-replace on
-    // POSIX — exactly one of two racers gets the version file (a plain
-    // rename would silently overwrite; move-no-replace is check-then-
-    // rename, a TOCTOU hole under contention)
-    try java.nio.file.Files.createLink(vf.toPath, tmp.toPath)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new GdfCommitConflict(
-          s"snapshot v$version at $path was claimed by a concurrent commit")
-    }
-    finally tmp.delete()
-    // belt-and-braces: claiming an EXPIRED version number (possible only
-    // if >MaxRetainedVersions commits landed between our read and claim)
-    // must not resurrect history — detect and surrender the claim
-    if (versions(path).last != version) {
-      vf.delete()
-      throw new GdfCommitConflict(
-        s"snapshot v$version at $path is older than the retained window")
-    }
-    refreshPointer(path)
-    // EXPIRY: only files referenced by an expiring snapshot and by NO
-    // retained one may be deleted — never a blanket unreferenced sweep,
-    // which would destroy a RACING writer's in-flight data files written
-    // ahead of its commit (a failed write's true orphans are left for a
-    // separate orphan-GC verb, the Iceberg split of responsibilities)
-    def fileRefs(vm: Manifest): Set[String] =
-      (vm.files.map(_.name) ++ vm.files.flatMap(_.dv) ++
-        vm.eqDeletes.map(_.file)).toSet
-    val all = versions(path)
-    // TAGGED versions are PINNED (r18): a named ref keeps its snapshot
-    // (and the files it needs) past the retention window — expiry never
-    // breaks a tag
-    // the MAIN HEAD is always pinned too (r18): stacked staged commits
-    // must never expire the snapshot the main read path serves
-    // BRANCH heads and their fork bases are pinned (r19): a branch must
-    // survive main-side retention churn until it is fast-forwarded or
-    // dropped — expiry never breaks a named ref, tag or branch alike
-    // (intermediate branch snapshots expire normally; the head's
-    // cumulative file set keeps the data)
-    val branchPins: Set[Int] = {
-      val branched = versions(path)
-        .flatMap(v => readVersionOpt(path, v).map(m => (v, m)))
-        .filter(_._2.branch.nonEmpty)
-      branched.groupBy(_._2.branch).flatMap { case (_, vs) =>
-        val (hv, hm) = vs.maxBy(_._1)
-        hv +: hm.branches.map(_._2)
-      }.toSet
-    }
-    val pinned = stamped.refs.map(_._2).toSet ++
-      mainVersions(path).lastOption.toSet ++ branchPins
-    val retainN = if (stamped.retain > 0) stamped.retain
-      else MaxRetainedVersions
-    val keep = (all.takeRight(retainN).toSet ++ pinned).toSeq
-    val expired = all.filterNot(keep.contains)
-    val dead = expired.flatMap(v =>
-        readVersionOpt(path, v).toSeq.flatMap(fileRefs)).toSet --
-      keep.flatMap(v => readVersionOpt(path, v).toSeq.flatMap(fileRefs)) --
-      fileRefs(stamped)
-    expired.foreach(v => new File(path, s"manifest-v$v.json").delete())
-    dead.foreach(n => new File(path, n).delete())
-  }
-
-  /** The OPTIMISTIC COMMIT LOOP (r18): read the current table state,
-    * apply the caller's delta, CAS-claim the next version; on
-    * [[GdfCommitConflict]] re-read (now including the winner's commit)
-    * and re-apply — the loser's delta lands on top instead of silently
-    * overwriting the winner (the Iceberg/Delta OCC shape). `update`
-    * receives the CURRENT manifest (None for an empty table) and returns
-    * the manifest to commit, or None to skip committing entirely (the
-    * streaming sink's replayed-epoch no-op re-checks its ledger HERE, so
-    * a replay racing a genuine commit still no-ops). Returns the
-    * committed version, or -1 when update returned None. */
-  def commitRetry(path: String, op: String)(
-      update: Option[Manifest] => Option[Manifest]): Int = {
-    var attempts = 0
-    while (true) {
-      val cur = if (versions(path).isEmpty) None else Some(read(path))
-      val v = nextVersion(path)
-      update(cur) match {
-        case None => return -1
-        case Some(m) =>
-          try { commitVersion(path, m.copy(op = op), v); return v }
-          catch {
-            case _: GdfCommitConflict =>
-              attempts += 1
-              require(attempts < 100,
-                s"commit at $path still conflicting after $attempts attempts")
-          }
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** Read a pinned snapshot. */
-  def readVersion(path: String, version: Int): Manifest = {
-    val f = new File(path, s"manifest-v$version.json")
-    require(f.exists(),
-      s"no snapshot v$version at $path (retained: ${versions(path).mkString(",")})")
-    parse(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      StandardCharsets.UTF_8))
-  }
-
-  /** [[readVersion]] tolerating a snapshot EXPIRED between the
-    * versions() listing and the read (r19) — the race every
-    * list-then-read scan inside the commit path has against a
-    * CONCURRENT committer's expiry sweep: a vanished manifest is
-    * "already expired", simply skipped, never a crash that loses the
-    * caller's commit. Explicit version requests (time travel) keep the
-    * loud [[readVersion]]. */
-  def readVersionOpt(path: String, version: Int): Option[Manifest] = {
-    val f = new File(path, s"manifest-v$version.json")
-    if (!f.exists()) None
-    else try Some(parse(new String(
-      java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-  }
-
-  /** Retained versions visible to the MAIN read path — staged (WAP)
-    * snapshots and BRANCH commits (r19) are excluded: they exist in the
-    * chain for auditors who address them explicitly (by version or by
-    * branch name), but never serve as anyone's "current", and the
-    * change feed never steps through them (changes surface at
-    * PUBLISH/fast-forward, the Iceberg stage-only contract). */
-  def mainVersions(path: String): Seq[Int] =
-    versions(path).filter(v => readVersionOpt(path, v)
-      .exists(m => !m.staged && m.branch.isEmpty))
-
-  /** The HEAD of a named branch (r19): its highest snapshot, with the
-    * version — None when no snapshot carries the name. */
-  def branchHead(path: String, name: String): Option[(Int, Manifest)] =
-    versions(path).flatMap(v => readVersionOpt(path, v).map(m => (v, m)))
-      .filter(_._2.branch == name).lastOption
-
-  /** Current state = the HIGHEST retained NON-STAGED snapshot. The
-    * `manifest.json` pointer is only a fallback (pre-CAS tables /
-    * external tools): under racing committers the version files are the
-    * source of truth — a stale pointer can never serve an older
-    * snapshot as current. */
-  def read(path: String): Manifest =
-    mainVersions(path).lastOption.flatMap(v => readVersionOpt(path, v))
-      .orElse(mainVersions(path).lastOption
-        .flatMap(v => readVersionOpt(path, v))) // one retry: head moved
-      .getOrElse {
-      val f = new File(path, "manifest.json")
-      require(f.exists(), s"no graftdocs manifest at $path")
-      parse(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8))
-    }
-
-  private def parse(json: String): Manifest = {
-    // tiny hand-rolled parse of the exact shape written above (no JSON
-    // library dependency): schema via Spark's own StructType round-trip
-    val schemaJson = {
-      val start = json.indexOf("\"schema\":") + 9
-      // schema value is a JSON object; find its end by brace balance
-      var depth = 0; var i = start; var end = -1
-      var inStr = false; var esc = false
-      while (end < 0 && i < json.length) {
-        val c = json.charAt(i)
-        if (esc) esc = false
-        else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-        else c match {
-          case '"' => inStr = true
-          case '{' => depth += 1
-          case '}' => depth -= 1; if (depth == 0) end = i
-          case _ =>
-        }
-        i += 1
-      }
-      json.substring(start, end + 1)
-    }
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val buckets = {
-      val m = "\"buckets\":(\\d+)".r.findFirstMatchIn(json).get
-      m.group(1).toInt
-    }
-    val layout = "\"layout\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("hash")
-    val ts = "\"ts\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val refs = "\"refs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"tag\":\"([^\"]+)\",\"v\":(\\d+)\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2).toInt)))
-    val eqd = "\"eqd\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"b\":(\\d+),\"f\":\"([^\"]+)\"(?:,\"s\":(\\d+))?\\}".r
-        .findAllMatchIn(s).map(m => EqDelete(m.group(1).toInt, m.group(2),
-          Option(m.group(3)).map(_.toInt).getOrElse(Int.MaxValue))))
-    val epochs = "\"epochs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(_.split(",").map(_.trim.toLong))
-    val staged = json.contains("\"staged\":true")
-    val constraints = "\"constraints\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"n\":\"([^\"]+)\",\"p\":\"([^\"]+)\"\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2))))
-    val stagedAdds = "\"stagedAdds\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)))
-    val nextRowId = "\"nextRowId\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val op = "\"op\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("write")
-    val published = "\"published\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(_.split(",").map(_.trim.toInt))
-    val branches = "\"branches\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"br\":\"([^\"]+)\",\"base\":(\\d+)\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2).toInt)))
-    val branch = "\"branch\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    val retain = "\"retain\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt).getOrElse(0)
-    val fileRe = ("\\{\"name\":\"([^\"]+)\",\"bucket\":(-?\\d+),\"rows\":(\\d+)," +
-      "\"minDocId\":(-?\\d+),\"maxDocId\":(-?\\d+)" +
-      "(?:,\"seq\":(\\d+))?" +
-      "(?:,\"fr\":(-?\\d+))?" +
-      "(?:,\"stats\":\\[([^\\]]*)\\])?" +
-      "(?:,\"blooms\":\\[([^\\]]*)\\])?" +
-      "(?:,\"kmv\":\\[([^\\]]*)\\])?" +
-      "(?:,\"sums\":\\[([^\\]]*)\\])?" +
-      "(?:,\"dv\":\"([^\"]+)\",\"dvRows\":(\\d+))?\\}").r
-    val statRe = "\\{\"col\":\"([^\"]+)\",\"min\":(-?\\d+),\"max\":(-?\\d+)\\}".r
-    val bloomRe = "\\{\"col\":\"([^\"]+)\",\"bits\":\"([0-9a-f]+)\"\\}".r
-    val kmvRe = "\\{\"col\":\"([^\"]+)\",\"h\":\"([0-9a-f]+)\"\\}".r
-    val sumRe = "\\{\"col\":\"([^\"]+)\",\"s\":(-?\\d+),\"n\":(\\d+)\\}".r
-    val files = fileRe.findAllMatchIn(json).map { m =>
-      val colStats = Option(m.group(8)).toSeq.flatMap(s =>
-        statRe.findAllMatchIn(s).map(sm =>
-          (sm.group(1), sm.group(2).toLong, sm.group(3).toLong)).toSeq)
-      val colBlooms = Option(m.group(9)).toSeq.flatMap(s =>
-        bloomRe.findAllMatchIn(s).map(bm =>
-          (bm.group(1), GdfBloom.fromHex(bm.group(2)))).toSeq)
-      val colKmv = Option(m.group(10)).toSeq.flatMap(s =>
-        kmvRe.findAllMatchIn(s).map(km =>
-          (km.group(1), GdfBloom.fromHex(km.group(2)).toSeq)).toSeq)
-      val colSums = Option(m.group(11)).toSeq.flatMap(s =>
-        sumRe.findAllMatchIn(s).map(sm =>
-          (sm.group(1), sm.group(2).toLong, sm.group(3).toLong)).toSeq)
-      FileStat(m.group(1), m.group(2).toInt, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong, colStats, colBlooms,
-        Option(m.group(12)), Option(m.group(13)).map(_.toLong).getOrElse(0L),
-        Option(m.group(6)).map(_.toInt).getOrElse(0), colKmv,
-        Option(m.group(7)).map(_.toLong).getOrElse(-1L), colSums)
-    }.toSeq
-    Manifest(schema, buckets, files, layout, epochs, ts, refs, eqd,
-      staged, stagedAdds, constraints, nextRowId, op, published, branches,
-      branch, retain)
-  }
 }
 
 /** `pinnedVersion` (r17): set by the catalog's `VERSION AS OF` load —
