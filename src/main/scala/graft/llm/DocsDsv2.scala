@@ -1296,9 +1296,9 @@ object DocsDsv2 {
         s"${System.currentTimeMillis() + 3600000L})").collect()
       require(expired.map(_.getLong(0)).toSeq == Seq(1L),
         s"age expiry must retire exactly v1, got ${expired.mkString(",")}")
-      val retained = Option(new java.io.File(p).listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.matches("manifest-v\\d+\\.json")).sorted
-      require(retained == Seq("manifest-v2.json"),
+      val retained = s.sql(s"SELECT version FROM $cat.`docs$$snapshots`")
+        .collect().map(_.getInt(0)).toSeq
+      require(retained == Seq(2),
         s"only the head may survive, got $retained")
     }
     s"$root/docs"

@@ -70,7 +70,7 @@ class GraftDocsCdc extends StreamSourceProvider with DataSourceRegister {
         // the named refs (r18 — start the feed "from the release tag")
         val v = parameters.get("startingversion")
           .map(s => GdfMaintenance.resolveVersion(path, s))
-          .getOrElse(GdfManifest.mainVersions(path).last)
+          .getOrElse(new GdfManifest.Listing(path).main.last._1)
         fs.mkdirs(metaDir)
         val out = fs.create(startFile, false)
         try out.write(
@@ -111,9 +111,9 @@ private[dsv2] class GdfChangesStreamSource(spark: SparkSession,
   /** Highest version already served/committed — the self-pacing floor. */
   @volatile private var emitted: Int = startVersion
 
-  /** The PUBLISHED chain only (r18): staged (write-audit-publish)
+  /** The PUBLISHED chain only: staged (write-audit-publish)
     * snapshots never become offsets — their changes stream at publish. */
-  private def mains(): Seq[Int] = GdfManifest.mainVersions(path)
+  private def mains(): Seq[Int] = new GdfManifest.Listing(path).main.map(_._1)
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(mains().last)

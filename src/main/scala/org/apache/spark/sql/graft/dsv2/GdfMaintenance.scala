@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
-/** COPY-ON-WRITE table maintenance for the graftdocs connector (r17 —
-  * the judge-ranked #1 missing verb): row-level DELETE and keyed MERGE
+/** COPY-ON-WRITE table maintenance for the graftdocs connector:
+  * row-level DELETE and keyed MERGE
   * that rewrite ONLY the files whose zone maps can hold an affected row,
   * committing the result as a new snapshot. Untouched files carry their
   * bytes AND their manifest stats over verbatim (GdfCowSpec pins
@@ -115,7 +115,7 @@ object GdfMaintenance {
 
   /** One file's LIVE rows read raw and ALIGNED to the current manifest
     * schema (normalizing old narrow-schema files — absent columns
-    * null-fill). A delete vector's positions are dropped here (r18), so
+    * null-fill). A delete vector's positions are dropped here, so
     * every rewrite path — CoW delete, merge, compaction — composes with
     * prior merge-on-read deletes: the rewritten file has no vector. */
   private def alignedRows(path: String, schema: StructType,
@@ -126,7 +126,7 @@ object GdfMaintenance {
     val dead = new java.util.BitSet()
     f.dv.foreach(d => GdfFormat.readDeleteVector(
       new File(path, d).getAbsolutePath).foreach(dead.set))
-    // EQUALITY-DELETE keys scoped to this file's bucket (r18) drop here
+    // EQUALITY-DELETE keys scoped to this file's bucket drop here
     // too, so every rewrite path physically reconciles them — under the
     // SEQUENCE RULE: a delete reaches only strictly older files
     val eqKeys: Set[Long] = eqDeletes.collect {
@@ -140,7 +140,7 @@ object GdfMaintenance {
       schema.fields.map(fld => idx(fld.name) match {
         // a column absent from the file MATERIALIZES its default on
         // rewrite (Iceberg initial-default semantics), else null-fills;
-        // _row_id (r18) synthesizes from the file's committed virtual
+        // _row_id synthesizes from the file's committed virtual
         // range so REWRITES PRESERVE ROW IDENTITY
         case -1 =>
           if (fld.name == GdfManifest.RowIdCol)
@@ -153,7 +153,7 @@ object GdfMaintenance {
 
   /** Rewrite one file at the CURRENT manifest schema, keeping rows the
     * transform returns. Returns the new FileStat, or None when every row
-    * was dropped. ROW LINEAGE (r18): the rewrite reads the hidden
+    * was dropped. ROW LINEAGE: the rewrite reads the hidden
     * `_row_id` alongside the data (synthesized from the file's virtual
     * range, or the physical block of a prior rewrite) and MATERIALIZES
     * it into the new file — the transform sees and returns schema-shaped
@@ -174,7 +174,7 @@ object GdfMaintenance {
       aligned)
   }
 
-  /** COMPACTION — the OPTIMIZE verb (r17): every bucket holding more
+  /** COMPACTION — the OPTIMIZE verb: every bucket holding more
     * than one file (appends and per-epoch sink commits fragment buckets)
     * rewrites into ONE doc_id-sorted file at the current schema; single-
     * file buckets carry their stats and bytes over verbatim; the result
@@ -185,18 +185,18 @@ object GdfMaintenance {
     * shuffle — the Iceberg rewrite_data_files / Delta OPTIMIZE shape. */
   def compact(spark: SparkSession, path: String): Unit = {
     val m = GdfManifest.read(path)
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val schema = m.schema
     val keyIdx = schema.fieldIndex("doc_id")
     val byBucket = m.files.groupBy(_.bucket).toSeq.sortBy(_._1)
     // a bucket rewrites when fragmented OR when any file carries a
     // delete vector OR when an equality-delete file is scoped to it
-    // (r18) — compaction is where BOTH delete kinds physically
+    // — compaction is where BOTH delete kinds physically
     // reconcile and their slim files drop
     val eqBuckets = m.eqDeletes.map(_.bucket).toSet
     val (multi, single) = byBucket.partition { case (b, fs) =>
       fs.size > 1 || fs.exists(_.dv.isDefined) || eqBuckets.contains(b) }
-    // compaction carries ROW LINEAGE (r18): ids read alongside the data
+    // compaction carries ROW LINEAGE: ids read alongside the data
     // (virtual range or prior physical block) and materialized into the
     // compacted file
     val schemaL = StructType(schema.fields :+
@@ -208,14 +208,14 @@ object GdfMaintenance {
         .map { case (b, fs) =>
           val rows = fs.flatMap(f => alignedRows(path, schemaL, f, m.eqDeletes))
             .sortBy(r => longOf(r(keyIdx)))
-          GdfFormat.writeFile(path, s"part-$b-c$version.gdf", schemaL, b, rows)
+          GdfFormat.writeFile(path, s"part-$b-c$tok.gdf", schemaL, b, rows)
         }
         .collect().toSeq
     commitReplacing(path, multi.flatMap(_._2.map(_.name)).toSet, compacted,
       dropEqBuckets = multi.map(_._1).toSet, op = "compact")
   }
 
-  /** SIZE-TARGETED COMPACTION — binpack (r19, judge ask #2): the
+  /** SIZE-TARGETED COMPACTION — binpack: the
     * production form of [[compact]]. `compact` rewrites every
     * fragmented bucket into ONE file — at 100 TB a bucket is terabytes
     * and a one-file bucket is neither writable in one task nor readable
@@ -249,7 +249,7 @@ object GdfMaintenance {
       targetBytes: Long): Unit = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val m = GdfManifest.read(path)
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val schemaL = StructType(m.schema.fields :+
       org.apache.spark.sql.types.StructField(GdfManifest.RowIdCol, LongType))
     val keyIdx = m.schema.fieldIndex("doc_id")
@@ -303,7 +303,7 @@ object GdfMaintenance {
               math.floor(groupBytes.toDouble / targetBytes).toInt)
             val per = math.max(1, math.ceil(rows.size.toDouble / chunks).toInt)
             rows.grouped(per).zipWithIndex.map { case (chunk, k) =>
-              GdfFormat.writeFile(path, s"part-$b-bp$version-$k.gdf",
+              GdfFormat.writeFile(path, s"part-$b-bp$tok-$k.gdf",
                 schemaL, b, chunk)
             }.toSeq
           }
@@ -313,7 +313,7 @@ object GdfMaintenance {
       rewritten, dropEqBuckets = eqDels.map(_.bucket).toSet, op = "compact")
   }
 
-  /** Commit a copy-on-write result through the OPTIMISTIC LOOP (r18):
+  /** Commit a copy-on-write result through the OPTIMISTIC LOOP:
     * current files minus the files this op rewrote, plus its new files.
     * A concurrent APPEND retries cleanly (its files fold in); a
     * concurrent rewrite of one of OUR replaced files is a genuine
@@ -324,9 +324,8 @@ object GdfMaintenance {
       dropEqBuckets: Set[Int] = Set.empty,
       widenTo: Option[StructType] = None,
       op: String): Unit =
-    GdfManifest.commitRetry(path, op) { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, op) { l =>
+      val cur = l.current
       val live = cur.files.map(_.name).toSet
       val gone = replaced.diff(live)
       require(gone.isEmpty,
@@ -336,13 +335,13 @@ object GdfMaintenance {
         cur.files.filterNot(f => replaced.contains(f.name)) ++ added,
         eqDeletes =
           cur.eqDeletes.filterNot(e => dropEqBuckets.contains(e.bucket)),
-        // merge AUTO-EVOLUTION (r18): re-merge inside the retry so a
+        // merge AUTO-EVOLUTION: re-merge inside the retry so a
         // racing widening is folded, never overwritten
         schema = widenTo.map(w => GdfAppend.mergedSchema(cur.schema, w))
           .getOrElse(cur.schema)))
     }
 
-  /** Row-level DELETE, MERGE-ON-READ (r18, judge ask #2): instead of
+  /** Row-level DELETE, MERGE-ON-READ: instead of
     * rewriting every touched file ([[deleteWhere]]'s copy-on-write —
     * full-file write amplification for a point delete into a wide
     * bucket), commit one SLIM POSITION FILE per touched file: the
@@ -364,7 +363,7 @@ object GdfMaintenance {
     require(supportedDelete(filters),
       s"unsupported delete predicate: ${filters.mkString(", ")}")
     val m = GdfManifest.read(path)
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val touched = m.files.filter(mayMatch(_, m, filters))
     if (touched.isEmpty) return
     // (file name, Some(new stat) = vector committed / None = fully dead,
@@ -391,7 +390,7 @@ object GdfMaintenance {
             if (union.size.toLong == f.rows) Some(f.name -> None)
             else {
               val base = f.name.stripSuffix(".gdf")
-              val dvName = s"$base-dv$version.dvf"
+              val dvName = s"$base-dv$tok.dvf"
               GdfFormat.writeDeleteVector(path, dvName, union)
               Some(f.name -> Some(f.copy(dv = Some(dvName),
                 dvRows = union.size.toLong)))
@@ -404,7 +403,7 @@ object GdfMaintenance {
         changes.flatMap(_._2), op = "delete")
   }
 
-  /** Row-level DELETE by KEY LIST, EQUALITY-DELETE form (r18) — the
+  /** Row-level DELETE by KEY LIST, EQUALITY-DELETE form — the
     * Iceberg-v2 equality delete, the other slim-delete shape next to the
     * position vector: commit one `.eqd` key file PER TOUCHED BUCKET and
     * NOTHING else. Where the position form must READ every touched file
@@ -427,25 +426,20 @@ object GdfMaintenance {
     val m = GdfManifest.read(path)
     require(m.layout == "hash" && m.buckets > 0,
       "equality deletes require the hash layout (keys scope to buckets)")
-    val version = GdfManifest.nextVersion(path)
     val byBucket = keys.distinct.groupBy(k =>
       java.lang.Math.floorMod(k, m.buckets.toLong).toInt)
-    // a random token keeps racing key-deletes from colliding on a file
-    // name before the CAS sees the conflict (the batch-writer discipline)
-    val token = java.util.UUID.randomUUID().toString.take(6)
+    val tok = GdfManifest.token()
     val entries = byBucket.toSeq.sortBy(_._1).map { case (b, ks) =>
-      val name = s"eq-$b-v$version-$token.eqd"
+      val name = s"eq-$b-$tok.eqd"
       GdfFormat.writeEqDelete(path, name, ks)
       GdfManifest.EqDelete(b, name) // seq stamped at commit
     }
-    GdfManifest.commitRetry(path, "delete") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
-      Some(cur.copy(eqDeletes = cur.eqDeletes ++ entries))
+    GdfManifest.commitRetry(path, "delete") { l =>
+      Some(l.current.copy(eqDeletes = l.current.eqDeletes ++ entries))
     }
   }
 
-  /** LARGE-FEED equality delete (r20, judge ask #2): the key set
+  /** LARGE-FEED equality delete: the key set
     * SHUFFLED by `pmod(key, buckets)` instead of collected — each
     * partition task writes its own bucket's `.eqd` file and the driver
     * receives only (bucket, file-name) entries, NEVER a key — the same
@@ -463,8 +457,7 @@ object GdfMaintenance {
     require(m.layout == "hash" && m.buckets > 0,
       "equality deletes require the hash layout (keys scope to buckets)")
     val buckets = m.buckets
-    val version = GdfManifest.nextVersion(path)
-    val token = java.util.UUID.randomUUID().toString.take(6)
+    val tok = GdfManifest.token()
     val entries = keys
       .select(org.apache.spark.sql.functions.col(keys.columns.head)
         .cast("long"))
@@ -479,16 +472,14 @@ object GdfMaintenance {
         val ks = iter.map(_._2).toArray.sorted
         if (ks.isEmpty) Iterator.empty
         else {
-          val name = s"eq-$b-v$version-$token.eqd"
+          val name = s"eq-$b-$tok.eqd"
           GdfFormat.writeEqDelete(path, name, ks.toSeq)
           Iterator.single(GdfManifest.EqDelete(b, name))
         }
       }.collect().toSeq // metadata only: one entry per touched bucket
     if (entries.nonEmpty)
-      GdfManifest.commitRetry(path, "delete") { curOpt =>
-        val cur = curOpt.getOrElse(
-          throw new IllegalStateException(s"no graftdocs table at $path"))
-        Some(cur.copy(eqDeletes = cur.eqDeletes ++ entries))
+      GdfManifest.commitRetry(path, "delete") { l =>
+        Some(l.current.copy(eqDeletes = l.current.eqDeletes ++ entries))
       }
   }
 
@@ -504,7 +495,7 @@ object GdfMaintenance {
     require(supportedDelete(filters),
       s"unsupported delete predicate: ${filters.mkString(", ")}")
     val m = GdfManifest.read(path)
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val (touched, untouched) = m.files.partition(mayMatch(_, m, filters))
     val schema = m.schema
     val rewritten: Seq[GdfManifest.FileStat] =
@@ -513,7 +504,7 @@ object GdfMaintenance {
         .parallelize(touched, touched.size)
         .map { f =>
           val base = f.name.stripSuffix(".gdf")
-          rewriteFile(path, schema, f, s"$base-d$version.gdf",
+          rewriteFile(path, schema, f, s"$base-d$tok.gdf",
             m.eqDeletes)(r => {
             val get = (c: String) => r(schema.fieldIndex(c))
             if (rowMatches(filters, get)) None else Some(r)
@@ -592,7 +583,7 @@ object GdfMaintenance {
         "(pass autoEvolve=true to widen the schema from the source)")
     val srcCols = mergeSchema(m, source, autoEvolve).fields
       .filter(_.name != "bucket").map(_.name)
-    // CHECK constraints (r18) gate the merge source too — updates and
+    // CHECK constraints gate the merge source too — updates and
     // inserts alike; one pass, violations surface before any rewrite
     m.constraints.foreach { case (n, sql) =>
       import org.apache.spark.sql.functions._
@@ -610,7 +601,7 @@ object GdfMaintenance {
     * per-bucket files, untouched files carry over verbatim, and the
     * whole result is one new snapshot. Source must carry the table
     * schema minus `bucket` (hash layout derives it). ROUTES on source
-    * size (r18): within [[BroadcastRowGate]] rows the source broadcasts
+    * size: within [[BroadcastRowGate]] rows the source broadcasts
     * (dim maintenance); above it the merge delegates to
     * [[mergeIntoShuffled]] and the source NEVER materializes on the
     * driver (fact-scale CDC). */
@@ -629,7 +620,7 @@ object GdfMaintenance {
     val srcCols = checkMergeSource(m, source, autoEvolve)
     val schema = mergeSchema(m, source, autoEvolve)
     val keyIdx = schema.fieldIndex(key)
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val align = alignSourceRow(schema, srcCols, keyIdx, m.buckets) _
 
     // source as raw-value rows aligned to the manifest schema —
@@ -657,7 +648,7 @@ object GdfMaintenance {
             val matched = scala.collection.mutable.Set[Long]()
             val base = f.name.stripSuffix(".gdf")
             val (stat, _) = rewriteFile(path, schema, f,
-              s"$base-m$version.gdf", m.eqDeletes) { r =>
+              s"$base-m$tok.gdf", m.eqDeletes) { r =>
               val k = longOf(r(keyIdx))
               srcB.value.get(k) match {
                 case Some(upd) => matched += k; Some(upd)
@@ -675,7 +666,7 @@ object GdfMaintenance {
       .groupBy(r => r(schema.fieldIndex("bucket")).asInstanceOf[Int])
       .toSeq.sortBy(_._1)
       .map { case (b, rows) =>
-        GdfFormat.writeFile(path, s"part-$b-m$version-ins.gdf", schema, b,
+        GdfFormat.writeFile(path, s"part-$b-m$tok-ins.gdf", schema, b,
           rows.sortBy(r => longOf(r(keyIdx))))
       }
     commitReplacing(path, touched.map(_.name).toSet,
@@ -684,7 +675,7 @@ object GdfMaintenance {
       op = "merge")
   }
 
-  /** LARGE-SOURCE keyed MERGE (r18, the judge's #1 ask): the copy-on-
+  /** LARGE-SOURCE keyed MERGE : the copy-on-
     * write upsert with the source SHUFFLED by `pmod(key, buckets)`
     * instead of collected — the fact-scale CDC regime a broadcast cannot
     * reach. Shape:
@@ -717,7 +708,7 @@ object GdfMaintenance {
     val schema = mergeSchema(m, source, autoEvolve)
     val keyIdx = schema.fieldIndex(key)
     val buckets = m.buckets
-    val version = GdfManifest.nextVersion(path)
+    val tok = GdfManifest.token()
     val filesByBucket: Map[Int, Seq[GdfManifest.FileStat]] =
       m.files.groupBy(_.bucket)
     val eqDels = m.eqDeletes // slim capture for the per-bucket tasks
@@ -751,7 +742,7 @@ object GdfMaintenance {
           val matched = scala.collection.mutable.Set[Long]()
           val rewritten = touched.flatMap { f =>
             val base = f.name.stripSuffix(".gdf")
-            rewriteFile(path, schema, f, s"$base-m$version.gdf",
+            rewriteFile(path, schema, f, s"$base-m$tok.gdf",
               eqDels) { r =>
               val k = longOf(r(keyIdx))
               srcMap.get(k) match {
@@ -764,7 +755,7 @@ object GdfMaintenance {
             .values.toSeq.sortBy(r => longOf(r(keyIdx)))
           val insertStat =
             if (inserts.isEmpty) Seq.empty
-            else Seq(GdfFormat.writeFile(path, s"part-$b-m$version-ins.gdf",
+            else Seq(GdfFormat.writeFile(path, s"part-$b-m$tok-ins.gdf",
               schema, b, inserts))
           Iterator.single((rewritten ++ insertStat, touched.map(_.name)))
         }
@@ -776,7 +767,7 @@ object GdfMaintenance {
       op = "merge")
   }
 
-  /** CHANGE DATA FEED (r18): the net row-level changes between two
+  /** CHANGE DATA FEED: the net row-level changes between two
     * retained snapshots — the Iceberg changelog-scan / Delta CDF verb.
     * Output = the table columns (minus the layout `bucket`) plus
     * `_change_type` ∈ {insert, delete, update_preimage,
@@ -802,8 +793,8 @@ object GdfMaintenance {
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     require(fromV < toV, s"changes requires fromV < toV, got $fromV..$toV")
-    val oldM = GdfManifest.readVersion(path, fromV)
-    val newM = GdfManifest.readVersion(path, toV)
+    val l = new GdfManifest.Listing(path)
+    val (oldM, newM) = (l.snapshot(fromV), l.snapshot(toV))
     require(!oldM.staged && !newM.staged,
       s"the change feed addresses PUBLISHED snapshots only; " +
         s"v$fromV/v$toV at $path includes a staged one")
@@ -812,7 +803,7 @@ object GdfMaintenance {
     val removed = oldM.files.filterNot(f => newByName.contains(f.name))
     val added = newM.files.filterNot(f => oldByName.contains(f.name))
     // a carried-over file's rows can still change logically when its dv
-    // grew OR when its bucket's EQUALITY-DELETE set changed (r18)
+    // grew OR when its bucket's EQUALITY-DELETE set changed
     val eqChanged: Set[Int] =
       ((newM.eqDeletes.toSet diff oldM.eqDeletes.toSet) ++
         (oldM.eqDeletes.toSet diff newM.eqDeletes.toSet)).map(_.bucket)
@@ -826,7 +817,7 @@ object GdfMaintenance {
         .option("files", names.mkString(","))
         .load(path)
       // an old side predating schema evolution fills the new columns
-      // with their DEFAULT when one is declared (r18), else null
+      // with their DEFAULT when one is declared, else null
       cols.foldLeft(base) { (df, c) =>
         if (df.columns.contains(c)) df
         else df.withColumn(c, GdfManifest.defaultColumn(newM.schema(c)))
@@ -856,7 +847,7 @@ object GdfMaintenance {
       .select(col("c.*"))
   }
 
-  /** APPLY CHANGES (r18) — consume a CHANGE FEED into a table: the
+  /** APPLY CHANGES — consume a CHANGE FEED into a table: the
     * Delta APPLY CHANGES INTO / CDC-replication verb. The feed carries
     * the table columns plus `_change_type`
     * (insert/delete/update_preimage/update_postimage — exactly what
@@ -881,7 +872,7 @@ object GdfMaintenance {
     import org.apache.spark.sql.functions._
     require(feed.columns.contains("_change_type"),
       "applyChanges needs the feed's _change_type column")
-    // deletes ROUTE on size like the upsert leg (r20, judge ask #2): a
+    // deletes ROUTE on size like the upsert leg: a
     // bounded tombstone set collects (one tiny job); a fact-scale feed
     // builds its equality-delete files DISTRIBUTED — the driver never
     // holds a key
@@ -904,7 +895,7 @@ object GdfMaintenance {
       autoEvolve = autoEvolve)
   }
 
-  /** REBUCKET — hash-layout partition evolution (r18): rewrite the
+  /** REBUCKET — hash-layout partition evolution: rewrite the
     * table at a NEW bucket count as one snapshot commit (the Iceberg
     * replace-partition-spec story in the one-spec world of a hash
     * layout). Reads through the connector — so delete vectors and
@@ -926,7 +917,7 @@ object GdfMaintenance {
       .mode("overwrite").save(path)
   }
 
-  /** PUBLISH a staged snapshot (r18) — the write-audit-publish verb:
+  /** PUBLISH a staged snapshot — the write-audit-publish verb:
     * cherry-pick the staged append's `stagedAdds` data files onto the
     * CURRENT main head as a new commit (Iceberg's
     * `cherrypick_snapshot(wap_id)`). The staged write recorded exactly
@@ -936,20 +927,19 @@ object GdfMaintenance {
     * appends. Publishing twice, publishing a non-staged snapshot, or
     * publishing an expired stage all fail loudly. Returns the published
     * version. */
-  /** ADD COLUMN with an optional DEFAULT (r18) — a METADATA-ONLY commit
+  /** ADD COLUMN with an optional DEFAULT — a METADATA-ONLY commit
     * (zero data files touched, the Iceberg-v3 `initial-default` / SQL
     * `ADD COLUMN ... DEFAULT` shape): the new field lands in the
     * manifest schema with its default recorded in field metadata. Files
     * predating the column serve the default in every read path; every
     * rewrite materializes it; later writes may fill real values. With
-    * no default the column null-fills — exactly the r17 evolution
+    * no default the column null-fills — exactly the evolution
     * behavior the append path already has. */
   def addColumn(path: String, name: String,
       dataType: org.apache.spark.sql.types.DataType,
       default: Option[String]): Unit =
-    GdfManifest.commitRetry(path, "add-column") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "add-column") { l =>
+      val cur = l.current
       require(!cur.schema.fieldNames.contains(name),
         s"column '$name' already exists at $path")
       require(dataType == LongType || dataType == IntegerType ||
@@ -967,7 +957,7 @@ object GdfMaintenance {
         org.apache.spark.sql.types.StructType(cur.schema.fields :+ field)))
     }
 
-  /** DROP COLUMN (r20, judge ask #4) — the inverse metadata-only
+  /** DROP COLUMN — the inverse metadata-only
     * commit: the field leaves the manifest schema; data files keep
     * their bytes (a scan never requests the dropped blocks — column
     * pruning seeks past them by compressed length, so the dead data
@@ -976,9 +966,8 @@ object GdfMaintenance {
     * (doc_id, bucket) and columns a CHECK constraint references
     * refuse loudly. */
   def dropColumn(path: String, name: String): Unit =
-    GdfManifest.commitRetry(path, "drop-column") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "drop-column") { l =>
+      val cur = l.current
       require(cur.schema.fieldNames.contains(name),
         s"no column '$name' at $path")
       require(name != "doc_id" && name != "bucket",
@@ -995,7 +984,7 @@ object GdfMaintenance {
         cur.schema.fields.filterNot(_.name == name))))
     }
 
-  /** ADD a named CHECK CONSTRAINT (r18) — the Delta `ALTER TABLE ADD
+  /** ADD a named CHECK CONSTRAINT — the Delta `ALTER TABLE ADD
     * CONSTRAINT` shape: existing rows are VALIDATED first (a violation
     * anywhere fails the add loudly, nothing commits), then the (name,
     * predicate) pair lands in the manifest as a metadata-only commit.
@@ -1003,7 +992,7 @@ object GdfMaintenance {
     * SQL-standard three-valued semantics (only FALSE violates; UNKNOWN
     * passes) — batch appends, overwrites, streaming epochs, and merge
     * sources alike. Validation and commit are two steps under OCC, and
-    * BOTH race directions are closed (r19, ADVICE fix): files appended
+    * BOTH race directions are closed: files appended
     * between the pre-check and our CAS claim are RE-VALIDATED inside
     * the retry closure (a `files`-subset read — O(new files), never a
     * rescan); a write that bound the pre-constraint set but commits
@@ -1025,9 +1014,8 @@ object GdfMaintenance {
       s"cannot add constraint '$name' ($sql) at $path: existing rows violate it")
     afterPrecheck()
     var checked: Set[String] = pre.files.map(_.name).toSet
-    GdfManifest.commitRetry(path, "add-constraint") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "add-constraint") { l =>
+      val cur = l.current
       require(!cur.constraints.exists(_._1 == name),
         s"constraint '$name' already exists at $path")
       val fresh = cur.files.map(_.name).filterNot(checked.contains)
@@ -1042,7 +1030,7 @@ object GdfMaintenance {
     }
   }
 
-  /** SET the snapshot-RETENTION policy (r19) — how many snapshots
+  /** SET the snapshot-RETENTION policy — how many snapshots
     * expiry keeps (the Iceberg expire_snapshots `retain_last` knob as a
     * durable table property): a metadata-only commit; the policy
     * applies at the NEXT commit's expiry sweep (expiry only ever runs
@@ -1051,24 +1039,22 @@ object GdfMaintenance {
     * `n = 0` restores the default. */
   def setRetention(path: String, n: Int): Unit = {
     require(n >= 0, s"retention must be >= 0 (0 = default), got $n")
-    GdfManifest.commitRetry(path, "set-retention") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "set-retention") { l =>
+      val cur = l.current
       Some(cur.copy(retain = n))
     }
   }
 
   /** Drop a named constraint; subsequent writes stop enforcing it. */
   def dropConstraint(path: String, name: String): Unit =
-    GdfManifest.commitRetry(path, "drop-constraint") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "drop-constraint") { l =>
+      val cur = l.current
       require(cur.constraints.exists(_._1 == name),
         s"no constraint '$name' at $path")
       Some(cur.copy(constraints = cur.constraints.filterNot(_._1 == name)))
     }
 
-  /** NDV ESTIMATE from METADATA ONLY (r18) — the Iceberg-Puffin
+  /** NDV ESTIMATE from METADATA ONLY — the Iceberg-Puffin
     * statistics story: every data file carries per-column KMV bottom-k
     * sketches; bottom-k sets merge by union + re-take, so the
     * table-level distinct-count estimate folds from the manifest
@@ -1096,26 +1082,24 @@ object GdfMaintenance {
   /** The current MAIN snapshot version — the public face of the
     * version chain (staged snapshots excluded). */
   def currentVersion(path: String): Int =
-    GdfManifest.mainVersions(path).last
+    new GdfManifest.Listing(path).main.last._1
 
   /** Retained snapshot versions that are unpublished stages — the
     * public face callers audit/publish through. */
   def stagedVersions(path: String): Seq[Int] =
-    GdfManifest.versions(path)
-      .filter(v => GdfManifest.readVersionOpt(path, v).exists(_.staged))
+    new GdfManifest.Listing(path).staged
 
   def publish(path: String, stagedVersion: Int): Int =
-    GdfManifest.commitRetry(path, "publish") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
-      val s = GdfManifest.readVersion(path, stagedVersion) // loud if expired
+    GdfManifest.commitRetry(path, "publish") { l =>
+      val cur = l.current
+      val s = l.snapshot(stagedVersion) // loud if expired
       require(s.staged,
         s"v$stagedVersion at $path is not a staged snapshot")
       val addNames = s.stagedAdds.toSet
       val adds = s.files.filter(f => addNames.contains(f.name))
       require(adds.map(_.name).toSet == addNames,
         s"staged snapshot v$stagedVersion lost track of its adds")
-      // DURABLE double-publish guard (r19, ADVICE fix): the manifest
+      // DURABLE double-publish guard: the manifest
       // RECORDS published staged versions — the Iceberg
       // wap.id-in-summary approach. Inferring from live file names
       // broke the moment a compaction renamed the published files (a
@@ -1131,10 +1115,10 @@ object GdfMaintenance {
         // prune entries whose staged manifests expired — they can never
         // be published again anyway (readVersion fails loudly first)
         published = cur.published
-          .filter(GdfManifest.versions(path).contains) :+ stagedVersion))
+          .filter(l.versions.contains) :+ stagedVersion))
     }
 
-  /** SNAPSHOT ROLLBACK (r19, judge ask #3) — the first verb an operator
+  /** SNAPSHOT ROLLBACK — the first verb an operator
     * reaches for after a bad commit (Iceberg `rollback_to_snapshot`): a
     * NEW snapshot whose DATA state (file set + equality deletes) is the
     * target version's, committed through the optimistic loop. No
@@ -1148,15 +1132,14 @@ object GdfMaintenance {
     * Rollback-of-rollback is just another rollback (GdfRollbackSpec
     * pins it). Returns the new version. */
   def rollback(path: String, toVersion: Int): Int =
-    GdfManifest.commitRetry(path, "rollback") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
-      val tgt = GdfManifest.readVersion(path, toVersion) // loud if expired
+    GdfManifest.commitRetry(path, "rollback") { l =>
+      val cur = l.current
+      val tgt = l.snapshot(toVersion) // loud if expired
       require(!tgt.staged && tgt.branch.isEmpty,
         s"cannot roll back to v$toVersion at $path: " +
           "staged/branch snapshots are not main history")
-      // CHECK constraints added AFTER the target version (r20, ADVICE
-      // fix): the restored rows were never validated against them — a
+      // CHECK constraints added AFTER the target version: the restored
+      // rows were never validated against them — a
       // delete-then-addConstraint-then-rollback sequence would
       // resurrect unchecked rows, a hole in the requireCurrent
       // invariant. Target-time rows were already validated against
@@ -1187,7 +1170,7 @@ object GdfMaintenance {
       Some(cur.copy(files = tgt.files, eqDeletes = tgt.eqDeletes))
     }
 
-  /** FAST-FORWARD a branch onto main (r19, judge ask #4) — the Iceberg
+  /** FAST-FORWARD a branch onto main — the Iceberg
     * `fast_forward('main', branch)` verb completing the branch story
     * (see [[GdfManifest.Manifest]]'s `branch` field: branch commits are
     * appends invisible to main, addressed by name — the multi-commit
@@ -1199,16 +1182,15 @@ object GdfMaintenance {
     * afterwards; [[dropBranch]] retires them. Returns the new main
     * version. */
   def fastForward(path: String, branch: String): Int =
-    GdfManifest.commitRetry(path, "fast-forward") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
-      val (_, head) = GdfManifest.branchHead(path, branch).getOrElse(
+    GdfManifest.commitRetry(path, "fast-forward") { l =>
+      val cur = l.current
+      val (_, head) = l.branchHead(branch).getOrElse(
         throw new IllegalArgumentException(s"no branch '$branch' at $path"))
       val base = head.branches.collectFirst {
         case (n, v) if n == branch => v
       }.getOrElse(throw new IllegalStateException(
         s"branch '$branch' at $path lost its fork base"))
-      val mainHead = GdfManifest.mainVersions(path).last
+      val mainHead = l.head.get._1
       require(mainHead == base,
         s"cannot fast-forward '$branch' at $path: main moved " +
           s"v$base -> v$mainHead since the fork — divergent histories " +
@@ -1221,14 +1203,15 @@ object GdfMaintenance {
     * pins with them); data files only they referenced become orphans
     * for the age-guarded [[removeOrphans]] sweep — the expiry/GC split
     * of responsibilities, applied to refs. */
-  def dropBranch(path: String, branch: String): Unit = {
-    val vs = GdfManifest.versions(path)
-      .filter(v => GdfManifest.readVersionOpt(path, v).exists(_.branch == branch))
+  def dropBranch(path: String, branch: String): Seq[Int] = {
+    val vs = new GdfManifest.Listing(path).snapshots
+      .collect { case (v, m) if m.branch == branch => v }
     require(vs.nonEmpty, s"no branch '$branch' at $path")
-    vs.foreach(v => new File(path, s"manifest-v$v.json").delete())
+    GdfManifest.deleteVersions(path, vs)
+    vs
   }
 
-  /** Create a named TAG pinning a retained snapshot (r18) — the Iceberg
+  /** Create a named TAG pinning a retained snapshot — the Iceberg
     * ref shape: `VERSION AS OF '<tag>'` resolves through it, and the
     * pinned snapshot (plus the files it needs) SURVIVES retention
     * expiry. Tag creation is itself a (metadata-only) commit through the
@@ -1236,10 +1219,9 @@ object GdfMaintenance {
   def createTag(path: String, tag: String, version: Int): Unit = {
     require(tag.nonEmpty && !tag.forall(_.isDigit),
       s"tag '$tag' must be non-numeric (numeric strings address versions)")
-    GdfManifest.commitRetry(path, "tag") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
-      require(GdfManifest.versions(path).contains(version),
+    GdfManifest.commitRetry(path, "tag") { l =>
+      val cur = l.current
+      require(l.versions.contains(version),
         s"no retained snapshot v$version at $path to tag")
       require(!cur.refs.exists(_._1 == tag),
         s"tag '$tag' already exists at $path")
@@ -1251,51 +1233,49 @@ object GdfMaintenance {
     * next commit (never reaped retroactively here — expiry runs at
     * commit time, and this IS a commit, so the next one sweeps it). */
   def dropTag(path: String, tag: String): Unit =
-    GdfManifest.commitRetry(path, "untag") { curOpt =>
-      val cur = curOpt.getOrElse(
-        throw new IllegalStateException(s"no graftdocs table at $path"))
+    GdfManifest.commitRetry(path, "untag") { l =>
+      val cur = l.current
       require(cur.refs.exists(_._1 == tag), s"no tag '$tag' at $path")
       Some(cur.copy(refs = cur.refs.filterNot(_._1 == tag)))
     }
 
   /** Resolve a version STRING: names resolve FIRST through the current
-    * TAGS, then (r19) as a BRANCH head — so a branch that happens to be
+    * TAGS, then as a BRANCH head — so a branch that happens to be
     * named with digits is still addressable — and only then does an
-    * all-digit string fall back to a version number (r20, ADVICE fix;
-    * previously "" threw a raw NumberFormatException and digit-named
-    * refs were unreachable). Tags are non-numeric by construction
-    * ([[createTag]]), so numeric version addressing is never shadowed
-    * by a tag. */
+    * all-digit string fall back to a version number (so digit-named
+    * refs stay reachable, and "" fails loudly). Tags are non-numeric by
+    * construction ([[createTag]]), so numeric version addressing is
+    * never shadowed by a tag. */
   def resolveVersion(path: String, version: String): Int = {
     require(version.nonEmpty, s"empty version/tag/branch name at $path")
-    GdfManifest.read(path).refs.collectFirst {
-      case (t, v) if t == version => v
-    }.orElse(GdfManifest.branchHead(path, version).map(_._1))
+    val l = new GdfManifest.Listing(path)
+    val tags = l.current.refs
+    tags.collectFirst { case (`version`, v) => v }
+      .orElse(l.branchHead(version).map(_._1))
       .getOrElse {
         if (version.forall(_.isDigit)) version.toInt
         else throw new IllegalArgumentException(
           s"no tag or branch '$version' at $path (tags: " +
-            s"${GdfManifest.read(path).refs.map(_._1).mkString(", ")})")
+            s"${tags.map(_._1).mkString(", ")})")
       }
   }
 
   /** Resolve `TIMESTAMP AS OF` micros: the LATEST retained MAIN-history
     * snapshot committed at or before the instant (the published as-of
-    * rule). Staged (WAP) and branch snapshots are excluded (r20, ADVICE
-    * fix): a staged/branch commit is usually the newest snapshot, so
-    * resolving through the full chain let `TIMESTAMP AS OF <now>` on a
+    * rule). Staged (WAP) and branch snapshots are excluded: a
+    * staged/branch commit is usually the newest snapshot, so resolving
+    * through the full chain let `TIMESTAMP AS OF <now>` on a
     * main read serve unaudited rows — breaking the branch-invisibility
     * contract GdfBranchSpec pins. */
   def resolveTimestamp(path: String, micros: Long): Int = {
-    val at = GdfManifest.mainVersions(path)
-      .flatMap(v => GdfManifest.readVersionOpt(path, v).map(m => v -> m.ts))
-      .filter(_._2 * 1000L <= micros)
+    val at = new GdfManifest.Listing(path).main
+      .filter(_._2.ts * 1000L <= micros)
     require(at.nonEmpty,
       s"no snapshot at or before timestamp $micros at $path")
-    at.maxBy(_._2)._1
+    at.maxBy(_._2.ts)._1
   }
 
-  /** PER-COMMIT CHANGELOG (r18): [[changes]] emitted at COMMIT
+  /** PER-COMMIT CHANGELOG: [[changes]] emitted at COMMIT
     * granularity over the whole retained history — one `_commit_version`
     * per snapshot transition, the Iceberg changelog-scan semantics (a
     * net window collapses a key's journey; the changelog preserves each
@@ -1304,10 +1284,10 @@ object GdfMaintenance {
     * O(changed files) read; the union is their concatenation. */
   def changesLog(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    // MAIN versions only (r18): a staged (write-audit-publish) snapshot
+    // MAIN versions only: a staged (write-audit-publish) snapshot
     // never enters the feed — its changes surface at publish, as part
     // of the publishing commit's window
-    val vs = GdfManifest.mainVersions(path)
+    val vs = new GdfManifest.Listing(path).main.map(_._1)
     require(vs.size >= 2,
       s"changelog needs at least two retained snapshots at $path, got $vs")
     vs.sliding(2).map { case Seq(a, b) =>
@@ -1315,69 +1295,36 @@ object GdfMaintenance {
     }.reduce(_.unionByName(_))
   }
 
-  /** TIME-BASED SNAPSHOT EXPIRY (r20, judge ask #5) — the Iceberg
+  /** TIME-BASED SNAPSHOT EXPIRY — the Iceberg
     * `expire_snapshots(older_than => ts)` verb, the operator-invoked
-    * counterpart of the count-based sweep every commit runs: expire
-    * every retained snapshot committed BEFORE `olderThanMs` (epoch
-    * millis). The SAME pins always win — tags, the main head, branch
-    * heads and their fork bases — and `retainLast` (Iceberg's
-    * `retain_last`, default 1) keeps the newest N snapshots regardless
-    * of age, so an idle table can never expire itself empty. Data and
-    * delete files referenced only by expired snapshots are deleted;
-    * anything a kept snapshot references survives (the exact
-    * commit-time discipline). Concurrent committers tolerate the sweep
-    * the same way they tolerate commit-time expiry — every internal
-    * list-then-read is `readVersionOpt` (r19 hardening). Returns the
-    * expired versions. */
+    * counterpart of the count-based sweep every commit runs, and the
+    * same routine ([[GdfManifest.expire]]): expire every retained
+    * snapshot committed BEFORE `olderThanMs` (epoch millis). The same
+    * pins always win — tags, the main head, branch heads and their fork
+    * bases — and `retainLast` (Iceberg's `retain_last`, default 1) keeps
+    * the newest N snapshots regardless of age, so an idle table can
+    * never expire itself empty. Returns the expired versions. */
   def expireSnapshots(path: String, olderThanMs: Long,
       retainLast: Int = 1): Seq[Int] = {
     require(retainLast >= 1, s"retain_last must be >= 1, got $retainLast")
-    val all = GdfManifest.versions(path)
-    val metas = all.flatMap(v =>
-      GdfManifest.readVersionOpt(path, v).map(m => (v, m)))
-    if (metas.isEmpty) return Seq.empty
-    val branchPins: Set[Int] = metas.filter(_._2.branch.nonEmpty)
-      .groupBy(_._2.branch).flatMap { case (_, vs) =>
-        val (hv, hm) = vs.maxBy(_._1)
-        hv +: hm.branches.map(_._2)
-      }.toSet
-    val cur = GdfManifest.read(path)
-    val pinned = cur.refs.map(_._2).toSet ++
-      GdfManifest.mainVersions(path).lastOption.toSet ++ branchPins
-    val keepRecent = all.takeRight(retainLast).toSet
-    val expired = metas.collect {
-      case (v, m) if m.ts < olderThanMs && !pinned.contains(v) &&
-        !keepRecent.contains(v) => v
-    }
-    val keep = all.filterNot(expired.contains)
-    def fileRefs(vm: GdfManifest.Manifest): Set[String] =
-      (vm.files.map(_.name) ++ vm.files.flatMap(_.dv) ++
-        vm.eqDeletes.map(_.file)).toSet
-    val dead = expired.flatMap(v =>
-        GdfManifest.readVersionOpt(path, v).toSeq.flatMap(fileRefs)).toSet --
-      keep.flatMap(v =>
-        GdfManifest.readVersionOpt(path, v).toSeq.flatMap(fileRefs))
-    expired.foreach(v => new File(path, s"manifest-v$v.json").delete())
-    dead.foreach(n => new File(path, n).delete())
-    expired
+    val l = new GdfManifest.Listing(path)
+    val recent = l.versions.takeRight(retainLast).toSet
+    GdfManifest.expire(l, (v, m) => m.ts >= olderThanMs || recent(v))
   }
 
-  /** ORPHAN-FILE GC (r18) — the other half of the expiry split
-    * [[GdfManifest.commitVersion]] documents: snapshot expiry only ever
-    * deletes files an EXPIRED snapshot referenced, so data/delete files
-    * written by a FAILED or aborted commit (referenced by no snapshot at
-    * all) accumulate until this verb sweeps them. Deletes every
-    * `.gdf`/`.dvf` under the table dir that no RETAINED snapshot
-    * references and whose mtime is older than `olderThanMs` — the age
-    * guard is what keeps a RACING writer's in-flight files (written
-    * ahead of its commit) safe, the published Iceberg
-    * remove_orphan_files discipline. Returns the removed names. */
+  /** ORPHAN-FILE GC — the other half of the expiry split: snapshot
+    * expiry only ever deletes files an EXPIRED snapshot referenced, so
+    * data/delete files written by a FAILED or aborted commit (referenced
+    * by no snapshot at all) accumulate until this verb sweeps them.
+    * Deletes every `.gdf`/`.dvf`/`.eqd` under the table dir that no
+    * RETAINED snapshot references and whose mtime is older than
+    * `olderThanMs` — the age guard is what keeps a RACING writer's
+    * in-flight files (written ahead of its commit) safe, the published
+    * Iceberg remove_orphan_files discipline. Returns the removed names. */
   def removeOrphans(path: String,
       olderThanMs: Long): Seq[String] = {
-    val live: Set[String] = GdfManifest.versions(path).flatMap { v =>
-      val m = GdfManifest.readVersion(path, v)
-      m.files.map(_.name) ++ m.files.flatMap(_.dv)
-    }.toSet
+    val live: Set[String] = new GdfManifest.Listing(path).snapshots
+      .flatMap(s => GdfManifest.fileRefs(s._2)).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     Option(new File(path).listFiles()).toSeq.flatten
       .filter(f =>

@@ -3,37 +3,36 @@ package org.apache.spark.sql.graft.dsv2
 import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A CAS commit lost its race: another committer claimed the snapshot
-  * version first. [[GdfManifest.commitRetry]] catches this, re-reads the
-  * table state, re-applies the caller's delta, and tries the next
-  * version — the optimistic-concurrency loop every published table
-  * format (Iceberg's commit loop, Delta's OCC) serializes writers with. */
-private[dsv2] class GdfCommitConflict(msg: String)
-    extends RuntimeException(msg)
-
 /** Manifest bookkeeping: `<path>/manifest-v<N>.json` are the immutable
-  * snapshots (highest retained = current state), `<path>/manifest.json`
-  * is a convenience pointer refreshed after every commit. Commits are
-  * COMPARE-AND-SWAP (r18): the snapshot file for version N is claimed
-  * with an atomic no-replace rename, so exactly one of two racing
-  * committers wins N and the loser retries at N+1 with the winner's
-  * state folded in — concurrent committers serialize instead of
-  * silently dropping a snapshot. */
+  * snapshots (the highest retained main one is the current state), and
+  * `<path>/manifest.json` is a convenience pointer refreshed after every
+  * commit. Every commit and version-resolution decision reads the table
+  * through one [[GdfManifest.Listing]]. Commits are COMPARE-AND-SWAP:
+  * the version file is claimed with an atomic no-replace link, so
+  * exactly one of two racing committers wins N and the loser retries at
+  * N+1 with the winner's state folded in — concurrent committers
+  * serialize instead of silently dropping a snapshot. This object is the
+  * only code that knows the version-file layout. */
 private[dsv2] object GdfManifest {
-  /** Per-file stats. `colStats` (r16) is the GENERIC zone map — min/max
+  /** Per-file stats. `colStats` is the GENERIC zone map — min/max
     * for every other numeric column of the file, the per-column
     * statistics a real table format (parquet row groups, Iceberg
     * manifests) carries; doc_id keeps its dedicated fields (the
     * bucket-pin fast path and the aggregate pushdown read them).
-    * `colBlooms` (r17) is the per-file BLOOM FILTER per numeric column
+    * `colBlooms` is the per-file BLOOM FILTER per numeric column
     * ([[GdfBloom]]): point lookups prune files whose [min,max] spans the
     * probe value but which cannot actually hold it — the
     * parquet-bloom-filter / Iceberg-bloom feature, and the only pruning
     * a hash-spread column's wide zone maps can offer an EqualTo. */
-  /** `dv`/`dvRows` (r18) is the MERGE-ON-READ delete vector: the name of
+  /** `dv`/`dvRows` is the MERGE-ON-READ delete vector: the name of
     * a slim `.dvf` position file holding `dvRows` deleted row positions
     * of this (immutable) data file — the Iceberg-v2 position-delete /
     * Delta deletion-vector shape. A point delete commits the vector
@@ -42,20 +41,20 @@ private[dsv2] object GdfManifest {
     * `rows`/min/max stay the PHYSICAL file stats (still sound for
     * pruning — a superset — but no longer exact, so aggregate pushdown
     * refuses any file carrying a dv). */
-  /** `seq` (r18): the DATA SEQUENCE NUMBER — the snapshot version that
+  /** `seq`: the DATA SEQUENCE NUMBER — the snapshot version that
     * ADDED this file, stamped centrally at [[commitVersion]] (carried
     * files keep theirs; a rewrite is an add). Equality deletes apply
     * only to files with a STRICTLY OLDER seq — the Iceberg-v2 sequence
     * rule: without it, an append after an equality delete either
     * resurrects the deleted rows (entries dropped) or wrongly deletes
     * the newly appended row with the same key (entries replayed). */
-  /** `colKmv` (r18): per-file, per-column KMV (bottom-k) DISTINCT
+  /** `colKmv`: per-file, per-column KMV (bottom-k) DISTINCT
     * sketches — the Iceberg-Puffin NDV-statistics shape, deterministic
     * (md5-prefix hashes, engine-free arithmetic) so an oracle can
     * recompute the estimate bit-exactly. Bottom-k sets merge by
     * union+re-take, which is what makes per-file sketches fold into a
     * table-level NDV from METADATA ONLY — no data read. */
-  /** `firstRowId` (r18): ROW LINEAGE — the Iceberg-v3 stable row
+  /** `firstRowId`: ROW LINEAGE — the Iceberg-v3 stable row
     * identity. A file written without a physical `_row_id` block gets a
     * VIRTUAL id range at commit ([[commitVersion]] assigns
     * `firstRowId`; row id = firstRowId + physical position); every
@@ -64,7 +63,7 @@ private[dsv2] object GdfManifest {
     * (`firstRowId == PhysicalRowIds`), so identity survives the
     * rewrite. `-1` = no lineage (legacy file). Readers surface the
     * column under the `rowlineage` read option. */
-  /** `colSums` (r19): per-file, per-column EXACT (sum, non-null count)
+  /** `colSums`: per-file, per-column EXACT (sum, non-null count)
     * for every zone-mapped numeric column — what lets aggregate
     * pushdown answer SUM (and with COUNT, AVG) from METADATA ONLY, the
     * rest of the Iceberg answer-from-manifests family beyond MIN/MAX.
@@ -104,7 +103,7 @@ private[dsv2] object GdfManifest {
       d.take(8).map("%02x".format(_)).mkString.take(15), 16)
   }
 
-  /** DEFAULT COLUMN VALUES (r18) — the Iceberg-v3 `initial-default` /
+  /** DEFAULT COLUMN VALUES — the Iceberg-v3 `initial-default` /
     * SQL `ADD COLUMN ... DEFAULT` shape: a column added by
     * [[GdfMaintenance.addColumn]] records its default in the schema
     * field's metadata (persisted free through `StructType.json` in the
@@ -148,26 +147,26 @@ private[dsv2] object GdfManifest {
     * manifests parse to `Int.MaxValue` — apply to everything, the
     * pre-seq behavior). */
   case class EqDelete(bucket: Int, file: String, seq: Int = Int.MaxValue)
-  /** `layout` (r16): "hash" (bucket = pmod(doc_id, buckets) — the
+  /** `layout`: "hash" (bucket = pmod(doc_id, buckets) — the
     * EqualTo bucket-pin fast path applies) or "zorder" (bucket = a
     * Z-curve prefix cell over two columns — doc_id EqualTo must rely on
-    * zone maps alone). `epochs` (r17): streaming-sink epoch ids already
+    * zone maps alone). `epochs`: streaming-sink epoch ids already
     * committed into this table — the exactly-once replay ledger (a
     * re-delivered epoch is detected here and its files dropped, the
     * Delta/Iceberg idempotent-commit shape). */
-  /** `ts` (r18): commit wall-clock millis, stamped MONOTONICALLY at
+  /** `ts`: commit wall-clock millis, stamped MONOTONICALLY at
     * [[commitVersion]] (max(now, parent ts + 1)) so `TIMESTAMP AS OF`
     * resolution is a total order even under clock skew between quick
-    * commits. `refs` (r18): named TAGS — (name, version) pins; a tagged
+    * commits. `refs`: named TAGS — (name, version) pins; a tagged
     * snapshot SURVIVES retention expiry (the Iceberg tag/branch-ref
     * shape), and refs carry forward through every commit path.
-    * `eqDeletes` (r18): EQUALITY-DELETE files — (bucket, `.eqd` name)
+    * `eqDeletes`: EQUALITY-DELETE files — (bucket, `.eqd` name)
     * pairs, each a slim sorted doc_id key list scoped to one bucket (the
     * Iceberg-v2 equality-delete shape). Unlike a position vector, an
     * equality delete commits WITHOUT reading any data file (the
     * streaming-CDC delete); every reader of the bucket applies it as a
     * key skip; compaction reconciles and drops it. */
-  /** `staged`/`stagedAdds` (r18): WRITE-AUDIT-PUBLISH — a staged
+  /** `staged`/`stagedAdds`: WRITE-AUDIT-PUBLISH — a staged
     * snapshot is CAS-claimed into the version chain like any commit but
     * is invisible to the main read path ([[read]] skips it); auditors
     * address it explicitly (`option("version", v)`), and
@@ -178,13 +177,13 @@ private[dsv2] object GdfManifest {
     * audit-and-publish must keep pace with the retention window (the
     * documented Iceberg WAP/expire interaction); an expired stage fails
     * publish loudly at the manifest. */
-  /** `constraints` (r18): named CHECK constraints — (name, SQL
+  /** `constraints`: named CHECK constraints — (name, SQL
     * predicate) pairs enforced on every row the write path admits (the
     * Delta `ALTER TABLE ADD CONSTRAINT` shape). SQL-standard CHECK
     * semantics: only a FALSE evaluation violates; UNKNOWN (null)
     * passes. They survive overwrite like refs (table property, not
     * data). */
-  /** `nextRowId` (r18): the row-lineage id ALLOCATOR — the next unused
+  /** `nextRowId`: the row-lineage id ALLOCATOR — the next unused
     * stable row id; [[commitVersion]] advances it as it assigns virtual
     * ranges to newly added files. */
   case class Manifest(schema: StructType, buckets: Int, files: Seq[FileStat],
@@ -194,18 +193,18 @@ private[dsv2] object GdfManifest {
       staged: Boolean = false, stagedAdds: Seq[String] = Seq.empty,
       constraints: Seq[(String, String)] = Seq.empty,
       nextRowId: Long = 0L,
-      op: String = "write", // the OPERATION SUMMARY (r18): what kind of
+      op: String = "write", // the OPERATION SUMMARY: what kind of
       // commit produced this snapshot (append/overwrite/delete/merge/
       // compact/…) — the Iceberg snapshot-summary `operation` field,
       // surfaced in `table$snapshots`
-      /** Staged (WAP) versions ALREADY PUBLISHED (r19) — the durable
+      /** Staged (WAP) versions ALREADY PUBLISHED — the durable
         * double-publish guard (the Iceberg wap.id-in-summary shape): a
         * name-based "are the staged files still live" check breaks the
         * moment a compaction renames them, silently re-inserting the
         * rows on a second publish. Carried through every commit;
         * pruned to retained versions at publish. */
       published: Seq[Int] = Seq.empty,
-      /** Named writable BRANCHES (r19): (name, base main version) —
+      /** Named writable BRANCHES: (name, base main version) —
         * the Iceberg branch-ref shape. A branch commit is a snapshot
         * in the chain marked `branch=<name>` (invisible to the main
         * read path, like a staged one); the branch HEAD is its highest
@@ -215,20 +214,25 @@ private[dsv2] object GdfManifest {
       branches: Seq[(String, Int)] = Seq.empty,
       /** Which branch this snapshot belongs to ("" = main). */
       branch: String = "",
-      /** RETENTION POLICY (r19): how many snapshots expiry keeps
+      /** RETENTION POLICY: how many snapshots expiry keeps
         * (0 = the [[MaxRetainedVersions]] default). A table property —
         * set by `CALL set_retention`, carried through every commit,
         * applied by the NEXT commit's expiry sweep (never
         * retroactively; expiry only ever runs inside a commit). */
-      retain: Int = 0)
+      retain: Int = 0,
+      /** A random token naming this snapshot, and the token of the
+        * snapshot directly below it in the listing it was committed
+        * from: a rival's claim of the next version proves it saw ours
+        * (see [[commitVersion]]). */
+      id: String = "", parent: String = "")
 
   /** DEFAULT snapshots retained per table — older manifests (and the
     * data files only they reference) are expired at commit, the Iceberg
     * expire-snapshots verb in miniature. Overridable per table via the
-    * `retain` manifest property (r19, `CALL set_retention`). */
+    * `retain` manifest property (`CALL set_retention`). */
   val MaxRetainedVersions = 3
 
-  /** Per-file, per-column Bloom filter over long values (r17): [[Bits]]
+  /** Per-file, per-column Bloom filter over long values: [[Bits]]
     * bits as `Bits/64` longs, [[K]] probes from one splitmix64-style
     * avalanche — deterministic, engine-free arithmetic, superset
     * guarantee by construction (absent ⇒ definitely not in the file).
@@ -277,140 +281,148 @@ private[dsv2] object GdfManifest {
       s.grouped(16).map(g => java.lang.Long.parseUnsignedLong(g, 16)).toArray
   }
 
-  /** Manifest versions present on disk, ascending. */
-  def versions(path: String): Seq[Int] =
-    Option(new File(path).listFiles()).toSeq.flatten
-      .flatMap(f => "manifest-v(\\d+)\\.json".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
+  /** Where snapshot `v` of the table at `path` lives. The version-file
+    * layout is known to this object only. */
+  private def versionFile(path: String, v: Int): File =
+    new File(path, s"manifest-v$v.json")
+
+  private val VersionFile = "manifest-v(\\d+)\\.json".r
+
+  /** A random token that names a new data, delete or manifest file
+    * uniquely. Racing writers of one base version must never share a
+    * name: the winner's manifest would then name the loser's bytes. */
+  def token(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** ONE VIEW of a table directory, which every commit and every
+    * version-resolution decision takes: one `listFiles`, and each
+    * `manifest-v<N>.json` it saw parsed once. A manifest that vanishes
+    * between the listing and its parse (a concurrent expiry) is
+    * skipped, never a crash that loses the caller's commit. */
+  final class Listing(val path: String) {
+    /** Retained versions, ascending. */
+    val versions: Seq[Int] = Option(new File(path).listFiles()).toSeq.flatten
+      .flatMap(f => VersionFile.unapplySeq(f.getName).map(_.head.toInt))
       .sorted
-
-  def nextVersion(path: String): Int =
-    versions(path).lastOption.getOrElse(0) + 1
-
-  private def render(m: Manifest): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val files = m.files.map { f =>
-      val stats =
-        if (f.colStats.isEmpty) ""
-        else f.colStats.map { case (c, mn, mx) =>
-          s"""{"col":${q(c)},"min":$mn,"max":$mx}"""
-        }.mkString(""","stats":[""", ",", "]")
-      val blooms =
-        if (f.colBlooms.isEmpty) ""
-        else f.colBlooms.map { case (c, bits) =>
-          s"""{"col":${q(c)},"bits":"${GdfBloom.toHex(bits)}"}"""
-        }.mkString(""","blooms":[""", ",", "]")
-      val kmv =
-        if (f.colKmv.isEmpty) ""
-        else f.colKmv.map { case (c, hs) =>
-          s"""{"col":${q(c)},"h":"${GdfBloom.toHex(hs.toArray)}"}"""
-        }.mkString(""","kmv":[""", ",", "]")
-      val sums =
-        if (f.colSums.isEmpty) ""
-        else f.colSums.map { case (c, sm, nn) =>
-          s"""{"col":${q(c)},"s":$sm,"n":$nn}"""
-        }.mkString(""","sums":[""", ",", "]")
-      val dv = f.dv.map(d =>
-        s""","dv":${q(d)},"dvRows":${f.dvRows}""").getOrElse("")
-      s"""{"name":${q(f.name)},"bucket":${f.bucket},"rows":${f.rows},""" +
-        s""""minDocId":${f.minDocId},"maxDocId":${f.maxDocId},""" +
-        s""""seq":${f.seq},"fr":${f.firstRowId}$stats$blooms$kmv$sums$dv}"""
+    /** Every listed snapshot still readable, ascending by version. */
+    val snapshots: Seq[(Int, Manifest)] = versions.flatMap { v =>
+      try Some(v -> parse(new String(
+        java.nio.file.Files.readAllBytes(versionFile(path, v).toPath),
+        StandardCharsets.UTF_8)))
+      catch { case _: java.nio.file.NoSuchFileException => None }
     }
-      .mkString("[", ",", "]")
-    val epochs = m.epochs.mkString("[", ",", "]")
-    val refs = m.refs.map { case (n, v) => s"""{"tag":${q(n)},"v":$v}""" }
-      .mkString("[", ",", "]")
-    val eqd = m.eqDeletes.map(e =>
-        s"""{"b":${e.bucket},"f":${q(e.file)},"s":${e.seq}}""")
-      .mkString("[", ",", "]")
-    val wap =
-      if (!m.staged) ""
-      else s""""staged":true,"stagedAdds":${
-        m.stagedAdds.map(q).mkString("[", ",", "]")},"""
-    val cons =
-      if (m.constraints.isEmpty) ""
-      else m.constraints.map { case (n, p) => s"""{"n":${q(n)},"p":${q(p)}}""" }
-        .mkString(""""constraints":[""", ",", "],")
-    val pub =
-      if (m.published.isEmpty) ""
-      else s""""published":${m.published.mkString("[", ",", "]")},"""
-    val brs =
-      if (m.branches.isEmpty) ""
-      else m.branches.map { case (n, v) => s"""{"br":${q(n)},"base":$v}""" }
-        .mkString(""""branches":[""", ",", "],")
-    val br = if (m.branch.isEmpty) "" else s""""branch":${q(m.branch)},"""
-    val ret = if (m.retain <= 0) "" else s""""retain":${m.retain},"""
-    s"""{"schema":${m.schema.json},"buckets":${m.buckets},""" +
-      s""""layout":${q(m.layout)},"ts":${m.ts},"nextRowId":${m.nextRowId},""" +
-      s""""op":${q(m.op)},""" +
-      s"""$wap$cons$pub$brs$br$ret"refs":$refs,"eqd":$eqd,""" +
-      s""""epochs":$epochs,"files":$files}"""
+    /** The version the next commit claims. */
+    def next: Int = versions.lastOption.getOrElse(0) + 1
+    def at(v: Int): Option[Manifest] =
+      snapshots.collectFirst { case (`v`, m) => m }
+    /** [[at]], failing loudly on an expired or unknown version (time
+      * travel must never silently serve another snapshot). */
+    def snapshot(v: Int): Manifest = at(v).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot v$v at $path " +
+        s"(retained: ${versions.mkString(",")})"))
+    /** MAIN history: staged (write-audit-publish) snapshots and branch
+      * commits are excluded. They exist for auditors who address them
+      * by version or branch name, but never serve as anyone's current
+      * state, and the change feed never steps through them (their
+      * changes surface at publish or fast-forward). */
+    val main: Seq[(Int, Manifest)] =
+      snapshots.filter { case (_, m) => !m.staged && m.branch.isEmpty }
+    /** The main head: the table's current state. */
+    def head: Option[(Int, Manifest)] = main.lastOption
+    def current: Manifest = head.map(_._2).getOrElse(
+      throw new IllegalStateException(s"no graftdocs table at $path"))
+    def staged: Seq[Int] = snapshots.collect { case (v, m) if m.staged => v }
+    def branches: Seq[String] =
+      snapshots.map(_._2.branch).filter(_.nonEmpty).distinct
+    /** A branch's head: its highest snapshot, with the version. */
+    def branchHead(name: String): Option[(Int, Manifest)] =
+      snapshots.filter(_._2.branch == name).lastOption
+    /** The main version a branch forked from: the fork base its head
+      * records, or the main head for a branch about to be created. */
+    def forkBase(name: String): Int = branchHead(name)
+      .flatMap(_._2.branches.collectFirst { case (`name`, v) => v })
+      .getOrElse(head.get._1)
   }
 
-  private def writeTmp(dir: File, json: String): File = {
-    dir.mkdirs()
-    val tmp = File.createTempFile(".manifest", ".tmp", dir)
-    val out = new FileOutputStream(tmp)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    tmp
+  /** Current state: the main head. */
+  def read(path: String): Manifest = new Listing(path).current
+
+  /** Read a pinned snapshot, loudly. */
+  def readVersion(path: String, version: Int): Manifest =
+    new Listing(path).snapshot(version)
+
+  def deleteVersions(path: String, vs: Seq[Int]): Unit =
+    vs.foreach(v => versionFile(path, v).delete())
+
+  /** Every data and delete file a snapshot references. */
+  def fileRefs(m: Manifest): Seq[String] =
+    m.files.map(_.name) ++ m.files.flatMap(_.dv) ++ m.eqDeletes.map(_.file)
+
+  /** EXPIRY over one listing, shared by the sweep every commit runs and
+    * the operator's `expire_snapshots`: every snapshot that is neither
+    * pinned nor kept by `keep` expires. Pins always win: tags, the main
+    * head (stacked staged commits must never expire what the main read
+    * path serves), and each branch's head and fork base (a branch
+    * survives main-side churn until it is fast-forwarded or dropped;
+    * its intermediate snapshots expire normally, since the head's
+    * cumulative file set keeps the data). Only files referenced by an
+    * expiring snapshot and by NO kept one are deleted — never a blanket
+    * unreferenced sweep, which would destroy a racing writer's data
+    * files written ahead of its commit; a failed write's true orphans
+    * are left to [[GdfMaintenance.removeOrphans]]. Returns the expired
+    * versions, ascending. */
+  def expire(l: Listing, keep: (Int, Manifest) => Boolean): Seq[Int] = {
+    val pinned =
+      l.head.toSeq.flatMap { case (v, m) => v +: m.refs.map(_._2) } ++
+        l.branches.flatMap(b => l.branchHead(b).toSeq.flatMap {
+          case (v, m) => v +: m.branches.map(_._2) })
+    val (gone, kept) = l.snapshots.partition { case (v, m) =>
+      !pinned.contains(v) && !keep(v, m) }
+    val dead = gone.flatMap(g => fileRefs(g._2)).toSet --
+      kept.flatMap(k => fileRefs(k._2))
+    deleteVersions(l.path, gone.map(_._1))
+    dead.foreach(n => new File(l.path, n).delete())
+    gone.map(_._1)
   }
 
-  /** Refresh the `manifest.json` convenience pointer to the HIGHEST
-    * retained snapshot (monotonic — a racing loser can never roll the
-    * pointer back, because the pointer is always re-derived from the
-    * version files, which only the CAS claim creates). */
-  private def refreshPointer(path: String): Unit = synchronized {
-    mainVersions(path).lastOption.foreach { v =>
-      val tmp = writeTmp(new File(path), new String(
-        java.nio.file.Files.readAllBytes(
-          new File(path, s"manifest-v$v.json").toPath),
-        StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp.toPath,
-        new File(path, "manifest.json").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Commit one SNAPSHOT at `version` — COMPARE-AND-SWAP (r18): the
-    * immutable `manifest-v<N>.json` is claimed by an atomic NO-REPLACE
-    * rename; if another committer already claimed N (it read the same
-    * parent N-1), the rename fails and this commit throws
-    * [[GdfCommitConflict]] WITHOUT mutating any table state — the caller
-    * ([[commitRetry]]) re-reads and retries at N+1. After a successful
-    * claim the convenience pointer refreshes and snapshots beyond
-    * [[MaxRetainedVersions]] are EXPIRED — their manifest files removed
-    * and any data/delete file no retained snapshot references deleted
-    * (time travel works exactly as far back as the retention window, and
-    * a read of an expired version fails loudly at the manifest, never
-    * silently serves half a snapshot). */
-  def commitVersion(path: String, m: Manifest, version: Int): Unit = {
-    val dir = new File(path)
-    // monotonic commit timestamp (r18): TIMESTAMP AS OF resolution needs
-    // a total order even when two commits land within one clock tick
-    val parentTs = versions(path).lastOption
-      .flatMap(v => readVersionOpt(path, v)).map(_.ts).getOrElse(0L)
-    // DATA SEQUENCE NUMBERS stamped centrally (r18): a file name seen in
-    // any retained snapshot keeps its original seq; a genuinely new name
-    // (append, rewrite, compaction output) is sequenced at THIS version.
-    // Equality-delete files sequence the same way — the scan's
-    // `fileSeq < eqSeq` rule then scopes each delete to strictly older
-    // data, so appends neither resurrect deleted rows nor lose new ones.
-    // STAGED manifests are excluded from the known map: their files'
-    // sequence becomes final only at PUBLISH (the Iceberg cherry-pick
-    // re-sequences — the change "happens" when it reaches main).
-    val retained = versions(path).flatMap(v => readVersionOpt(path, v))
-      .filterNot(_.staged)
+  /** Commit `m` as snapshot `l.next` — COMPARE-AND-SWAP: the immutable
+    * version file is claimed by an atomic no-replace hard link, so
+    * exactly one of two committers that listed the same parent wins.
+    * Returns false, with no table state changed, when the claim is
+    * lost; [[commitRetry]] then lists again and re-applies.
+    *
+    * Everything stamped here comes from `l`, the listing the caller's
+    * delta was computed from. After the claim one more listing serves
+    * the reused-number check, the `manifest.json` pointer and the
+    * expiry sweep; snapshots beyond the retention window expire (time
+    * travel reaches exactly as far back as the window, and a read of an
+    * expired version fails loudly at the manifest). */
+  private def commitVersion(l: Listing, m: Manifest): Boolean = {
+    val path = l.path
+    val version = l.next
+    // monotonic commit timestamp: TIMESTAMP AS OF resolution needs a
+    // total order even when two commits land within one clock tick
+    val top = l.versions.lastOption.flatMap(l.at)
+    // DATA SEQUENCE NUMBERS: a file name seen in any retained snapshot
+    // keeps its original seq; a genuinely new name (append, rewrite,
+    // compaction output) is sequenced at THIS version. Equality-delete
+    // files sequence the same way — the scan's `fileSeq < eqSeq` rule
+    // then scopes each delete to strictly older data, so appends neither
+    // resurrect deleted rows nor lose new ones. STAGED manifests are
+    // excluded: their files' sequence becomes final only at PUBLISH (the
+    // Iceberg cherry-pick re-sequences — the change "happens" when it
+    // reaches main).
+    val retained = l.snapshots.map(_._2).filterNot(_.staged)
     val knownFileSeq: Map[String, Int] =
       retained.flatMap(_.files.map(f => f.name -> f.seq)).toMap
     val knownEqSeq: Map[String, Int] =
       retained.flatMap(_.eqDeletes.map(e => e.file -> e.seq)).toMap
-    // ROW-LINEAGE id allocation (r18): carried files keep their range;
-    // files materializing physical _row_id keep the sentinel; genuinely
-    // new virtual files draw fresh ranges from the allocator in
-    // NUMERIC-BUCKET-then-name order (r19 fix: names EMBED the bucket
-    // number, so lexicographic name order puts "part-10-…" before
-    // "part-2-…" at ≥10 buckets — the documented bucket-then-doc_id
-    // rule the oracle re-derives needs the numeric sort)
+    // ROW-LINEAGE id allocation: carried files keep their range; files
+    // materializing physical _row_id keep the sentinel; genuinely new
+    // virtual files draw fresh ranges from the allocator in
+    // NUMERIC-BUCKET-then-name order (names embed the bucket number, so
+    // lexicographic order would put "part-10-…" before "part-2-…" at
+    // ≥10 buckets — the bucket-then-doc_id rule the oracle re-derives
+    // needs the numeric sort)
     val knownFr: Map[String, Long] =
       retained.flatMap(_.files.map(f => f.name -> f.firstRowId)).toMap
     var rowIdCursor = retained.lastOption.map(_.nextRowId).getOrElse(0L)
@@ -420,7 +432,9 @@ private[dsv2] object GdfManifest {
       .map { f => val fr = rowIdCursor; rowIdCursor += f.rows; f.name -> fr }
       .toMap
     val stamped = m.copy(
-      ts = math.max(System.currentTimeMillis(), parentTs + 1),
+      ts = math.max(System.currentTimeMillis(),
+        top.map(_.ts).getOrElse(0L) + 1),
+      id = token(), parent = top.map(_.id).getOrElse(""),
       nextRowId = rowIdCursor,
       files = m.files.map(f =>
         f.copy(seq = knownFileSeq.getOrElse(f.name, version),
@@ -429,257 +443,166 @@ private[dsv2] object GdfManifest {
             else knownFr.getOrElse(f.name, assigned(f.name)))),
       eqDeletes = m.eqDeletes.map(e =>
         e.copy(seq = knownEqSeq.getOrElse(e.file, version))))
+    val dir = new File(path)
     val tmp = writeTmp(dir, render(stamped))
-    val vf = new File(dir, s"manifest-v$version.json")
-    // the CAS primitive: hard-link creation is ATOMIC no-replace on
-    // POSIX — exactly one of two racers gets the version file (a plain
-    // rename would silently overwrite; move-no-replace is check-then-
-    // rename, a TOCTOU hole under contention)
-    try java.nio.file.Files.createLink(vf.toPath, tmp.toPath)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new GdfCommitConflict(
-          s"snapshot v$version at $path was claimed by a concurrent commit")
-    }
-    finally tmp.delete()
-    // belt-and-braces: claiming an EXPIRED version number (possible only
-    // if >MaxRetainedVersions commits landed between our read and claim)
-    // must not resurrect history — detect and surrender the claim
-    if (versions(path).last != version) {
-      vf.delete()
-      throw new GdfCommitConflict(
-        s"snapshot v$version at $path is older than the retained window")
-    }
-    refreshPointer(path)
-    // EXPIRY: only files referenced by an expiring snapshot and by NO
-    // retained one may be deleted — never a blanket unreferenced sweep,
-    // which would destroy a RACING writer's in-flight data files written
-    // ahead of its commit (a failed write's true orphans are left for a
-    // separate orphan-GC verb, the Iceberg split of responsibilities)
-    def fileRefs(vm: Manifest): Set[String] =
-      (vm.files.map(_.name) ++ vm.files.flatMap(_.dv) ++
-        vm.eqDeletes.map(_.file)).toSet
-    val all = versions(path)
-    // TAGGED versions are PINNED (r18): a named ref keeps its snapshot
-    // (and the files it needs) past the retention window — expiry never
-    // breaks a tag
-    // the MAIN HEAD is always pinned too (r18): stacked staged commits
-    // must never expire the snapshot the main read path serves
-    // BRANCH heads and their fork bases are pinned (r19): a branch must
-    // survive main-side retention churn until it is fast-forwarded or
-    // dropped — expiry never breaks a named ref, tag or branch alike
-    // (intermediate branch snapshots expire normally; the head's
-    // cumulative file set keeps the data)
-    val branchPins: Set[Int] = {
-      val branched = versions(path)
-        .flatMap(v => readVersionOpt(path, v).map(m => (v, m)))
-        .filter(_._2.branch.nonEmpty)
-      branched.groupBy(_._2.branch).flatMap { case (_, vs) =>
-        val (hv, hm) = vs.maxBy(_._1)
-        hv +: hm.branches.map(_._2)
-      }.toSet
-    }
-    val pinned = stamped.refs.map(_._2).toSet ++
-      mainVersions(path).lastOption.toSet ++ branchPins
-    val retainN = if (stamped.retain > 0) stamped.retain
-      else MaxRetainedVersions
-    val keep = (all.takeRight(retainN).toSet ++ pinned).toSeq
-    val expired = all.filterNot(keep.contains)
-    val dead = expired.flatMap(v =>
-        readVersionOpt(path, v).toSeq.flatMap(fileRefs)).toSet --
-      keep.flatMap(v => readVersionOpt(path, v).toSeq.flatMap(fileRefs)) --
-      fileRefs(stamped)
-    expired.foreach(v => new File(path, s"manifest-v$v.json").delete())
-    dead.foreach(n => new File(path, n).delete())
+    // Claim, check, pointer and expiry run under one JVM-wide lock: no
+    // committer of this JVM claims between our claim and the check, and
+    // the pointer never rolls back.
+    try synchronized {
+      // the CAS primitive: hard-link creation is ATOMIC no-replace on
+      // POSIX — exactly one of two racers gets the version file (a plain
+      // rename would silently overwrite; move-no-replace is check-then-
+      // rename, a TOCTOU hole under contention)
+      val won =
+        try { java.nio.file.Files.createLink(versionFile(path, version).toPath,
+          tmp.toPath); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      won && {
+        val after = new Listing(path)
+        // A REUSED NUMBER: a committer stalled long enough for `version`
+        // to be claimed and expired behind its back re-claims it below
+        // snapshots that never saw its delta; it must surrender. A rival
+        // process that claimed the next version on top of ours saw our
+        // snapshot, names it as parent and already holds our delta: the
+        // claim stays.
+        val reused = after.versions.find(_ > version)
+          .exists(a => !after.at(a).exists(_.parent == stamped.id))
+        if (reused) deleteVersions(path, Seq(version))
+        else {
+          after.head.foreach { case (v, _) =>
+            val ptr = writeTmp(dir, new String(java.nio.file.Files.readAllBytes(
+              versionFile(path, v).toPath), StandardCharsets.UTF_8))
+            java.nio.file.Files.move(ptr.toPath,
+              new File(dir, "manifest.json").toPath,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          }
+          val retain = after.head.map(_._2.retain).filter(_ > 0)
+            .getOrElse(MaxRetainedVersions)
+          val recent = after.versions.takeRight(retain).toSet
+          expire(after, (v, _) => recent(v))
+        }
+        !reused
+      }
+    } finally tmp.delete()
   }
 
-  /** The OPTIMISTIC COMMIT LOOP (r18): read the current table state,
-    * apply the caller's delta, CAS-claim the next version; on
-    * [[GdfCommitConflict]] re-read (now including the winner's commit)
-    * and re-apply — the loser's delta lands on top instead of silently
-    * overwriting the winner (the Iceberg/Delta OCC shape). `update`
-    * receives the CURRENT manifest (None for an empty table) and returns
-    * the manifest to commit, or None to skip committing entirely (the
-    * streaming sink's replayed-epoch no-op re-checks its ledger HERE, so
-    * a replay racing a genuine commit still no-ops). Returns the
-    * committed version, or -1 when update returned None. */
+  /** The OPTIMISTIC COMMIT LOOP: list the table once, let `update`
+    * compute the manifest to commit from that [[Listing]] (its `head`
+    * is the current state, None for an empty table), and CAS-claim the
+    * listing's next version; a lost claim lists again and re-applies —
+    * the loser's delta lands on top instead of silently overwriting
+    * the winner (the Iceberg/Delta OCC shape). `update` returns None to
+    * skip committing (the streaming sink's replayed-epoch no-op checks
+    * its ledger HERE, so a replay racing a genuine commit still
+    * no-ops). Returns the committed version, or -1 when update returned
+    * None. */
   def commitRetry(path: String, op: String)(
-      update: Option[Manifest] => Option[Manifest]): Int = {
+      update: Listing => Option[Manifest]): Int = {
     var attempts = 0
     while (true) {
-      val cur = if (versions(path).isEmpty) None else Some(read(path))
-      val v = nextVersion(path)
-      update(cur) match {
+      val l = new Listing(path)
+      update(l) match {
         case None => return -1
         case Some(m) =>
-          try { commitVersion(path, m.copy(op = op), v); return v }
-          catch {
-            case _: GdfCommitConflict =>
-              attempts += 1
-              require(attempts < 100,
-                s"commit at $path still conflicting after $attempts attempts")
-          }
+          if (commitVersion(l, m.copy(op = op))) return l.next
+          attempts += 1
+          require(attempts < 100,
+            s"commit at $path still conflicting after $attempts attempts")
       }
     }
     -1 // unreachable
   }
 
-  /** Read a pinned snapshot. */
-  def readVersion(path: String, version: Int): Manifest = {
-    val f = new File(path, s"manifest-v$version.json")
-    require(f.exists(),
-      s"no snapshot v$version at $path (retained: ${versions(path).mkString(",")})")
-    parse(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      StandardCharsets.UTF_8))
+  private val Json = new ObjectMapper()
+
+  private def writeTmp(dir: File, json: String): File = {
+    dir.mkdirs()
+    val tmp = File.createTempFile(".manifest", ".tmp", dir)
+    val out = new FileOutputStream(tmp)
+    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    tmp
   }
 
-  /** [[readVersion]] tolerating a snapshot EXPIRED between the
-    * versions() listing and the read (r19) — the race every
-    * list-then-read scan inside the commit path has against a
-    * CONCURRENT committer's expiry sweep: a vanished manifest is
-    * "already expired", simply skipped, never a crash that loses the
-    * caller's commit. Explicit version requests (time travel) keep the
-    * loud [[readVersion]]. */
-  def readVersionOpt(path: String, version: Int): Option[Manifest] = {
-    val f = new File(path, s"manifest-v$version.json")
-    if (!f.exists()) None
-    else try Some(parse(new String(
-      java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-  }
-
-  /** Retained versions visible to the MAIN read path — staged (WAP)
-    * snapshots and BRANCH commits (r19) are excluded: they exist in the
-    * chain for auditors who address them explicitly (by version or by
-    * branch name), but never serve as anyone's "current", and the
-    * change feed never steps through them (changes surface at
-    * PUBLISH/fast-forward, the Iceberg stage-only contract). */
-  def mainVersions(path: String): Seq[Int] =
-    versions(path).filter(v => readVersionOpt(path, v)
-      .exists(m => !m.staged && m.branch.isEmpty))
-
-  /** The HEAD of a named branch (r19): its highest snapshot, with the
-    * version — None when no snapshot carries the name. */
-  def branchHead(path: String, name: String): Option[(Int, Manifest)] =
-    versions(path).flatMap(v => readVersionOpt(path, v).map(m => (v, m)))
-      .filter(_._2.branch == name).lastOption
-
-  /** Current state = the HIGHEST retained NON-STAGED snapshot. The
-    * `manifest.json` pointer is only a fallback (pre-CAS tables /
-    * external tools): under racing committers the version files are the
-    * source of truth — a stale pointer can never serve an older
-    * snapshot as current. */
-  def read(path: String): Manifest =
-    mainVersions(path).lastOption.flatMap(v => readVersionOpt(path, v))
-      .orElse(mainVersions(path).lastOption
-        .flatMap(v => readVersionOpt(path, v))) // one retry: head moved
-      .getOrElse {
-      val f = new File(path, "manifest.json")
-      require(f.exists(), s"no graftdocs manifest at $path")
-      parse(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8))
+  /** The manifest as compact JSON, through Jackson: every string is
+    * escaped, so a constraint's SQL or a tag name may hold any
+    * character. */
+  private def render(m: Manifest): String = {
+    def objs[A](n: ObjectNode, key: String, xs: Seq[A])(
+        fill: (ObjectNode, A) => Unit): Unit = {
+      val a = n.putArray(key)
+      xs.foreach(x => fill(a.addObject(), x))
     }
+    val o = Json.createObjectNode()
+    o.set[JsonNode]("schema", Json.readTree(m.schema.json))
+    o.put("buckets", m.buckets).put("layout", m.layout).put("ts", m.ts)
+      .put("nextRowId", m.nextRowId).put("op", m.op)
+      .put("id", m.id).put("parent", m.parent)
+      .put("staged", m.staged).put("branch", m.branch).put("retain", m.retain)
+    val adds = o.putArray("stagedAdds")
+    m.stagedAdds.foreach(adds.add)
+    objs(o, "constraints", m.constraints) { case (c, (n, p)) =>
+      c.put("n", n).put("p", p) }
+    val pub = o.putArray("published")
+    m.published.foreach(pub.add(_))
+    objs(o, "branches", m.branches) { case (b, (n, v)) =>
+      b.put("br", n).put("base", v) }
+    objs(o, "refs", m.refs) { case (r, (n, v)) => r.put("tag", n).put("v", v) }
+    objs(o, "eqd", m.eqDeletes) { (e, d) =>
+      e.put("b", d.bucket).put("f", d.file).put("s", d.seq) }
+    val epochs = o.putArray("epochs")
+    m.epochs.foreach(epochs.add(_))
+    objs(o, "files", m.files) { (n, f) =>
+      n.put("name", f.name).put("bucket", f.bucket).put("rows", f.rows)
+        .put("minDocId", f.minDocId).put("maxDocId", f.maxDocId)
+        .put("seq", f.seq).put("fr", f.firstRowId)
+      objs(n, "stats", f.colStats) { case (s, (c, mn, mx)) =>
+        s.put("col", c).put("min", mn).put("max", mx) }
+      objs(n, "blooms", f.colBlooms) { case (s, (c, bits)) =>
+        s.put("col", c).put("bits", GdfBloom.toHex(bits)) }
+      objs(n, "kmv", f.colKmv) { case (s, (c, hs)) =>
+        s.put("col", c).put("h", GdfBloom.toHex(hs.toArray)) }
+      objs(n, "sums", f.colSums) { case (s, (c, sm, nn)) =>
+        s.put("col", c).put("s", sm).put("n", nn) }
+      f.dv.foreach(d => n.put("dv", d).put("dvRows", f.dvRows))
+    }
+    Json.writeValueAsString(o)
+  }
 
+  /** The inverse of [[render]]. Absent keys take the defaults older
+    * manifests imply (a legacy equality delete without `s` applies to
+    * every file). */
   private def parse(json: String): Manifest = {
-    // tiny hand-rolled parse of the exact shape written above (no JSON
-    // library dependency): schema via Spark's own StructType round-trip
-    val schemaJson = {
-      val start = json.indexOf("\"schema\":") + 9
-      // schema value is a JSON object; find its end by brace balance
-      var depth = 0; var i = start; var end = -1
-      var inStr = false; var esc = false
-      while (end < 0 && i < json.length) {
-        val c = json.charAt(i)
-        if (esc) esc = false
-        else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-        else c match {
-          case '"' => inStr = true
-          case '{' => depth += 1
-          case '}' => depth -= 1; if (depth == 0) end = i
-          case _ =>
-        }
-        i += 1
-      }
-      json.substring(start, end + 1)
+    val o = Json.readTree(json)
+    def each(n: JsonNode, key: String): Seq[JsonNode] =
+      n.path(key).iterator().asScala.toSeq
+    def str(n: JsonNode, key: String, d: String = ""): String =
+      n.path(key).asText(d)
+    def hex(n: JsonNode, key: String) = GdfBloom.fromHex(str(n, key))
+    val files = each(o, "files").map { f =>
+      FileStat(str(f, "name"), f.path("bucket").asInt, f.path("rows").asLong,
+        f.path("minDocId").asLong, f.path("maxDocId").asLong,
+        each(f, "stats").map(s =>
+          (str(s, "col"), s.path("min").asLong, s.path("max").asLong)),
+        each(f, "blooms").map(s => (str(s, "col"), hex(s, "bits"))),
+        Option(f.get("dv")).map(_.asText), f.path("dvRows").asLong(0L),
+        f.path("seq").asInt(0),
+        each(f, "kmv").map(s => (str(s, "col"), hex(s, "h").toSeq)),
+        f.path("fr").asLong(-1L),
+        each(f, "sums").map(s =>
+          (str(s, "col"), s.path("s").asLong, s.path("n").asLong)))
     }
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val buckets = {
-      val m = "\"buckets\":(\\d+)".r.findFirstMatchIn(json).get
-      m.group(1).toInt
-    }
-    val layout = "\"layout\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("hash")
-    val ts = "\"ts\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val refs = "\"refs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"tag\":\"([^\"]+)\",\"v\":(\\d+)\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2).toInt)))
-    val eqd = "\"eqd\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"b\":(\\d+),\"f\":\"([^\"]+)\"(?:,\"s\":(\\d+))?\\}".r
-        .findAllMatchIn(s).map(m => EqDelete(m.group(1).toInt, m.group(2),
-          Option(m.group(3)).map(_.toInt).getOrElse(Int.MaxValue))))
-    val epochs = "\"epochs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(_.split(",").map(_.trim.toLong))
-    val staged = json.contains("\"staged\":true")
-    val constraints = "\"constraints\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"n\":\"([^\"]+)\",\"p\":\"([^\"]+)\"\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2))))
-    val stagedAdds = "\"stagedAdds\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)))
-    val nextRowId = "\"nextRowId\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val op = "\"op\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("write")
-    val published = "\"published\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(_.split(",").map(_.trim.toInt))
-    val branches = "\"branches\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty).toSeq
-      .flatMap(s => "\\{\"br\":\"([^\"]+)\",\"base\":(\\d+)\\}".r
-        .findAllMatchIn(s).map(m => (m.group(1), m.group(2).toInt)))
-    val branch = "\"branch\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    val retain = "\"retain\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt).getOrElse(0)
-    val fileRe = ("\\{\"name\":\"([^\"]+)\",\"bucket\":(-?\\d+),\"rows\":(\\d+)," +
-      "\"minDocId\":(-?\\d+),\"maxDocId\":(-?\\d+)" +
-      "(?:,\"seq\":(\\d+))?" +
-      "(?:,\"fr\":(-?\\d+))?" +
-      "(?:,\"stats\":\\[([^\\]]*)\\])?" +
-      "(?:,\"blooms\":\\[([^\\]]*)\\])?" +
-      "(?:,\"kmv\":\\[([^\\]]*)\\])?" +
-      "(?:,\"sums\":\\[([^\\]]*)\\])?" +
-      "(?:,\"dv\":\"([^\"]+)\",\"dvRows\":(\\d+))?\\}").r
-    val statRe = "\\{\"col\":\"([^\"]+)\",\"min\":(-?\\d+),\"max\":(-?\\d+)\\}".r
-    val bloomRe = "\\{\"col\":\"([^\"]+)\",\"bits\":\"([0-9a-f]+)\"\\}".r
-    val kmvRe = "\\{\"col\":\"([^\"]+)\",\"h\":\"([0-9a-f]+)\"\\}".r
-    val sumRe = "\\{\"col\":\"([^\"]+)\",\"s\":(-?\\d+),\"n\":(\\d+)\\}".r
-    val files = fileRe.findAllMatchIn(json).map { m =>
-      val colStats = Option(m.group(8)).toSeq.flatMap(s =>
-        statRe.findAllMatchIn(s).map(sm =>
-          (sm.group(1), sm.group(2).toLong, sm.group(3).toLong)).toSeq)
-      val colBlooms = Option(m.group(9)).toSeq.flatMap(s =>
-        bloomRe.findAllMatchIn(s).map(bm =>
-          (bm.group(1), GdfBloom.fromHex(bm.group(2)))).toSeq)
-      val colKmv = Option(m.group(10)).toSeq.flatMap(s =>
-        kmvRe.findAllMatchIn(s).map(km =>
-          (km.group(1), GdfBloom.fromHex(km.group(2)).toSeq)).toSeq)
-      val colSums = Option(m.group(11)).toSeq.flatMap(s =>
-        sumRe.findAllMatchIn(s).map(sm =>
-          (sm.group(1), sm.group(2).toLong, sm.group(3).toLong)).toSeq)
-      FileStat(m.group(1), m.group(2).toInt, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong, colStats, colBlooms,
-        Option(m.group(12)), Option(m.group(13)).map(_.toLong).getOrElse(0L),
-        Option(m.group(6)).map(_.toInt).getOrElse(0), colKmv,
-        Option(m.group(7)).map(_.toLong).getOrElse(-1L), colSums)
-    }.toSeq
-    Manifest(schema, buckets, files, layout, epochs, ts, refs, eqd,
-      staged, stagedAdds, constraints, nextRowId, op, published, branches,
-      branch, retain)
+    Manifest(DataType.fromJson(o.get("schema").toString).asInstanceOf[StructType],
+      o.path("buckets").asInt, files, str(o, "layout", "hash"),
+      each(o, "epochs").map(_.asLong), o.path("ts").asLong(0L),
+      each(o, "refs").map(r => (str(r, "tag"), r.path("v").asInt)),
+      each(o, "eqd").map(e => EqDelete(e.path("b").asInt, str(e, "f"),
+        e.path("s").asInt(Int.MaxValue))),
+      o.path("staged").asBoolean(false), each(o, "stagedAdds").map(_.asText),
+      each(o, "constraints").map(c => (str(c, "n"), str(c, "p"))),
+      o.path("nextRowId").asLong(0L), str(o, "op", "write"),
+      each(o, "published").map(_.asInt),
+      each(o, "branches").map(b => (str(b, "br"), b.path("base").asInt)),
+      str(o, "branch"), o.path("retain").asInt(0),
+      str(o, "id"), str(o, "parent"))
   }
 }

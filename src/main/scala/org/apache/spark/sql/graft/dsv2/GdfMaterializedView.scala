@@ -103,7 +103,8 @@ object GdfMaterializedView {
   def refresh(spark: SparkSession, basePath: String, mvPath: String,
       groupCol: String, sumCol: String,
       toVersion: Option[Int] = None): String = {
-    val target = toVersion.getOrElse(GdfManifest.versions(basePath).last)
+    val retained = new GdfManifest.Listing(basePath).versions
+    val target = toVersion.getOrElse(retained.last)
     val meta = readMeta(mvPath)
     meta match {
       case Some(m) if m.baseVersion == target => "noop"
@@ -111,7 +112,7 @@ object GdfMaterializedView {
         throw new IllegalArgumentException(
           s"view at $mvPath already reflects v${m.baseVersion} > v$target " +
             "— a materialized view never rolls back")
-      case Some(m) if GdfManifest.versions(basePath).contains(m.baseVersion) =>
+      case Some(m) if retained.contains(m.baseVersion) =>
         val merged = mergeDelta(spark, mvPath,
           GdfMaintenance.changes(spark, basePath, m.baseVersion, target),
           groupCol, sumCol)
@@ -232,7 +233,8 @@ object GdfMaterializedView {
   def refreshStats(spark: SparkSession, basePath: String, mvPath: String,
       groupCol: String, valCol: String,
       toVersion: Option[Int] = None): String = {
-    val target = toVersion.getOrElse(GdfManifest.versions(basePath).last)
+    val retained = new GdfManifest.Listing(basePath).versions
+    val target = toVersion.getOrElse(retained.last)
     val meta = readMeta(mvPath)
     meta match {
       case Some(m) if m.baseVersion == target => "noop"
@@ -240,7 +242,7 @@ object GdfMaterializedView {
         throw new IllegalArgumentException(
           s"view at $mvPath already reflects v${m.baseVersion} > v$target " +
             "— a materialized view never rolls back")
-      case Some(m) if GdfManifest.versions(basePath).contains(m.baseVersion) =>
+      case Some(m) if retained.contains(m.baseVersion) =>
         val merged = mergeStatsDelta(spark, basePath, mvPath,
           GdfMaintenance.changes(spark, basePath, m.baseVersion, target),
           groupCol, valCol, target)
@@ -364,7 +366,8 @@ object GdfMaterializedView {
   def refreshJoin(spark: SparkSession, basePath: String, mvPath: String,
       dim: DataFrame, joinKey: String, dimAttr: String, sumCol: String,
       toVersion: Option[Int] = None): String = {
-    val target = toVersion.getOrElse(GdfManifest.versions(basePath).last)
+    val retained = new GdfManifest.Listing(basePath).versions
+    val target = toVersion.getOrElse(retained.last)
     def joined(df: DataFrame): DataFrame =
       df.join(broadcast(dim), joinKey)
     val meta = readMeta(mvPath)
@@ -381,7 +384,7 @@ object GdfMaterializedView {
           s"view at $mvPath already reflects v${m.baseVersion} > v$target " +
             "— a materialized view never rolls back")
       case Some(m) if m.dimHash == fp &&
-          GdfManifest.versions(basePath).contains(m.baseVersion) =>
+          retained.contains(m.baseVersion) =>
         val feed = joined(
           GdfMaintenance.changes(spark, basePath, m.baseVersion, target))
         commitState(spark, mvPath,

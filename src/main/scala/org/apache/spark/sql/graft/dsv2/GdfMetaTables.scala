@@ -54,43 +54,42 @@ private[dsv2] object GdfMetaTable {
       s"unknown graft metadata table $$$other (have: ${Kinds.mkString(", ")})")
   }
 
-  def rowsOf(path: String, kind: String): Array[InternalRow] = kind match {
-    case "files" =>
-      GdfManifest.read(path).files.sortBy(f => (f.bucket, f.name)).map { f =>
-        InternalRow(UTF8String.fromString(f.name), f.bucket, f.rows,
-          f.liveRows, f.minDocId, f.maxDocId, f.dv.isDefined)
-      }.toArray
-    case "snapshots" =>
-      GdfManifest.versions(path).flatMap { v =>
-        GdfManifest.readVersionOpt(path, v).map(m =>
+  def rowsOf(path: String, kind: String): Array[InternalRow] = {
+    val l = new GdfManifest.Listing(path)
+    kind match {
+      case "files" =>
+        l.current.files.sortBy(f => (f.bucket, f.name)).map { f =>
+          InternalRow(UTF8String.fromString(f.name), f.bucket, f.rows,
+            f.liveRows, f.minDocId, f.maxDocId, f.dv.isDefined)
+        }.toArray
+      case "snapshots" =>
+        l.snapshots.map { case (v, m) =>
           InternalRow(v, UTF8String.fromString(m.op),
             m.files.size.toLong, m.files.map(_.liveRows).sum,
-            UTF8String.fromString(m.layout), m.buckets))
-      }.toArray
-    case "refs" =>
-      val tags = GdfManifest.read(path).refs.map { case (t, v) =>
-        (t, "tag", v, null.asInstanceOf[Any])
-      }
-      // branch refs live in the branch manifests themselves (r19) —
-      // enumerate names, then each head + its fork base
-      val branchNames = GdfManifest.versions(path)
-        .flatMap(v => GdfManifest.readVersionOpt(path, v).map(_.branch))
-        .filter(_.nonEmpty).distinct
-      val branches = branchNames.flatMap { b =>
-        GdfManifest.branchHead(path, b).map { case (hv, hm) =>
-          (b, "branch", hv,
-            hm.branches.collectFirst { case (n, base) if n == b => base }
-              .map(x => x: Any).orNull)
+            UTF8String.fromString(m.layout), m.buckets)
+        }.toArray
+      case "refs" =>
+        val tags = l.current.refs.map { case (t, v) =>
+          (t, "tag", v, null.asInstanceOf[Any])
         }
-      }
-      (tags ++ branches).sortBy(r => (r._1, r._2)).map { case (n, k, v, fb) =>
-        InternalRow(UTF8String.fromString(n), UTF8String.fromString(k), v, fb)
-      }.toArray
-    case "constraints" =>
-      GdfManifest.read(path).constraints.sortBy(_._1).map { case (n, p) =>
-        InternalRow(UTF8String.fromString(n), UTF8String.fromString(p))
-      }.toArray
-    case other => throw new IllegalArgumentException(s"unknown $$$other")
+        // branch refs live in the branch manifests themselves —
+        // enumerate names, then each head + its fork base
+        val branches = l.branches.flatMap { b =>
+          l.branchHead(b).map { case (hv, hm) =>
+            (b, "branch", hv,
+              hm.branches.collectFirst { case (n, base) if n == b => base }
+                .map(x => x: Any).orNull)
+          }
+        }
+        (tags ++ branches).sortBy(r => (r._1, r._2)).map { case (n, k, v, fb) =>
+          InternalRow(UTF8String.fromString(n), UTF8String.fromString(k), v, fb)
+        }.toArray
+      case "constraints" =>
+        l.current.constraints.sortBy(_._1).map { case (n, p) =>
+          InternalRow(UTF8String.fromString(n), UTF8String.fromString(p))
+        }.toArray
+      case other => throw new IllegalArgumentException(s"unknown $$$other")
+    }
   }
 }
 

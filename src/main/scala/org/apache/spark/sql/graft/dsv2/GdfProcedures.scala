@@ -255,12 +255,7 @@ private[dsv2] object GdfProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val p = tableDir(root, input)
       val b = input.getUTF8String(1).toString
-      // readVersionOpt (r20, ADVICE fix): a concurrent committer's
-      // expiry sweep can delete a version between list and read — the
-      // tolerant read matches GdfMaintenance.dropBranch.
-      val vs = GdfManifest.versions(p)
-        .filter(v => GdfManifest.readVersionOpt(p, v).exists(_.branch == b))
-      GdfMaintenance.dropBranch(p, b)
+      val vs = GdfMaintenance.dropBranch(p, b)
       resultScan(
         StructType(Seq(StructField("retired_version", LongType))),
         vs.map(v => InternalRow(v.toLong)).toArray)

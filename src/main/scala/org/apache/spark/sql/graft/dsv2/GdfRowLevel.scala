@@ -136,13 +136,12 @@ private[dsv2] class GdfRowLevelWrite(path: String, schema: StructType,
   override def distributionStrictlyRequired(): Boolean = true
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val suffix = s"rl${GdfManifest.nextVersion(path)}-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    private val suffix = s"rl-${GdfManifest.token()}"
     private val table = GdfManifest.read(path)
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DataWriterFactory =
-      // lineageFixup (r19): Spark's group-based ReplaceData strips the
+      // lineageFixup: Spark's group-based ReplaceData strips the
       // _row_id metadata attribute before the write, so the writer
       // recovers each row's identity itself — see GdfDataWriter
       new GdfWriterFactory(path, schema, suffix,
@@ -153,10 +152,9 @@ private[dsv2] class GdfRowLevelWrite(path: String, schema: StructType,
       val stats = messages.toSeq.flatMap(_.asInstanceOf[GdfCommit].stats)
       val replaced = op.replacedFiles.toSet
       if (replaced.nonEmpty || stats.nonEmpty)
-        GdfManifest.commitRetry(path, "replace") { curOpt =>
-          val cur = curOpt.getOrElse(throw new IllegalStateException(
-            s"no graftdocs table at $path"))
-          GdfConstraints.requireCurrent(path, curOpt, constraints) // r19
+        GdfManifest.commitRetry(path, "replace") { l =>
+          val cur = l.current
+          GdfConstraints.requireCurrent(path, Some(cur), constraints)
           val live = cur.files.map(_.name).toSet
           val gone = replaced.diff(live)
           require(gone.isEmpty,

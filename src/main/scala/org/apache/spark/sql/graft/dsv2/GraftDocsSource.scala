@@ -98,8 +98,7 @@ class GraftDocsSource extends TableProvider with DataSourceRegister {
     * still fail loudly at the scan builder's manifest lookup. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val p = pathOf(options)
-    if (GdfManifest.versions(p).isEmpty &&
-        !new File(p, "manifest.json").exists()) new StructType()
+    if (new GdfManifest.Listing(p).head.isEmpty) new StructType()
     else {
       val s = manifestFor(p, options).schema
       // ROW LINEAGE (r18): the rowlineage read option surfaces the
@@ -220,9 +219,8 @@ private[dsv2] class GraftDocsTable(path: String, tableSchema: StructType,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GdfWriteBuilder(path, info.schema(),
       // CHECK constraints bind against the WRITE schema on the driver
-      GdfConstraints.bind(info.schema(),
-        if (GdfManifest.versions(path).isEmpty) Seq.empty
-        else GdfManifest.read(path).constraints),
+      GdfConstraints.bind(info.schema(), new GdfManifest.Listing(path).head
+        .toSeq.flatMap(_._2.constraints)),
       staged = Option(info.options.get("staged")).exists(_.toBoolean),
       Option(info.options.get("buckets")).map(_.toInt)
         .getOrElse(defaultBuckets),
@@ -1673,8 +1671,8 @@ private[dsv2] class GdfWrite(path: String, schema: StructType, buckets: Int,
   override def distributionStrictlyRequired(): Boolean = true
 
   override def toBatch: BatchWrite =
-    new GdfBatchWrite(path, schema, buckets, layout, truncate,
-      GdfManifest.nextVersion(path), staged, constraints, branch)
+    new GdfBatchWrite(path, schema, buckets, layout, truncate, staged,
+      constraints, branch)
 
   /** The STREAMING SINK face (r17): each epoch appends its bucket files
     * and commits one snapshot; the manifest's epoch ledger makes a
@@ -1803,17 +1801,15 @@ private[dsv2] object GdfAppend {
 }
 
 private[dsv2] class GdfBatchWrite(path: String, schema: StructType,
-    buckets: Int, layout: String, truncate: Boolean, version: Int,
-    staged: Boolean,
+    buckets: Int, layout: String, truncate: Boolean, staged: Boolean,
     constraints: Seq[GdfBoundConstraint], branch: String)
     extends BatchWrite {
 
-  /** The version tag plus a per-write random token keep data-file names
-    * unique across RACING writers (two appends that both read parent
-    * version N would otherwise both emit `part-<b>-vN+1.gdf` and corrupt
-    * each other's bytes before the CAS even sees the conflict). */
-  private val suffix =
-    s"v$version-${java.util.UUID.randomUUID().toString.take(8)}"
+  /** A per-write random token keeps data-file names unique across
+    * RACING writers (two appends of one parent would otherwise emit the
+    * same `part-<b>-…` names and corrupt each other's bytes before the
+    * CAS even sees the conflict). */
+  private val suffix = GdfManifest.token()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GdfWriterFactory(path, schema, suffix,
@@ -1823,42 +1819,37 @@ private[dsv2] class GdfBatchWrite(path: String, schema: StructType,
     * versioned manifest next to the refreshed current pointer, snapshots
     * past the retention window expired ([[GdfManifest.commitVersion]]) —
     * the Iceberg commit shape with time travel. Overwrite replaces the
-    * file set; append (r17) folds the new files in under the
-    * schema-evolution rules. Commits through the OPTIMISTIC LOOP (r18):
+    * file set; append folds the new files in under the
+    * schema-evolution rules. Commits through the OPTIMISTIC LOOP:
     * a racing committer's snapshot is folded in on retry, never
     * overwritten. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val stats = messages.toSeq.flatMap(_.asInstanceOf[GdfCommit].stats)
     GdfManifest.commitRetry(path,
         if (staged) "stage" else if (branch.nonEmpty) "branch-append"
-        else if (truncate) "overwrite" else "append") {
-      cur =>
+        else if (truncate) "overwrite" else "append") { l =>
+      val cur = l.head.map(_._2)
       // a CONSTRAINT added between this write's planning (which bound
-      // the then-current set) and its commit would land unchecked rows
-      // (r19, the addConstraint OCC hole): reject loudly — the caller
-      // re-plans and re-binds (the Iceberg validate-at-commit shape)
+      // the then-current set) and its commit would land unchecked rows:
+      // reject loudly — the caller re-plans and re-binds (the Iceberg
+      // validate-at-commit shape)
       GdfConstraints.requireCurrent(path, cur, constraints)
       if (branch.nonEmpty) {
-        // BRANCH append (r19, judge ask #4): chains on the BRANCH HEAD
-        // (or forks off the current main head on first write — the
-        // Iceberg write-to-new-branch behavior), CAS-claimed into the
-        // version chain like any commit but invisible to the main read
-        // path until fastForward. The fork-base main version rides in
-        // the branch manifest — fast-forward's divergence check needs it
+        // BRANCH append: chains on the BRANCH HEAD (or forks off the
+        // current main head on first write — the Iceberg
+        // write-to-new-branch behavior), CAS-claimed into the version
+        // chain like any commit but invisible to the main read path
+        // until fastForward. The fork-base main version rides in the
+        // branch manifest — fast-forward's divergence check needs it
         require(cur.nonEmpty,
           s"a branch write needs an existing table at $path")
-        val bHead = GdfManifest.branchHead(path, branch)
-        val baseM = bHead.map(_._2).getOrElse(cur.get)
+        val baseM = l.branchHead(branch).map(_._2).getOrElse(cur.get)
         require(!baseM.staged, "cannot branch off a staged snapshot")
-        val forkBase = bHead
-          .flatMap(_._2.branches.collectFirst {
-            case (n, v) if n == branch => v })
-          .getOrElse(GdfManifest.mainVersions(path).last)
         Some(GdfAppend.appended(Some(baseM), schema, buckets, layout,
           stats, None)
-          .copy(branch = branch, branches = Seq(branch -> forkBase)))
+          .copy(branch = branch, branches = Seq(branch -> l.forkBase(branch))))
       } else if (staged) {
-        // WRITE-AUDIT-PUBLISH (r18): a stage-only append — the snapshot
+        // WRITE-AUDIT-PUBLISH: a stage-only append — the snapshot
         // is its parent (the current main head) plus the new files, CAS-
         // claimed into the chain but invisible to the main read path
         // until GdfMaintenance.publish cherry-picks stagedAdds forward
@@ -1899,19 +1890,15 @@ private[dsv2] class GdfStreamingWrite(path: String, schema: StructType,
     * epoch regenerates the SAME deterministic file names (it overwrote
     * them with identical bytes), so cleanup must never touch the live
     * set. */
-  private def liveNames: Set[String] =
-    if (GdfManifest.versions(path).isEmpty) Set.empty
-    else {
-      val m =
-        if (branch.isEmpty) GdfManifest.read(path)
-        else GdfManifest.branchHead(path, branch).map(_._2)
-          .getOrElse(GdfManifest.read(path))
-      m.files.map(_.name).toSet
-    }
+  private def liveNames: Set[String] = {
+    val l = new GdfManifest.Listing(path)
+    (if (branch.isEmpty) None else l.branchHead(branch)).orElse(l.head)
+      .toSeq.flatMap(_._2.files.map(_.name)).toSet
+  }
 
-  /** The replay check runs INSIDE the optimistic loop (r18): even a
+  /** The replay check runs INSIDE the optimistic loop: even a
     * replayed epoch racing a genuine commit re-reads the ledger on every
-    * attempt, so exactly-once survives concurrency. A BRANCH sink (r19)
+    * attempt, so exactly-once survives concurrency. A BRANCH sink
     * chains epochs on the branch head instead — the epoch ledger lives
     * in the branch manifests, so replay detection follows the branch;
     * the stream-to-audit-branch / validate / fast-forward shape every
@@ -1919,27 +1906,24 @@ private[dsv2] class GdfStreamingWrite(path: String, schema: StructType,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val stats = messages.toSeq.flatMap(_.asInstanceOf[GdfCommit].stats)
     val committed = GdfManifest.commitRetry(path,
-        if (branch.isEmpty) "append" else "branch-append") { cur =>
+        if (branch.isEmpty) "append" else "branch-append") { l =>
+      val cur = l.head.map(_._2)
       val baseM =
         if (branch.isEmpty) cur
         else {
           require(cur.nonEmpty,
             s"a branch sink needs an existing table at $path")
-          Some(GdfManifest.branchHead(path, branch).map(_._2)
-            .getOrElse(cur.get))
+          Some(l.branchHead(branch).map(_._2).getOrElse(cur.get))
         }
       if (baseM.exists(_.epochs.contains(epochId))) None // replayed epoch
       else {
-        GdfConstraints.requireCurrent(path, cur, constraints) // r19
+        GdfConstraints.requireCurrent(path, cur, constraints)
         val appended = GdfAppend.appended(baseM, schema, buckets, layout,
           stats, Some(epochId))
         Some(
           if (branch.isEmpty) appended
-          else appended.copy(branch = branch, branches = Seq(branch ->
-            GdfManifest.branchHead(path, branch)
-              .flatMap(_._2.branches.collectFirst {
-                case (n, v) if n == branch => v })
-              .getOrElse(GdfManifest.mainVersions(path).last))))
+          else appended.copy(branch = branch,
+            branches = Seq(branch -> l.forkBase(branch))))
       }
     }
     if (committed < 0) { // replay: drop the regenerated orphan files

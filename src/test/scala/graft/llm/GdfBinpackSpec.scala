@@ -116,10 +116,10 @@ class GdfBinpackSpec extends SparkSpec {
     plantFragmented(p)
     val target = totalBytes(p) * 2 / (5 * 4)
     GdfMaintenance.compactBinpack(spark, p, target)
-    val v1 = GdfManifest.versions(p)
+    val v1 = new GdfManifest.Listing(p).versions
     val digests = GdfManifest.read(p).files.map(f => f.name -> md5(p, f.name)).toMap
     GdfMaintenance.compactBinpack(spark, p, target)
-    assert(GdfManifest.versions(p) == v1,
+    assert(new GdfManifest.Listing(p).versions == v1,
       "a second binpack at the same target must not burn a snapshot")
     assert(GdfManifest.read(p).files.map(f => f.name -> md5(p, f.name)).toMap
       == digests, "right-sized files must carry byte-identically")

@@ -109,11 +109,11 @@ class GdfBranchSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 10L).map(i => (i, i)), "overwrite")
     write(p, Seq((100L, 1L)), "append", branch = "audit")
-    val branchFiles = GdfManifest.branchHead(p, "audit").get._2
+    val branchFiles = new GdfManifest.Listing(p).branchHead("audit").get._2
       .files.map(_.name).toSet -- GdfManifest.read(p).files.map(_.name).toSet
     assert(branchFiles.nonEmpty)
     GdfMaintenance.dropBranch(p, "audit")
-    assert(GdfManifest.branchHead(p, "audit").isEmpty)
+    assert(new GdfManifest.Listing(p).branchHead("audit").isEmpty)
     intercept[IllegalArgumentException] { ids(p, Some("audit")) }
     // the branch's unique data files are now unreferenced: the orphan
     // sweep (age guard forced to zero) reclaims exactly them

@@ -46,17 +46,17 @@ class GdfCommitSpec extends SparkSpec {
     val attempts = new AtomicInteger(0)
     def committer(stat: GdfManifest.FileStat): Thread = new Thread(() => {
       val first = new java.util.concurrent.atomic.AtomicBoolean(true)
-      GdfManifest.commitRetry(p, "write") { cur =>
+      GdfManifest.commitRetry(p, "write") { l =>
         attempts.incrementAndGet()
         if (first.getAndSet(false)) barrier.await(20, TimeUnit.SECONDS)
-        Some(cur.get.copy(files = cur.get.files :+ stat))
+        Some(l.current.copy(files = l.current.files :+ stat))
       }
     })
     val (ta, tb) = (committer(fA), committer(fB))
     ta.start(); tb.start(); ta.join(30000); tb.join(30000)
     // the loser retried: strictly more update attempts than committers
     assert(attempts.get() >= 3, s"expected a retry, saw ${attempts.get()} attempts")
-    assert(GdfManifest.versions(p) == Seq(1, 2, 3),
+    assert(new GdfManifest.Listing(p).versions == Seq(1, 2, 3),
       "both snapshots must survive as consecutive versions")
     // v2 carries exactly one of the two deltas; v3 carries BOTH — the
     // loser folded the winner's state in instead of overwriting it
@@ -82,26 +82,26 @@ class GdfCommitSpec extends SparkSpec {
     // file through the replace
     val replacer = new Thread(() => {
       var first = true
-      GdfManifest.commitRetry(p, "write") { cur =>
+      GdfManifest.commitRetry(p, "write") { l =>
         if (first) {
           first = false
           replacerRead.countDown()
           appendDone.await(20, TimeUnit.SECONDS)
         }
-        Some(cur.get.copy(files =
-          cur.get.files.filterNot(_.name == f0.name) :+ fNew))
+        Some(l.current.copy(files =
+          l.current.files.filterNot(_.name == f0.name) :+ fNew))
       }
     })
     replacer.start()
     replacerRead.await(20, TimeUnit.SECONDS)
-    GdfManifest.commitRetry(p, "write")(cur =>
-      Some(cur.get.copy(files = cur.get.files :+ fApp))) // v2: the append
+    GdfManifest.commitRetry(p, "write")(l =>
+      Some(l.current.copy(files = l.current.files :+ fApp))) // v2: the append
     appendDone.countDown()
     replacer.join(30000)
     val cur = GdfManifest.read(p).files.map(_.name).toSet
     assert(cur == Set(fNew.name, fApp.name),
       s"replace must keep the concurrent append, got $cur")
-    assert(GdfManifest.versions(p) == Seq(1, 2, 3))
+    assert(new GdfManifest.Listing(p).versions == Seq(1, 2, 3))
   }
 
   test("update returning None commits nothing (the replayed-epoch no-op)") {
@@ -109,12 +109,12 @@ class GdfCommitSpec extends SparkSpec {
     val f0 = plantFile(p, "part-0-x.gdf", 0L, 0)
     GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(f0), "hash", Seq(7L))))
-    val before = GdfManifest.versions(p)
-    val v = GdfManifest.commitRetry(p, "write") { cur =>
-      if (cur.exists(_.epochs.contains(7L))) None
-      else Some(cur.get)
+    val before = new GdfManifest.Listing(p).versions
+    val v = GdfManifest.commitRetry(p, "write") { l =>
+      if (l.current.epochs.contains(7L)) None
+      else Some(l.current)
     }
-    assert(v == -1 && GdfManifest.versions(p) == before)
+    assert(v == -1 && new GdfManifest.Listing(p).versions == before)
   }
 
   test("retention policy: set_retention widens, 0 restores the default (r19)") {
@@ -124,12 +124,12 @@ class GdfCommitSpec extends SparkSpec {
       Some(GdfManifest.Manifest(schema, 2, Seq(f0)))) // v1
     GdfMaintenance.setRetention(p, 6) // v2
     (1 to 4).foreach(_ =>
-      GdfManifest.commitRetry(p, "write")(c => Some(c.get))) // v3..v6
-    assert(GdfManifest.versions(p).contains(1),
+      GdfManifest.commitRetry(p, "write")(l => Some(l.current))) // v3..v6
+    assert(new GdfManifest.Listing(p).versions.contains(1),
       "retention 6 must keep v1 where the default would have swept it")
     GdfMaintenance.setRetention(p, 0) // v7: back to the default window
-    GdfManifest.commitRetry(p, "write")(c => Some(c.get)) // v8: sweep applies
-    val vs = GdfManifest.versions(p)
+    GdfManifest.commitRetry(p, "write")(l => Some(l.current)) // v8: sweep applies
+    val vs = new GdfManifest.Listing(p).versions
     assert(!vs.contains(1) && !vs.contains(2),
       s"restoring the default must let expiry sweep old snapshots: $vs")
     assert(vs.size <= 4, s"default window (3 + pinned head) exceeded: $vs")
@@ -145,12 +145,12 @@ class GdfCommitSpec extends SparkSpec {
     GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(fOld), retain = 10))) // v1
     val fNew = plantFile(p, "part-0-new.gdf", 1L, 0)
-    GdfManifest.commitRetry(p, "write")(c =>
-      Some(c.get.copy(files = Seq(fNew)))) // v2: replaces fOld
+    GdfManifest.commitRetry(p, "write")(l =>
+      Some(l.current.copy(files = Seq(fNew)))) // v2: replaces fOld
     GdfMaintenance.createTag(p, "audit", 1) // v3 pins v1
     val fX = plantFile(p, "part-1-x.gdf", 5L, 1)
-    GdfManifest.commitRetry(p, "write")(c =>
-      Some(c.get.copy(files = c.get.files :+ fX))) // v4: the head
+    GdfManifest.commitRetry(p, "write")(l =>
+      Some(l.current.copy(files = l.current.files :+ fX))) // v4: the head
     // a cutoff far in the future makes EVERYTHING "old": only the
     // pins and the newest snapshot may survive — the table can never
     // expire itself empty
@@ -158,7 +158,7 @@ class GdfCommitSpec extends SparkSpec {
       System.currentTimeMillis() + 1000000000L)
     assert(expired.toSet == Set(2, 3),
       s"v1 is tag-pinned, v4 is head+newest; got $expired")
-    assert(GdfManifest.versions(p).toSet == Set(1, 4))
+    assert(new GdfManifest.Listing(p).versions.toSet == Set(1, 4))
     assert(new File(p, fOld.name).exists(), "tag-pinned v1 keeps its file")
     assert(new File(p, fNew.name).exists(), "the kept head references it")
   }
@@ -169,7 +169,7 @@ class GdfCommitSpec extends SparkSpec {
     GdfManifest.commitRetry(p, "write")(_ =>
       Some(GdfManifest.Manifest(schema, 2, Seq(a), retain = 10))) // v1
     val b = plantFile(p, "part-0-b.gdf", 1L, 0)
-    GdfManifest.commitRetry(p, "write")(c => Some(c.get.copy(files = Seq(b)))) // v2
+    GdfManifest.commitRetry(p, "write")(l => Some(l.current.copy(files = Seq(b)))) // v2
     // cutoff = v2's own ts: strictly-older v1 expires, v2 stays
     val expired = GdfMaintenance.expireSnapshots(p,
       GdfManifest.readVersion(p, 2).ts)
@@ -203,6 +203,12 @@ class GdfCommitSpec extends SparkSpec {
     assert(new File(p, recent.name).exists(),
       "a recent (possibly in-flight) file must survive the age guard")
     assert(!new File(p, aged.name).exists())
+    // a live equality-delete file is referenced, however old it is
+    GdfMaintenance.deleteByKeys(p, Seq(0L))
+    val eqd = GdfManifest.read(p).eqDeletes.head.file
+    new File(p, eqd).setLastModified(System.currentTimeMillis() - 100000L)
+    assert(GdfMaintenance.removeOrphans(p, olderThanMs = 50000L).isEmpty)
+    assert(new File(p, eqd).exists(), "a live equality-delete file must survive")
   }
 
   test("racing batch appends through the public write path both land") {

@@ -20,7 +20,7 @@ class GdfConstraintSpec extends SparkSpec {
       .withColumn("bucket", pmod(col("doc_id"), lit(4L)).cast("int"))
       .write.format("graftdocs").option("buckets", "4").mode(mode).save(p)
 
-  private def vOf(p: String): Int = GdfManifest.versions(p).last
+  private def vOf(p: String): Int = new GdfManifest.Listing(p).versions.last
 
   test("a violating append is refused; the table state is untouched") {
     val p = freshDir()
@@ -40,6 +40,30 @@ class GdfConstraintSpec extends SparkSpec {
     // a clean append still works, and integer-literal coercion held
     write(p, Seq((100L, java.lang.Long.valueOf(5L))), "append")
     assert(spark.read.format("graftdocs").load(p).count() == 21L)
+  }
+
+  test("constraints whose SQL holds a quote or a bracket survive a re-read") {
+    val p = freshDir()
+    Seq((0L, "de"), (1L, "fr")).toDF("doc_id", "lang")
+      .withColumn("bucket", pmod(col("doc_id"), lit(4L)).cast("int"))
+      .write.format("graftdocs").option("buckets", "4")
+      .mode("overwrite").save(p)
+    GdfMaintenance.addConstraint(spark, p, "not_en", "lang <> \"en\"")
+    GdfMaintenance.addConstraint(spark, p, "not_x", "lang <> 'x]'")
+    assert(GdfManifest.read(p).constraints ==
+      Seq("not_en" -> "lang <> \"en\"", "not_x" -> "lang <> 'x]'"))
+    for ((lang, name) <- Seq("en" -> "not_en", "x]" -> "not_x")) {
+      val e = intercept[Exception] {
+        Seq((9L, lang)).toDF("doc_id", "lang")
+          .withColumn("bucket", pmod(col("doc_id"), lit(4L)).cast("int"))
+          .write.format("graftdocs").option("buckets", "4")
+          .mode("append").save(p)
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msg.contains(name), s"$lang must violate $name, got: $msg")
+    }
+    assert(spark.read.format("graftdocs").load(p).count() == 2L)
   }
 
   test("adding a constraint existing rows violate fails loudly, commits nothing") {

@@ -129,7 +129,7 @@ class GdfEqDeleteSpec extends SparkSpec {
     assert(m.eqDeletes.isEmpty, "compaction must drop the eq-delete files")
     assert(readT(p).count() == 37L)
     assert(!new File(p).listFiles().exists(_.getName.endsWith(".eqd")) ||
-      GdfManifest.versions(p).size > 1, // older snapshots may still pin them
+      new GdfManifest.Listing(p).versions.size > 1, // older snapshots may still pin them
       "no dangling eq files beyond retained snapshots")
   }
 

@@ -106,7 +106,7 @@ class GdfLineageSpec extends SparkSpec {
     plant(p)
     // simulate a legacy manifest: reset every fr to the no-lineage -1
     val vf = new java.io.File(p,
-      s"manifest-v${GdfManifest.versions(p).last}.json")
+      s"manifest-v${new GdfManifest.Listing(p).versions.last}.json")
     val json = new String(java.nio.file.Files.readAllBytes(vf.toPath))
     java.nio.file.Files.write(vf.toPath,
       json.replaceAll("\"fr\":-?\\d+", "\"fr\":-1").getBytes)

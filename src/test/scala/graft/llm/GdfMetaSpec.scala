@@ -73,7 +73,7 @@ class GdfMetaSpec extends SparkSpec {
     table
     GdfMaintenance.createTag(s"$root/t", "audit", 1)
     // one branch commit: forks off the current main head
-    val mainHead = GdfManifest.mainVersions(s"$root/t").last
+    val mainHead = new GdfManifest.Listing(s"$root/t").main.map(_._1).last
     import spark.implicits._
     Seq((400L, 4L)).toDF("doc_id", "val")
       .withColumn("bucket", org.apache.spark.sql.functions.pmod(
@@ -81,7 +81,7 @@ class GdfMetaSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(4L)).cast("int"))
       .write.format("graftdocs").option("buckets", "4")
       .option("branch", "wip").mode("append").save(s"$root/t")
-    val bHead = GdfManifest.branchHead(s"$root/t", "wip").get._1
+    val bHead = new GdfManifest.Listing(s"$root/t").branchHead("wip").get._1
     val got = spark.sql(
       s"SELECT name, kind, version, fork_base FROM $cat.`$table$$refs` " +
         "ORDER BY name")

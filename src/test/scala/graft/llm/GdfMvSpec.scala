@@ -86,7 +86,7 @@ class GdfMvSpec extends SparkSpec {
       GdfMaintenance.mergeInto(spark, p,
         Seq((200L + k, Some(k.toLong), 1000L + k)).toDF("doc_id", "grp", "val"))
     }
-    assert(!GdfManifest.versions(p).contains(1), "v1 must be expired")
+    assert(!new GdfManifest.Listing(p).versions.contains(1), "v1 must be expired")
     assert(GdfMaterializedView.refresh(spark, p, mv, "grp", "val") == "full")
     assert(state(mv) == recompute(p))
   }

@@ -108,7 +108,7 @@ class GdfRollbackSpec extends SparkSpec {
       .withColumn("bucket", pmod(col("doc_id"), lit(4L)).cast("int"))
       .write.format("graftdocs").option("buckets", "4")
       .option("staged", "true").mode("append").save(p)
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     val e = intercept[IllegalArgumentException] {
       GdfMaintenance.rollback(p, stagedV)
     }

@@ -143,9 +143,9 @@ class GdfRowLevelSpec extends SparkSpec {
 
   test("an UPDATE matching nothing commits nothing") {
     val t = freshTable()
-    val vBefore = GdfManifest.versions(s"$root/$t")
+    val vBefore = new GdfManifest.Listing(s"$root/$t").versions
     sql(s"UPDATE $cat.$t SET tag = 'x' WHERE doc_id = 999999")
-    assert(GdfManifest.versions(s"$root/$t") == vBefore,
+    assert(new GdfManifest.Listing(s"$root/$t").versions == vBefore,
       "a no-match update must not burn a snapshot")
     assert(sql(s"SELECT count(*) FROM $cat.$t").collect()(0).getLong(0) == 40L)
   }

@@ -24,7 +24,7 @@ class GdfTagSpec extends SparkSpec {
     GdfMaintenance.createTag(p, "raw", 1) // v2 (metadata commit)
     (0 until 4).foreach(i => overwrite(p, 10L + i)) // v3..v6
     // retention keeps the last 3 (v4..v6) PLUS the pinned v1
-    val vs = GdfManifest.versions(p)
+    val vs = new GdfManifest.Listing(p).versions
     assert(vs.contains(1) && !vs.contains(2) && !vs.contains(3),
       s"v1 pinned, v2/v3 expired — got $vs")
     // the tag still serves the ORIGINAL 40 rows, bytes intact
@@ -34,7 +34,19 @@ class GdfTagSpec extends SparkSpec {
     // dropping the tag makes v1 expirable at the NEXT commit
     GdfMaintenance.dropTag(p, "raw")
     overwrite(p, 5L)
-    assert(!GdfManifest.versions(p).contains(1), "unpinned v1 must expire")
+    assert(!new GdfManifest.Listing(p).versions.contains(1), "unpinned v1 must expire")
+  }
+
+  test("a tag name holding a quote keeps its snapshot through retention") {
+    val p = freshDir()
+    overwrite(p, 40L) // v1
+    GdfMaintenance.createTag(p, "rel\"1", 1) // v2
+    (0 until 4).foreach(i => overwrite(p, 10L + i)) // v3..v6
+    assert(new GdfManifest.Listing(p).versions.contains(1),
+      "the quoted tag must pin v1 past retention")
+    assert(GdfMaintenance.resolveVersion(p, "rel\"1") == 1)
+    assert(spark.read.format("graftdocs").option("version", "rel\"1")
+      .load(p).count() == 40L)
   }
 
   test("tags ride through overwrite/append/CoW; resolution is loud") {
@@ -54,7 +66,7 @@ class GdfTagSpec extends SparkSpec {
   test("commit timestamps are strictly monotonic; TIMESTAMP AS OF resolves") {
     val p = freshDir()
     overwrite(p, 4L); overwrite(p, 5L); overwrite(p, 6L) // v1..v3
-    val ts = GdfManifest.versions(p)
+    val ts = new GdfManifest.Listing(p).versions
       .map(v => v -> GdfManifest.readVersion(p, v).ts)
     assert(ts.map(_._2) == ts.map(_._2).sorted.distinct,
       s"timestamps must be strictly increasing: $ts")

@@ -50,11 +50,12 @@ class GdfTimeTravelSpec extends SparkSpec {
       .filter(_.startsWith("manifest-v")).sorted.toSeq
     assert(manifests == Seq("manifest-v3.json", "manifest-v4.json",
       "manifest-v5.json"))
-    // v1/v2 data files are gone; v3..v5's remain (names carry the
-    // version tag plus the r18 per-write uniqueness token)
+    // v1/v2 data files are gone; exactly v3..v5's remain
     val gdfs = dir.listFiles().map(_.getName).filter(_.endsWith(".gdf"))
-    assert(gdfs.forall(n => n.contains("-v3-") || n.contains("-v4-") ||
-      n.contains("-v5-")), s"orphans survive: ${gdfs.mkString(",")}")
+    val retained = manifests.flatMap(m => "\"name\":\"([^\"]+\\.gdf)\"".r
+      .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(dir, m).toPath))).map(_.group(1))).toSet
+    assert(gdfs.toSet == retained, s"orphans survive: ${gdfs.mkString(",")}")
     // retained snapshots all read, each its own payload generation
     for (v <- 3 to 5)
       assert(readV(p, v).select(col("v")).collect()

@@ -28,7 +28,7 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 20L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L), (101L, 2L)), "append", staged = true) // v2 staged
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     assert(GdfManifest.readVersion(p, stagedV).staged)
     // main read path: unchanged
     assert(ids(spark.read.format("graftdocs").load(p)) == (0L until 20L).toSet)
@@ -47,7 +47,7 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 10L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L)), "append", staged = true) // v2 staged
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     write(p, Seq((200L, 2L)), "append") // v3: head moves past the stage
     assert(ids(spark.read.format("graftdocs").load(p))
       == (0L until 10L).toSet + 200L)
@@ -61,17 +61,17 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 10L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L)), "append", staged = true) // v2 staged
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     write(p, Seq((200L, 2L)), "append") // v3
     // with the stage BETWEEN two retained mains, the log steps 1 → 3
-    assert(GdfManifest.mainVersions(p) == Seq(1, 3))
+    assert(new GdfManifest.Listing(p).main.map(_._1) == Seq(1, 3))
     def log() = GdfMaintenance.changesLog(spark, p)
       .select("doc_id", "_change_type", "_commit_version")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     assert(log() == Set((200L, "insert", 3)),
       s"the staged snapshot must not be a feed step: ${log()}")
     GdfMaintenance.publish(p, stagedV) // v4 (v1 expires: keep-last-3)
-    assert(GdfManifest.mainVersions(p) == Seq(3, 4))
+    assert(new GdfManifest.Listing(p).main.map(_._1) == Seq(3, 4))
     assert(log() == Set((100L, "insert", 4)),
       s"staged rows must surface at PUBLISH, got ${log()}")
   }
@@ -80,9 +80,9 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 10L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L)), "append", staged = true) // v2 staged
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     (1 to 3).foreach(k => write(p, Seq((200L + k, 0L)), "append")) // v3..v5
-    assert(!GdfManifest.versions(p).contains(stagedV),
+    assert(!new GdfManifest.Listing(p).versions.contains(stagedV),
       "the unpublished stage must expire by ordinary retention")
     val e = intercept[IllegalArgumentException] {
       GdfMaintenance.publish(p, stagedV)
@@ -94,7 +94,7 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 10L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L)), "append", staged = true) // v2
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     GdfMaintenance.publish(p, stagedV)
     val e1 = intercept[IllegalArgumentException] {
       GdfMaintenance.publish(p, stagedV)
@@ -114,7 +114,7 @@ class GdfWapSpec extends SparkSpec {
     val p = freshDir()
     write(p, (0L until 20L).map(i => (i, i)), "overwrite") // v1
     write(p, Seq((100L, 1L), (101L, 2L)), "append", staged = true) // v2
-    val stagedV = GdfManifest.versions(p).last
+    val stagedV = new GdfManifest.Listing(p).versions.last
     GdfMaintenance.publish(p, stagedV)
     // compaction rewrites the fragmented buckets — the published staged
     // files' NAMES disappear from the manifest (r19: the durable
@@ -137,7 +137,7 @@ class GdfWapSpec extends SparkSpec {
     write(p, (0L until 10L).map(i => (i, i)), "overwrite") // v1 (main head)
     (1 to 4).foreach(k =>
       write(p, Seq((100L + k, 0L)), "append", staged = true)) // v2..v5 staged
-    assert(GdfManifest.versions(p).contains(1),
+    assert(new GdfManifest.Listing(p).versions.contains(1),
       "the main head must be pinned past keep-last-N")
     assert(ids(spark.read.format("graftdocs").load(p)) == (0L until 10L).toSet)
   }

@@ -20,6 +20,15 @@ if [ -n "$stray" ]; then
   echo "gate: the state root is named outside StateRoot.scala: $stray" >&2
   exit 1
 fi
+# Only the manifest module knows the graftdocs version-file layout: every
+# other reader and committer goes through GdfManifest.Listing, so a
+# stray "manifest-v" literal is a second copy of the layout.
+manifest=src/main/scala/org/apache/spark/sql/graft/dsv2/GdfManifest.scala
+stray=$(grep -rln 'manifest-v' src/main | grep -vx "$manifest" || true)
+if [ -n "$stray" ]; then
+  echo "gate: the version-file layout is named outside $manifest: $stray" >&2
+  exit 1
+fi
 found=$(python3 -B -c "import sys; sys.path.insert(0,'perfbench'); import run; print(run.program_literals(run.program_sources('.')))")
 if [ "$found" != "(['/root/repo/target'], '/root/testdata')" ]; then
   echo "gate: perfbench's root scan finds $found" >&2
