@@ -675,7 +675,7 @@ object GdfMaintenance {
       op = "merge")
   }
 
-  /** LARGE-SOURCE keyed MERGE : the copy-on-
+  /** LARGE-SOURCE keyed MERGE: the copy-on-
     * write upsert with the source SHUFFLED by `pmod(key, buckets)`
     * instead of collected — the fact-scale CDC regime a broadcast cannot
     * reach. Shape:

@@ -98,24 +98,21 @@ class GraftDocsSource extends TableProvider with DataSourceRegister {
     * still fail loudly at the scan builder's manifest lookup. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val p = pathOf(options)
-    if (new GdfManifest.Listing(p).head.isEmpty) new StructType()
+    val l = new GdfManifest.Listing(p)
+    if (l.head.isEmpty) new StructType()
     else {
-      val s = manifestFor(p, options).schema
-      // ROW LINEAGE (r18): the rowlineage read option surfaces the
-      // hidden stable-id column alongside the data
+      // names resolve through tags, then branch heads
+      val s = Option(options.get("version"))
+        .map(v => l.snapshot(GdfMaintenance.resolveVersion(p, v)))
+        .getOrElse(l.current).schema
+      // ROW LINEAGE: the rowlineage read option surfaces the hidden
+      // stable-id column alongside the data
       if (options.getBoolean("rowlineage", false))
         StructType(s.fields :+
           org.apache.spark.sql.types.StructField(GdfManifest.RowIdCol, LongType))
       else s
     }
   }
-
-  private def manifestFor(path: String,
-      options: CaseInsensitiveStringMap): GdfManifest.Manifest =
-    Option(options.get("version")) // names resolve via tags/branches (r19)
-      .map(v => GdfManifest.readVersion(path,
-        GdfMaintenance.resolveVersion(path, v)))
-      .getOrElse(GdfManifest.read(path))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
